@@ -16,7 +16,7 @@ biggest anti-scaling term; see BENCH/BASELINE.md §2). Explicit
 ``repartition(N, xxhash64(url))`` remains the post-filter re-balance
 tool (plans/pipeline.py scale notes).
 
-Scaling methodology (no real cluster in this sandbox): three probes.
+Scaling methodology (no real cluster in this sandbox): two probes.
  1. thread scaling: the same job at local[8] vs local[32], each level
     run in a subprocess whose CPU AFFINITY is pinned to exactly that
     many cores (sched_setaffinity, inherited by the JVM and every
@@ -30,11 +30,9 @@ Scaling methodology (no real cluster in this sandbox): three probes.
  2. hardware ceiling: the same extraction kernel under plain
     ``multiprocessing`` at the same two widths — the best any
     program can measure on this box.
- 3. executor proxy (opt-in, SPARK_GRAFT_PROXY=1): 1 vs 4 CONCURRENT
-    local[8] JVMs over disjoint hash-slices — documented NEGATIVE
-    result on this box: co-located JVMs pay hypervisor page-table +
-    steal costs separate physical nodes don't (0.41 even pinned;
-    BENCH/BASELINE.md §2), so it is reported, never headline.
+Concurrent multi-JVM executor emulation is not a probe: co-located
+JVMs on one box pay hypervisor page-table + steal costs separate nodes
+don't (0.41 weak-scaling even pinned; BENCH/BASELINE.md §2).
 Reported:
   scaling.efficiency    = thread_efficiency_raw / hw_ceiling_eff —
     the metric of record (BASELINE.md §3): one box cannot emulate
@@ -201,143 +199,6 @@ def _run_scale_level(pages_path: str, cores: int) -> dict:
             os.unlink(out)
 
 
-# --- executor-proxy scaling: 1 vs 4 CONCURRENT local[N] JVMs --------------
-# A cluster scales N→4N by adding *executor JVMs*, not threads inside one
-# JVM. local[8]→local[32] folds single-JVM contention (GC, scheduler,
-# one Arrow runner) into the number; 4 concurrent local[8] JVMs over
-# disjoint input slices is the faithful in-sandbox stand-in for 4
-# executors: separate heaps, separate Python pools, shared hardware.
-# Weak-scaling efficiency = t_single_slice / makespan_4_slices.
-
-
-def _proxy_worker(slice_path: str, cores: int, ready_file: str, go_file: str,
-                  cpu_start: int = 0) -> None:
-    from pyspark.sql import functions as F
-
-    from open_semantic_etl_spark.plans.pipeline import enrich_pages
-    from open_semantic_etl_spark.session import get_spark
-
-    # pin this "executor" to its own disjoint CPU range (what cgroups
-    # give a real executor): without the pin, 4 co-located JVMs × (task
-    # threads + Python workers) interleave across all cores and measure
-    # scheduler interference, not scaling. ActiveProcessorCount keeps
-    # GC/JIT pools sized to the slice.
-    try:
-        os.sched_setaffinity(0, set(range(cpu_start, cpu_start + cores)))
-    except (AttributeError, OSError):
-        pass
-    spark = get_spark(
-        app_name=f"proxy_{os.getpid()}",
-        master=f"local[{cores}]",
-        shuffle_partitions=cores,
-        extra_conf={
-            # pre-touch a right-sized heap during warmup: co-located JVMs
-            # otherwise fault pages in lazily during the timed region and
-            # this virtualized box burns >50% sys time on it
-            "spark.driver.memory": "3g",
-            "spark.driver.extraJavaOptions": (
-                f"-XX:ActiveProcessorCount={cores} -XX:+AlwaysPreTouch "
-                "-XX:+UseParallelGC "
-                "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=64"
-            ),
-        },
-    )
-    pages = spark.read.parquet(slice_path)
-    out = enrich_pages(pages, gazetteer=_gazetteer(), repartition=None)
-    agg = out.agg(
-        F.count("*").alias("docs"),
-        F.sum(F.length("content_txt")).alias("content_bytes"),
-        F.sum(F.size("entities")).alias("ents"),
-        F.sum(F.size("email_ss") + F.size("money_ss") + F.size("law_clause_ss")).alias("hits"),
-        F.count(F.when(F.col("content_txt") != F.col("text"), 1)).alias("mismatches"),
-    )
-    agg.first()  # warm: JVM JIT + python workers up before the barrier
-    with open(ready_file, "w") as f:
-        f.write("ready")
-    while not os.path.exists(go_file):
-        time.sleep(0.05)
-    t0 = time.time()
-    row = agg.first()
-    dt = time.time() - t0
-    print(json.dumps({"sec": round(dt, 3), "docs": row["docs"],
-                      "mismatches": row["mismatches"]}), flush=True)
-    spark.stop()
-
-
-def _make_slices(spark, pages_path: str, nproc: int) -> list[str]:
-    from pyspark.sql import functions as F
-
-    paths = [f"{pages_path}_slice{i}of{nproc}" for i in range(nproc)]
-    if all(os.path.exists(os.path.join(p, "_SUCCESS")) for p in paths):
-        return paths
-    df = spark.read.parquet(pages_path).withColumn(
-        "_b", F.pmod(F.xxhash64("url"), F.lit(nproc))
-    )
-    for i, p in enumerate(paths):
-        df.filter(F.col("_b") == i).drop("_b").repartition(8).write.mode(
-            "overwrite"
-        ).parquet(p)
-    return paths
-
-
-def _run_proxy_group(slices: list[str], cores: int, tag: str) -> float:
-    """launch len(slices) worker processes, barrier-sync, return makespan."""
-    import subprocess
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=f"proxy_{tag}_")
-    go = os.path.join(d, "go")
-    procs = []
-    readies = []
-    for i, sl in enumerate(slices):
-        ready = os.path.join(d, f"ready{i}")
-        readies.append(ready)
-        procs.append(
-            subprocess.Popen(
-                [sys.executable, os.path.abspath(__file__), "--proxy-worker",
-                 sl, str(cores), ready, go, str(i * cores)],
-                stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
-                cwd=os.path.dirname(os.path.abspath(__file__)),
-            )
-        )
-    deadline = time.time() + 600
-    while not all(os.path.exists(r) for r in readies):
-        if time.time() > deadline:
-            for p in procs:
-                p.kill()
-            raise RuntimeError("proxy workers failed to warm up")
-        time.sleep(0.1)
-    with open(go, "w") as f:
-        f.write("go")
-    results = []
-    for p in procs:
-        out, _ = p.communicate(timeout=600)
-        line = out.decode().strip().splitlines()[-1]
-        results.append(json.loads(line))
-    if any(r["mismatches"] for r in results):
-        raise AssertionError("byte-identity broken in proxy worker")
-    return max(r["sec"] for r in results)
-
-
-def _scaling_exec_proxy(spark, pages_path: str, low_cores: int, nproc: int) -> dict:
-    slices = _make_slices(spark, pages_path, nproc)
-    best_single = None
-    best_multi = None
-    for _ in range(2):  # alternate so ambient noise hits both symmetrically
-        t1 = _run_proxy_group(slices[:1], low_cores, "single")
-        tn = _run_proxy_group(slices, low_cores, "multi")
-        best_single = t1 if best_single is None else min(best_single, t1)
-        best_multi = tn if best_multi is None else min(best_multi, tn)
-    eff = best_single / best_multi
-    return {
-        "jvms": [1, nproc],
-        "cores_per_jvm": low_cores,
-        "sec_single_slice": round(best_single, 3),
-        "sec_makespan_concurrent": round(best_multi, 3),
-        "efficiency": round(eff, 3),
-    }
-
-
 # --- hardware-ceiling probe: same kernel, plain multiprocessing -----------
 
 
@@ -379,22 +240,6 @@ def _hw_pass(procs: int) -> float:
         t0 = time.time()
         p.map(_hw_work, jobs)
         return time.time() - t0
-
-
-def _hw_ceiling(low: int, high: int) -> dict:
-    """standalone ceiling measurement (kept as a manual probe — main()
-    interleaves _hw_pass with the Spark levels instead so noise hits
-    raw and ceiling together; run this directly to measure the box)."""
-    global _HW_HTML
-    _hw_corpus()
-    res = {}
-    for procs in (low, high, low, high, low, high):
-        dt = _hw_pass(procs)
-        res[procs] = min(res.get(procs, dt), dt)
-    _HW_HTML = []
-    eff = (res[low] / res[high]) / (high / low)
-    return {"procs": [low, high], "sec": [round(res[low], 3), round(res[high], 3)],
-            "efficiency": round(eff, 3)}
 
 
 #: quiet-window gate for the scaling capture: on this box the hw-ceiling
@@ -564,16 +409,6 @@ def main() -> None:
         hw_sec = chosen["hw_sec"]
         global _HW_HTML
         _HW_HTML = []
-        # executor proxy (1 vs 4 concurrent pinned JVMs) stays opt-in:
-        # on this virtualized box co-located JVMs lose most cycles to
-        # hypervisor page-table/steal costs that separate physical
-        # nodes don't share (0.41 weak-scaling even pinned — the
-        # documented negative result in BENCH/BASELINE.md §2)
-        proxy = None
-        if os.environ.get("SPARK_GRAFT_PROXY", "0") == "1":
-            spark = _session(low_cores)
-            proxy = _scaling_exec_proxy(spark, pages_path, low_cores, cpus // low_cores)
-            spark.stop()
 
     result = {
         "metric": "extraction_docs_per_sec",
@@ -624,7 +459,6 @@ def main() -> None:
             "docs_per_sec_high": round(docs / t_high_scaling, 2),
             "thread_efficiency_raw": round(eff, 3),
             "hw_ceiling": hw,
-            "thread_efficiency_vs_hw": vs_hw,  # legacy key, = efficiency
             "extract_stage": {
                 "sec_low": round(ex[low_cores], 3),
                 "sec_high": round(ex[cpus], 3),
@@ -652,18 +486,13 @@ def main() -> None:
                 ),
             },
         }
-        if proxy is not None:
-            scaling["executor_proxy"] = proxy
         result["scaling"] = scaling
 
     print(json.dumps(result))
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--proxy-worker":
-        _proxy_worker(sys.argv[2], int(sys.argv[3]), sys.argv[4], sys.argv[5],
-                      int(sys.argv[6]) if len(sys.argv) > 6 else 0)
-    elif len(sys.argv) > 1 and sys.argv[1] == "--scale-worker":
+    if len(sys.argv) > 1 and sys.argv[1] == "--scale-worker":
         _scale_worker(sys.argv[2], int(sys.argv[3]), sys.argv[4])
     else:
         main()

@@ -23,17 +23,6 @@ from pyspark.sql import functions as F
 # enhance_detect_language_tika_server.py:32-38 concat order).
 DEFAULT_TEXT_FIELDS = ("title_txt", "description_txt", "content_txt")
 
-# Blacklist semantics of etc/opensemanticsearch/blacklist/textanalysis/*
-# expressed as name predicates — used by helpers that select columns.
-TECH_PREFIXES = ("etl_", "extract", "needs_", "n_")
-TECH_SUFFIXES = ("_b", "_i", "_dt", "_f", "_hash")
-
-
-def is_analysis_field(name: str) -> bool:
-    return not (
-        name.startswith(TECH_PREFIXES) or name.endswith(TECH_SUFFIXES)
-    )
-
 
 def analysis_text(*cols: str | Column) -> Column:
     """get_text: '\n'.join(non-empty values) + trailing '\n'."""

@@ -1238,6 +1238,15 @@ def dedup_ingest_batch(
             _commit_batch_staging(index_path, staging, marker)
             return kept_rows(marker)
         shutil.rmtree(staging, ignore_errors=True)  # partial stage
+        # refuse before any batch work: the staged append writes the
+        # flat layout, and the checkpoints below evaluate batch_df
+        for sub in ("bands", "sigs"):
+            if _lsh_table_state(f"{index_path}/{sub}") == "epoch":
+                raise ValueError(
+                    f"LSH index {sub} table at {index_path} has the _epoch "
+                    "streaming layout; run compact_lsh_index before batch "
+                    "ingest (the staged append writes the flat layout)."
+                )
 
     batch = batch_df.dropDuplicates([id_col]).localCheckpoint(eager=True)
     sigs = batch.select(
@@ -1276,13 +1285,6 @@ def dedup_ingest_batch(
         return kept
     # staged append: all three writes land OUTSIDE the live tables, so
     # a crash before _STAGED never perturbs the index
-    for sub in ("bands", "sigs"):
-        if _lsh_table_state(f"{index_path}/{sub}") == "epoch":
-            raise ValueError(
-                f"LSH index {sub} table at {index_path} has the _epoch "
-                "streaming layout; run compact_lsh_index before batch "
-                "ingest (the staged append writes the flat layout)."
-            )
     meta = _lsh_index_meta(
         index_path, num_hashes, bands, shingle_n, n_buckets, create=True
     )

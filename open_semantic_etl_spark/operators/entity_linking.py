@@ -277,15 +277,6 @@ def facet_matchtexts(entities: Column, facet: str) -> Column:
     )
 
 
-def facet_matchtext_values(entities: Column, facet: str) -> Column:
-    """raw matched strings only (for law/money consumers)."""
-    return F.array_distinct(
-        F.flatten(
-            F.transform(_facet_entities(entities, facet), lambda e: e["matchtexts"])
-        )
-    )
-
-
 def facet_taxonomy_level(entities: Column, facet: str, level: int) -> Column:
     """<facet>_taxonomy<i>_ss: cumulative '\\t'-joined path prefixes
     (taxonomy2fields, enhance_entity_linking.py:17-45)."""

@@ -5,13 +5,14 @@ own Python-worker pool, so a chain of four UDFs ships the (large) text
 columns JVM→Python→JVM four times and runs 4× task-count Python
 processes at peak — the measured scaling collapse at local[32]
 (BENCH history: 0.37 efficiency unfused). This operator does all
-per-byte Python work in ONE ``mapInPandas`` pass: html bytes cross the
-boundary once, everything downstream is JVM-only column algebra.
+per-byte Python work in ONE scalar pandas UDF over ``html`` and ``url``:
+html bytes cross the boundary once, everything downstream is JVM-only
+column algebra.
 
 The fused stage reproduces the exact same observable columns as the
-modular operators (tests assert equality), including the ``get_text``
-analysis-text contract (title\\ndescription\\ncontent + trailing
-newline — etl_plugin_core.py:146-162).
+per-operator chain (tests/test_fused.py asserts equality), including
+the ``get_text`` analysis-text contract (title\\ndescription\\ncontent
++ trailing newline — etl_plugin_core.py:146-162).
 """
 
 from __future__ import annotations
@@ -54,15 +55,6 @@ def clean_title_py(title: str | None, url: str | None) -> str | None:
     return url.rsplit("/", 1)[-1] if url is not None else None
 
 
-def fused_schema(input_schema: T.StructType) -> T.StructType:
-    fields = list(input_schema.fields)
-    taken = {f.name for f in fields}
-    for f in list(EXTRACT_RESULT_TYPE.fields) + _EXTRA_FIELDS:
-        if f.name not in taken:
-            fields.append(f)
-    return T.StructType(fields)
-
-
 _FUSED_STRUCT_TYPE = T.StructType(list(EXTRACT_RESULT_TYPE.fields) + _EXTRA_FIELDS)
 _FUSED_FIELDS = [f.name for f in _FUSED_STRUCT_TYPE.fields]
 
@@ -76,8 +68,8 @@ def with_fused_extraction(
     """One Python pass: html → extract struct fields + text_analysis +
     language_s + entities + text_numerized (flattened columns).
 
-    Implemented as a SCALAR pandas UDF over the html column alone —
-    passthrough columns (url, warc_ts, …) never cross the Arrow
+    Implemented as a SCALAR pandas UDF over the html and url columns —
+    the other passthrough columns (warc_ts, …) never cross the Arrow
     boundary, halving serialization traffic vs a mapInPandas that
     carries the whole row through Python.
     """

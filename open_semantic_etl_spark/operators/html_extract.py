@@ -16,7 +16,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from open_semantic_etl_spark.operators.htmlx import extract_html
 from open_semantic_etl_spark.schema import EXTRACT_RESULT_TYPE
@@ -54,8 +53,3 @@ def with_extraction(df: DataFrame, html_col: str = "html", out: str = "extract")
         .withColumn("extract_ok", e["ok"])
         .withColumn("extract_err", e["err"])
     )
-
-
-def flatten_schema(base: StructType) -> StructType:
-    out = StructType(base.fields + EXTRACT_RESULT_TYPE.fields)
-    return out

@@ -525,8 +525,11 @@ def train_quality_clf(
         whitespace_tokens(F.lower(F.col(text_col))),
         lambda t: _hashed_buckets(t, dim),
     )
+    # an unlabeled (NULL) document is neither class: counted, it would
+    # add to the negatives through nr - np
     counts = (
-        df.select(label_cond.cast("long").alias("t"), F.explode(fcol).alias("b"))
+        df.filter(label_cond.isNotNull())
+        .select(label_cond.cast("long").alias("t"), F.explode(fcol).alias("b"))
         .groupBy("b")
         .agg(F.sum("t").alias("np"), F.count("*").alias("nr"))
         .collect()

@@ -39,7 +39,7 @@ import os
 import shutil
 import time
 import uuid
-import pandas as pd
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,7 +50,6 @@ from open_semantic_etl_spark.plans.pipeline import (
     content_hash,
     enrich_pages,
 )
-from open_semantic_etl_spark.schema import METRICS_SCHEMA
 
 
 #: DEFAULT url-hash bucket count for the enriched/checkpoint tables —
@@ -177,14 +176,6 @@ def _swap_buckets(
     shutil.rmtree(sw, ignore_errors=True)
 
 
-def touched_buckets(new: DataFrame, n_buckets: int = N_BUCKETS) -> list[int]:
-    """distinct bucket ids of the batch — ≤ N_BUCKETS ints, driver-safe."""
-    return [
-        r[0]
-        for r in new.select(bucket_expr(n_buckets=n_buckets).alias("b")).distinct().collect()
-    ]
-
-
 def merge_by_url(
     spark: SparkSession, new: DataFrame, path: str, n_buckets: int = N_BUCKETS
 ) -> None:
@@ -264,7 +255,9 @@ def _with_partition_metrics(df: DataFrame, run_id: str, stage: str) -> DataFrame
 
 
 def batch_metrics(out: DataFrame, run_id: str, elapsed_ms: int) -> DataFrame:
-    """per-partition lineage rollup computed FROM THE IN-FLIGHT BATCH —
+    """per-partition lineage rollup (the reference's per-document timing
+    log, etl.py:222-238, aggregated per partition) computed FROM THE
+    IN-FLIGHT BATCH —
     this plan must never scan the (table-sized) enriched output; run
     cost tracks the batch (plan-audited in tools/explain_audit.py)."""
     return (

@@ -18,6 +18,10 @@ Stage order:
   6. regex extractors  (emails, phones, hashtags, IBAN, law, money)
   7. multilingual      (enhance_multilingual fan-out)
 
+Stages 1, 3, 4, 5 and the numerization behind 6's money extractor run
+in ONE Python pass (operators/fused.py); stages 2, 6 and 7 are JVM
+column algebra over its output (``_enrich_after_python``).
+
 Scale notes: stages 1-7 are all map-side (zero shuffles end-to-end);
 the only exchange in an incremental run is the checkpoint anti-join
 (see plans/checkpoint.py), which ships only (url, content_hash) — the
@@ -37,16 +41,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from open_semantic_etl_spark.functions import extract as X
 from open_semantic_etl_spark.functions import path as P
 from open_semantic_etl_spark.functions import textmeta as M
-from open_semantic_etl_spark.operators.entity_linking import Gazetteer, with_entities
-from open_semantic_etl_spark.operators.html_extract import with_extraction
-from open_semantic_etl_spark.operators.langdetect import language_expr
+from open_semantic_etl_spark.operators.entity_linking import Gazetteer
 from open_semantic_etl_spark.operators.law_money import with_law, with_money
-from open_semantic_etl_spark.operators.numerize import numerize_en
 
 PIPELINE_VERSION = "1"
 
@@ -74,85 +74,26 @@ def enrich_pages(
     currency_labels: tuple[str, ...] = DEFAULT_CURRENCY_LABELS,
     langs: tuple[str, ...] = ("en", "de", "fr", "es"),
     repartition: int | None = None,
-    fused: bool = True,
 ) -> DataFrame:
     """pages(url, warc_ts, html, …) → fully enriched rows.
 
-    ``fused=True`` (default, the scale path) runs ALL per-byte Python
-    work — extraction, language id, gazetteer NER, numerization — in a
-    single ``mapInPandas`` pass (operators/fused.py): html crosses the
-    JVM↔Python boundary once, and only one Python worker pool runs per
-    task. ``fused=False`` keeps the modular one-UDF-per-operator chain
-    (same observable columns; tests assert equivalence).
+    ALL per-byte Python work — extraction, language id, gazetteer NER,
+    numerization — runs in one scalar pandas UDF over ``html`` and
+    ``url`` (operators/fused.py): html crosses the JVM↔Python boundary
+    once, and only one Python worker pool runs per task. Every later
+    stage is JVM column algebra (:func:`_enrich_after_python`).
     """
     if repartition:
         # explicit hash partitioning on url: even spread under sorted/
         # hot-host inputs (north rule; SURVEY.md §4 item 1)
         df = df.repartition(repartition, F.xxhash64("url"))
-
-    if fused:
-        return _enrich_after_python(
-            _fused_python_stage(df, gazetteer), currency_labels, langs
-        )
-
-    # --- modular path -------------------------------------------------
-    # 1. extraction
-    df = with_extraction(df)
-    df = df.withColumn("content_hash", content_hash())
-
-    # 2. path/title/ctype scalar stages
-    df = P.with_path_facets(df, id_col="url")
-    df = df.withColumn(
-        "title_txt", P.clean_title(F.col("title_txt"), None, F.col("url"))
+    return _enrich_after_python(
+        _fused_python_stage(df, gazetteer), currency_labels, langs
     )
-    df = df.withColumn(
-        "content_type_group_ss",
-        P.content_type_group(F.col("content_type"), F.col("url")),
-    )
-    df = df.withColumn("file_modified_dt", P.file_modified_dt(F.col("warc_ts")))
-    df = df.withColumn("file_size_i", P.file_size_i(F.col("html")))
-
-    # 3. analysis text (get_text contract: field order + trailing \n)
-    df = M.with_analysis_text(df)
-
-    # 4. language detect (consumes the same concat the reference does)
-    df = df.withColumn("language_s", language_expr(F.col("text_analysis")))
-
-    # 5. gazetteer NER
-    if gazetteer is not None:
-        df = with_entities(df, gazetteer)
-    else:
-        df = df.withColumn("entities", F.lit(None).cast(
-            "array<struct<facet:string,name:string,uri:string,"
-            "matchtexts:array<string>,taxonomy:array<string>>>"
-        )).withColumn("entities", F.coalesce(F.col("entities"), F.array()))
-
-    # 6. regex extractors over the analysis text
-    text = F.col("text_analysis")
-    df = (
-        df.withColumn("email_ss", X.emails(text))
-        .withColumn("email_domain_ss", X.email_domains(X.emails(text)))
-        .withColumn("message_from_ss", X.message_from(text))
-        .withColumn("message_to_ss", X.message_to(text))
-        .withColumn("phone_ss", X.phones(text))
-        .withColumn("phone_normalized_ss", X.phones_normalized(X.phones(text)))
-        .withColumn("hashtag_ss", X.hashtags(text))
-        .withColumn("iban_ss", X.iban(text))
-    )
-    df = with_law(df)
-    _nz = F.pandas_udf(lambda s: s.map(numerize_en), T.StringType())
-    df = df.withColumn("text_numerized", _nz(text))
-    df = with_money(df, currency_labels, numerized_col="text_numerized")
-    df = df.drop("text_numerized")
-
-    # 7. multilingual fan-out
-    df = M.with_multilingual(df, langs=langs)
-
-    return df
 
 
 def _fused_python_stage(df: DataFrame, gazetteer) -> DataFrame:
-    """single-pass Python stage + hot-column aliases (fused path)."""
+    """single-pass Python stage + hot-column aliases."""
     from open_semantic_etl_spark.operators.fused import with_fused_extraction
 
     df = with_fused_extraction(df, gazetteer)
@@ -171,7 +112,11 @@ def _enrich_after_python(
     currency_labels: tuple[str, ...],
     langs: tuple[str, ...],
 ) -> DataFrame:
-    """all remaining stages — pure JVM column algebra, no Python."""
+    """all remaining stages — pure JVM column algebra, no Python.
+
+    Consumes the Python stage's ``title_txt``, ``content_type``,
+    ``text_analysis`` and ``text_numerized`` columns plus the input's
+    ``url``, ``warc_ts`` and ``html``."""
     df = P.with_path_facets(df, id_col="url")
     df = df.withColumn(
         "title_txt", P.clean_title(F.col("title_txt"), None, F.col("url"))

@@ -130,145 +130,11 @@ ORDER BY url
 """
 
 
-def q_emails(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs_rich(spark, sf_dir)
-    em = X.emails(F.col("rich"))
-    return d.select(
-        "doc_id",
-        F.array_join(F.array_sort(em), ",").alias("email_ss"),
-        F.array_join(F.array_sort(X.email_domains(em)), ",").alias("email_domain_ss"),
-        F.array_join(F.array_sort(X.message_from(F.col("rich"))), ",").alias("message_from_ss"),
-    )
-
-
-def q_phones(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs_rich(spark, sf_dir)
-    ph = X.phones(F.col("rich"))
-    return d.select(
-        "doc_id",
-        F.array_join(F.array_sort(ph), ",").alias("phone_ss"),
-        F.array_join(F.array_sort(X.phones_normalized(ph)), ",").alias("phone_normalized_ss"),
-    )
-
-
-def q_hashtags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs_rich(spark, sf_dir)
-    return d.select(
-        "doc_id", F.array_join(X.hashtags(F.col("rich")), ",").alias("hashtag_ss")
-    )
-
-
-def q_iban(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs_rich(spark, sf_dir)
-    return d.select("doc_id", F.array_join(F.array_sort(X.iban(F.col("rich"))), ",").alias("iban_ss"))
-
-
-def q_law_clauses(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs_rich(spark, sf_dir)
-    return d.select(
-        "doc_id", F.array_join(F.array_sort(X.law_clauses(F.col("rich"))), ",").alias("law_clause_ss")
-    )
-
-
-def q_money(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs_rich(spark, sf_dir)
-    return d.select(
-        "doc_id", F.array_join(F.array_sort(X.money(F.col("rich"))), ",").alias("money_ss")
-    )
-
-
-def q_path_facets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    d = docs.select(
-        "doc_id",
-        F.expr(
-            "concat('https://www.example.org/', source, '/sub', doc_id % 3, '/file', doc_id, '.PdF')"
-        ).alias("url"),
-    )
-    out = P.with_path_facets(d, id_col="url")
-    return out.select(
-        "doc_id", "path0_s", "path1_s", "path2_s", "path_basename_s", "filename_extension_s"
-    )
-
-
-def q_clean_title(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    d = docs.select(
-        "doc_id",
-        F.when(F.col("doc_id") % 3 == 0, F.concat(F.lit("T"), F.col("doc_id"))).otherwise(F.lit("")).alias("title"),
-        F.when(F.col("doc_id") % 3 == 1, F.concat(F.lit("S"), F.col("doc_id"))).alias("subject"),
-        F.concat(F.lit("http://h/x/f"), F.col("doc_id"), F.lit(".pdf")).alias("url"),
-    )
-    return d.select(
-        "doc_id",
-        P.clean_title(F.col("title"), F.col("subject"), F.col("url")).alias("title_txt"),
-    )
-
-
-def q_content_type_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    ct = (
-        F.when(F.col("doc_id") % 5 == 0, F.lit("application/pdf"))
-        .when(F.col("doc_id") % 5 == 1, F.lit("image/png"))
-        .when(F.col("doc_id") % 5 == 2, F.lit("text/plain"))
-        .when(F.col("doc_id") % 5 == 3, F.lit("application/vnd.ms-excel"))
-        .otherwise(F.lit("application/octet-stream"))
-    )
-    url = F.concat(
-        F.lit("http://h/f"),
-        F.col("doc_id"),
-        F.when(F.col("doc_id") % 7 == 0, F.lit(".csv")).otherwise(F.lit(".bin")),
-    )
-    d = docs.select("doc_id", ct.alias("ct"), url.alias("url"))
-    return d.select(
-        "doc_id",
-        F.array_join(
-            F.array_sort(F.coalesce(P.content_type_group(F.col("ct"), F.col("url")), F.array())), ","
-        ).alias("content_type_group_ss"),
-    )
-
-
-def q_analysis_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from open_semantic_etl_spark.functions.textmeta import analysis_text
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    d = docs.select(
-        "doc_id",
-        F.concat(F.lit("title "), F.col("doc_id")).alias("title_txt"),
-        F.lit("").alias("description_txt"),
-        F.col("text").alias("content_txt"),
-    )
-    return d.select(
-        "doc_id",
-        analysis_text("title_txt", "description_txt", "content_txt").alias("text_analysis"),
-    )
-
-
 def q_file_modified_dt(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return ev.select(
         "event_id", P.file_modified_dt(F.col("ts")).alias("file_modified_dt")
     )
-
-
-def q_mapping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    mappings = {
-        "/": "file:///",
-        "/src0/": "file:///mapped-src0/",
-        "/src0/deep/": "file:///mapped-deep/",
-    }
-    d = docs.select(
-        "doc_id",
-        F.concat(
-            F.lit("/"),
-            F.col("source"),
-            F.when(F.col("doc_id") % 4 == 0, F.lit("/deep")).otherwise(F.lit("")),
-            F.lit("/f"),
-            F.col("doc_id"),
-        ).alias("path"),
-    )
-    return d.select("doc_id", P.mapping_id(F.col("path"), mappings).alias("mapped_id"))
 
 
 # --- relational layer (inherited from Spark SQL — SURVEY.md §2.9) ----------
@@ -480,21 +346,6 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_simhash(docs, text_col="text").select("doc_id", "simhash")
 
 
-def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from open_semantic_etl_spark.operators.similarity import brute_force_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return brute_force_topk(emb, query_ids=list(range(10)), k=5)
-
-
-def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sign-LSH bucketed ANN (rows-only; recall vs brute force in tests)."""
-    from open_semantic_etl_spark.operators.similarity import lsh_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return lsh_topk(emb, query_ids=list(range(10)), k=5, dim=64)
-
-
 def q_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """all five ANN strategies over the same queries in one result —
     exact brute-force baseline (SQL-oracled), sign-LSH buckets, IVF
@@ -570,32 +421,6 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = dedup_paragraphs(docs.withColumn("ptext", ptext), text_col="ptext")
     return out.select("doc_id", "text_dedup", "n_paragraphs", "n_dropped")
-
-
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from open_semantic_etl_spark.operators.textstats import with_quality
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return with_quality(docs.select("doc_id", "text"), "text").select(
-        "doc_id", "n_tokens", "mean_word_len", "stopword_ratio",
-        "punct_ratio", "digit_ratio", "repetition_ratio", "quality_score",
-    )
-
-
-def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from open_semantic_etl_spark.operators.textstats import with_token_counts
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return with_token_counts(docs.select("doc_id", "text"), "text").select(
-        "doc_id", "n_ws_tokens", "n_bpe_tokens", "n_distinct_tokens"
-    )
-
-
-def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from open_semantic_etl_spark.operators.textstats import with_fingerprint
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return with_fingerprint(docs.select("doc_id", "text"), "text").select("doc_id", "fp_md5")
 
 
 # ---------------------------------------------------------------------------
@@ -798,20 +623,6 @@ def q_language_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return docs.select("doc_id", language_expr(F.col("text")).alias("language_s"))
-
-
-def q_multilingual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from open_semantic_etl_spark.functions.textmeta import with_multilingual
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    d = docs.select("doc_id", F.col("text").alias("text_analysis"), F.col("lang").alias("language_s"))
-    out = with_multilingual(
-        d, langs=("en", "de"), langs_hunspell=("de",), langs_force=("fr",)
-    )
-    return out.select(
-        "doc_id", "text_all", "text_txt_en", "text_txt_de",
-        "text_txt_hunspell_de", "text_txt_fr",
-    )
 
 
 def q_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:

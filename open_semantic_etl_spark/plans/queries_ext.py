@@ -1638,7 +1638,7 @@ FROM p
 # mimetype sniff + file size (enhance_mimetype.py:27-35,
 # enhance_file_size.py:25-31) — fully JVM-side. Driver slot consolidated
 # into doc_meta (same doc grain; the 50-entry cap): q_mimetype stays the
-# solo form, SQL_MIMETYPE its oracle, both exercised via doc_meta's columns
+# solo form, exercised via doc_meta's columns
 # ---------------------------------------------------------------------------
 
 
@@ -1660,17 +1660,6 @@ def q_mimetype(spark: SparkSession, sf_dir: str) -> DataFrame:
         sniff_mimetype(data).alias("content_type_magic_s"),
         F.length(data).alias("file_size_i"),
     )
-
-
-SQL_MIMETYPE = """
-SELECT doc_id,
-  CASE doc_id % 4 WHEN 0 THEN 'text/html' WHEN 1 THEN 'application/pdf'
-       WHEN 2 THEN 'image/png' ELSE 'application/zip' END AS content_type_magic_s,
-  (CASE doc_id % 4
-       WHEN 0 THEN 27 WHEN 1 THEN 10
-       WHEN 2 THEN 9 ELSE 5 END + length(doc_id::varchar))::int AS file_size_i
-FROM documents
-"""
 
 
 # ---------------------------------------------------------------------------

@@ -65,42 +65,3 @@ ENTITY_TYPE = T.ArrayType(
         ]
     )
 )
-
-# PDF parse result (enhance_pdf_page.py:62-147 equivalent).
-PDF_RESULT_TYPE = T.StructType(
-    [
-        T.StructField("pages", T.ArrayType(T.StringType()), True),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("author", T.StringType(), True),
-        T.StructField("npages", T.IntegerType(), True),
-        T.StructField("n_images", T.IntegerType(), True),
-        T.StructField("ok", T.BooleanType(), False),
-        T.StructField("err", T.StringType(), True),
-    ]
-)
-
-# Checkpoint table: replaces filter_file_not_modified's per-plugin
-# marker checks against Solr (filter_file_not_modified.py:111-159).
-CHECKPOINT_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("content_hash", T.LongType(), False),  # xxhash64(html)
-        T.StructField("stages_done", T.ArrayType(T.StringType()), False),
-        T.StructField("pipeline_version", T.StringType(), False),
-    ]
-)
-
-# Per-partition lineage/metrics rows (etl.py:222-238 timing analogue,
-# aggregated per partition instead of per document).
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("docs", T.LongType(), False),
-        T.StructField("bytes_in", T.LongType(), False),
-        T.StructField("bytes_out", T.LongType(), False),
-        T.StructField("failures", T.LongType(), False),
-        T.StructField("elapsed_ms", T.LongType(), False),
-    ]
-)

@@ -223,7 +223,3 @@ def pages_df(spark: SparkSession, n_rows: int, seed: int = 42, partitions: int |
 
     rng_df = spark.range(n_rows, numPartitions=partitions)
     return rng_df.mapInPandas(gen, schema=PAGES_SCHEMA)
-
-
-def write_pages(spark: SparkSession, path: str, n_rows: int, seed: int = 42, partitions: int | None = None) -> None:
-    pages_df(spark, n_rows, seed, partitions).write.mode("overwrite").parquet(path)

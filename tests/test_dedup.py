@@ -939,6 +939,25 @@ def test_train_quality_clf_separates_target_class(spark):
     assert got[20] > 0.5 > got[21]  # held-out separation
 
 
+def test_train_quality_clf_skips_null_labels(spark):
+    """a document whose label is NULL is unlabeled, not a negative:
+    training must give the same weights as training without it."""
+    rows = [
+        (0, True, "peer reviewed research methodology with careful citations"),
+        (1, True, "rigorous analysis of research methodology and citations"),
+        (2, False, "clickbait listicle you won't believe these shocking secrets"),
+        (3, False, "shocking celebrity secrets clickbait listicle"),
+        # same texts as labeled rows, so every bucket also holds a
+        # labeled document and only the NULL handling can move a weight
+        (4, None, "peer reviewed research methodology with careful citations"),
+        (5, None, "shocking celebrity secrets clickbait listicle"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, good boolean, text string")
+    w = TS.train_quality_clf(df, F.col("good"))
+    w_labeled = TS.train_quality_clf(df.filter(F.col("good").isNotNull()), F.col("good"))
+    assert w == w_labeled
+
+
 def test_bigram_lm_perplexity_prefers_reference_like_docs(spark):
     """CCNet filter shape: docs resembling the reference slice get
     LOWER perplexity than off-domain docs; < 2-token docs score NULL;
@@ -1221,6 +1240,25 @@ def test_lsh_paths_and_batch_ids_validated(spark, corpus, tmp_path):
         D.dedup_ingest_batch(
             spark, corpus.limit(1), path, batch_id="2026/08/21", id_col="doc_id"
         )
+
+
+def test_dedup_ingest_batch_refuses_epoch_layout_before_evaluating(
+    spark, corpus, tmp_path
+):
+    """batch ingest into a streaming-layout (_epoch) index raises the
+    layout error up front, before any work evaluates the batch: a batch
+    whose evaluation fails must surface the layout ValueError, not its
+    own error."""
+    epo = str(tmp_path / "idx_ingest_epoch")
+    D.build_lsh_index(corpus.filter(F.col("doc_id") == 0), epo, epoch=0)
+
+    @F.udf("string")
+    def boom(_text):
+        raise RuntimeError("batch_df was evaluated")
+
+    batch = corpus.filter(F.col("doc_id") == 4).withColumn("text", boom("text"))
+    with pytest.raises(ValueError, match="compact_lsh_index"):
+        D.dedup_ingest_batch(spark, batch, epo, batch_id="b1", id_col="doc_id")
 
 
 def test_dedup_ingest_batch_crash_resume(spark, corpus, tmp_path):

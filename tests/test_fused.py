@@ -2,8 +2,25 @@
 
 from __future__ import annotations
 
-from open_semantic_etl_spark.operators.entity_linking import Gazetteer, GazetteerEntry
-from open_semantic_etl_spark.plans.pipeline import enrich_pages
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from open_semantic_etl_spark.functions import path as P
+from open_semantic_etl_spark.functions import textmeta as M
+from open_semantic_etl_spark.operators.entity_linking import (
+    Gazetteer,
+    GazetteerEntry,
+    with_entities,
+)
+from open_semantic_etl_spark.operators.html_extract import with_extraction
+from open_semantic_etl_spark.operators.langdetect import language_expr
+from open_semantic_etl_spark.operators.numerize import numerize_en
+from open_semantic_etl_spark.plans.pipeline import (
+    DEFAULT_CURRENCY_LABELS,
+    _enrich_after_python,
+    content_hash,
+    enrich_pages,
+)
 from open_semantic_etl_spark.sources.pages import pages_df
 
 _GAZ = Gazetteer(
@@ -21,14 +38,31 @@ _COLS = [
 ]
 
 
+def _enrich_modular(pages, gazetteer):
+    """reference chain: one operator (and one Python UDF) per stage,
+    then the same JVM stages enrich_pages runs after its fused pass."""
+    df = with_extraction(pages).withColumn("content_hash", content_hash())
+    df = df.withColumn(
+        "title_txt", P.clean_title(F.col("title_txt"), None, F.col("url"))
+    )
+    df = M.with_analysis_text(df)
+    df = df.withColumn("language_s", language_expr(F.col("text_analysis")))
+    df = with_entities(df, gazetteer)
+    nz = F.pandas_udf(lambda s: s.map(numerize_en), T.StringType())
+    df = df.withColumn("text_numerized", nz(F.col("text_analysis")))
+    return _enrich_after_python(
+        df, DEFAULT_CURRENCY_LABELS, ("en", "de", "fr", "es")
+    )
+
+
 def test_fused_equals_modular(spark):
     pages = pages_df(spark, 120, partitions=4)
     fused = (
-        enrich_pages(pages, gazetteer=_GAZ, fused=True)
+        enrich_pages(pages, gazetteer=_GAZ)
         .select(_COLS).toPandas().sort_values("url").reset_index(drop=True)
     )
     modular = (
-        enrich_pages(pages, gazetteer=_GAZ, fused=False)
+        _enrich_modular(pages, _GAZ)
         .select(_COLS).toPandas().sort_values("url").reset_index(drop=True)
     )
     for c in _COLS:
@@ -60,8 +94,8 @@ def test_fused_equals_modular_titleless(spark):
         rows, "url string, warc_ts timestamp, html binary, text string, lang string"
     )
     cols = ["url", "title_txt", "text_analysis", "language_s", "entities", "text_all"]
-    fused = enrich_pages(pages, gazetteer=_GAZ, fused=True).select(cols).toPandas()
-    modular = enrich_pages(pages, gazetteer=_GAZ, fused=False).select(cols).toPandas()
+    fused = enrich_pages(pages, gazetteer=_GAZ).select(cols).toPandas()
+    modular = _enrich_modular(pages, _GAZ).select(cols).toPandas()
     fused = fused.sort_values("url").reset_index(drop=True)
     modular = modular.sort_values("url").reset_index(drop=True)
     # basename fallback landed in the analysis text in both paths
