@@ -23,12 +23,27 @@ columns needed.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
+import shutil
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
+
+from open_semantic_etl_spark.plans.checkpoint import (
+    has_data,
+    recover_table,
+    require_local,
+    swap_buckets,
+    swap_table,
+    tmp_path,
+)
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -340,7 +355,7 @@ def build_lsh_index(
     MinHash recompute when the caller already has them."""
     _recover_lsh_compaction(index_path)  # an append directly after a
     # crashed compaction would otherwise recreate the live dir and let
-    # the next probe's recovery DELETE the __old_* full-corpus copy
+    # the next probe's recovery DELETE the parked full-corpus copy
     meta = _lsh_index_meta(
         index_path, num_hashes, bands, shingle_n, n_buckets, create=True,
         refresh=(mode == "overwrite" and epoch is None),
@@ -349,29 +364,19 @@ def build_lsh_index(
     suffix = f"/_epoch={epoch}" if epoch is not None else ""
     if epoch is not None:
         mode = "overwrite"
-    if not (mode == "overwrite" and epoch is None):
-        # an append must match the table's physical layout: mixing
-        # ``_epoch=`` dirs with the flat bucket layout makes partition
-        # discovery raise "Conflicting directory structures" on every
-        # later read — and a probe that swallowed that error would
-        # report ALL docs novel and admit every duplicate (r5 review).
-        # Refuse the write instead of corrupting the layout.
-        for sub in ("bands", "sigs"):
-            state = _lsh_table_state(f"{index_path}/{sub}")
-            if epoch is not None and state == "flat":
-                raise ValueError(
-                    f"LSH index {sub} table at {index_path} has the flat "
-                    "(batch/compacted) layout; an _epoch append would corrupt "
-                    "partition discovery. After compact_lsh_index, continue "
-                    "with non-epoch appends (dedup_ingest_batch) or stream "
-                    "into a fresh index path."
-                )
-            if epoch is None and state == "epoch":
-                raise ValueError(
-                    f"LSH index {sub} table at {index_path} has the "
-                    "_epoch streaming layout; a flat append would corrupt "
-                    "partition discovery. Run compact_lsh_index first."
-                )
+    if epoch is not None:
+        _refuse_layout(
+            index_path, "flat",
+            "an _epoch append would corrupt partition discovery. After "
+            "compact_lsh_index, continue with non-epoch appends "
+            "(dedup_ingest_batch) or stream into a fresh index path.",
+        )
+    elif mode != "overwrite":
+        _refuse_layout(
+            index_path, "epoch",
+            "a flat append would corrupt partition discovery. Run "
+            "compact_lsh_index first.",
+        )
     if signatures is None:
         sig = df.select(
             F.col(id_col).alias("_id"),
@@ -409,9 +414,6 @@ def _lsh_index_meta(
     legitimate re-parameterization path.  The write is tmp+os.replace
     so a crash mid-write can never wedge later probes on a truncated
     JSON (r4 review)."""
-    import json
-    import os
-
     meta_path = os.path.join(index_path, "_lsh_meta.json")
     want = {
         "num_hashes": num_hashes,
@@ -491,10 +493,7 @@ def probe_lsh_index(
     # exception class at plan time ("Conflicting directory structures"),
     # and swallowing it would silently report every doc novel and admit
     # every duplicate (r5 review).  Any read error on real data raises.
-    if (
-        _lsh_table_state(f"{index_path}/bands") in ("absent", "empty")
-        or _lsh_table_state(f"{index_path}/sigs") in ("absent", "empty")
-    ):
+    if not (has_data(f"{index_path}/bands") and has_data(f"{index_path}/sigs")):
         return df.select(
             F.lit(None).cast(id_type).alias("index_id"),
             F.col(id_col).alias("probe_id"),
@@ -536,18 +535,15 @@ def probe_lsh_index(
     dups = (
         pairs.join(idx_sigs, "index_id")
         .join(probe_sigs, "probe_id")
-        .select(
-            "index_id",
-            "probe_id",
-            est.alias("est_jaccard"),
-            F.lit(True).alias("matched"),
-        )
         # a crash between a non-epoch append's sigs and bands writes
-        # leaves orphan sig rows the retry re-appends; the duplicate
-        # (_id, sig) rows would fan each collision out to N rows here.
-        # Dedup on the PAIR (candidates ≪ corpus — cheap), not on the
-        # full sig table (r5 review).
-        .dropDuplicates(["index_id", "probe_id"])
+        # leaves orphan sig rows the retry re-appends, and an id
+        # re-ingested with new text carries two sigs; either would fan
+        # each collision out to N rows here.  Collapse on the PAIR
+        # (candidates ≪ corpus — cheap), keeping the highest estimate
+        # so the output is deterministic (r5 review).
+        .groupBy("index_id", "probe_id")
+        .agg(F.max(est).alias("est_jaccard"))
+        .withColumn("matched", F.lit(True))
     )
     novel = (
         df.select(F.col(id_col).alias("probe_id"))
@@ -987,43 +983,24 @@ def embedding_dup_pairs(
     )
 
 
-def _require_local(path: str) -> None:
-    """the index lifecycle (state checks, staged swaps, batch commits)
-    runs on driver-local filesystem primitives; a URI-schemed path
-    (hdfs://, s3a://) would make every os.path check read as 'absent'
-    and silently admit every duplicate (r5 review).  Raise loudly; on
-    a cluster these call sites swap os/shutil for the Hadoop
-    FileSystem API behind the same functions."""
-    if "://" in path:
-        raise NotImplementedError(
-            f"LSH index paths must be driver-local filesystem paths in this "
-            f"build (got {path!r}); remote-FS support needs the Hadoop "
-            "FileSystem API behind _lsh_table_state/_recover_lsh_compaction"
-        )
-
-
-def _lsh_table_state(path: str) -> str:
-    """physical layout of one index table dir: ``absent`` (no dir),
-    ``empty`` (dir holds no parquet data files — e.g. an all-empty-epoch
-    streaming bootstrap), ``flat`` (data, no ``_epoch=`` partition
-    dirs — the batch/compacted layout), ``epoch`` (data under
-    ``_epoch=`` dirs — the streaming layout).  Pure os-path checks; the
-    build guard and the probe's empty-index test both key off this so a
-    mixed layout is refused/raised instead of read as empty."""
-    import os
-
-    _require_local(path)
-    if not os.path.isdir(path):
-        return "absent"
-    has_data = any(
-        f.endswith(".parquet")
-        for _d, _s, files in os.walk(path)
-        for f in files
-    )
-    if not has_data:
-        return "empty"
-    epoched = any(n.startswith("_epoch=") for n in os.listdir(path))
-    return "epoch" if epoched else "flat"
+def _refuse_layout(index_path: str, layout: str, remedy: str) -> None:
+    """raise ValueError if either index table holds data in ``layout``:
+    ``flat`` (no ``_epoch=`` partition dirs — the batch/compacted
+    layout) or ``epoch`` (the streaming layout).  Writing the other
+    layout beside it makes partition discovery raise "Conflicting
+    directory structures" on every later read, and a probe that
+    swallowed that error would report ALL docs novel and admit every
+    duplicate (r5 review) — so the write is refused instead."""
+    name = {"flat": "flat (batch/compacted)", "epoch": "_epoch streaming"}
+    for sub in ("bands", "sigs"):
+        path = f"{index_path}/{sub}"
+        if has_data(path) and (layout == "epoch") == any(
+            n.startswith("_epoch=") for n in os.listdir(path)
+        ):
+            raise ValueError(
+                f"LSH index {sub} table at {index_path} has the "
+                f"{name[layout]} layout; {remedy}"
+            )
 
 
 def semdedup_pairs(
@@ -1083,37 +1060,20 @@ def semdedup_pairs(
 
 
 def _recover_lsh_compaction(index_path: str) -> None:
-    """roll an interrupted compact_lsh_index back/forward: a table dir
-    that vanished mid-swap is restored from its ``__old_*`` sibling
-    (else the probe would silently treat a full corpus index as empty —
-    r4 review); leftover ``__tmp_*``/``__old_*`` staging dirs are
-    dropped.  Called at the top of every probe and compaction; pure
-    os-path checks when nothing is staged."""
-    import glob
-    import os
-    import shutil
-
-    from open_semantic_etl_spark.plans.checkpoint import recover_swaps
-
-    _require_local(index_path)
+    """recover_table both index tables — a compaction or delete
+    interrupted mid-swap would otherwise read as an EMPTY index and
+    admit every duplicate (r4 review) — then roll committed-but-
+    unpublished batch appends forward.  Called at the top of every
+    probe, build, ingest, delete and compaction."""
     for sub, part_col in (("bands", "_bb"), ("sigs", "_sb")):
-        path = f"{index_path}/{sub}"
-        olds = sorted(glob.glob(f"{path}__old_*"))
-        if olds and not os.path.isdir(path):
-            os.rename(olds.pop(), path)
-        for stale in olds + glob.glob(f"{path}__tmp_*"):
-            shutil.rmtree(stale, ignore_errors=True)
-        # also roll forward any interrupted per-bucket delete swap
-        # (delete_from_lsh_index parks post-delete bucket dirs in a
-        # sibling __swap dir — same recovery as the checkpoint merge)
-        recover_swaps(path, part_col=part_col)
+        recover_table(f"{index_path}/{sub}", part_col)
     # roll staged-COMPLETE batch appends forward (dedup_ingest_batch
     # crashed between _STAGED and the marker publish).  Un-staged
     # ``__batch_*`` dirs are left alone: they are either a concurrent
     # in-flight writer's staging or dead weight the next ingest of that
     # batch_id discards itself — deleting them here would race a live
     # writer.
-    for staging in glob.glob(f"{index_path}/__batch_*"):
+    for staging in glob.glob(f"{glob.escape(index_path)}/__batch_*"):
         if os.path.isfile(os.path.join(staging, "_STAGED")):
             batch_id = os.path.basename(staging)[len("__batch_"):]
             _commit_batch_staging(
@@ -1136,10 +1096,9 @@ def _commit_batch_staging(index_path: str, staging: str, marker: str) -> None:
     file), then publish the kept-ids dir as the committed marker (one
     atomic rename), then drop the staging dir.  Every step is
     idempotent under crash-retry — the recovery path and the happy path
-    are the same code."""
-    import os
-    import shutil
-
+    are the same code — and safe against a concurrent committer (a
+    probe in another process rolling the same batch forward): a part
+    file or kept-ids dir the other side moved first is skipped."""
     for sub in ("bands", "sigs"):
         src_root = os.path.join(staging, sub)
         if not os.path.isdir(src_root):
@@ -1151,11 +1110,63 @@ def _commit_batch_staging(index_path: str, staging: str, marker: str) -> None:
                     continue
                 dst_dir = os.path.join(index_path, sub, rel)
                 os.makedirs(dst_dir, exist_ok=True)
-                os.rename(os.path.join(d, f), os.path.join(dst_dir, f))
+                try:
+                    os.rename(os.path.join(d, f), os.path.join(dst_dir, f))
+                except FileNotFoundError:
+                    pass  # the concurrent committer moved it first
     if not os.path.isdir(marker):
         os.makedirs(os.path.dirname(marker), exist_ok=True)
-        os.rename(os.path.join(staging, "kept_ids"), marker)
+        try:
+            os.rename(os.path.join(staging, "kept_ids"), marker)
+        except OSError:
+            if not os.path.isdir(marker):
+                raise
     shutil.rmtree(staging, ignore_errors=True)
+
+
+def _novel_rows(
+    batch_df: DataFrame,
+    index_path: str,
+    text_col: str = "text",
+    id_col: str = "url",
+    num_hashes: int = 64,
+    bands: int = 16,
+    shingle_n: int = 3,
+    n_buckets: int = 64,
+    exclude_epoch: int | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """the dedup-ingest core of dedup_ingest_batch and
+    stream_dedup_ingest: → (kept rows, their ``(id_col, sig)``).
+    Duplicate ids collapse first; ONE MinHash pass threads through the
+    probe against the index (minus ``exclude_epoch``'s partition) and
+    the within-batch dedup, which keeps the smaller id of every
+    colliding pair (deterministic; conservative on chains —
+    cluster-resolve is dup_clusters when exactness matters)."""
+    batch = batch_df.dropDuplicates([id_col]).localCheckpoint(eager=True)
+    sigs = batch.select(
+        F.col(id_col),
+        minhash_signature(F.col(text_col), num_hashes, shingle_n).alias("sig"),
+    ).localCheckpoint(eager=True)
+    probed = probe_lsh_index(
+        batch, index_path, text_col=text_col, id_col=id_col,
+        num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
+        n_buckets=n_buckets, exclude_epoch=exclude_epoch, signatures=sigs,
+    )
+    novel_ids = probed.filter(~F.col("matched")).select(
+        F.col("probe_id").alias(id_col)
+    )
+    novel = batch.join(novel_ids, id_col)
+    drop = (
+        lsh_candidate_pairs(
+            novel, text_col=text_col, id_col=id_col,
+            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
+            signatures=sigs.join(novel_ids, id_col),
+        )
+        .select(F.col("id_b").alias(id_col))
+        .distinct()
+    )
+    kept = novel.join(drop, id_col, "left_anti").localCheckpoint(eager=True)
+    return kept, sigs.join(kept.select(id_col), id_col)
 
 
 def dedup_ingest_batch(
@@ -1202,10 +1213,6 @@ def dedup_ingest_batch(
 
     ``_fail_after_stage`` is the crash-simulation hook (the
     ``fail_before_checkpoint`` pattern, plans/checkpoint.py)."""
-    import os
-    import re
-    import shutil
-
     if batch_id is not None and not re.fullmatch(r"[A-Za-z0-9._-]{1,128}", batch_id):
         # '/' or other path chars would nest the __batch_ staging dir,
         # hiding its _STAGED file from recovery's one-level glob and
@@ -1217,7 +1224,7 @@ def dedup_ingest_batch(
     _recover_lsh_compaction(index_path)
 
     def kept_rows(ids_path: str) -> DataFrame:
-        if _lsh_table_state(ids_path) in ("absent", "empty"):
+        if not has_data(ids_path):
             # an all-duplicate batch records an EMPTY keep-set; some
             # writers emit no parquet footer for zero rows, which would
             # make the replay read fail schema inference
@@ -1239,48 +1246,22 @@ def dedup_ingest_batch(
             return kept_rows(marker)
         shutil.rmtree(staging, ignore_errors=True)  # partial stage
         # refuse before any batch work: the staged append writes the
-        # flat layout, and the checkpoints below evaluate batch_df
-        for sub in ("bands", "sigs"):
-            if _lsh_table_state(f"{index_path}/{sub}") == "epoch":
-                raise ValueError(
-                    f"LSH index {sub} table at {index_path} has the _epoch "
-                    "streaming layout; run compact_lsh_index before batch "
-                    "ingest (the staged append writes the flat layout)."
-                )
-
-    batch = batch_df.dropDuplicates([id_col]).localCheckpoint(eager=True)
-    sigs = batch.select(
-        F.col(id_col),
-        minhash_signature(F.col(text_col), num_hashes, shingle_n).alias("sig"),
-    ).localCheckpoint(eager=True)
-    probed = probe_lsh_index(
-        batch, index_path, text_col=text_col, id_col=id_col,
-        num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-        n_buckets=n_buckets, signatures=sigs,
-    )
-    novel_ids = probed.filter(~F.col("matched")).select(
-        F.col("probe_id").alias(id_col)
-    )
-    novel = batch.join(novel_ids, id_col)
-    drop = (
-        lsh_candidate_pairs(
-            novel, text_col=text_col, id_col=id_col,
-            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-            signatures=sigs.join(novel_ids, id_col),
+        # flat layout, and _novel_rows evaluates batch_df
+        _refuse_layout(
+            index_path, "epoch",
+            "run compact_lsh_index before batch ingest (the staged append "
+            "writes the flat layout).",
         )
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-    kept = novel.join(drop, id_col, "left_anti").localCheckpoint(eager=True)
-    kept_sigs = sigs.join(kept.select(id_col), id_col).select(
-        F.col(id_col).alias("_id"), "sig"
+
+    kept, kept_sigs = _novel_rows(
+        batch_df, index_path, text_col, id_col, num_hashes, bands, shingle_n,
+        n_buckets,
     )
     if batch_id is None:
         build_lsh_index(
             kept, index_path, text_col=text_col, id_col=id_col,
             num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-            n_buckets=n_buckets,
-            signatures=kept_sigs.select(F.col("_id").alias(id_col), "sig"),
+            n_buckets=n_buckets, signatures=kept_sigs,
         )
         return kept
     # staged append: all three writes land OUTSIDE the live tables, so
@@ -1289,6 +1270,7 @@ def dedup_ingest_batch(
         index_path, num_hashes, bands, shingle_n, n_buckets, create=True
     )
     num_hashes, bands, shingle_n, n_buckets = meta
+    kept_sigs = kept_sigs.select(F.col(id_col).alias("_id"), "sig")
     kept_sigs.withColumn(
         "_sb", F.pmod(F.xxhash64("_id"), F.lit(n_buckets))
     ).write.mode("overwrite").partitionBy("_sb").parquet(f"{staging}/sigs")
@@ -1309,9 +1291,7 @@ def dedup_ingest_batch(
 def list_lsh_batches(index_path: str) -> list[str]:
     """committed batch ids recorded in the index (sorted) — the
     manifest a retention sweep enumerates."""
-    import os
-
-    _require_local(index_path)
+    require_local(index_path)
     root = f"{index_path}/_batches"
     return sorted(os.listdir(root)) if os.path.isdir(root) else []
 
@@ -1343,10 +1323,7 @@ def expire_lsh_batches(
     recently-re-seen content should refresh attribution at probe time
     (move matched index ids into the current batch's manifest) before
     relying on batch expiry."""
-    import os
-    import shutil
-
-    _require_local(index_path)
+    require_local(index_path)
     for bid in batch_ids:
         marker = f"{index_path}/_batches/{bid}"
         if not os.path.isdir(marker):
@@ -1357,7 +1334,7 @@ def expire_lsh_batches(
                     "(retry a crashed sweep with strict=False)"
                 )
             continue
-        if _lsh_table_state(marker) not in ("absent", "empty"):
+        if has_data(marker):
             # empty = all-duplicate batch: nothing indexed, marker only
             delete_from_lsh_index(
                 spark, index_path, spark.read.parquet(marker).select("_id")
@@ -1370,47 +1347,39 @@ def delete_from_lsh_index(spark, index_path: str, ids) -> None:
     recrawl-replaced urls, TTL expiry) — the DELETE twin of the
     append-only build.
 
-    Bucket-pruned, the merge_by_url rule (plans/checkpoint.py:183)
-    applied to the index: a doc's sig lives in ``_sb =
-    pmod(xxhash64(id), n_buckets)`` and its band rows in the ``_bb``
-    buckets of its (sig-derived, deterministic) band hashes, so the
-    rewrite reads and swaps ONLY those buckets; untouched bucket files
-    stay byte-identical on disk.  Cost tracks the DELETE BATCH, not the
-    corpus.  Crash windows use the checkpoint tier's staged-swap
-    treatment (``__swap`` sibling dir + recover_swaps, rolled forward
-    by every probe/build via ``_recover_lsh_compaction``); bands swap
-    BEFORE sigs, and either half-state probes correctly (a band
-    collision without a sig row drops at the inner sig join, so a
-    half-deleted doc never resurfaces).  Requires the flat (batch /
-    compacted) layout — run ``compact_lsh_index`` on a streaming index
-    first (epoch partitions would make per-bucket swaps span epochs).
+    Bucket-pruned, the merge_by_url rule (plans/checkpoint.py) applied
+    to the index: a doc's sig lives in ``_sb = pmod(xxhash64(id),
+    n_buckets)`` and its band rows in the ``_bb`` buckets of its
+    (sig-derived, deterministic) band hashes, so the rewrite reads and
+    swaps ONLY those buckets; untouched bucket files stay
+    byte-identical on disk.  Cost tracks the DELETE BATCH, not the
+    corpus.  Crash windows use the checkpoint tier's staged
+    swap_buckets, rolled forward by every probe/build via
+    recover_table; bands swap BEFORE sigs, and either half-state
+    probes correctly (a band collision without a sig row drops at the
+    inner sig join, so a half-deleted doc never resurfaces).  Each
+    table that holds data is swept, so orphan sig rows left by a crash
+    between a build's sigs and bands writes are removed too.  Requires
+    the flat (batch / compacted) layout — run ``compact_lsh_index`` on
+    a streaming index first (epoch partitions would make per-bucket
+    swaps span epochs).
 
     ``ids``: list of doc-id values, or a single-column DataFrame of
     them.  Ids absent from the index are a no-op.
     """
-    import os
-    import uuid
-
-    from open_semantic_etl_spark.plans.checkpoint import _swap_buckets
-
     _recover_lsh_compaction(index_path)
-    import json
-
     meta_path = os.path.join(index_path, "_lsh_meta.json")
     with open(meta_path) as f:  # deleting from a non-index raises loudly
         meta = json.load(f)
     num_hashes, bands, n_buckets = (
         meta["num_hashes"], meta["bands"], meta["n_buckets"]
     )
-    for sub in ("bands", "sigs"):
-        state = _lsh_table_state(f"{index_path}/{sub}")
-        if state in ("absent", "empty"):
-            return  # nothing indexed yet — delete is a no-op
-        if state == "epoch":
-            raise ValueError(
-                f"LSH index {sub} table at {index_path} has the _epoch "
-                "streaming layout; run compact_lsh_index before deleting."
-            )
+    _refuse_layout(index_path, "epoch", "run compact_lsh_index before deleting.")
+    sigs_path = f"{index_path}/sigs"
+    bands_path = f"{index_path}/bands"
+    sigs_live, bands_live = has_data(sigs_path), has_data(bands_path)
+    if not (sigs_live or bands_live):
+        return  # nothing indexed yet — delete is a no-op
     if isinstance(ids, DataFrame):
         ids_df = ids.toDF("_del_id").dropDuplicates(["_del_id"])
     else:
@@ -1420,35 +1389,35 @@ def delete_from_lsh_index(spark, index_path: str, ids) -> None:
         ids_df = spark.createDataFrame(
             [(i,) for i in ids], ["_del_id"]
         ).dropDuplicates(["_del_id"])
-    cand_buckets = [
-        r[0]
-        for r in ids_df.select(
-            F.pmod(F.xxhash64("_del_id"), F.lit(n_buckets)).alias("b")
+    is_deleted = F.col("_id") == F.col("_del_id")
+    sig_buckets, band_buckets = [], []
+    if sigs_live:
+        cand_buckets = [r[0] for r in ids_df.select(
+            F.pmod(F.xxhash64("_del_id"), F.lit(n_buckets))
+        ).distinct().collect()]
+        cand_sigs = spark.read.parquet(sigs_path).filter(
+            F.col("_sb").isin(cand_buckets)
         )
-        .distinct()
-        .collect()
-    ]
-    sigs_path = f"{index_path}/sigs"
-    bands_path = f"{index_path}/bands"
-    cand_sigs = spark.read.parquet(sigs_path).filter(
-        F.col("_sb").isin(cand_buckets)
-    )
-    del_sigs = cand_sigs.join(
-        F.broadcast(ids_df), cand_sigs["_id"] == ids_df["_del_id"]
-    ).select("_id", "sig", "_sb")
-    # rewrite only buckets where deleted rows ACTUALLY exist — ids not
-    # in the index must leave every file byte-identical, not churn
-    # their would-be bucket (cand_buckets only prunes the lookup scan).
-    # The deleted docs' band rows are recomputed FROM THEIR SIGS
-    # (deterministic), so the touched _bb set is exact too — no scan of
-    # the full bands table.
-    sig_buckets = [r[0] for r in del_sigs.select("_sb").distinct().collect()]
-    del_bands = _band_table(del_sigs.select("_id", "sig"), num_hashes, bands).withColumn(
-        "_bb", F.pmod(F.xxhash64("bh"), F.lit(n_buckets))
-    )
-    band_buckets = [r[0] for r in del_bands.select("_bb").distinct().collect()]
-    if not band_buckets and not sig_buckets:
-        return
+        del_sigs = cand_sigs.join(F.broadcast(ids_df), is_deleted).select(
+            "_id", "sig", "_sb"
+        )
+        # rewrite only buckets where deleted rows ACTUALLY exist — ids
+        # not in the index must leave every file byte-identical, not
+        # churn their would-be bucket (cand_buckets only prunes the
+        # lookup scan).  The deleted docs' band rows are recomputed FROM
+        # THEIR SIGS (deterministic), so the touched _bb set is exact
+        # too — no scan of the full bands table.
+        sig_buckets = [r[0] for r in del_sigs.select("_sb").distinct().collect()]
+        del_bands = _band_table(
+            del_sigs.select("_id", "sig"), num_hashes, bands
+        ).withColumn("_bb", F.pmod(F.xxhash64("bh"), F.lit(n_buckets)))
+    else:
+        # bands without sigs: no sig to recompute band rows from
+        del_bands = spark.read.parquet(bands_path).join(
+            F.broadcast(ids_df), is_deleted
+        )
+    if bands_live:
+        band_buckets = [r[0] for r in del_bands.select("_bb").distinct().collect()]
     # bands first: once a doc's band rows are gone it can never match,
     # whatever happens to its sig rows before the retry finishes
     for path, part_col, buckets in (
@@ -1460,11 +1429,11 @@ def delete_from_lsh_index(spark, index_path: str, ids) -> None:
         keep = (
             spark.read.parquet(path)
             .filter(F.col(part_col).isin(buckets))
-            .join(F.broadcast(ids_df), F.col("_id") == F.col("_del_id"), "left_anti")
+            .join(F.broadcast(ids_df), is_deleted, "left_anti")
         )
-        tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
+        tmp = tmp_path(path)
         keep.write.mode("overwrite").partitionBy(part_col).parquet(tmp)
-        _swap_buckets(tmp, path, buckets, part_col=part_col)
+        swap_buckets(tmp, path, buckets, part_col=part_col)
 
 
 def compact_lsh_index(spark, index_path: str, n_buckets: int = 64) -> None:
@@ -1474,20 +1443,16 @@ def compact_lsh_index(spark, index_path: str, n_buckets: int = 64) -> None:
     Thousands of micro-batch epochs mean thousands of tiny files per
     bucket — the classic small-file problem; compaction rewrites each
     table once (epoch column dropped, one shuffle on the partition key)
-    and swaps it in with the checkpoint tier's tmp+rename recipe.
-    Crash windows are closed by ``_recover_lsh_compaction`` (run here
-    and by every probe): the rename gap restores the old layout, stale
-    staging dirs are reaped.  The two tables swap independently — a
-    crash between them leaves bands flat and sigs epoched, which both
-    readers handle (each checks for ``_epoch`` per table).  Run
-    between streaming sessions, not concurrently with
-    stream_dedup_ingest: the retry-exclusion filter needs the epoch
-    column while a stream is live, and within-checkpoint replays are
-    the only replays the epoch trick protects."""
-    import os
-    import shutil
-    import uuid
-
+    and swaps it in with the checkpoint tier's swap_table.  Crash
+    windows are closed by recover_table (run here and by every probe):
+    the rename gap restores the old layout, stale staging dirs are
+    reaped.  The two tables swap independently — a crash between them
+    leaves bands flat and sigs epoched, which both readers handle (each
+    checks for ``_epoch`` per table).  Run between streaming sessions,
+    not concurrently with stream_dedup_ingest: the retry-exclusion
+    filter needs the epoch column while a stream is live, and
+    within-checkpoint replays are the only replays the epoch trick
+    protects."""
     _recover_lsh_compaction(index_path)
     for sub, part_col in (("bands", "_bb"), ("sigs", "_sb")):
         path = f"{index_path}/{sub}"
@@ -1495,11 +1460,8 @@ def compact_lsh_index(spark, index_path: str, n_buckets: int = 64) -> None:
         if "_epoch" in df.columns:
             df = df.drop("_epoch")
         flat = df.repartition(n_buckets, F.col(part_col))
-        # tmp write reads the live dir (renames happen strictly after,
-        # so no checkpoint copy is needed), then the two renames swap
-        tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
+        # tmp write reads the live dir (the swap's renames happen
+        # strictly after, so no checkpoint copy is needed)
+        tmp = tmp_path(path)
         flat.write.mode("overwrite").partitionBy(part_col).parquet(tmp)
-        old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
+        swap_table(tmp, path)

@@ -24,15 +24,18 @@ from pyspark.sql import functions as F
 from open_semantic_etl_spark.plans.checkpoint import (
     N_BUCKETS,
     Tables,
+    has_data,
     merge_by_url,
     read_table,
+    recover_table,
 )
 
 
 def missing_stage(spark: SparkSession, tables: Tables, stage: str) -> DataFrame:
     """urls whose checkpoint lacks ``stage`` in stages_done."""
     enriched = spark.read.parquet(tables.enriched).select("url")
-    if not tables.exists(tables.checkpoint):
+    recover_table(tables.checkpoint)
+    if not has_data(tables.checkpoint):
         return enriched
     cp = spark.read.parquet(tables.checkpoint)
     done = cp.filter(F.array_contains(F.col("stages_done"), stage)).select("url")

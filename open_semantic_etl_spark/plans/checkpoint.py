@@ -35,6 +35,7 @@ the checkpoint join co-locates (storage-partitioned join on Iceberg).
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import time
@@ -78,18 +79,11 @@ class Tables:
     """Directory layout for one enrichment dataset."""
 
     def __init__(self, root: str) -> None:
+        require_local(root)
         self.root = root
         self.enriched = os.path.join(root, "enriched")
         self.checkpoint = os.path.join(root, "checkpoint")
         self.metrics = os.path.join(root, "metrics")
-
-    def exists(self, path: str) -> bool:
-        if not os.path.isdir(path):
-            return False
-        for _dir, _sub, files in os.walk(path):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
@@ -98,66 +92,66 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     return df.drop("_bucket") if "_bucket" in df.columns else df
 
 
-def _atomic_overwrite(df: DataFrame, path: str, n_buckets: int = N_BUCKETS) -> None:
-    """full-table rewrite in bucketed layout, tmp-dir + swap — the
-    snapshot-commit stand-in for non-url-keyed rewrites (delete-by-
-    query, schema migration). url-keyed upserts use merge_by_url."""
-    if "_bucket" not in df.columns and "url" in df.columns:
-        df = df.withColumn("_bucket", bucket_expr(n_buckets=n_buckets))
-    tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
-    writer = df.write.mode("overwrite")
-    if "_bucket" in df.columns:
-        writer = writer.partitionBy("_bucket")
-    writer.parquet(tmp)
+# The commit protocol for every table dir the engine rewrites (enriched,
+# checkpoint, the LSH index's bands/sigs): writes land in a
+# ``<path>__tmp_*`` sibling, swap_table/swap_buckets rename them in, and
+# every reader or writer runs recover_table first.  Iceberg equivalent:
+# the snapshot commit, where all of this is free.
+
+
+def require_local(path: str) -> None:
+    """the commit protocol runs on driver-local filesystem primitives; a
+    URI-schemed path (hdfs://, s3a://) would make every os.path check
+    read as 'absent' — merge_by_url would overwrite the table with the
+    batch and the LSH probe would admit every duplicate.  Raise loudly."""
+    if "://" in path:
+        raise NotImplementedError(
+            f"table and index paths must be driver-local filesystem paths "
+            f"in this build (got {path!r}); remote-FS support needs the "
+            "Hadoop FileSystem API behind plans/checkpoint.py's commit "
+            "protocol (has_data, swap_table, swap_buckets, recover_table)"
+        )
+
+
+def has_data(path: str) -> bool:
+    """True when the dir holds a parquet data file (a filesystem check,
+    never a caught read error)."""
+    require_local(path)
+    return any(
+        f.endswith(".parquet") for _d, _s, files in os.walk(path) for f in files
+    )
+
+
+def tmp_path(path: str) -> str:
+    """fresh sibling dir for a rewrite of ``path`` (reaped by recovery)."""
+    return f"{path}__tmp_{uuid.uuid4().hex[:8]}"
+
+
+def swap_table(tmp: str, path: str) -> None:
+    """replace the whole table dir with ``tmp``.  The live dir is parked
+    as ``__old_*`` across the two renames, so a crash between them
+    leaves it for recover_table to restore."""
     old = f"{path}__old_{uuid.uuid4().hex[:8]}"
     if os.path.isdir(path):
         os.rename(path, old)
     os.rename(tmp, path)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
+    shutil.rmtree(old, ignore_errors=True)
 
 
-def _swap_root(path: str) -> str:
-    """sibling staging dir for in-flight bucket swaps — OUTSIDE the
-    table dir so partition discovery never sees half-swapped state."""
-    return f"{path}__swap"
-
-
-def recover_swaps(path: str, part_col: str = "_bucket") -> None:
-    """roll an interrupted _swap_buckets forward: a bucket whose live
-    dir went missing mid-swap is restored from its staged post-merge
-    copy (``new__*``); stale stage/old leftovers are dropped. Called at
-    the top of every merge/rewrite so replay-after-crash converges.
-    ``part_col`` names the hive partition column of the bucket dirs —
-    the LSH index delete path reuses this machinery for its ``_bb`` /
-    ``_sb`` layouts."""
-    sw = _swap_root(path)
-    if not os.path.isdir(sw):
-        return
-    for name in sorted(os.listdir(sw)):  # 'new' sorts before 'old'
-        full = os.path.join(sw, name)
-        parts = name.split("__", 2)
-        if len(parts) == 3 and parts[0] == "new":
-            dst = os.path.join(path, f"{part_col}={parts[1]}")
-            if not os.path.isdir(dst):
-                os.rename(full, dst)
-                continue
-        shutil.rmtree(full, ignore_errors=True)
-    shutil.rmtree(sw, ignore_errors=True)
-
-
-def _swap_buckets(
+def swap_buckets(
     tmp: str, path: str, buckets: list[int], part_col: str = "_bucket"
 ) -> None:
     """move tmp's bucket dirs over path's — only touched buckets change;
     a bucket absent from tmp (all rows deleted) is removed.
 
     Staged swap: each post-merge bucket dir is first parked in the
-    sibling ``__swap`` dir, so every crash window leaves either the old
-    or the complete new data for the bucket on disk; recover_swaps()
-    rolls an interrupted swap forward before the next merge reads the
-    table (Iceberg equivalent: snapshot commit, where this is free)."""
-    sw = _swap_root(path)
+    sibling ``__swap`` dir — OUTSIDE the table dir, so partition
+    discovery never sees half-swapped state — and every crash window
+    leaves either the old or the complete new data for the bucket on
+    disk; recover_table() rolls an interrupted swap forward before the
+    next merge reads the table.  ``part_col`` names the hive partition
+    column of the bucket dirs (the LSH index uses ``_bb``/``_sb``)."""
+    sw = f"{path}__swap"
     os.makedirs(sw, exist_ok=True)
     token = uuid.uuid4().hex[:8]
     for b in buckets:
@@ -174,6 +168,50 @@ def _swap_buckets(
         shutil.rmtree(old, ignore_errors=True)
     shutil.rmtree(tmp, ignore_errors=True)
     shutil.rmtree(sw, ignore_errors=True)
+
+
+def recover_table(path: str, part_col: str = "_bucket") -> None:
+    """finish or undo whatever a crash left of a commit to ``path``:
+    restore ``__old_*`` when the live dir is missing (swap_table's
+    rename gap), reap stale ``__tmp_*`` dirs, and roll an interrupted
+    swap_buckets forward (a bucket whose live dir went missing mid-swap
+    is restored from its staged ``new__*`` copy).  Pure os-path checks
+    when nothing is staged; run it before any existence check or read,
+    so replay-after-crash converges."""
+    require_local(path)
+    pattern = glob.escape(path)
+    olds = sorted(glob.glob(f"{pattern}__old_*"))
+    if olds and not os.path.isdir(path):
+        os.rename(olds.pop(), path)
+    for stale in olds + glob.glob(f"{pattern}__tmp_*"):
+        shutil.rmtree(stale, ignore_errors=True)
+    sw = f"{path}__swap"
+    if not os.path.isdir(sw):
+        return
+    for name in sorted(os.listdir(sw)):  # 'new' sorts before 'old'
+        full = os.path.join(sw, name)
+        parts = name.split("__", 2)
+        if len(parts) == 3 and parts[0] == "new":
+            dst = os.path.join(path, f"{part_col}={parts[1]}")
+            if not os.path.isdir(dst):
+                os.rename(full, dst)
+                continue
+        shutil.rmtree(full, ignore_errors=True)
+    shutil.rmtree(sw, ignore_errors=True)
+
+
+def _atomic_overwrite(df: DataFrame, path: str, n_buckets: int = N_BUCKETS) -> None:
+    """full-table rewrite in bucketed layout, tmp-dir + swap_table — the
+    snapshot-commit stand-in for non-url-keyed rewrites (delete-by-
+    query, schema migration). url-keyed upserts use merge_by_url."""
+    if "_bucket" not in df.columns and "url" in df.columns:
+        df = df.withColumn("_bucket", bucket_expr(n_buckets=n_buckets))
+    tmp = tmp_path(path)
+    writer = df.write.mode("overwrite")
+    if "_bucket" in df.columns:
+        writer = writer.partitionBy("_bucket")
+    writer.parquet(tmp)
+    swap_table(tmp, path)
 
 
 def merge_by_url(
@@ -193,10 +231,13 @@ def merge_by_url(
     per-call tuning knob.
     """
     new = new.withColumn("_bucket", bucket_expr(n_buckets=n_buckets))
-    if not Tables(os.path.dirname(path)).exists(path):
+    # recover BEFORE the existence check: a table parked as __old_* by a
+    # crashed swap_table would otherwise read as absent and be replaced
+    # by the batch
+    recover_table(path)
+    if not has_data(path):
         new.write.mode("overwrite").partitionBy("_bucket").parquet(path)
         return
-    recover_swaps(path)
     buckets = [r[0] for r in new.select("_bucket").distinct().collect()]
     old = spark.read.parquet(path)
     if "_bucket" not in old.columns:  # legacy unbucketed layout
@@ -213,9 +254,9 @@ def merge_by_url(
     merged = old_touched.join(new.select("url"), "url", "left_anti").unionByName(
         new, allowMissingColumns=True
     )
-    tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
+    tmp = tmp_path(path)
     merged.write.mode("overwrite").partitionBy("_bucket").parquet(tmp)
-    _swap_buckets(tmp, path, buckets)
+    swap_buckets(tmp, path, buckets)
 
 
 def pending_rows(
@@ -227,7 +268,8 @@ def pending_rows(
     """filter_file_not_modified semantics: keep rows that are new, whose
     content changed, whose pipeline version changed, or that miss any of
     the requested stages (filter_file_not_modified.py:111-159)."""
-    if not tables.exists(tables.checkpoint):
+    recover_table(tables.checkpoint)
+    if not has_data(tables.checkpoint):
         return pages
     cp = spark.read.parquet(tables.checkpoint)
     done = cp.filter(

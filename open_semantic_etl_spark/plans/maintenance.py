@@ -24,10 +24,12 @@ from open_semantic_etl_spark.plans.checkpoint import (
     N_BUCKETS,
     Tables,
     _atomic_overwrite,
-    _swap_buckets,
     bucket_expr,
+    has_data,
     read_table,
-    recover_swaps,
+    recover_table,
+    swap_buckets,
+    tmp_path,
 )
 
 
@@ -56,18 +58,16 @@ def _rewrite_buckets(
     bucket dirs — delete/move touch a handful of urls, so the write
     volume is a few buckets, never the table. ``n_buckets`` must match
     the table's creation-time value (checkpoint.N_BUCKETS sizing rule)."""
-    import uuid
-
-    recover_swaps(path)
+    recover_table(path)
     df = spark.read.parquet(path)
     if "_bucket" not in df.columns:  # legacy unbucketed layout
         _atomic_overwrite(transform(df), path, n_buckets=n_buckets)
         return
     part = df.filter(F.col("_bucket").isin(buckets)).drop("_bucket")
     out = transform(part).withColumn("_bucket", bucket_expr(n_buckets=n_buckets))
-    tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
+    tmp = tmp_path(path)
     out.write.mode("overwrite").partitionBy("_bucket").parquet(tmp)
-    _swap_buckets(tmp, path, buckets)
+    swap_buckets(tmp, path, buckets)
 
 
 def delete_by_url(
@@ -93,7 +93,8 @@ def delete_by_url(
         return observed.filter(~F.coalesce(F.col("url").isin(urls), F.lit(False)))
 
     _rewrite_buckets(spark, tables.enriched, buckets, drop_counting, n_buckets)
-    if tables.exists(tables.checkpoint):
+    recover_table(tables.checkpoint)
+    if has_data(tables.checkpoint):
         _rewrite_buckets(
             spark, tables.checkpoint, buckets,
             lambda df: df.filter(~F.coalesce(F.col("url").isin(urls), F.lit(False))),
@@ -113,11 +114,11 @@ def delete_where(
     table's layout (a per-table constant — rewriting into a different
     bucket space silently breaks every later pruned merge/delete)."""
     tables = Tables(root)
-    # park-recovery FIRST: a merge crash can leave a bucket's live rows
-    # only in the __swap staging dir — reading without recovery would
+    # recovery FIRST: a merge crash can leave a bucket's live rows only
+    # in the __swap staging dir — reading without recovery would
     # rewrite the table without them (row loss), and the NEXT merge's
     # recovery would then resurrect rows this delete removed
-    recover_swaps(tables.enriched)
+    recover_table(tables.enriched)
     df = read_table(spark, tables.enriched)
     obs = Observation()
     observed = df.observe(obs, F.count(F.when(predicate, 1)).alias("deleted"))

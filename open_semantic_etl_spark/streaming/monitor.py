@@ -102,12 +102,7 @@ def stream_dedup_ingest(
     Returns the StreamingQuery."""
     import os
 
-    from open_semantic_etl_spark.operators.dedup import (
-        build_lsh_index,
-        lsh_candidate_pairs,
-        minhash_signature,
-        probe_lsh_index,
-    )
+    from open_semantic_etl_spark.operators.dedup import _novel_rows, build_lsh_index
 
     index_path = os.path.join(out_root, "lsh_index")
     kept_root = os.path.join(out_root, "kept")
@@ -119,35 +114,14 @@ def stream_dedup_ingest(
     )
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df = batch_df.dropDuplicates(["url"]).localCheckpoint(eager=True)
-        # ONE MinHash pass per batch; everything downstream reuses it
-        sigs = batch_df.select(
-            "url", minhash_signature(F.col("text")).alias("sig")
-        ).localCheckpoint(eager=True)
-        probed = probe_lsh_index(
+        kept, kept_sigs = _novel_rows(
             batch_df, index_path, id_col="url", n_buckets=n_buckets,
-            exclude_epoch=epoch_id, signatures=sigs,
+            exclude_epoch=epoch_id,
         )
-        novel_ids = probed.filter(~F.col("matched")).select(
-            F.col("probe_id").alias("url")
-        )
-        novel = batch_df.join(novel_ids, "url")
-        # within-batch dedup: for every colliding pair keep the smaller
-        # url (deterministic; conservative on chains — cluster-resolve
-        # is dedup.dup_clusters when exactness matters)
-        drop = (
-            lsh_candidate_pairs(
-                novel, text_col="text", id_col="url",
-                signatures=sigs.join(novel_ids, "url"),
-            )
-            .select(F.col("id_b").alias("url"))
-            .distinct()
-        )
-        kept = novel.join(drop, "url", "left_anti").localCheckpoint(eager=True)
         kept.write.mode("overwrite").parquet(f"{kept_root}/_epoch={epoch_id}")
         build_lsh_index(
             kept, index_path, id_col="url", n_buckets=n_buckets, epoch=epoch_id,
-            signatures=sigs.join(kept.select("url"), "url"),
+            signatures=kept_sigs,
         )
 
     writer = (

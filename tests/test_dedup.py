@@ -1329,3 +1329,97 @@ def test_build_after_crashed_compaction_recovers_first(spark, corpus, tmp_path):
     probe = corpus.filter(F.col("doc_id") == 1)  # exact dup of 0
     got = {r.index_id for r in D.probe_lsh_index(probe, path).collect() if r.matched}
     assert 0 in got  # doc 0's bands survived the crash + append
+
+
+def test_compaction_crash_recovers_on_glob_special_path(spark, corpus, tmp_path):
+    """recovery must treat the index path literally: a path holding
+    glob metacharacters used to match no ``__old_*`` sibling, so after
+    a crashed compaction swap the index read as empty."""
+    import os
+    import shutil
+
+    path = str(tmp_path / "idx[ab]")
+    D.build_lsh_index(corpus, path, mode="overwrite")
+    shutil.copytree(f"{path}/bands", f"{path}/bands__tmp_cafe")
+    os.rename(f"{path}/bands", f"{path}/bands__old_deadbeef")  # crashed swap
+    D._recover_lsh_compaction(path)
+    assert os.path.isdir(f"{path}/bands")
+    assert not os.path.isdir(f"{path}/bands__old_deadbeef")
+    assert not os.path.isdir(f"{path}/bands__tmp_cafe")
+
+
+def test_commit_batch_staging_tolerates_concurrent_committer(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """the writer and another process's probe can roll the same staged
+    batch forward at once; whichever loses a rename race must carry
+    on, not crash on the part file or kept-ids dir the winner moved."""
+    import os
+
+    path = str(tmp_path / "ing_race")
+    with pytest.raises(RuntimeError, match="simulated"):
+        D.dedup_ingest_batch(
+            spark, corpus.filter(F.col("doc_id").isin([0, 4])), path,
+            batch_id="b1", id_col="doc_id", _fail_after_stage=True,
+        )
+    real_rename = os.rename
+
+    def racing_rename(src, dst):
+        if "__batch_" in str(src):
+            real_rename(src, dst)  # the concurrent committer moves it first
+        return real_rename(src, dst)
+
+    staging, marker = D._lsh_batch_paths(path, "b1")
+    monkeypatch.setattr(os, "rename", racing_rename)
+    D._commit_batch_staging(path, staging, marker)
+    monkeypatch.undo()
+    assert os.path.isdir(marker)
+    assert not os.path.isdir(staging)
+    sig_ids = [r[0] for r in spark.read.parquet(f"{path}/sigs").select("_id").collect()]
+    assert sorted(sig_ids) == [0, 4]
+
+
+def test_lsh_probe_keeps_max_estimate_for_reingested_id(spark, corpus, tmp_path):
+    """an id appended twice with different texts carries two sigs; the
+    probe reports ONE row for the pair, with the higher estimate — not
+    whichever row a dropDuplicates happened to keep."""
+    texts = dict(corpus.select("doc_id", "text").collect())
+    probe = corpus.filter(F.col("doc_id") == 2)  # near dup of 0 and of 7
+
+    def doc99(text):
+        return spark.createDataFrame([(99, text)], "doc_id long, text string")
+
+    def estimates(path):
+        return [
+            (r.index_id, r.est_jaccard)
+            for r in D.probe_lsh_index(probe, path).collect()
+            if r.matched
+        ]
+
+    single = {}
+    for src in (0, 7):
+        path = str(tmp_path / f"idx_only{src}")
+        D.build_lsh_index(doc99(texts[src]), path, mode="overwrite")
+        ((_, single[src]),) = estimates(path)
+    assert single[0] != single[7]
+    path = str(tmp_path / "idx_twice")
+    D.build_lsh_index(doc99(texts[0]), path, mode="overwrite")
+    D.build_lsh_index(doc99(texts[7]), path)  # same id, new text
+    assert estimates(path) == [(99, max(single.values()))]
+
+
+def test_delete_sweeps_a_table_whose_twin_is_missing(spark, corpus, tmp_path):
+    """a crash between a build's sigs and bands writes leaves sig rows
+    and no bands table; a takedown must still remove the doc's sig row
+    instead of returning early — and likewise its band rows when only
+    the bands table holds data."""
+    import shutil
+
+    for gone, kept in (("bands", "sigs"), ("sigs", "bands")):
+        path = str(tmp_path / f"idx_no_{gone}")
+        D.build_lsh_index(corpus, path, mode="overwrite")
+        shutil.rmtree(f"{path}/{gone}")
+        D.delete_from_lsh_index(spark, path, [0])
+        ids = {r[0] for r in spark.read.parquet(f"{path}/{kept}").select("_id").collect()}
+        assert 0 not in ids, kept
+        assert 4 in ids, kept

@@ -246,7 +246,7 @@ def test_legacy_unbucketed_migration(spark, root):
 
 
 def test_swap_crash_rolls_forward(spark, root):
-    """a crash mid-_swap_buckets (bucket dir renamed away, staged new
+    """a crash mid-swap_buckets (bucket dir renamed away, staged new
     copy parked in __swap) must be recoverable: the next merge rolls the
     staged data forward and no rows are lost (ADVICE r2: the old layout
     orphaned the bucket's untouched rows)."""
@@ -255,7 +255,7 @@ def test_swap_crash_rolls_forward(spark, root):
 
     from open_semantic_etl_spark.plans.checkpoint import (
         merge_by_url,
-        recover_swaps,
+        recover_table,
     )
 
     path = os.path.join(root, "enriched")
@@ -276,12 +276,51 @@ def test_swap_crash_rolls_forward(spark, root):
     os.rename(os.path.join(path, victim), os.path.join(sw, f"old__{b}__deadbeef"))
     assert not os.path.isdir(os.path.join(path, victim))
 
-    recover_swaps(path)
+    recover_table(path)
     assert os.path.isdir(os.path.join(path, victim))
     assert not os.path.isdir(sw)
     recovered = spark.read.parquet(path)
     assert recovered.count() == 50
     assert recovered.select("url").distinct().count() == 50
+
+
+def test_crashed_table_swap_is_restored_before_merge(spark, root):
+    """a crash between swap_table's two renames (delete_where, legacy
+    migration) leaves the live table parked as ``__old_*``; the next
+    merge must restore it before its existence check instead of
+    replacing the table with the batch."""
+    import os
+
+    from open_semantic_etl_spark.plans.checkpoint import merge_by_url
+
+    path = os.path.join(root, "enriched")
+    os.makedirs(root, exist_ok=True)
+    df = spark.createDataFrame(
+        [(f"u{i}", f"v{i}") for i in range(50)], "url string, val string"
+    )
+    merge_by_url(spark, df, path)
+    os.rename(path, f"{path}__old_deadbeef")  # the crash window
+    batch = spark.createDataFrame([("u50", "v50")], "url string, val string")
+    merge_by_url(spark, batch, path)
+    assert spark.read.parquet(path).count() == 51
+    assert not [n for n in os.listdir(root) if "__old_" in n]
+
+
+def test_remote_root_is_refused(spark, tmp_path, monkeypatch):
+    """the commit protocol runs on driver-local os/shutil calls: an
+    hdfs:// table path would read as absent, and merge_by_url would
+    replace the table with the batch — both entry points must raise
+    before touching anything."""
+    from open_semantic_etl_spark.plans.checkpoint import merge_by_url
+
+    monkeypatch.chdir(tmp_path)  # keep any relative-path fallout here
+    root = "hdfs://localhost:9/etl"
+    batch = spark.createDataFrame([("u1", "v1")], "url string, val string")
+    with pytest.raises(NotImplementedError, match="driver-local"):
+        merge_by_url(spark, batch, f"{root}/enriched")
+    with pytest.raises(NotImplementedError, match="driver-local"):
+        run_incremental(spark, _pages(spark, 5), root)
+    assert not list(tmp_path.iterdir())
 
 
 def test_merge_plan_prunes_partitions(spark, root):
