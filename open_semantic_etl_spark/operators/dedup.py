@@ -332,21 +332,13 @@ def build_lsh_index(
     shingle_n: int = 3,
     n_buckets: int = 64,
     mode: str = "append",
-    epoch: int | None = None,
     signatures: DataFrame | None = None,
 ) -> None:
     """persist (or extend) the LSH index with this batch's bands and
     signatures.  ``n_buckets`` sizing follows the checkpoint rule:
-    buckets ≈ index_bytes / target_rewrite_unit.
-
-    ``epoch`` routes the write into a ``_epoch=<n>`` partition dir and
-    forces overwrite OF THAT DIR only — the foreachBatch idempotence
-    trick: a retried streaming epoch rewrites its own partition instead
-    of double-appending (valid WITHIN one stream checkpoint, whose
-    file→epoch assignment is stable; a fresh checkpoint over the same
-    landing data may assign files to different epochs).  Pick one
-    layout per index (all-epoch or no-epoch); partition discovery
-    cannot mix them.
+    buckets ≈ index_bytes / target_rewrite_unit.  A plain append is
+    not idempotent under retry — ingest goes through
+    ``dedup_ingest_batch``'s staged commit.
 
     The LSH family parameters are recorded in ``_lsh_meta.json`` on
     first build and validated on every later build/probe: probing with
@@ -358,25 +350,9 @@ def build_lsh_index(
     # the next probe's recovery DELETE the parked full-corpus copy
     meta = _lsh_index_meta(
         index_path, num_hashes, bands, shingle_n, n_buckets, create=True,
-        refresh=(mode == "overwrite" and epoch is None),
+        refresh=(mode == "overwrite"),
     )
     num_hashes, bands, shingle_n, n_buckets = meta
-    suffix = f"/_epoch={epoch}" if epoch is not None else ""
-    if epoch is not None:
-        mode = "overwrite"
-    if epoch is not None:
-        _refuse_layout(
-            index_path, "flat",
-            "an _epoch append would corrupt partition discovery. After "
-            "compact_lsh_index, continue with non-epoch appends "
-            "(dedup_ingest_batch) or stream into a fresh index path.",
-        )
-    elif mode != "overwrite":
-        _refuse_layout(
-            index_path, "epoch",
-            "a flat append would corrupt partition discovery. Run "
-            "compact_lsh_index first.",
-        )
     if signatures is None:
         sig = df.select(
             F.col(id_col).alias("_id"),
@@ -389,13 +365,11 @@ def build_lsh_index(
     # marker absent, not a bands-without-sigs wedge (r4 review)
     sig.withColumn(
         "_sb", F.pmod(F.xxhash64("_id"), F.lit(n_buckets))
-    ).write.mode(mode).partitionBy("_sb").parquet(f"{index_path}/sigs{suffix}")
+    ).write.mode(mode).partitionBy("_sb").parquet(f"{index_path}/sigs")
     bands_df = _band_table(sig, num_hashes, bands).withColumn(
         "_bb", F.pmod(F.xxhash64("bh"), F.lit(n_buckets))
     )
-    bands_df.write.mode(mode).partitionBy("_bb").parquet(
-        f"{index_path}/bands{suffix}"
-    )
+    bands_df.write.mode(mode).partitionBy("_bb").parquet(f"{index_path}/bands")
 
 
 def _lsh_index_meta(
@@ -464,15 +438,10 @@ def probe_lsh_index(
     bands: int = 16,
     shingle_n: int = 3,
     n_buckets: int = 64,
-    exclude_epoch: int | None = None,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
     """dedup a new batch against the persisted index WITHOUT touching
     the corpus text: → (index_id, probe_id, est_jaccard, matched).
-
-    ``exclude_epoch`` drops that ``_epoch`` partition from the probe —
-    a RETRIED streaming epoch must not collide with its own partial
-    write (stream_dedup_ingest passes the current epoch id).
 
     One row per (index doc, probe doc) band collision pair (deduped on
     the id pair before signatures rejoin), plus one ``matched=false``
@@ -489,7 +458,7 @@ def probe_lsh_index(
     # crash mid-first-build can leave one without the other, and a
     # wedged probe would block every streaming retry (r4 review).  The
     # presence test is a direct filesystem check, NOT a caught
-    # AnalysisException: a mixed flat/_epoch layout raises the same
+    # AnalysisException: a corrupt partition layout raises the same
     # exception class at plan time ("Conflicting directory structures"),
     # and swallowing it would silently report every doc novel and admit
     # every duplicate (r5 review).  Any read error on real data raises.
@@ -500,10 +469,12 @@ def probe_lsh_index(
             F.lit(None).cast("double").alias("est_jaccard"),
             F.lit(False).alias("matched"),
         )
-    idx_raw = spark.read.parquet(f"{index_path}/bands")
-    idx_sigs_raw = spark.read.parquet(f"{index_path}/sigs")
-    if exclude_epoch is not None and "_epoch" in idx_raw.columns:
-        idx_raw = idx_raw.filter(F.col("_epoch") != exclude_epoch)
+    idx_bands = spark.read.parquet(f"{index_path}/bands").select(
+        F.col("_id").alias("_iid"), "band", "bh", "_bb"
+    )
+    idx_sigs = spark.read.parquet(f"{index_path}/sigs").select(
+        F.col("_id").alias("index_id"), F.col("sig").alias("sig_i")
+    )
     if signatures is None:
         sig = df.select(
             F.col(id_col).alias("_id"),
@@ -514,18 +485,11 @@ def probe_lsh_index(
     probe_bands = _band_table(sig, num_hashes, bands).withColumn(
         "_bb", F.pmod(F.xxhash64("bh"), F.lit(n_buckets))
     )
-    idx_bands = idx_raw.select(F.col("_id").alias("_iid"), "band", "bh", "_bb")
     # key-only pair join; _bb in the key lets the scan partition-prune
     pairs = (
         probe_bands.join(idx_bands, on=["_bb", "band", "bh"], how="inner")
         .select(F.col("_iid").alias("index_id"), F.col("_id").alias("probe_id"))
         .distinct()
-    )
-    idx_sigs = idx_sigs_raw
-    if exclude_epoch is not None and "_epoch" in idx_sigs.columns:
-        idx_sigs = idx_sigs.filter(F.col("_epoch") != exclude_epoch)
-    idx_sigs = idx_sigs.select(
-        F.col("_id").alias("index_id"), F.col("sig").alias("sig_i")
     )
     probe_sigs = sig.select(F.col("_id").alias("probe_id"), F.col("sig").alias("sig_p"))
     est = (
@@ -535,7 +499,7 @@ def probe_lsh_index(
     dups = (
         pairs.join(idx_sigs, "index_id")
         .join(probe_sigs, "probe_id")
-        # a crash between a non-epoch append's sigs and bands writes
+        # a crash between an append's sigs and bands writes
         # leaves orphan sig rows the retry re-appends, and an id
         # re-ingested with new text carries two sigs; either would fan
         # each collision out to N rows here.  Collapse on the PAIR
@@ -983,26 +947,6 @@ def embedding_dup_pairs(
     )
 
 
-def _refuse_layout(index_path: str, layout: str, remedy: str) -> None:
-    """raise ValueError if either index table holds data in ``layout``:
-    ``flat`` (no ``_epoch=`` partition dirs — the batch/compacted
-    layout) or ``epoch`` (the streaming layout).  Writing the other
-    layout beside it makes partition discovery raise "Conflicting
-    directory structures" on every later read, and a probe that
-    swallowed that error would report ALL docs novel and admit every
-    duplicate (r5 review) — so the write is refused instead."""
-    name = {"flat": "flat (batch/compacted)", "epoch": "_epoch streaming"}
-    for sub in ("bands", "sigs"):
-        path = f"{index_path}/{sub}"
-        if has_data(path) and (layout == "epoch") == any(
-            n.startswith("_epoch=") for n in os.listdir(path)
-        ):
-            raise ValueError(
-                f"LSH index {sub} table at {index_path} has the "
-                f"{name[layout]} layout; {remedy}"
-            )
-
-
 def semdedup_pairs(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -1124,56 +1068,11 @@ def _commit_batch_staging(index_path: str, staging: str, marker: str) -> None:
     shutil.rmtree(staging, ignore_errors=True)
 
 
-def _novel_rows(
-    batch_df: DataFrame,
-    index_path: str,
-    text_col: str = "text",
-    id_col: str = "url",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    n_buckets: int = 64,
-    exclude_epoch: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """the dedup-ingest core of dedup_ingest_batch and
-    stream_dedup_ingest: → (kept rows, their ``(id_col, sig)``).
-    Duplicate ids collapse first; ONE MinHash pass threads through the
-    probe against the index (minus ``exclude_epoch``'s partition) and
-    the within-batch dedup, which keeps the smaller id of every
-    colliding pair (deterministic; conservative on chains —
-    cluster-resolve is dup_clusters when exactness matters)."""
-    batch = batch_df.dropDuplicates([id_col]).localCheckpoint(eager=True)
-    sigs = batch.select(
-        F.col(id_col),
-        minhash_signature(F.col(text_col), num_hashes, shingle_n).alias("sig"),
-    ).localCheckpoint(eager=True)
-    probed = probe_lsh_index(
-        batch, index_path, text_col=text_col, id_col=id_col,
-        num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-        n_buckets=n_buckets, exclude_epoch=exclude_epoch, signatures=sigs,
-    )
-    novel_ids = probed.filter(~F.col("matched")).select(
-        F.col("probe_id").alias(id_col)
-    )
-    novel = batch.join(novel_ids, id_col)
-    drop = (
-        lsh_candidate_pairs(
-            novel, text_col=text_col, id_col=id_col,
-            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-            signatures=sigs.join(novel_ids, id_col),
-        )
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-    kept = novel.join(drop, id_col, "left_anti").localCheckpoint(eager=True)
-    return kept, sigs.join(kept.select(id_col), id_col)
-
-
 def dedup_ingest_batch(
     spark,
     batch_df: DataFrame,
     index_path: str,
-    batch_id: str | None = None,
+    batch_id: str,
     text_col: str = "text",
     id_col: str = "url",
     num_hashes: int = 64,
@@ -1182,22 +1081,23 @@ def dedup_ingest_batch(
     n_buckets: int = 64,
     _fail_after_stage: bool = False,
 ) -> DataFrame:
-    """one-call incremental dedup ingest — the BATCH twin of
-    ``stream_dedup_ingest`` (streaming/monitor.py): dedup the batch
-    against the whole already-ingested corpus via the persisted band
-    index, dedup within the batch, append the keep-set to the index,
-    and return the kept rows.
+    """one-call incremental dedup ingest — the one way an LSH index
+    grows (``stream_dedup_ingest`` calls it once per micro-batch): dedup
+    the batch against the whole already-ingested corpus via the
+    persisted band index, dedup within the batch, append the keep-set
+    to the index, and return the kept rows.
 
-    Scale shape (identical to the streaming twin): ONE MinHash pass per
+    Scale shape: duplicate ids collapse first; ONE MinHash pass per
     batch threads through probe, within-batch dedup and the index
     append; the probe is a partition-pruned key-only band join (corpus
     text never re-read); within-batch dedup keeps the smaller id of
-    each colliding pair.
+    each colliding pair (deterministic; conservative on chains —
+    cluster-resolve is dup_clusters when exactness matters).
 
-    Idempotence: pass ``batch_id`` (any string uniquely naming this
+    Idempotence: ``batch_id`` is any string uniquely naming this
     batch's CONTENT — a landing-file manifest hash, an ingest sequence
-    number).  The index append is then staged under
-    ``__batch_<id>`` and committed by moving part files into the live
+    number, a stream's query id + epoch.  The index append is staged
+    under ``__batch_<id>`` and committed by moving part files into the live
     bucket dirs, with the kept-id set published to ``_batches/<id>`` as
     the commit marker (and audit trail).  Replaying a committed batch
     returns the recorded keep-set without touching the index; a crash
@@ -1205,15 +1105,11 @@ def dedup_ingest_batch(
     the marker — either discards the un-staged attempt (recompute, the
     live index was never touched) or rolls the staged commit forward
     (every probe/build also rolls staged-complete batches forward via
-    ``_recover_lsh_compaction``).  Without ``batch_id`` the append is
-    direct (``build_lsh_index``): correct under crash-BEFORE-bands
-    retries (orphan sig rows are deduped at probe time) but a retry
-    after a COMPLETED append will re-ingest the batch against itself —
-    use ``batch_id`` whenever the caller retries.
+    ``_recover_lsh_compaction``).
 
     ``_fail_after_stage`` is the crash-simulation hook (the
     ``fail_before_checkpoint`` pattern, plans/checkpoint.py)."""
-    if batch_id is not None and not re.fullmatch(r"[A-Za-z0-9._-]{1,128}", batch_id):
+    if not re.fullmatch(r"[A-Za-z0-9._-]{1,128}", batch_id):
         # '/' or other path chars would nest the __batch_ staging dir,
         # hiding its _STAGED file from recovery's one-level glob and
         # breaking the roll-forward promise (r5 review)
@@ -1234,43 +1130,50 @@ def dedup_ingest_batch(
         )
         return batch_df.dropDuplicates([id_col]).join(kept_ids, id_col)
 
-    if batch_id is not None:
-        staging, marker = _lsh_batch_paths(index_path, batch_id)
-        if os.path.isdir(marker):
-            return kept_rows(marker)  # committed replay
-        if os.path.isfile(os.path.join(staging, "_STAGED")):
-            # staged-complete crash window: finish the commit, then
-            # return the RECORDED keep-set (recomputing would probe an
-            # index that may already hold part of this batch)
-            _commit_batch_staging(index_path, staging, marker)
-            return kept_rows(marker)
-        shutil.rmtree(staging, ignore_errors=True)  # partial stage
-        # refuse before any batch work: the staged append writes the
-        # flat layout, and _novel_rows evaluates batch_df
-        _refuse_layout(
-            index_path, "epoch",
-            "run compact_lsh_index before batch ingest (the staged append "
-            "writes the flat layout).",
-        )
+    staging, marker = _lsh_batch_paths(index_path, batch_id)
+    if os.path.isdir(marker):
+        return kept_rows(marker)  # committed replay
+    if os.path.isfile(os.path.join(staging, "_STAGED")):
+        # staged-complete crash window: finish the commit, then
+        # return the RECORDED keep-set (recomputing would probe an
+        # index that may already hold part of this batch)
+        _commit_batch_staging(index_path, staging, marker)
+        return kept_rows(marker)
+    shutil.rmtree(staging, ignore_errors=True)  # partial stage
 
-    kept, kept_sigs = _novel_rows(
-        batch_df, index_path, text_col, id_col, num_hashes, bands, shingle_n,
-        n_buckets,
+    batch = batch_df.dropDuplicates([id_col]).localCheckpoint(eager=True)
+    sigs = batch.select(
+        F.col(id_col),
+        minhash_signature(F.col(text_col), num_hashes, shingle_n).alias("sig"),
+    ).localCheckpoint(eager=True)
+    probed = probe_lsh_index(
+        batch, index_path, text_col=text_col, id_col=id_col,
+        num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
+        n_buckets=n_buckets, signatures=sigs,
     )
-    if batch_id is None:
-        build_lsh_index(
-            kept, index_path, text_col=text_col, id_col=id_col,
+    novel_ids = probed.filter(~F.col("matched")).select(
+        F.col("probe_id").alias(id_col)
+    )
+    novel = batch.join(novel_ids, id_col)
+    drop = (
+        lsh_candidate_pairs(
+            novel, text_col=text_col, id_col=id_col,
             num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-            n_buckets=n_buckets, signatures=kept_sigs,
+            signatures=sigs.join(novel_ids, id_col),
         )
-        return kept
+        .select(F.col("id_b").alias(id_col))
+        .distinct()
+    )
+    kept = novel.join(drop, id_col, "left_anti").localCheckpoint(eager=True)
     # staged append: all three writes land OUTSIDE the live tables, so
     # a crash before _STAGED never perturbs the index
     meta = _lsh_index_meta(
         index_path, num_hashes, bands, shingle_n, n_buckets, create=True
     )
     num_hashes, bands, shingle_n, n_buckets = meta
-    kept_sigs = kept_sigs.select(F.col(id_col).alias("_id"), "sig")
+    kept_sigs = sigs.join(kept.select(id_col), id_col).select(
+        F.col(id_col).alias("_id"), "sig"
+    )
     kept_sigs.withColumn(
         "_sb", F.pmod(F.xxhash64("_id"), F.lit(n_buckets))
     ).write.mode("overwrite").partitionBy("_sb").parquet(f"{staging}/sigs")
@@ -1301,7 +1204,9 @@ def expire_lsh_batches(
 ) -> None:
     """TTL / retention sweep: remove whole ingest batches from the
     index.  Each ``_batches/<id>`` marker (written by
-    ``dedup_ingest_batch``) records exactly the doc ids that batch
+    ``dedup_ingest_batch`` — once per batch ingest, and once per
+    micro-batch of ``stream_dedup_ingest``, whose ids are
+    ``<query id>-<epoch>``) records exactly the doc ids that batch
     contributed; expiry processes batches ONE AT A TIME —
     ``delete_from_lsh_index`` over that batch's keep-set, then its
     marker drops — so a crash leaves every earlier batch fully expired
@@ -1359,10 +1264,7 @@ def delete_from_lsh_index(spark, index_path: str, ids) -> None:
     probes correctly (a band collision without a sig row drops at the
     inner sig join, so a half-deleted doc never resurfaces).  Each
     table that holds data is swept, so orphan sig rows left by a crash
-    between a build's sigs and bands writes are removed too.  Requires
-    the flat (batch / compacted) layout — run ``compact_lsh_index`` on
-    a streaming index first (epoch partitions would make per-bucket
-    swaps span epochs).
+    between a build's sigs and bands writes are removed too.
 
     ``ids``: list of doc-id values, or a single-column DataFrame of
     them.  Ids absent from the index are a no-op.
@@ -1374,7 +1276,6 @@ def delete_from_lsh_index(spark, index_path: str, ids) -> None:
     num_hashes, bands, n_buckets = (
         meta["num_hashes"], meta["bands"], meta["n_buckets"]
     )
-    _refuse_layout(index_path, "epoch", "run compact_lsh_index before deleting.")
     sigs_path = f"{index_path}/sigs"
     bands_path = f"{index_path}/bands"
     sigs_live, bands_live = has_data(sigs_path), has_data(bands_path)
@@ -1437,29 +1338,25 @@ def delete_from_lsh_index(spark, index_path: str, ids) -> None:
 
 
 def compact_lsh_index(spark, index_path: str, n_buckets: int = 64) -> None:
-    """fold a streaming index's ``_epoch=<n>`` partitions into the flat
-    bucket layout ``build_lsh_index`` writes for batch use.
+    """small-file compaction: rewrite each index table to one file per
+    bucket dir.
 
-    Thousands of micro-batch epochs mean thousands of tiny files per
-    bucket — the classic small-file problem; compaction rewrites each
-    table once (epoch column dropped, one shuffle on the partition key)
-    and swaps it in with the checkpoint tier's swap_table.  Crash
-    windows are closed by recover_table (run here and by every probe):
-    the rename gap restores the old layout, stale staging dirs are
-    reaped.  The two tables swap independently — a crash between them
-    leaves bands flat and sigs epoched, which both readers handle (each
-    checks for ``_epoch`` per table).  Run between streaming sessions,
-    not concurrently with stream_dedup_ingest: the retry-exclusion
-    filter needs the epoch column while a stream is live, and
-    within-checkpoint replays are the only replays the epoch trick
-    protects."""
+    Every batch append (``dedup_ingest_batch``, so every streaming
+    micro-batch too) adds a few files to each bucket it touches, and
+    thousands of small batches mean thousands of tiny files per
+    bucket.  Compaction rewrites each table once (one shuffle on the
+    partition key) and swaps it in with the checkpoint tier's
+    swap_table.  Crash windows are closed by recover_table (run here
+    and by every probe): the rename gap restores the old table, stale
+    staging dirs are reaped.  The two tables swap independently; the
+    layout is the same before and after, so a crash between them
+    leaves a correct index.  Run it between ingests, not concurrently
+    with one: a batch committed mid-compaction lands in the live dir
+    the swap replaces."""
     _recover_lsh_compaction(index_path)
     for sub, part_col in (("bands", "_bb"), ("sigs", "_sb")):
         path = f"{index_path}/{sub}"
-        df = spark.read.parquet(path)
-        if "_epoch" in df.columns:
-            df = df.drop("_epoch")
-        flat = df.repartition(n_buckets, F.col(part_col))
+        flat = spark.read.parquet(path).repartition(n_buckets, F.col(part_col))
         # tmp write reads the live dir (the swap's renames happen
         # strictly after, so no checkpoint copy is needed)
         tmp = tmp_path(path)

@@ -76,24 +76,18 @@ def stream_dedup_ingest(
     n_buckets: int = 64,
     max_files_per_trigger: int = 1,
 ):
-    """streaming incremental dedup: each micro-batch probes the
-    persisted LSH band index, keeps only docs novel against the whole
-    already-ingested corpus AND within the batch, writes the keep-set,
-    and appends the keep-set's bands to the index.
+    """streaming incremental dedup: each micro-batch is one
+    ``dedup_ingest_batch`` call (probe the persisted LSH index, keep
+    only docs novel against the whole already-ingested corpus AND
+    within the batch, commit the keep-set's bands to the index), and
+    the keep-set lands in ``kept/_batch=<batch id>`` with overwrite.
 
-    Idempotence under foreachBatch retries: both the keep-set and the
-    index append land in ``_epoch=<id>`` partition dirs written with
-    overwrite, and the probe excludes the current epoch's own entries —
-    a replayed epoch rewrites its own partition (the same trick the
-    checkpoint merge uses for buckets).  This protects retries WITHIN
-    one stream checkpoint, whose file→epoch assignment is stable;
-    replaying the same landing data under a fresh checkpoint is a new
-    ingest, not a retry.  Scale shape per batch: MinHash signatures
-    are computed ONCE (localCheckpoint) and threaded through probe,
-    self-dedup, and the index append — the one-Python-crossing rule
-    applied to the batch; probe = key-only band join against the
-    bucket-partitioned index (corpus text never re-read); batch
-    self-dedup = lsh_candidate_pairs on the novel subset only.
+    The batch id is ``<query id>-<epoch>``.  The query id is stable
+    across restarts from the same checkpoint, so a retried epoch
+    replays its committed keep-set (or rolls its staged commit
+    forward) instead of re-ingesting against itself.  A fresh
+    checkpoint is a new query id and therefore a new ingest: it dedups
+    against everything already indexed, whichever session wrote it.
     Semantics notes: duplicate urls within a batch collapse to one row
     first (re-crawl landing files), and empty-text docs share the
     all-zero signature, so they form ONE dup class — the first
@@ -102,7 +96,7 @@ def stream_dedup_ingest(
     Returns the StreamingQuery."""
     import os
 
-    from open_semantic_etl_spark.operators.dedup import _novel_rows, build_lsh_index
+    from open_semantic_etl_spark.operators.dedup import dedup_ingest_batch
 
     index_path = os.path.join(out_root, "lsh_index")
     kept_root = os.path.join(out_root, "kept")
@@ -114,15 +108,15 @@ def stream_dedup_ingest(
     )
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        kept, kept_sigs = _novel_rows(
-            batch_df, index_path, id_col="url", n_buckets=n_buckets,
-            exclude_epoch=epoch_id,
+        query_id = batch_df.sparkSession.sparkContext.getLocalProperty(
+            "sql.streaming.queryId"
         )
-        kept.write.mode("overwrite").parquet(f"{kept_root}/_epoch={epoch_id}")
-        build_lsh_index(
-            kept, index_path, id_col="url", n_buckets=n_buckets, epoch=epoch_id,
-            signatures=kept_sigs,
+        batch_id = f"{query_id}-{epoch_id}"
+        kept = dedup_ingest_batch(
+            spark, batch_df, index_path, batch_id, id_col="url",
+            n_buckets=n_buckets,
         )
+        kept.write.mode("overwrite").parquet(f"{kept_root}/_batch={batch_id}")
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

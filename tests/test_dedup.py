@@ -1004,23 +1004,6 @@ def test_lsh_overwrite_reparameterizes_and_meta_self_heals(spark, corpus, tmp_pa
     assert D.probe_lsh_index(corpus, path, bands=8).count() > 0
 
 
-def test_lsh_layout_mix_refused_on_build(spark, corpus, tmp_path):
-    """an epoch append into a flat (batch/compacted) table — or a flat
-    append into an epoched one — would corrupt partition discovery for
-    every later read; build refuses instead (r5 review)."""
-    flat = str(tmp_path / "idx_flat")
-    D.build_lsh_index(corpus.filter(F.col("doc_id") == 0), flat, mode="overwrite")
-    with pytest.raises(ValueError, match="flat"):
-        D.build_lsh_index(corpus.filter(F.col("doc_id") == 4), flat, epoch=0)
-    epo = str(tmp_path / "idx_epoch")
-    D.build_lsh_index(corpus.filter(F.col("doc_id") == 0), epo, epoch=0)
-    with pytest.raises(ValueError, match="compact_lsh_index"):
-        D.build_lsh_index(corpus.filter(F.col("doc_id") == 4), epo)
-    # epoch-into-epoch and a full overwrite both stay legal
-    D.build_lsh_index(corpus.filter(F.col("doc_id") == 4), epo, epoch=1)
-    D.build_lsh_index(corpus.filter(F.col("doc_id") == 4), epo, mode="overwrite")
-
-
 def test_lsh_probe_raises_on_conflicting_layout(spark, corpus, tmp_path):
     """a probe over an already-corrupt mixed flat/_epoch layout must
     RAISE, not silently report every doc novel (the exact failure the
@@ -1037,7 +1020,7 @@ def test_lsh_probe_raises_on_conflicting_layout(spark, corpus, tmp_path):
 
 
 def test_lsh_orphan_sig_rows_do_not_duplicate_matches(spark, corpus, tmp_path):
-    """a crash between a non-epoch append's sigs and bands writes leaves
+    """a crash between an append's sigs and bands writes leaves
     orphan sig rows the retry re-appends; the duplicate (_id, sig) rows
     must not fan each collision out to multiple matched rows
     (r5 review)."""
@@ -1103,8 +1086,8 @@ def test_delete_from_lsh_index_removes_doc_and_prunes_buckets(spark, corpus, tmp
 
 
 def test_delete_from_lsh_index_edge_cases(spark, corpus, tmp_path):
-    """absent ids are a no-op; DataFrame input works; epoch layout is
-    refused; a path that is not an index raises loudly."""
+    """absent ids are a no-op; DataFrame input works; a path that is
+    not an index raises loudly."""
     path = str(tmp_path / "idx_del2")
     with pytest.raises(FileNotFoundError):
         D.delete_from_lsh_index(spark, str(tmp_path / "nonexistent"), [0])
@@ -1120,10 +1103,6 @@ def test_delete_from_lsh_index_edge_cases(spark, corpus, tmp_path):
     assert 4 not in {
         r[0] for r in spark.read.parquet(f"{path}/sigs").select("_id").collect()
     }
-    epo = str(tmp_path / "idx_del_epoch")
-    D.build_lsh_index(corpus, epo, epoch=0)
-    with pytest.raises(ValueError, match="compact_lsh_index"):
-        D.delete_from_lsh_index(spark, epo, [0])
 
 
 def test_delete_crash_window_recovers(spark, corpus, tmp_path):
@@ -1234,31 +1213,12 @@ def test_lsh_paths_and_batch_ids_validated(spark, corpus, tmp_path):
     with pytest.raises(NotImplementedError, match="driver-local"):
         D.probe_lsh_index(corpus, "s3a://bucket/lsh")
     with pytest.raises(NotImplementedError, match="driver-local"):
-        D.build_lsh_index(corpus, "hdfs://nn/lsh", epoch=0)
+        D.build_lsh_index(corpus, "hdfs://nn/lsh")
     path = str(tmp_path / "ids")
     with pytest.raises(ValueError, match="batch_id"):
         D.dedup_ingest_batch(
             spark, corpus.limit(1), path, batch_id="2026/08/21", id_col="doc_id"
         )
-
-
-def test_dedup_ingest_batch_refuses_epoch_layout_before_evaluating(
-    spark, corpus, tmp_path
-):
-    """batch ingest into a streaming-layout (_epoch) index raises the
-    layout error up front, before any work evaluates the batch: a batch
-    whose evaluation fails must surface the layout ValueError, not its
-    own error."""
-    epo = str(tmp_path / "idx_ingest_epoch")
-    D.build_lsh_index(corpus.filter(F.col("doc_id") == 0), epo, epoch=0)
-
-    @F.udf("string")
-    def boom(_text):
-        raise RuntimeError("batch_df was evaluated")
-
-    batch = corpus.filter(F.col("doc_id") == 4).withColumn("text", boom("text"))
-    with pytest.raises(ValueError, match="compact_lsh_index"):
-        D.dedup_ingest_batch(spark, batch, epo, batch_id="b1", id_col="doc_id")
 
 
 def test_dedup_ingest_batch_crash_resume(spark, corpus, tmp_path):

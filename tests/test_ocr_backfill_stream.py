@@ -148,14 +148,14 @@ def test_stream_enrich(spark, tmp_path):
     from open_semantic_etl_spark.streaming.monitor import stream_enrich
 
     q = stream_enrich(spark, landing, out_root, ckpt, trigger_once=True)
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     enriched = spark.read.parquet(os.path.join(out_root, "enriched"))
     assert enriched.count() == 40
     assert enriched.filter(F.col("content_txt") != F.col("text")).count() == 0
 
     # restart with no new files → no duplicates (checkpointed source)
     q2 = stream_enrich(spark, landing, out_root, ckpt, trigger_once=True)
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
     assert spark.read.parquet(os.path.join(out_root, "enriched")).count() == 40
 
 

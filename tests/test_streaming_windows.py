@@ -33,7 +33,7 @@ def _run_phase(spark, schema, src, build, ckpt, out_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
 
 def test_windowed_event_metrics_drops_late_data(spark, tmp_path):
@@ -136,24 +136,27 @@ def test_host_sessions_gap_below_watermark(spark, tmp_path):
     assert ("host-a.org", 1) in done
 
 
+_BASE = (
+    "the quick brown fox jumps over the lazy dog while the silver moon "
+    "watches from the old wooden fence near the quiet river bank every "
+    "single morning before the sun rises over the green hills"
+)
+_OTHER = (
+    "completely different text about databases indexes and storage "
+    "engines for modern analytics workloads at scale"
+)
+
+
 def test_stream_dedup_ingest_incremental(spark, tmp_path):
     """two micro-batches through the streaming dedup ingest: batch 2's
     near-dup of an already-indexed doc is dropped, its genuinely new
-    doc is kept, and the persisted index grows per epoch — the
+    doc is kept, and the persisted index grows per micro-batch — the
     incremental-corpus-dedup flow end to end."""
     from datetime import datetime as _dt
 
     from open_semantic_etl_spark.streaming.monitor import stream_dedup_ingest
 
-    base = (
-        "the quick brown fox jumps over the lazy dog while the silver moon "
-        "watches from the old wooden fence near the quiet river bank every "
-        "single morning before the sun rises over the green hills"
-    )
-    other = (
-        "completely different text about databases indexes and storage "
-        "engines for modern analytics workloads at scale"
-    )
+    base, other = _BASE, _OTHER
     third = (
         "yet another unrelated document discussing climate research models "
         "and long term ocean temperature measurement programs"
@@ -167,55 +170,44 @@ def test_stream_dedup_ingest_incremental(spark, tmp_path):
     def row(u, t):
         return (u, ts, None, t, "en")
 
-    import glob as _glob
-    import os as _os
-
-    def _stamp(t):
-        for f in _glob.glob(land + "/*.parquet"):
-            if abs(_os.path.getmtime(f) - 1_000_000_000) > 300:
-                _os.utime(f, (t, t))
-
     # batch 1: two distinct docs + an intra-batch near-dup of base
     _append(spark, land, schema, [
         row("a://1", base), row("a://2", other),
         row("a://3", base.replace("quick", "swift")),
     ])
-    _stamp(1_000_000_000)
-    # batch 2 (second file → second epoch): near-dup of base + new doc.
-    # mtimes pin the file→epoch order — the epoch-overwrite idempotence
-    # below holds only when the replay assigns files identically, and
-    # FileStreamSource orders by mtime (r4 review)
+    # batch 2 (second file → second micro-batch): near-dup of base + new doc
     _append(spark, land, schema, [
         row("b://1", base.replace("morning", "evening")), row("b://2", third),
     ])
-    _stamp(1_000_000_100)
     q = stream_dedup_ingest(spark, land, out, ck)
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     kept = spark.read.parquet(f"{out}/kept")
     urls = {r.url for r in kept.select("url").collect()}
     # a://1 kept, a://3 dropped within batch 1 (url-ordered keep rule);
     # b://1 dropped against the index — regardless of which landing
-    # file formed epoch 0, exactly ONE base-variant survives overall
+    # file formed the first micro-batch, exactly ONE base-variant
+    # survives overall
     assert "a://2" in urls and "b://2" in urls
     assert len(urls & {"a://1", "a://3", "b://1"}) == 1
     assert kept.count() == 3
 
-    # the index accumulated exactly the kept docs across epochs
+    # the index accumulated exactly the kept docs across micro-batches
     idx_ids = {r._id for r in spark.read.parquet(f"{out}/lsh_index/sigs").collect()}
     assert idx_ids == urls
 
-    # replay with a fresh checkpoint (same epoch ids): the epoch-dir
-    # overwrite keeps the keep-set stable, no double rows
+    # replay with a fresh checkpoint: a new ingest, every doc a dup of
+    # the index, so no rows are added
     q2 = stream_dedup_ingest(spark, land, out, str(tmp_path / "ck2"))
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
     assert spark.read.parquet(f"{out}/kept").count() == 3
 
 
 def test_compact_lsh_index_preserves_probe_results(spark, tmp_path):
-    """compaction folds the epoch partitions into the flat bucket
-    layout; probes before and after must agree, the epoch column must
-    be gone, and file count per table must shrink to ~n_buckets."""
+    """compaction rewrites the small files of repeated appends into one
+    file per bucket dir; probes before and after must agree."""
+    import os
+
     from open_semantic_etl_spark.operators.dedup import (
         build_lsh_index,
         compact_lsh_index,
@@ -228,9 +220,19 @@ def test_compact_lsh_index_preserves_probe_results(spark, tmp_path):
         12: "a third unrelated passage on climate and ocean measurement",
     }
     path = str(tmp_path / "idx")
-    for epoch, (i, t) in enumerate(texts.items()):
+    for i, t in texts.items():
         df = spark.createDataFrame([(i, t)], "doc_id long, text string")
-        build_lsh_index(df, path, epoch=epoch)
+        build_lsh_index(df, path)
+
+    def files_per_bucket():
+        return [
+            sum(f.endswith(".parquet") for f in fs)
+            for sub in ("bands", "sigs")
+            for d, _s, fs in os.walk(f"{path}/{sub}")
+            if os.path.basename(d).startswith(("_bb=", "_sb="))
+        ]
+
+    assert max(files_per_bucket()) > 1  # the appends share a bucket
     probe = spark.createDataFrame(
         [(99, texts[10].replace("quick", "swift"))], "doc_id long, text string"
     )
@@ -240,8 +242,7 @@ def test_compact_lsh_index_preserves_probe_results(spark, tmp_path):
     )
     assert before  # the near-dup collides pre-compaction
     compact_lsh_index(spark, path, n_buckets=4)
-    bands = spark.read.parquet(f"{path}/bands")
-    assert "_epoch" not in bands.columns
+    assert max(files_per_bucket()) == 1
     after = sorted(
         (r.index_id, r.probe_id) for r in probe_lsh_index(probe, path).collect()
         if r.matched
@@ -263,6 +264,73 @@ def test_stream_dedup_ingest_collapses_repeated_urls(spark, tmp_path):
     _append(spark, land, schema, [("r://1", ts, None, t, "en"),
                                   ("r://1", ts, None, t, "en")])
     q = stream_dedup_ingest(spark, land, str(tmp_path / "out"), str(tmp_path / "ck"))
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     kept = spark.read.parquet(f"{tmp_path}/out/kept")
     assert kept.count() == 1
+
+
+def _pages(spark, rows):
+    from datetime import datetime as _dt
+
+    return spark.createDataFrame(
+        [(u, _dt(2024, 1, 1), None, t, "en") for u, t in rows],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+
+
+def _stream_once(spark, tmp_path, name, out, rows):
+    """one stream_dedup_ingest session: its own landing dir and
+    checkpoint, the shared ``out`` root."""
+    from open_semantic_etl_spark.streaming.monitor import stream_dedup_ingest
+
+    land = str(tmp_path / f"land_{name}")
+    _pages(spark, rows).coalesce(1).write.mode("append").parquet(land)
+    q = stream_dedup_ingest(spark, land, out, str(tmp_path / f"ck_{name}"))
+    assert q.awaitTermination(120)
+    return q
+
+
+def _kept_and_indexed(spark, out):
+    kept = sorted(r.url for r in spark.read.parquet(f"{out}/kept").collect())
+    idx = sorted(r._id for r in spark.read.parquet(f"{out}/lsh_index/sigs").collect())
+    return kept, idx
+
+
+def test_stream_dedup_ingest_second_session_dedups_against_first(spark, tmp_path):
+    """a second stream session (new checkpoint, new landing dir, same
+    out root) dedups against what the first indexed: its near-dup of
+    a://1 drops and a://1 survives in both kept and the index."""
+    out = str(tmp_path / "out")
+    _stream_once(spark, tmp_path, "s1", out, [("a://1", _BASE)])
+    _stream_once(spark, tmp_path, "s2", out, [
+        ("b://1", _BASE.replace("morning", "evening")), ("b://2", _OTHER),
+    ])
+    kept, idx = _kept_and_indexed(spark, out)
+    assert kept == idx == ["a://1", "b://2"]
+
+
+def test_stream_dedup_ingest_extends_a_batch_index(spark, tmp_path):
+    """streaming continues a compacted batch-ingested index, and each
+    streamed micro-batch is a committed batch the retention sweep can
+    expire."""
+    from open_semantic_etl_spark.operators.dedup import (
+        compact_lsh_index,
+        dedup_ingest_batch,
+        expire_lsh_batches,
+        list_lsh_batches,
+    )
+
+    out = str(tmp_path / "out")
+    index_path = f"{out}/lsh_index"
+    dedup_ingest_batch(spark, _pages(spark, [("a://1", _BASE)]), index_path, "seed")
+    compact_lsh_index(spark, index_path)
+    q = _stream_once(spark, tmp_path, "s", out, [
+        ("b://1", _BASE.replace("morning", "evening")), ("b://2", _OTHER),
+    ])
+    kept = sorted(r.url for r in spark.read.parquet(f"{out}/kept").collect())
+    assert kept == ["b://2"]
+    streamed = f"{q.id}-0"  # batch id = query id + epoch
+    assert list_lsh_batches(index_path) == sorted(["seed", streamed])
+    expire_lsh_batches(spark, index_path, [streamed])
+    _, idx = _kept_and_indexed(spark, out)
+    assert idx == ["a://1"]
