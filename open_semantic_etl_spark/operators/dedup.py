@@ -37,12 +37,11 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from open_semantic_etl_spark.plans.checkpoint import (
+    buckets_of,
     has_data,
     recover_table,
     require_local,
-    swap_buckets,
-    swap_table,
-    tmp_path,
+    rewrite_buckets,
 )
 
 # ---------------------------------------------------------------------------
@@ -427,6 +426,12 @@ def _lsh_index_meta(
     if create:
         write()
     return num_hashes, bands, shingle_n, n_buckets
+
+
+def _stored_lsh_meta(index_path: str) -> dict:
+    """the family parameters recorded by the index's first build."""
+    with open(os.path.join(index_path, "_lsh_meta.json")) as f:
+        return json.load(f)
 
 
 def probe_lsh_index(
@@ -1255,27 +1260,23 @@ def delete_from_lsh_index(spark, index_path: str, ids) -> None:
     Bucket-pruned, the merge_by_url rule (plans/checkpoint.py) applied
     to the index: a doc's sig lives in ``_sb = pmod(xxhash64(id),
     n_buckets)`` and its band rows in the ``_bb`` buckets of its
-    (sig-derived, deterministic) band hashes, so the rewrite reads and
-    swaps ONLY those buckets; untouched bucket files stay
-    byte-identical on disk.  Cost tracks the DELETE BATCH, not the
-    corpus.  Crash windows use the checkpoint tier's staged
-    swap_buckets, rolled forward by every probe/build via
-    recover_table; bands swap BEFORE sigs, and either half-state
-    probes correctly (a band collision without a sig row drops at the
-    inner sig join, so a half-deleted doc never resurfaces).  Each
-    table that holds data is swept, so orphan sig rows left by a crash
-    between a build's sigs and bands writes are removed too.
+    (sig-derived, deterministic) band hashes, so each table is one
+    ``rewrite_buckets`` commit of ONLY those buckets; untouched bucket
+    files stay byte-identical on disk.  Cost tracks the DELETE BATCH,
+    not the corpus.  Crash windows are the commit's staged bucket
+    swap, rolled forward by every probe/build via recover_table; bands
+    commit BEFORE sigs, and either half-state probes correctly (a band
+    collision without a sig row drops at the inner sig join, so a
+    half-deleted doc never resurfaces).  Each table that holds data is
+    swept, so orphan sig rows left by a crash between a build's sigs
+    and bands writes are removed too.
 
     ``ids``: list of doc-id values, or a single-column DataFrame of
     them.  Ids absent from the index are a no-op.
     """
     _recover_lsh_compaction(index_path)
-    meta_path = os.path.join(index_path, "_lsh_meta.json")
-    with open(meta_path) as f:  # deleting from a non-index raises loudly
-        meta = json.load(f)
-    num_hashes, bands, n_buckets = (
-        meta["num_hashes"], meta["bands"], meta["n_buckets"]
-    )
+    meta = _stored_lsh_meta(index_path)  # a non-index raises loudly
+    num_hashes, bands, n_buckets = (meta[k] for k in ("num_hashes", "bands", "n_buckets"))
     sigs_path = f"{index_path}/sigs"
     bands_path = f"{index_path}/bands"
     sigs_live, bands_live = has_data(sigs_path), has_data(bands_path)
@@ -1293,9 +1294,9 @@ def delete_from_lsh_index(spark, index_path: str, ids) -> None:
     is_deleted = F.col("_id") == F.col("_del_id")
     sig_buckets, band_buckets = [], []
     if sigs_live:
-        cand_buckets = [r[0] for r in ids_df.select(
-            F.pmod(F.xxhash64("_del_id"), F.lit(n_buckets))
-        ).distinct().collect()]
+        cand_buckets = buckets_of(ids_df.select(
+            F.pmod(F.xxhash64("_del_id"), F.lit(n_buckets)).alias("_sb")
+        ), "_sb")
         cand_sigs = spark.read.parquet(sigs_path).filter(
             F.col("_sb").isin(cand_buckets)
         )
@@ -1308,7 +1309,7 @@ def delete_from_lsh_index(spark, index_path: str, ids) -> None:
         # lookup scan).  The deleted docs' band rows are recomputed FROM
         # THEIR SIGS (deterministic), so the touched _bb set is exact
         # too — no scan of the full bands table.
-        sig_buckets = [r[0] for r in del_sigs.select("_sb").distinct().collect()]
+        sig_buckets = buckets_of(del_sigs, "_sb")
         del_bands = _band_table(
             del_sigs.select("_id", "sig"), num_hashes, bands
         ).withColumn("_bb", F.pmod(F.xxhash64("bh"), F.lit(n_buckets)))
@@ -1318,47 +1319,41 @@ def delete_from_lsh_index(spark, index_path: str, ids) -> None:
             F.broadcast(ids_df), is_deleted
         )
     if bands_live:
-        band_buckets = [r[0] for r in del_bands.select("_bb").distinct().collect()]
+        band_buckets = buckets_of(del_bands, "_bb")
+
+    def drop_deleted(df: DataFrame) -> DataFrame:
+        return df.join(F.broadcast(ids_df), is_deleted, "left_anti")
+
     # bands first: once a doc's band rows are gone it can never match,
     # whatever happens to its sig rows before the retry finishes
-    for path, part_col, buckets in (
-        (bands_path, "_bb", band_buckets),
-        (sigs_path, "_sb", sig_buckets),
-    ):
-        if not buckets:
-            continue
-        keep = (
-            spark.read.parquet(path)
-            .filter(F.col(part_col).isin(buckets))
-            .join(F.broadcast(ids_df), is_deleted, "left_anti")
-        )
-        tmp = tmp_path(path)
-        keep.write.mode("overwrite").partitionBy(part_col).parquet(tmp)
-        swap_buckets(tmp, path, buckets, part_col=part_col)
+    if band_buckets:
+        rewrite_buckets(spark, bands_path, band_buckets, drop_deleted, "_bb")
+    if sig_buckets:
+        rewrite_buckets(spark, sigs_path, sig_buckets, drop_deleted, "_sb")
 
 
-def compact_lsh_index(spark, index_path: str, n_buckets: int = 64) -> None:
+def compact_lsh_index(spark, index_path: str) -> None:
     """small-file compaction: rewrite each index table to one file per
     bucket dir.
 
     Every batch append (``dedup_ingest_batch``, so every streaming
     micro-batch too) adds a few files to each bucket it touches, and
     thousands of small batches mean thousands of tiny files per
-    bucket.  Compaction rewrites each table once (one shuffle on the
-    partition key) and swaps it in with the checkpoint tier's
-    swap_table.  Crash windows are closed by recover_table (run here
-    and by every probe): the rename gap restores the old table, stale
-    staging dirs are reaped.  The two tables swap independently; the
-    layout is the same before and after, so a crash between them
-    leaves a correct index.  Run it between ingests, not concurrently
-    with one: a batch committed mid-compaction lands in the live dir
-    the swap replaces."""
+    bucket.  Compaction is one ``rewrite_buckets`` commit of every
+    bucket dir per table, shuffled on the partition key into the
+    index's ``n_buckets`` (read from ``_lsh_meta.json``) partitions;
+    each row keeps its bucket.  Crash windows are the commit's staged
+    bucket swap, rolled forward by recover_table (run here and by
+    every probe).  The two tables commit independently; the layout is
+    the same before and after, so a crash between them leaves a
+    correct index.  Run it between ingests, not concurrently with one:
+    a batch committed mid-compaction lands in a live bucket dir the
+    swap replaces."""
     _recover_lsh_compaction(index_path)
+    n_buckets = _stored_lsh_meta(index_path)["n_buckets"]
     for sub, part_col in (("bands", "_bb"), ("sigs", "_sb")):
-        path = f"{index_path}/{sub}"
-        flat = spark.read.parquet(path).repartition(n_buckets, F.col(part_col))
-        # tmp write reads the live dir (the swap's renames happen
-        # strictly after, so no checkpoint copy is needed)
-        tmp = tmp_path(path)
-        flat.write.mode("overwrite").partitionBy(part_col).parquet(tmp)
-        swap_table(tmp, path)
+        rewrite_buckets(
+            spark, f"{index_path}/{sub}", None,
+            lambda df, col=part_col: df.repartition(n_buckets, F.col(col)),
+            part_col,
+        )

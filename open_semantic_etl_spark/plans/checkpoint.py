@@ -6,8 +6,12 @@ The Spark-native replacement for the reference's incremental machinery:
   skip documents whose content and completed stages are unchanged —
   becomes a LEFT ANTI JOIN of the input against the checkpoint table on
   ``(url, content_hash, pipeline_version)`` + stage-completeness.
-- Solr partial updates (export_solr.py:98-115 'set'/'add-distinct')
-  become a MERGE by url into the enriched table.
+- Solr updates (export_solr.py:98-115) become bucket rewrites of the
+  enriched and checkpoint tables: a run's whole-row MERGE by url
+  (``merge_by_url``), and a backfill's partial updates
+  (plans/backfill.py) — 'set' overwrites only the stage's columns on
+  matched rows, 'add-distinct' ``array_union``s the stage into
+  ``stages_done``.
 - Celery ``acks_late`` at-least-once redelivery (tasks.py:34-35)
   becomes: the MERGE commits BEFORE the checkpoint commit, so a crash
   between the two re-processes those urls on the next run and the
@@ -17,12 +21,14 @@ The Spark-native replacement for the reference's incremental machinery:
 
 Storage: this sandbox has no Iceberg/Delta jars, so tables are parquet
 directories HASH-BUCKETED by url — hive-partitioned on
-``_bucket = pmod(xxhash64(url), N_BUCKETS)`` — and MERGE is emulated
-per bucket: only buckets containing touched urls are read (partition
-pruning) and rewritten (per-bucket directory swap); untouched bucket
-files stay byte-identical, so incremental write cost tracks the BATCH,
-not the table. On a real cluster the same call sites map to ``MERGE
-INTO enriched USING batch ON url`` over Iceberg (snapshot commit = our
+``_bucket = pmod(xxhash64(url), N_BUCKETS)``.  ``rewrite_buckets`` is
+the one commit every table write goes through (merge, backfill,
+delete, move, and the LSH index's delete and compaction): only the
+named buckets are read (partition pruning), transformed and rewritten
+(per-bucket directory swap); untouched bucket files stay
+byte-identical, so incremental write cost tracks the BATCH, not the
+table. On a real cluster the same call sites map to ``MERGE INTO
+enriched USING batch ON url`` over Iceberg (snapshot commit = our
 swap; Iceberg's bucket(url, N) transform = our ``_bucket``; the
 copy-on-write MERGE rewrites exactly the same file set).
 
@@ -40,6 +46,7 @@ import os
 import shutil
 import time
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -86,17 +93,11 @@ class Tables:
         self.metrics = os.path.join(root, "metrics")
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """read a bucketed table without its physical partition column."""
-    df = spark.read.parquet(path)
-    return df.drop("_bucket") if "_bucket" in df.columns else df
-
-
 # The commit protocol for every table dir the engine rewrites (enriched,
-# checkpoint, the LSH index's bands/sigs): writes land in a
-# ``<path>__tmp_*`` sibling, swap_table/swap_buckets rename them in, and
-# every reader or writer runs recover_table first.  Iceberg equivalent:
-# the snapshot commit, where all of this is free.
+# checkpoint, the LSH index's bands/sigs): rewrite_buckets writes into a
+# ``<path>__tmp_*`` sibling, _swap_buckets renames its bucket dirs in,
+# and every reader or writer runs recover_table first.  Iceberg
+# equivalent: the snapshot commit, where all of this is free.
 
 
 def require_local(path: str) -> None:
@@ -109,7 +110,7 @@ def require_local(path: str) -> None:
             f"table and index paths must be driver-local filesystem paths "
             f"in this build (got {path!r}); remote-FS support needs the "
             "Hadoop FileSystem API behind plans/checkpoint.py's commit "
-            "protocol (has_data, swap_table, swap_buckets, recover_table)"
+            "protocol (has_data, rewrite_buckets, recover_table)"
         )
 
 
@@ -122,35 +123,21 @@ def has_data(path: str) -> bool:
     )
 
 
-def tmp_path(path: str) -> str:
-    """fresh sibling dir for a rewrite of ``path`` (reaped by recovery)."""
-    return f"{path}__tmp_{uuid.uuid4().hex[:8]}"
+def buckets_of(df: DataFrame, part_col: str = "_bucket") -> list:
+    """distinct ``part_col`` values of ``df`` — one small collect."""
+    return [r[0] for r in df.select(part_col).distinct().collect()]
 
 
-def swap_table(tmp: str, path: str) -> None:
-    """replace the whole table dir with ``tmp``.  The live dir is parked
-    as ``__old_*`` across the two renames, so a crash between them
-    leaves it for recover_table to restore."""
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    if os.path.isdir(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def swap_buckets(
-    tmp: str, path: str, buckets: list[int], part_col: str = "_bucket"
-) -> None:
+def _swap_buckets(tmp: str, path: str, buckets: list, part_col: str) -> None:
     """move tmp's bucket dirs over path's — only touched buckets change;
     a bucket absent from tmp (all rows deleted) is removed.
 
-    Staged swap: each post-merge bucket dir is first parked in the
+    Staged swap: each post-rewrite bucket dir is first parked in the
     sibling ``__swap`` dir — OUTSIDE the table dir, so partition
     discovery never sees half-swapped state — and every crash window
     leaves either the old or the complete new data for the bucket on
     disk; recover_table() rolls an interrupted swap forward before the
-    next merge reads the table.  ``part_col`` names the hive partition
-    column of the bucket dirs (the LSH index uses ``_bb``/``_sb``)."""
+    next commit reads the table."""
     sw = f"{path}__swap"
     os.makedirs(sw, exist_ok=True)
     token = uuid.uuid4().hex[:8]
@@ -172,12 +159,13 @@ def swap_buckets(
 
 def recover_table(path: str, part_col: str = "_bucket") -> None:
     """finish or undo whatever a crash left of a commit to ``path``:
-    restore ``__old_*`` when the live dir is missing (swap_table's
-    rename gap), reap stale ``__tmp_*`` dirs, and roll an interrupted
-    swap_buckets forward (a bucket whose live dir went missing mid-swap
-    is restored from its staged ``new__*`` copy).  Pure os-path checks
-    when nothing is staged; run it before any existence check or read,
-    so replay-after-crash converges."""
+    restore ``__old_*`` when the live dir is missing (the whole-table
+    swap of earlier builds parked the live dir there), reap stale
+    ``__tmp_*`` dirs, and roll an interrupted bucket swap forward (a
+    bucket whose live dir went missing mid-swap is restored from its
+    staged ``new__*`` copy).  Pure os-path checks when nothing is
+    staged; run it before any existence check or read, so
+    replay-after-crash converges."""
     require_local(path)
     pattern = glob.escape(path)
     olds = sorted(glob.glob(f"{pattern}__old_*"))
@@ -200,31 +188,48 @@ def recover_table(path: str, part_col: str = "_bucket") -> None:
     shutil.rmtree(sw, ignore_errors=True)
 
 
-def _atomic_overwrite(df: DataFrame, path: str, n_buckets: int = N_BUCKETS) -> None:
-    """full-table rewrite in bucketed layout, tmp-dir + swap_table — the
-    snapshot-commit stand-in for non-url-keyed rewrites (delete-by-
-    query, schema migration). url-keyed upserts use merge_by_url."""
-    if "_bucket" not in df.columns and "url" in df.columns:
-        df = df.withColumn("_bucket", bucket_expr(n_buckets=n_buckets))
-    tmp = tmp_path(path)
-    writer = df.write.mode("overwrite")
-    if "_bucket" in df.columns:
-        writer = writer.partitionBy("_bucket")
-    writer.parquet(tmp)
-    swap_table(tmp, path)
+def rewrite_buckets(
+    spark: SparkSession,
+    path: str,
+    buckets: list | None,
+    transform: Callable[[DataFrame], DataFrame],
+    part_col: str = "_bucket",
+) -> None:
+    """The one table commit: replace bucket dirs of ``path`` with
+    ``transform`` applied to their current rows.
+
+    Recovers the table, reads ONLY the ``part_col`` dirs in ``buckets``
+    (a partition filter — ``None`` = every bucket dir on disk), writes
+    ``transform``'s output to a tmp sibling partitioned by ``part_col``
+    and swaps those bucket dirs in; every other bucket file stays
+    byte-identical on disk.  ``transform`` sees the ``part_col`` column
+    and must return it (pass it through, or re-derive it when the key
+    changes).  A bucket the transform leaves empty is removed.  Iceberg
+    equivalent: one copy-on-write snapshot commit replacing the data
+    files of the touched partitions."""
+    recover_table(path, part_col)
+    df = spark.read.parquet(path)
+    if buckets is None:
+        prefix = f"{part_col}="
+        buckets = [d[len(prefix):] for d in os.listdir(path) if d.startswith(prefix)]
+    else:
+        df = df.filter(F.col(part_col).isin(buckets))
+    tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"  # reaped by recover_table
+    transform(df).write.mode("overwrite").partitionBy(part_col).parquet(tmp)
+    _swap_buckets(tmp, path, buckets, part_col)
 
 
 def merge_by_url(
     spark: SparkSession, new: DataFrame, path: str, n_buckets: int = N_BUCKETS
 ) -> None:
-    """MERGE new INTO path ON url (new row wins) — export_solr 'set'.
+    """MERGE new INTO path ON url (new row wins, whole row).
 
-    Bucket-pruned: reads and rewrites ONLY the url-hash buckets the
-    batch touches (partition filter on ``_bucket``); every other bucket
-    file is untouched on disk. Iceberg equivalent: copy-on-write
-    ``MERGE INTO t USING batch ON t.url = batch.url`` with the table
-    bucket(url, N)-partitioned. Idempotent under replay (crash between
-    bucket swaps re-merges by url to the same result).
+    Bucket-pruned: rewrite_buckets reads and rewrites ONLY the url-hash
+    buckets the batch touches (partition filter on ``_bucket``); every
+    other bucket file is untouched on disk. Iceberg equivalent:
+    copy-on-write ``MERGE INTO t USING batch ON t.url = batch.url`` with
+    the table bucket(url, N)-partitioned. Idempotent under replay
+    (crash between bucket swaps re-merges by url to the same result).
 
     ``n_buckets`` must match the value the table was created with (see
     the N_BUCKETS sizing rule); it is a per-table constant, not a
@@ -232,31 +237,18 @@ def merge_by_url(
     """
     new = new.withColumn("_bucket", bucket_expr(n_buckets=n_buckets))
     # recover BEFORE the existence check: a table parked as __old_* by a
-    # crashed swap_table would otherwise read as absent and be replaced
-    # by the batch
+    # crashed whole-table swap would otherwise read as absent and be
+    # replaced by the batch
     recover_table(path)
     if not has_data(path):
         new.write.mode("overwrite").partitionBy("_bucket").parquet(path)
         return
-    buckets = [r[0] for r in new.select("_bucket").distinct().collect()]
-    old = spark.read.parquet(path)
-    if "_bucket" not in old.columns:  # legacy unbucketed layout
-        # migration rewrite: drop the batch's _bucket so _atomic_overwrite
-        # re-derives it for EVERY row — otherwise legacy rows land in the
-        # __HIVE_DEFAULT_PARTITION__ (NULL) bucket that later bucketed
-        # merges never read, and updating such a url duplicates it
-        merged = old.join(new.select("url"), "url", "left_anti").unionByName(
-            new.drop("_bucket"), allowMissingColumns=True
-        )
-        _atomic_overwrite(merged.drop("_bucket"), path, n_buckets=n_buckets)
-        return
-    old_touched = old.filter(F.col("_bucket").isin(buckets))
-    merged = old_touched.join(new.select("url"), "url", "left_anti").unionByName(
-        new, allowMissingColumns=True
+    rewrite_buckets(
+        spark, path, buckets_of(new),
+        lambda old: old.join(new.select("url"), "url", "left_anti").unionByName(
+            new, allowMissingColumns=True
+        ),
     )
-    tmp = tmp_path(path)
-    merged.write.mode("overwrite").partitionBy("_bucket").parquet(tmp)
-    swap_buckets(tmp, path, buckets)
 
 
 def pending_rows(

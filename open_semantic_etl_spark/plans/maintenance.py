@@ -3,8 +3,8 @@
 Small utilities completing the reference's operator surface:
 
 - ``delete_by_url`` / ``delete_where``: etl_delete.py:52-67 (`Delete`
-  by id / by query) → anti-join rewrite of the enriched table
-  (Iceberg: ``DELETE FROM enriched WHERE url = ?``).
+  by id / by query) → a ``rewrite_buckets`` commit of the enriched
+  table (Iceberg: ``DELETE FROM enriched WHERE url = ?``).
 - ``move_url``: move_indexed_file.py:9-53 — rewrite a document's id and
   its derived path facets after a filesystem move.
 - ``join_annotations``: enhance_annotations.py:21-39 — pull external
@@ -23,13 +23,11 @@ from open_semantic_etl_spark.functions.path import with_path_facets
 from open_semantic_etl_spark.plans.checkpoint import (
     N_BUCKETS,
     Tables,
-    _atomic_overwrite,
     bucket_expr,
+    buckets_of,
     has_data,
-    read_table,
     recover_table,
-    swap_buckets,
-    tmp_path,
+    rewrite_buckets,
 )
 
 
@@ -38,99 +36,51 @@ def _url_buckets(
 ) -> list[int]:
     """bucket ids for a driver-side url list (same xxhash64 the tables
     are partitioned by — computed via a tiny Spark expression)."""
-    return [
-        r[0]
-        for r in spark.createDataFrame([(u,) for u in urls], "url string")
-        .select(bucket_expr(n_buckets=n_buckets).alias("b"))
-        .distinct()
-        .collect()
-    ]
+    urls_df = spark.createDataFrame([(u,) for u in urls], "url string")
+    return buckets_of(urls_df.select(bucket_expr(n_buckets=n_buckets).alias("_bucket")))
 
 
-def _rewrite_buckets(
-    spark: SparkSession,
-    path: str,
-    buckets: list[int],
-    transform,
-    n_buckets: int = N_BUCKETS,
-) -> None:
-    """read ONLY the given buckets, apply ``transform``, swap those
-    bucket dirs — delete/move touch a handful of urls, so the write
-    volume is a few buckets, never the table. ``n_buckets`` must match
-    the table's creation-time value (checkpoint.N_BUCKETS sizing rule)."""
-    recover_table(path)
-    df = spark.read.parquet(path)
-    if "_bucket" not in df.columns:  # legacy unbucketed layout
-        _atomic_overwrite(transform(df), path, n_buckets=n_buckets)
-        return
-    part = df.filter(F.col("_bucket").isin(buckets)).drop("_bucket")
-    out = transform(part).withColumn("_bucket", bucket_expr(n_buckets=n_buckets))
-    tmp = tmp_path(path)
-    out.write.mode("overwrite").partitionBy("_bucket").parquet(tmp)
-    swap_buckets(tmp, path, buckets)
+def _delete(spark: SparkSession, path: str, buckets: list | None, predicate: Column) -> int:
+    """rewrite ``buckets`` of ``path`` without the rows ``predicate``
+    holds for; returns how many went.  The count is observed ON the
+    rewrite pass itself (Spark ``Observation`` = CollectMetrics in the
+    write job), so the only scan is the rewrite's own — no before/after
+    counts (plan-audited).  SQL DELETE semantics: a NULL-predicate row
+    is KEPT, so the count equals exactly the rows removed (plain
+    ``~predicate`` would drop NULL rows uncounted)."""
+    obs = Observation()
+
+    def drop_counting(df: DataFrame) -> DataFrame:
+        observed = df.observe(obs, F.count(F.when(predicate, 1)).alias("deleted"))
+        return observed.filter(~F.coalesce(predicate, F.lit(False)))
+
+    rewrite_buckets(spark, path, buckets, drop_counting)
+    return int(obs.get["deleted"])
 
 
 def delete_by_url(
     spark: SparkSession, root: str, urls: list[str], n_buckets: int = N_BUCKETS
 ) -> int:
-    """remove documents by id (etl_delete) — bucket-pruned rewrite
-    (Iceberg: ``DELETE FROM enriched WHERE url IN (…)``).
-
-    The deleted count is observed ON the rewrite pass itself (Spark
-    ``Observation`` = CollectMetrics in the write job), so the only
-    scans this plans are of the touched ``_bucket`` partitions — no
-    before/after full-table counts (plan-audited)."""
+    """remove documents by id (etl_delete) — a rewrite of the victims'
+    buckets only (Iceberg: ``DELETE FROM enriched WHERE url IN (…)``),
+    in the enriched table and then the checkpoint, so a rerun
+    re-indexes them.  ``n_buckets`` must match the tables' layout."""
     tables = Tables(root)
     buckets = _url_buckets(spark, urls, n_buckets)
-    obs = Observation()
-
-    def drop_counting(df: DataFrame) -> DataFrame:
-        observed = df.observe(
-            obs, F.count(F.when(F.col("url").isin(urls), 1)).alias("deleted")
-        )
-        # SQL DELETE semantics: only predicate-TRUE rows go — a NULL
-        # url is KEPT (plain ~isin would drop it uncounted)
-        return observed.filter(~F.coalesce(F.col("url").isin(urls), F.lit(False)))
-
-    _rewrite_buckets(spark, tables.enriched, buckets, drop_counting, n_buckets)
+    is_victim = F.col("url").isin(urls)
+    deleted = _delete(spark, tables.enriched, buckets, is_victim)
     recover_table(tables.checkpoint)
     if has_data(tables.checkpoint):
-        _rewrite_buckets(
-            spark, tables.checkpoint, buckets,
-            lambda df: df.filter(~F.coalesce(F.col("url").isin(urls), F.lit(False))),
-            n_buckets,
-        )
-    return int(obs.get["deleted"])
+        _delete(spark, tables.checkpoint, buckets, is_victim)
+    return deleted
 
 
-def delete_where(
-    spark: SparkSession, root: str, predicate: Column, n_buckets: int = N_BUCKETS
-) -> int:
+def delete_where(spark: SparkSession, root: str, predicate: Column) -> int:
     """empty-index / delete-by-query form (etl_delete.py:64-67) — an
-    arbitrary predicate can hit any bucket, so this is the one
-    full-table rewrite (Iceberg: DELETE FROM … WHERE <predicate>).
-    The deleted count comes from the single rewrite scan (Observation),
-    not separate before/after counts. ``n_buckets`` must match the
-    table's layout (a per-table constant — rewriting into a different
-    bucket space silently breaks every later pruned merge/delete)."""
-    tables = Tables(root)
-    # recovery FIRST: a merge crash can leave a bucket's live rows only
-    # in the __swap staging dir — reading without recovery would
-    # rewrite the table without them (row loss), and the NEXT merge's
-    # recovery would then resurrect rows this delete removed
-    recover_table(tables.enriched)
-    df = read_table(spark, tables.enriched)
-    obs = Observation()
-    observed = df.observe(obs, F.count(F.when(predicate, 1)).alias("deleted"))
-    # SQL DELETE semantics: NULL-predicate rows are kept, so the
-    # observed TRUE count equals exactly the rows removed (plain
-    # ~predicate would silently drop NULL rows uncounted)
-    _atomic_overwrite(
-        observed.filter(~F.coalesce(predicate, F.lit(False))),
-        tables.enriched,
-        n_buckets=n_buckets,
-    )
-    return int(obs.get["deleted"])
+    arbitrary predicate can hit any bucket, so this rewrites every
+    bucket dir (Iceberg: DELETE FROM … WHERE <predicate>).  Each row
+    keeps its bucket, so the table's bucket count is unchanged."""
+    return _delete(spark, Tables(root).enriched, None, predicate)
 
 
 def move_url(
@@ -149,9 +99,10 @@ def move_url(
             c for c in moved.columns if c.startswith("path") or c == "filename_extension_s"
         ]
         refreshed = with_path_facets(moved.drop(*path_cols), id_col="url")
-        return refreshed.select(*df.columns)
+        rebucketed = refreshed.withColumn("_bucket", bucket_expr(n_buckets=n_buckets))
+        return rebucketed.select(*df.columns)
 
-    _rewrite_buckets(spark, tables.enriched, buckets, transform, n_buckets)
+    rewrite_buckets(spark, tables.enriched, buckets, transform)
 
 
 def join_annotations(

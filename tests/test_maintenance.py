@@ -244,8 +244,8 @@ def test_alt_sink_shapes(spark):
 
 def test_delete_where_respects_table_bucket_count(spark, tmp_path):
     """a table laid out with n_buckets=8 must be rewritten in 8-bucket
-    space — delete_where defaulting to 64 would silently re-bucket the
-    table and break every later pruned merge/delete."""
+    space — re-bucketing it would break every later pruned
+    merge/delete.  Every survivor keeps its row and its bucket."""
     import os
 
     from open_semantic_etl_spark.plans.checkpoint import run_incremental
@@ -253,20 +253,24 @@ def test_delete_where_respects_table_bucket_count(spark, tmp_path):
     root = str(tmp_path / "ds8")
     run_incremental(spark, pages_df(spark, 40, partitions=2), root, n_buckets=8)
     t = Tables(root)
-    n = delete_where(
-        spark, root, F.col("url").contains("doc-1"), n_buckets=8
-    )
+
+    def snapshot():
+        rows = {r.url: r for r in spark.read.parquet(t.enriched).collect()}
+        return {d for d in os.listdir(t.enriched) if d.startswith("_bucket=")}, rows
+
+    dirs, rows = snapshot()
+    n = delete_where(spark, root, F.col("url").contains("doc-1"))
     assert n > 0
-    dirs = sorted(
-        int(d.split("=")[1])
-        for d in os.listdir(t.enriched)
-        if d.startswith("_bucket=")
-    )
-    assert dirs and max(dirs) < 8, f"rewrite left 64-space buckets: {dirs}"
+    dirs_after, rows_after = snapshot()
+    assert rows_after == {u: r for u, r in rows.items() if "doc-1" not in u}
+    assert dirs_after == {f"_bucket={r._bucket}" for r in rows_after.values()} <= dirs
+    assert len(rows_after) == len(rows) - n
 
 
 def test_backfill_respects_table_bucket_count(spark, tmp_path):
-    """run_backfill's merges must happen in the table's bucket space."""
+    """run_backfill's commits must happen in the table's bucket space,
+    and a stage that rewrites an existing column changes only that
+    column (Solr 'set')."""
     import os
 
     from open_semantic_etl_spark.plans.backfill import run_backfill
@@ -275,6 +279,7 @@ def test_backfill_respects_table_bucket_count(spark, tmp_path):
     root = str(tmp_path / "ds8b")
     run_incremental(spark, pages_df(spark, 30, partitions=2), root, n_buckets=8)
     t = Tables(root)
+    before = {r["url"]: r.asDict(recursive=True) for r in spark.read.parquet(t.enriched).collect()}
 
     def add_shout(_spark, rows):
         return rows.select("url", F.upper(F.col("title_txt")).alias("title_txt"))
@@ -283,6 +288,11 @@ def test_backfill_respects_table_bucket_count(spark, tmp_path):
         spark, root, "shout", add_shout, fields=("title_txt",), n_buckets=8
     )
     assert n == 30
+    after = {r["url"]: r.asDict(recursive=True) for r in spark.read.parquet(t.enriched).collect()}
+    assert after.keys() == before.keys()
+    for url, row in after.items():
+        assert row["title_txt"] == before[url]["title_txt"].upper()
+        assert {**row, "title_txt": None} == {**before[url], "title_txt": None}, url
     for table in (t.enriched, t.checkpoint):
         dirs = sorted(
             int(d.split("=")[1])

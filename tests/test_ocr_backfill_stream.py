@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from open_semantic_etl_spark.functions.filters import blacklist_predicate, gated, stage_gate
@@ -61,23 +62,123 @@ def test_fake_ocr():
 # --- backfill (etl_enrich semantics) ---------------------------------------
 
 
+def _add_shout(_spark, pruned):  # upper-cases titles as the "new stage"
+    return pruned.select("url", F.upper(F.col("title_txt")).alias("title_shout"))
+
+
+def _rows(spark, path):
+    """url -> every column of the url's row, partition column included."""
+    return {r["url"]: r.asDict(recursive=True) for r in spark.read.parquet(path).collect()}
+
+
 def test_backfill_runs_only_missing(spark, tmp_path):
     root = str(tmp_path / "ds")
     run_incremental(spark, pages_df(spark, 60, partitions=2), root)
     t = Tables(root)
 
-    def add_shout(s, pruned):  # upper-cases titles as the "new stage"
-        return pruned.select("url", F.upper(F.col("title_txt")).alias("title_shout"))
-
-    n = run_backfill(spark, root, "shout", add_shout, fields=("title_txt",))
+    n = run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",))
     assert n == 60
     enriched = spark.read.parquet(t.enriched)
     assert "title_shout" in enriched.columns
-    got = enriched.filter(F.col("title_shout") != F.upper(F.col("title_txt"))).count()
-    assert got == 0
+    shout, title = F.col("title_shout"), F.col("title_txt")
+    assert enriched.filter(~shout.eqNullSafe(F.upper(title))).count() == 0
+    assert enriched.filter(shout.isNotNull()).count() == 60
+    assert enriched.filter(title.isNotNull()).count() == 60
 
     # second call: stage recorded in checkpoint → nothing to do
-    assert run_backfill(spark, root, "shout", add_shout, fields=("title_txt",)) == 0
+    assert run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",)) == 0
+
+
+def test_backfill_keeps_every_other_column(spark, tmp_path):
+    """Solr 'set': a backfill fills its new column and leaves every
+    pre-existing column of every row as it was (a whole-row merge of
+    the stage output used to NULL all of them but url)."""
+    root = str(tmp_path / "ds")
+    run_incremental(spark, pages_df(spark, 60, partitions=2), root)
+    t = Tables(root)
+    before = _rows(spark, t.enriched)
+
+    assert run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",)) == 60
+    after = _rows(spark, t.enriched)
+    assert after.keys() == before.keys()
+    for url, row in after.items():
+        assert row.pop("title_shout") == before[url]["title_txt"].upper()
+        assert row == before[url], url
+
+
+def test_backfill_on_root_without_checkpoint(spark, tmp_path):
+    """a stream_enrich root has an enriched table and no checkpoint
+    table: the backfill must keep every column, write the checkpoint
+    rows it needs, and converge (it used to NULL content_txt on every
+    row and then fail reading the missing checkpoint)."""
+    from open_semantic_etl_spark.streaming.monitor import stream_enrich
+
+    landing, root = str(tmp_path / "landing"), str(tmp_path / "out")
+    pages_df(spark, 20, partitions=2).write.mode("overwrite").parquet(landing)
+    q = stream_enrich(spark, landing, root, str(tmp_path / "ckpt"), trigger_once=True)
+    assert q.awaitTermination(120)
+    t = Tables(root)
+    assert not os.path.isdir(t.checkpoint)
+    before = _rows(spark, t.enriched)
+
+    assert run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",)) == 20
+    after = _rows(spark, t.enriched)
+    for url, row in after.items():
+        assert row.pop("title_shout") == before[url]["title_txt"].upper()
+        assert row == before[url], url
+    ckpt = {r["url"]: r for r in spark.read.parquet(t.checkpoint).collect()}
+    assert ckpt.keys() == before.keys()
+    for url, r in ckpt.items():
+        assert r["stages_done"] == ["shout"]
+        assert r["content_hash"] == before[url]["content_hash"]
+    assert run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",)) == 0
+
+
+def test_backfill_converges_after_checkpoint_crash(spark, tmp_path):
+    """urls a crashed run left in enriched but not in the checkpoint
+    get their stage marked too, so the next backfill has nothing to do
+    (they used to be re-run on every call)."""
+    root = str(tmp_path / "ds")
+    run_incremental(spark, pages_df(spark, 20, partitions=2), root)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_incremental(
+            spark, pages_df(spark, 25, partitions=2), root, fail_before_checkpoint=True
+        )
+    assert run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",)) == 25
+    assert run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",)) == 0
+    # the base stages of the 5 crashed urls are still unrecorded
+    assert run_incremental(spark, pages_df(spark, 25, partitions=2), root)["processed"] == 5
+
+
+def test_backfill_crash_between_commits_replays(spark, tmp_path, monkeypatch):
+    """a crash after the enriched commit and before the checkpoint
+    commit leaves the stage unmarked: the rerun re-applies it to the
+    same enriched table, and the call after that is a no-op."""
+    from open_semantic_etl_spark.plans import backfill as B
+
+    root = str(tmp_path / "ds")
+    run_incremental(spark, pages_df(spark, 30, partitions=2), root)
+    t = Tables(root)
+    commits = []
+
+    def crash_on_second(spark_, path, *args, **kwargs):
+        commits.append(path)
+        if len(commits) == 2:
+            raise RuntimeError("simulated crash between backfill commits")
+        return rewrite(spark_, path, *args, **kwargs)
+
+    rewrite = B.rewrite_buckets
+    monkeypatch.setattr(B, "rewrite_buckets", crash_on_second)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",))
+    monkeypatch.undo()
+    assert commits == [t.enriched, t.checkpoint]
+    crashed = _rows(spark, t.enriched)
+    assert all(r["title_shout"] == r["title_txt"].upper() for r in crashed.values())
+
+    assert run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",)) == 30
+    assert _rows(spark, t.enriched) == crashed
+    assert run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",)) == 0
 
 
 # --- blacklist filter -------------------------------------------------------

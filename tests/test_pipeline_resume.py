@@ -211,38 +211,42 @@ def test_merge_custom_n_buckets(spark, root):
     assert enriched.filter(F.col("content_txt") != F.col("text")).count() == 0
 
 
-def test_legacy_unbucketed_migration(spark, root):
-    """a table created before bucketing must migrate cleanly: the first
-    merge re-derives _bucket for EVERY row (none in the NULL partition),
-    and a later merge updating a pre-migration url replaces — not
-    duplicates — it (ADVICE r2 high: NULL-bucket rows were invisible to
-    bucketed merges, so updates created stale+new url pairs)."""
-    import os
+def test_backfill_rewrites_only_touched_buckets(spark, root):
+    """a backfill whose stage returns a few urls rewrites only those
+    urls' bucket dirs, in the enriched table AND the checkpoint; every
+    other bucket file stays byte-identical."""
+    from open_semantic_etl_spark.plans.backfill import run_backfill
+    from open_semantic_etl_spark.plans.checkpoint import bucket_expr
 
-    from open_semantic_etl_spark.plans.checkpoint import merge_by_url
+    run_incremental(spark, _pages(spark, N1), root)
+    t = Tables(root)
+    picked = [page_record(i, 42)["url"] for i in (3, 50, 120)]
+    touched = {
+        f"_bucket={r[0]}"
+        for r in spark.createDataFrame([(u,) for u in picked], "url string")
+        .select(bucket_expr()).distinct().collect()
+    }
+    before = {p: _bucket_file_state(p) for p in (t.enriched, t.checkpoint)}
 
-    path = os.path.join(root, "enriched")
-    legacy = spark.createDataFrame(
-        [(f"u{i}", f"old{i}") for i in range(20)], "url string, val string"
+    def shout_picked(_spark, rows):
+        return rows.filter(F.col("url").isin(picked)).select(
+            "url", F.upper(F.col("title_txt")).alias("title_shout")
+        )
+
+    assert run_backfill(spark, root, "shout", shout_picked, fields=("title_txt",)) == 3
+    for path, state in before.items():
+        after = _bucket_file_state(path)
+        changed = {n.split("/")[0] for n in set(state) | set(after) if state.get(n) != after.get(n)}
+        assert changed == touched, path
+    # the picked rows carry the new column; mergeSchema, because the
+    # untouched bucket files do not have it
+    enriched = spark.read.option("mergeSchema", "true").parquet(t.enriched)
+    shouted = enriched.filter(F.col("title_shout").isNotNull())
+    assert sorted(r.url for r in shouted.collect()) == sorted(picked)
+    marked = spark.read.parquet(t.checkpoint).filter(
+        F.array_contains("stages_done", "shout")
     )
-    os.makedirs(root, exist_ok=True)
-    legacy.write.mode("overwrite").parquet(path)  # legacy: NOT bucketed
-
-    batch1 = spark.createDataFrame([("u100", "new100")], "url string, val string")
-    merge_by_url(spark, batch1, path)
-    migrated = spark.read.parquet(path)
-    assert "_bucket" in migrated.columns
-    assert migrated.filter(F.col("_bucket").isNull()).count() == 0
-    assert migrated.count() == 21
-
-    # update a PRE-migration url: must replace, not duplicate
-    batch2 = spark.createDataFrame([("u3", "updated3")], "url string, val string")
-    merge_by_url(spark, batch2, path)
-    after = spark.read.parquet(path)
-    assert after.count() == 21
-    assert after.filter(F.col("url") == "u3").count() == 1
-    assert after.filter(F.col("url") == "u3").first()["val"] == "updated3"
-    assert after.select("url").distinct().count() == 21
+    assert sorted(r.url for r in marked.collect()) == sorted(picked)
 
 
 def test_swap_crash_rolls_forward(spark, root):

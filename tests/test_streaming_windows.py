@@ -205,7 +205,8 @@ def test_stream_dedup_ingest_incremental(spark, tmp_path):
 
 def test_compact_lsh_index_preserves_probe_results(spark, tmp_path):
     """compaction rewrites the small files of repeated appends into one
-    file per bucket dir; probes before and after must agree."""
+    file per bucket dir, keeping each table's bucket dirs and rows;
+    probes before and after must agree."""
     import os
 
     from open_semantic_etl_spark.operators.dedup import (
@@ -232,6 +233,15 @@ def test_compact_lsh_index_preserves_probe_results(spark, tmp_path):
             if os.path.basename(d).startswith(("_bb=", "_sb="))
         ]
 
+    def dirs_and_rows():
+        return {
+            sub: (
+                sorted(os.listdir(f"{path}/{sub}")),
+                sorted(str(r) for r in spark.read.parquet(f"{path}/{sub}").collect()),
+            )
+            for sub in ("bands", "sigs")
+        }
+
     assert max(files_per_bucket()) > 1  # the appends share a bucket
     probe = spark.createDataFrame(
         [(99, texts[10].replace("quick", "swift"))], "doc_id long, text string"
@@ -241,8 +251,10 @@ def test_compact_lsh_index_preserves_probe_results(spark, tmp_path):
         if r.matched
     )
     assert before  # the near-dup collides pre-compaction
-    compact_lsh_index(spark, path, n_buckets=4)
+    layout = dirs_and_rows()
+    compact_lsh_index(spark, path)
     assert max(files_per_bucket()) == 1
+    assert dirs_and_rows() == layout
     after = sorted(
         (r.index_id, r.probe_id) for r in probe_lsh_index(probe, path).collect()
         if r.matched

@@ -197,9 +197,9 @@ def main() -> int:
     )
 
     # 9. bucket-pruned incremental merge: the read of the existing
-    # enriched table inside merge_by_url carries a PartitionFilters
-    # clause on _bucket — write volume tracks the batch, not the table
-    # (the byte-identity of untouched bucket files is asserted in
+    # enriched table inside merge_by_url's rewrite_buckets carries a
+    # PartitionFilters clause on _bucket — write volume tracks the
+    # batch, not the table (the byte-identity of untouched bucket files is asserted in
     # tests/test_pipeline_resume.py::test_merge_rewrites_only_touched_buckets)
     with tempfile.TemporaryDirectory() as root:
         run_incremental(spark, pages, root)
@@ -352,9 +352,9 @@ def main() -> int:
             ],
         )
 
-    # 12. delete_by_url: the rewrite frame (the ONLY scan the delete
-    # plans — its count is Observation-collected on this same pass)
-    # prunes to the touched _bucket partitions
+    # 12. delete_by_url: the rewrite_buckets frame (the ONLY scan the
+    # delete plans — its count is Observation-collected on this same
+    # pass) prunes to the touched _bucket partitions
     with tempfile.TemporaryDirectory() as root:
         from pyspark.sql import functions as F
 
@@ -365,8 +365,8 @@ def main() -> int:
         victims = [r["url"] for r in spark.read.parquet(t.enriched).limit(2).collect()]
         buckets = _url_buckets(spark, victims)
         df = spark.read.parquet(t.enriched)
-        part = df.filter(F.col("_bucket").isin(buckets)).drop("_bucket")
-        delete_frame = part.filter(~F.col("url").isin(victims))
+        part = df.filter(F.col("_bucket").isin(buckets))
+        delete_frame = part.filter(~F.coalesce(F.col("url").isin(victims), F.lit(False)))
         section(
             "delete_by_url — single bucket-pruned scan, count observed on it",
             delete_frame,
