@@ -78,9 +78,9 @@ def build_parser() -> argparse.ArgumentParser:
                         "(byte-uniform input splits balance without a shuffle)")
     p.add_argument("--run-id", default=None)
     p.add_argument("--n-buckets", type=int, default=None,
-                   help="merge-bucket count; per-table constant "
-                        "(buckets ~= corpus_bytes / target_rewrite_unit). "
-                        "Must match the table layout on every later run")
+                   help="bucket count for tables this run creates "
+                        "(buckets ~= corpus_bytes / target_rewrite_unit); "
+                        "each table records it, so later runs may omit it")
     p.add_argument("--master", default=None,
                    help="local testing only; omit under spark-submit")
     return p
@@ -92,8 +92,7 @@ def main(argv: list[str] | None = None) -> dict:
 
     args = build_parser().parse_args(argv)
     if args.n_buckets is not None and args.n_buckets <= 0:
-        # fail fast: a falsy 0 silently fell through to the default 64,
-        # violating the must-match-table-layout contract in the help
+        # fail fast: pmod by a non-positive count has no bucket space
         raise SystemExit("--n-buckets must be a positive integer")
     gz = load_gazetteer_tsv(args.gazetteer) if args.gazetteer else None
     # "submit" = inherit the master from spark-submit / cluster conf
@@ -108,7 +107,7 @@ def main(argv: list[str] | None = None) -> dict:
             stages=tuple(s for s in args.stages.split(",") if s),
             repartition=args.repartition,
             run_id=args.run_id,
-            **({"n_buckets": args.n_buckets} if args.n_buckets is not None else {}),
+            n_buckets=args.n_buckets,
         )
     finally:
         if args.master:  # local run owns the session; cluster leaves it

@@ -1084,7 +1084,6 @@ def dedup_ingest_batch(
     bands: int = 16,
     shingle_n: int = 3,
     n_buckets: int = 64,
-    _fail_after_stage: bool = False,
 ) -> DataFrame:
     """one-call incremental dedup ingest — the one way an LSH index
     grows (``stream_dedup_ingest`` calls it once per micro-batch): dedup
@@ -1110,10 +1109,7 @@ def dedup_ingest_batch(
     the marker — either discards the un-staged attempt (recompute, the
     live index was never touched) or rolls the staged commit forward
     (every probe/build also rolls staged-complete batches forward via
-    ``_recover_lsh_compaction``).
-
-    ``_fail_after_stage`` is the crash-simulation hook (the
-    ``fail_before_checkpoint`` pattern, plans/checkpoint.py)."""
+    ``_recover_lsh_compaction``)."""
     if not re.fullmatch(r"[A-Za-z0-9._-]{1,128}", batch_id):
         # '/' or other path chars would nest the __batch_ staging dir,
         # hiding its _STAGED file from recovery's one-level glob and
@@ -1190,8 +1186,6 @@ def dedup_ingest_batch(
     )
     with open(os.path.join(staging, "_STAGED"), "w") as fh:
         fh.write("ok")
-    if _fail_after_stage:
-        raise RuntimeError("simulated crash after staging, before commit")
     _commit_batch_staging(index_path, staging, marker)
     return kept
 

@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from open_semantic_etl_spark.plans.checkpoint import (
-    N_BUCKETS,
     Tables,
     bucket_expr,
     buckets_of,
@@ -33,6 +32,7 @@ from open_semantic_etl_spark.plans.checkpoint import (
     merge_by_url,
     recover_table,
     rewrite_buckets,
+    table_buckets,
 )
 from open_semantic_etl_spark.plans.pipeline import PIPELINE_VERSION
 
@@ -55,13 +55,11 @@ def run_backfill(
     stage: str,
     stage_fn: Callable[[SparkSession, DataFrame], DataFrame],
     fields: tuple[str, ...],
-    n_buckets: int = N_BUCKETS,
 ) -> int:
     """run ``stage_fn`` over rows missing ``stage``; set its columns and
     mark the stage done.
 
-    ``n_buckets`` must match the tables' layout (per-table constant —
-    a rewrite in the wrong bucket space prunes the wrong partitions).
+    Both commits run in the bucket space the enriched table records.
     ``fields`` mirrors the reference's plugin ``fields`` attribute
     (etl_enrich.py:68-86): the backfill scan reads only these columns.
     ``stage_fn(spark, pruned_rows) -> DataFrame[url, ...columns]``; the
@@ -88,6 +86,7 @@ def run_backfill(
     # files the swap is about to replace (Iceberg snapshots make this a
     # non-issue on a real cluster; locally localCheckpoint pins the rows)
     result = stage_fn(spark, pruned).localCheckpoint(eager=True)
+    n_buckets = table_buckets(tables.enriched)
     buckets = buckets_of(result.select(bucket_expr(n_buckets=n_buckets).alias("_bucket")))
     cols = [c for c in result.columns if c != "url"]
     hit = F.col("_hit").isNotNull()

@@ -21,7 +21,7 @@ The Spark-native replacement for the reference's incremental machinery:
 
 Storage: this sandbox has no Iceberg/Delta jars, so tables are parquet
 directories HASH-BUCKETED by url — hive-partitioned on
-``_bucket = pmod(xxhash64(url), N_BUCKETS)``.  ``rewrite_buckets`` is
+``_bucket = pmod(xxhash64(url), n_buckets)``.  ``rewrite_buckets`` is
 the one commit every table write goes through (merge, backfill,
 delete, move, and the LSH index's delete and compaction): only the
 named buckets are read (partition pruning), transformed and rewritten
@@ -31,6 +31,10 @@ table. On a real cluster the same call sites map to ``MERGE INTO
 enriched USING batch ON url`` over Iceberg (snapshot commit = our
 swap; Iceberg's bucket(url, N) transform = our ``_bucket``; the
 copy-on-write MERGE rewrites exactly the same file set).
+
+Each table records its schema and ``n_buckets`` (Iceberg's table
+metadata: schema + partition spec) in ``<table>/_common_metadata``, which
+Spark's schema inference reads first: plain reads see every column.
 
 Scale: the anti-join shuffles only ``(url, content_hash)`` — 16 bytes +
 url per row, NOT the html payload: the join is planned on the slim
@@ -42,14 +46,18 @@ the checkpoint join co-locates (storage-partitioned join on Iceberg).
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 import time
 import uuid
 from typing import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from open_semantic_etl_spark.operators.entity_linking import Gazetteer
 from open_semantic_etl_spark.plans.pipeline import (
@@ -60,20 +68,14 @@ from open_semantic_etl_spark.plans.pipeline import (
 )
 
 
-#: DEFAULT url-hash bucket count for the enriched/checkpoint tables —
-#: every merge/maintenance entry point takes ``n_buckets`` so deployers
-#: size it per table. Sizing rule: ``n_buckets ≈ table_bytes /
-#: target_rewrite_unit`` where target_rewrite_unit is the bucket-dir
-#:  size you are willing to rewrite per touched bucket (1-10 GB on
-#: object storage). At 10^12 rows this is O(10^5); the MERGE cost per
-#: batch is (touched buckets) × (bucket size) ≈ min(B, N)/N × table
-#: for B batch urls — proportional to the BATCH while B ≪ N (the
-#: steady incremental-recrawl regime N is sized for), degrading to a
-#: full rewrite for bulk B ≥ N batches, where a real Iceberg/Delta
-#: MERGE (file-level pruning, merge-on-read deltas) takes over behind
-#: the same call site. ``n_buckets`` is a property of the TABLE: every
-#: call against one table root must pass the same value (like Iceberg's
-#: bucket(url, N) partition transform — changing N is a table rewrite).
+#: DEFAULT url-hash bucket count of a NEW table, which then records it
+#: (``table_buckets``) like Iceberg's bucket(url, N) partition spec.
+#: Sizing rule: ``n_buckets ≈ table_bytes / target_rewrite_unit``, the
+#: bucket-dir size you will rewrite per touched bucket (1-10 GB on
+#: object storage) — O(10^5) at 10^12 rows. A batch of B urls rewrites
+#: ≈ min(B, N)/N of the table: ∝ the BATCH while B ≪ N (steady
+#: recrawl); bulk B ≥ N batches degrade to a full rewrite, where a real
+#: Iceberg/Delta MERGE (file pruning, merge-on-read) takes over.
 N_BUCKETS = 64
 
 
@@ -126,6 +128,40 @@ def has_data(path: str) -> bool:
 def buckets_of(df: DataFrame, part_col: str = "_bucket") -> list:
     """distinct ``part_col`` values of ``df`` — one small collect."""
     return [r[0] for r in df.select(part_col).distinct().collect()]
+
+
+_SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _layout(path: str) -> tuple[StructType, int] | None:
+    """``(data columns, n_buckets)`` recorded in ``path/_common_metadata``,
+    or None for a table without a record."""
+    record = os.path.join(path, "_common_metadata")
+    if not os.path.isfile(record):
+        return None
+    meta = pq.read_schema(record).metadata
+    return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA])), int(meta[b"n_buckets"])
+
+
+def _record_layout(path: str, columns: StructType, n_buckets: int) -> None:
+    """write the layout record: a footer-only parquet file, on the driver
+    (no Spark job); the '.' tmp name is hidden from Spark's listing."""
+    meta = {_SPARK_SCHEMA: columns.json(), b"n_buckets": str(n_buckets)}
+    tmp = os.path.join(path, ".common_metadata.tmp")
+    pq.write_metadata(to_arrow_schema(columns).with_metadata(meta), tmp)
+    os.replace(tmp, os.path.join(path, "_common_metadata"))
+
+
+def table_buckets(path: str, n_buckets: int | None = None) -> int:
+    """the bucket count ``path`` records, else ``n_buckets`` (default
+    ``N_BUCKETS``).  A creator's ``n_buckets`` that disagrees with the
+    record raises: writing into another bucket space duplicates urls."""
+    layout = _layout(path)
+    if layout is None:
+        return N_BUCKETS if n_buckets is None else n_buckets
+    if n_buckets is not None and n_buckets != layout[1]:
+        raise ValueError(f"table {path} records n_buckets={layout[1]}, not {n_buckets}")
+    return layout[1]
 
 
 def _swap_buckets(tmp: str, path: str, buckets: list, part_col: str) -> None:
@@ -204,7 +240,8 @@ def rewrite_buckets(
     and swaps those bucket dirs in; every other bucket file stays
     byte-identical on disk.  ``transform`` sees the ``part_col`` column
     and must return it (pass it through, or re-derive it when the key
-    changes).  A bucket the transform leaves empty is removed.  Iceberg
+    changes).  A bucket the transform leaves empty is removed; a new
+    output column joins the layout record before the swap.  Iceberg
     equivalent: one copy-on-write snapshot commit replacing the data
     files of the touched partitions."""
     recover_table(path, part_col)
@@ -215,12 +252,19 @@ def rewrite_buckets(
     else:
         df = df.filter(F.col(part_col).isin(buckets))
     tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"  # reaped by recover_table
-    transform(df).write.mode("overwrite").partitionBy(part_col).parquet(tmp)
+    out = transform(df)
+    out.write.mode("overwrite").partitionBy(part_col).parquet(tmp)
+    layout = _layout(path)
+    if layout is not None:  # record a new column BEFORE any data file holds it
+        columns, n_buckets = layout
+        added = [f for f in out.schema if f.name not in columns.names + [part_col]]
+        if added:
+            _record_layout(path, StructType(columns.fields + added), n_buckets)
     _swap_buckets(tmp, path, buckets, part_col)
 
 
 def merge_by_url(
-    spark: SparkSession, new: DataFrame, path: str, n_buckets: int = N_BUCKETS
+    spark: SparkSession, new: DataFrame, path: str, n_buckets: int | None = None
 ) -> None:
     """MERGE new INTO path ON url (new row wins, whole row).
 
@@ -231,18 +275,23 @@ def merge_by_url(
     the table bucket(url, N)-partitioned. Idempotent under replay
     (crash between bucket swaps re-merges by url to the same result).
 
-    ``n_buckets`` must match the value the table was created with (see
-    the N_BUCKETS sizing rule); it is a per-table constant, not a
-    per-call tuning knob.
+    The first write creates the table with ``n_buckets`` (default
+    ``N_BUCKETS``) and records its layout; a later merge uses the
+    recorded count (see ``table_buckets``) and records a legacy table's.
     """
-    new = new.withColumn("_bucket", bucket_expr(n_buckets=n_buckets))
     # recover BEFORE the existence check: a table parked as __old_* by a
     # crashed whole-table swap would otherwise read as absent and be
     # replaced by the batch
     recover_table(path)
+    n_buckets = table_buckets(path, n_buckets)
+    new = new.withColumn("_bucket", bucket_expr(n_buckets=n_buckets))
     if not has_data(path):
         new.write.mode("overwrite").partitionBy("_bucket").parquet(path)
+        _record_layout(path, new.drop("_bucket").schema, n_buckets)
         return
+    if _layout(path) is None:  # a table written before layouts were recorded
+        every_column = spark.read.option("mergeSchema", "true").parquet(path)
+        _record_layout(path, every_column.drop("_bucket").schema, n_buckets)
     rewrite_buckets(
         spark, path, buckets_of(new),
         lambda old: old.join(new.select("url"), "url", "left_anti").unionByName(
@@ -325,18 +374,17 @@ def run_incremental(
     stages: tuple[str, ...] = STAGES,
     repartition: int | None = None,
     run_id: str | None = None,
-    fail_before_checkpoint: bool = False,
-    n_buckets: int = N_BUCKETS,
+    n_buckets: int | None = None,
 ) -> dict:
     """One resumable enrichment run; returns run stats.
 
-    ``fail_before_checkpoint`` simulates a crash after the output MERGE
-    but before the checkpoint commit (test hook for the acks_late
-    replay semantics — FIXTURES.md §4 kill-and-rerun).
+    ``n_buckets`` sizes the tables this run creates; on existing tables
+    it must match their recorded count (ValueError before any write).
     """
     t0 = time.time()
     run_id = run_id or uuid.uuid4().hex[:12]
     tables = Tables(root)
+    n_buckets = table_buckets(tables.checkpoint, table_buckets(tables.enriched, n_buckets))
     os.makedirs(root, exist_ok=True)
 
     todo = pending_rows(spark, pages, tables, stages)
@@ -351,10 +399,6 @@ def run_incremental(
     # 1. output commit (MERGE by url — idempotent under replay,
     #    bucket-pruned so write volume ∝ batch)
     merge_by_url(spark, out, tables.enriched, n_buckets=n_buckets)
-
-    if fail_before_checkpoint:
-        out.unpersist()
-        raise RuntimeError("simulated crash between merge and checkpoint commit")
 
     # 2. lineage/metrics commit — per-partition rollup from the batch
     elapsed_ms = int((time.time() - t0) * 1000)

@@ -21,22 +21,21 @@ from pyspark.sql import functions as F
 
 from open_semantic_etl_spark.functions.path import with_path_facets
 from open_semantic_etl_spark.plans.checkpoint import (
-    N_BUCKETS,
     Tables,
     bucket_expr,
     buckets_of,
     has_data,
     recover_table,
     rewrite_buckets,
+    table_buckets,
 )
 
 
-def _url_buckets(
-    spark: SparkSession, urls: list[str], n_buckets: int = N_BUCKETS
-) -> list[int]:
-    """bucket ids for a driver-side url list (same xxhash64 the tables
-    are partitioned by — computed via a tiny Spark expression)."""
+def _url_buckets(spark: SparkSession, path: str, urls: list[str]) -> list[int]:
+    """bucket ids of a driver-side url list in the bucket space ``path``
+    records (a tiny Spark expression: the table's own xxhash64)."""
     urls_df = spark.createDataFrame([(u,) for u in urls], "url string")
+    n_buckets = table_buckets(path)
     return buckets_of(urls_df.select(bucket_expr(n_buckets=n_buckets).alias("_bucket")))
 
 
@@ -58,15 +57,13 @@ def _delete(spark: SparkSession, path: str, buckets: list | None, predicate: Col
     return int(obs.get["deleted"])
 
 
-def delete_by_url(
-    spark: SparkSession, root: str, urls: list[str], n_buckets: int = N_BUCKETS
-) -> int:
+def delete_by_url(spark: SparkSession, root: str, urls: list[str]) -> int:
     """remove documents by id (etl_delete) — a rewrite of the victims'
     buckets only (Iceberg: ``DELETE FROM enriched WHERE url IN (…)``),
     in the enriched table and then the checkpoint, so a rerun
-    re-indexes them.  ``n_buckets`` must match the tables' layout."""
+    re-indexes them, in the bucket space the enriched table records."""
     tables = Tables(root)
-    buckets = _url_buckets(spark, urls, n_buckets)
+    buckets = _url_buckets(spark, tables.enriched, urls)
     is_victim = F.col("url").isin(urls)
     deleted = _delete(spark, tables.enriched, buckets, is_victim)
     recover_table(tables.checkpoint)
@@ -83,13 +80,12 @@ def delete_where(spark: SparkSession, root: str, predicate: Column) -> int:
     return _delete(spark, Tables(root).enriched, None, predicate)
 
 
-def move_url(
-    spark: SparkSession, root: str, src: str, dst: str, n_buckets: int = N_BUCKETS
-) -> None:
+def move_url(spark: SparkSession, root: str, src: str, dst: str) -> None:
     """rewrite a moved document's id + path facets (move_indexed_file)
     — touches exactly the src and dst buckets."""
     tables = Tables(root)
-    buckets = _url_buckets(spark, [src, dst], n_buckets)
+    buckets = _url_buckets(spark, tables.enriched, [src, dst])
+    n_buckets = table_buckets(tables.enriched)
 
     def transform(df):
         moved = df.withColumn(

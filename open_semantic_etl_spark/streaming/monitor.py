@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from open_semantic_etl_spark.operators.entity_linking import Gazetteer
-from open_semantic_etl_spark.plans.checkpoint import N_BUCKETS, merge_by_url
+from open_semantic_etl_spark.plans.checkpoint import merge_by_url, table_buckets
 from open_semantic_etl_spark.plans.pipeline import enrich_pages
 from open_semantic_etl_spark.schema import PAGES_SCHEMA
 
@@ -32,18 +32,20 @@ def stream_enrich(
     checkpoint_dir: str,
     gazetteer: Gazetteer | None = None,
     trigger_once: bool = True,
-    n_buckets: int = N_BUCKETS,
+    n_buckets: int | None = None,
 ):
     """readStream(landing parquet) → enrich → merge into enriched table.
 
     Returns the StreamingQuery. ``trigger_once`` processes the backlog
     and stops (deterministic for tests/batch-catchup); production would
-    use a processingTime trigger. ``n_buckets`` must match the enriched
-    table's layout (per-table constant).
+    use a processingTime trigger. ``n_buckets`` sizes an enriched table
+    the stream creates; an existing table's recorded count must match
+    it (ValueError before the query starts).
     """
     import os
 
     enriched_path = os.path.join(out_root, "enriched")
+    n_buckets = table_buckets(enriched_path, n_buckets)
 
     stream = (
         spark.readStream.schema(PAGES_SCHEMA)
@@ -52,7 +54,7 @@ def stream_enrich(
     )
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        out = enrich_pages(batch_df, gazetteer=gazetteer).drop("extract")
+        out = enrich_pages(batch_df, gazetteer=gazetteer)
         merge_by_url(batch_df.sparkSession, out, enriched_path, n_buckets=n_buckets)
 
     writer = (

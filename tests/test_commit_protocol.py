@@ -1,9 +1,11 @@
 """The commit protocol lives in plans/checkpoint.py alone.
 
 Every table rewrite goes through ``checkpoint.rewrite_buckets``; the
-tmp-dir and swap steps behind it are private to that module. A program
-file that names one of them — as a call, an attribute or an import —
-brings back per-module commit choreography, and fails this test.
+tmp-dir and swap steps behind it, and the writer of each table's layout
+record (``_common_metadata``, written with pyarrow's
+``write_metadata``), are private to that module. A program file that
+names one of them — as a call, an attribute or an import — brings back
+per-module commit choreography, and fails this test.
 """
 
 from __future__ import annotations
@@ -14,7 +16,10 @@ from pathlib import Path
 from test_dead_plans import ROOT, _program_files
 
 CHECKPOINT = ROOT / "open_semantic_etl_spark" / "plans" / "checkpoint.py"
-PROTOCOL = {"swap_buckets", "tmp_path", "swap_table", "atomic_overwrite"}
+PROTOCOL = {
+    "swap_buckets", "tmp_path", "swap_table", "atomic_overwrite",
+    "record_layout", "write_metadata",
+}
 
 
 def _protocol_names(path: Path) -> set[str]:
@@ -43,5 +48,5 @@ def test_commit_protocol_stays_in_checkpoint():
         for name in _protocol_names(path)
     )
     assert not leaks, f"commit protocol used outside plans/checkpoint.py: {leaks}"
-    # the guard is live: the swap step it looks for exists in checkpoint.py
-    assert "_swap_buckets" in _protocol_names(CHECKPOINT)
+    # the guard is live: the steps it looks for exist in checkpoint.py
+    assert {"_swap_buckets", "_record_layout", "write_metadata"} <= _protocol_names(CHECKPOINT)

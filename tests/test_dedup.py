@@ -1221,7 +1221,11 @@ def test_lsh_paths_and_batch_ids_validated(spark, corpus, tmp_path):
         )
 
 
-def test_dedup_ingest_batch_crash_resume(spark, corpus, tmp_path):
+def _crash_before_commit(*_args):
+    raise RuntimeError("simulated crash after staging, before commit")
+
+
+def test_dedup_ingest_batch_crash_resume(spark, corpus, tmp_path, monkeypatch):
     """crash after staging, before commit: the retry rolls the staged
     append forward and returns the RECORDED keep-set; the index holds
     the batch exactly once.  A PARTIAL staging (the crash window
@@ -1234,11 +1238,9 @@ def test_dedup_ingest_batch_crash_resume(spark, corpus, tmp_path):
     D.dedup_ingest_batch(spark, b1, path, batch_id="b1", id_col="doc_id")
     bands_before = spark.read.parquet(f"{path}/bands").count()
     b2 = corpus.filter(F.col("doc_id").isin([1, 5]))
-    with pytest.raises(RuntimeError, match="simulated"):
-        D.dedup_ingest_batch(
-            spark, b2, path, batch_id="b2", id_col="doc_id",
-            _fail_after_stage=True,
-        )
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated"):
+        m.setattr(D, "_commit_batch_staging", _crash_before_commit)
+        D.dedup_ingest_batch(spark, b2, path, batch_id="b2", id_col="doc_id")
     # staged but not committed: live index untouched
     assert spark.read.parquet(f"{path}/bands").count() == bands_before
     k2 = D.dedup_ingest_batch(spark, b2, path, batch_id="b2", id_col="doc_id")
@@ -1255,18 +1257,16 @@ def test_dedup_ingest_batch_crash_resume(spark, corpus, tmp_path):
 
 
 def test_dedup_ingest_batch_staged_commit_rolled_forward_by_probe(
-    spark, corpus, tmp_path
+    spark, corpus, tmp_path, monkeypatch
 ):
     """a staged-complete batch left by a crash is committed by the NEXT
     index operation (probe/build run _recover_lsh_compaction), so the
     keep-set becomes visible without the original caller retrying."""
     path = str(tmp_path / "ing4")
     b1 = corpus.filter(F.col("doc_id").isin([0]))
-    with pytest.raises(RuntimeError, match="simulated"):
-        D.dedup_ingest_batch(
-            spark, b1, path, batch_id="b1", id_col="doc_id",
-            _fail_after_stage=True,
-        )
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated"):
+        m.setattr(D, "_commit_batch_staging", _crash_before_commit)
+        D.dedup_ingest_batch(spark, b1, path, batch_id="b1", id_col="doc_id")
     probe = corpus.filter(F.col("doc_id") == 1)  # exact dup of 0
     got = {r.index_id for r in D.probe_lsh_index(probe, path, id_col="doc_id").collect() if r.matched}
     assert got == {0}  # the staged batch was committed before probing
@@ -1317,10 +1317,11 @@ def test_commit_batch_staging_tolerates_concurrent_committer(
     import os
 
     path = str(tmp_path / "ing_race")
-    with pytest.raises(RuntimeError, match="simulated"):
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated"):
+        m.setattr(D, "_commit_batch_staging", _crash_before_commit)
         D.dedup_ingest_batch(
             spark, corpus.filter(F.col("doc_id").isin([0, 4])), path,
-            batch_id="b1", id_col="doc_id", _fail_after_stage=True,
+            batch_id="b1", id_col="doc_id",
         )
     real_rename = os.rename
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from open_semantic_etl_spark.plans.checkpoint import Tables, run_incremental
@@ -284,9 +285,7 @@ def test_backfill_respects_table_bucket_count(spark, tmp_path):
     def add_shout(_spark, rows):
         return rows.select("url", F.upper(F.col("title_txt")).alias("title_txt"))
 
-    n = run_backfill(
-        spark, root, "shout", add_shout, fields=("title_txt",), n_buckets=8
-    )
+    n = run_backfill(spark, root, "shout", add_shout, fields=("title_txt",))
     assert n == 30
     after = {r["url"]: r.asDict(recursive=True) for r in spark.read.parquet(t.enriched).collect()}
     assert after.keys() == before.keys()
@@ -300,3 +299,69 @@ def test_backfill_respects_table_bucket_count(spark, tmp_path):
             if d.startswith("_bucket=")
         )
         assert dirs and max(dirs) < 8, f"{table} gained 64-space buckets: {dirs}"
+
+
+def _urls_by_bucket(spark, path):
+    """url -> bucket dir of every row of a bucketed table"""
+    return {r.url: r._bucket for r in spark.read.parquet(path).select("url", "_bucket").collect()}
+
+
+def test_maintenance_reads_the_table_bucket_count(spark, tmp_path):
+    """delete_by_url, move_url and run_backfill take no bucket count:
+    on an 8-bucket root they find their rows in the 8 buckets the
+    tables record, in the enriched table and the checkpoint alike."""
+    from open_semantic_etl_spark.plans.backfill import run_backfill
+    from open_semantic_etl_spark.plans.checkpoint import bucket_expr
+
+    root = str(tmp_path / "ds8m")
+    run_incremental(spark, pages_df(spark, 40, partitions=2), root, n_buckets=8)
+    t = Tables(root)
+    victim, src = sorted(_urls_by_bucket(spark, t.enriched))[:2]
+    dst = src + ".moved"
+
+    assert delete_by_url(spark, root, [victim]) == 1
+    for path in (t.enriched, t.checkpoint):
+        assert victim not in _urls_by_bucket(spark, path), path
+
+    move_url(spark, root, src, dst)
+    moved = _urls_by_bucket(spark, t.enriched)
+    want_bucket = spark.createDataFrame([(dst,)], "url string").select(
+        bucket_expr(n_buckets=8)).first()[0]
+    assert src not in moved and moved[dst] == want_bucket
+
+    assert run_backfill(spark, root, "shout", lambda _s, rows: rows.select(
+        "url", F.upper("title_txt").alias("title_shout")), fields=("title_txt",)) == 39
+    shouted = spark.read.parquet(t.enriched).filter(F.col("title_shout").isNotNull())
+    assert sorted(r.url for r in shouted.collect()) == sorted(moved)
+    marked = spark.read.parquet(t.checkpoint).filter(F.array_contains("stages_done", "shout"))
+    assert sorted(r.url for r in marked.collect()) == sorted(moved)
+    for path in (t.enriched, t.checkpoint):
+        assert max(_urls_by_bucket(spark, path).values()) < 8, path
+
+
+def test_creating_call_refuses_another_bucket_count(spark, tmp_path):
+    """run_incremental on an 8-bucket root with n_buckets=16 raises
+    before it writes anything: every file stays byte-identical."""
+    import os
+
+    from test_pipeline_resume import _bucket_file_state
+
+    root = str(tmp_path / "ds8r")
+    run_incremental(spark, pages_df(spark, 20, partitions=2), root, n_buckets=8)
+    t = Tables(root)
+
+    def state():
+        files = {p: _bucket_file_state(p) for p in (t.enriched, t.checkpoint, t.metrics)}
+        for p in (t.enriched, t.checkpoint):
+            record = os.path.join(p, "_common_metadata")
+            if os.path.exists(record):
+                with open(record, "rb") as fh:
+                    files[p]["_common_metadata"] = fh.read()
+        return files
+
+    before = state()
+    with pytest.raises(ValueError, match="n_buckets=8"):
+        run_incremental(spark, pages_df(spark, 30, partitions=2), root, n_buckets=16)
+    assert state() == before
+    # the recorded count is the default for every later run
+    assert run_incremental(spark, pages_df(spark, 30, partitions=2), root)["processed"] == 10

@@ -134,16 +134,17 @@ def test_backfill_on_root_without_checkpoint(spark, tmp_path):
     assert run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",)) == 0
 
 
-def test_backfill_converges_after_checkpoint_crash(spark, tmp_path):
+def test_backfill_converges_after_checkpoint_crash(spark, tmp_path, monkeypatch):
     """urls a crashed run left in enriched but not in the checkpoint
     get their stage marked too, so the next backfill has nothing to do
     (they used to be re-run on every call)."""
+    from test_pipeline_resume import crash_before_checkpoint
+
     root = str(tmp_path / "ds")
     run_incremental(spark, pages_df(spark, 20, partitions=2), root)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        run_incremental(
-            spark, pages_df(spark, 25, partitions=2), root, fail_before_checkpoint=True
-        )
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated crash"):
+        crash_before_checkpoint(m, root)
+        run_incremental(spark, pages_df(spark, 25, partitions=2), root)
     assert run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",)) == 25
     assert run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",)) == 0
     # the base stages of the 5 crashed urls are still unrecorded

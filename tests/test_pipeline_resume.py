@@ -82,14 +82,30 @@ def test_incremental_and_replay(spark, root):
     assert metrics.select("partition_id").distinct().count() >= 1
 
 
-def test_kill_and_rerun_converges(spark, root):
+def crash_before_checkpoint(monkeypatch, root: str) -> None:
+    """make run_incremental's checkpoint MERGE raise: a crash after the
+    output commit and before the checkpoint commit"""
+    from open_semantic_etl_spark.plans import checkpoint as C
+
+    merge = C.merge_by_url
+
+    def merge_or_crash(spark_, new, path, *args, **kwargs):
+        if path == Tables(root).checkpoint:
+            raise RuntimeError("simulated crash between merge and checkpoint commit")
+        return merge(spark_, new, path, *args, **kwargs)
+
+    monkeypatch.setattr(C, "merge_by_url", merge_or_crash)
+
+
+def test_kill_and_rerun_converges(spark, root, monkeypatch):
     pages = _pages(spark, 100)
     run_incremental(spark, pages, root)
 
     # modify 20 rows, then crash between MERGE and checkpoint commit
     pages_mod = _pages(spark, 100, reseed_from=80, reseed_to=100)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        run_incremental(spark, pages_mod, root, fail_before_checkpoint=True)
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated crash"):
+        crash_before_checkpoint(m, root)
+        run_incremental(spark, pages_mod, root)
 
     # rerun after the crash: the changed rows REPLAY (checkpoint never
     # committed), and the url-keyed merge keeps the table consistent
@@ -132,12 +148,16 @@ def test_merge_rewrites_only_touched_buckets(spark, root):
     bucket file the batch did NOT touch must be byte-identical on disk
     (same file, same bytes — not rewritten), and only the batch's url-
     hash buckets may change (VERDICT r01 item 1 done-criterion)."""
+    import os
+
     from open_semantic_etl_spark.plans.checkpoint import bucket_expr
 
     run_incremental(spark, _pages(spark, N1), root)
     t = Tables(root)
     before = _bucket_file_state(t.enriched)
     assert any("_bucket=" in k for k in before), "enriched table is not bucketed"
+    records = [os.path.join(p, "_common_metadata") for p in (t.enriched, t.checkpoint)]
+    stamps = [os.stat(r).st_mtime_ns for r in records]
 
     # small delta: 5 modified + 5 new urls
     pages2 = _pages(spark, N1 + 5, reseed_from=N1 - 5, reseed_to=N1, alt_seed=3)
@@ -165,6 +185,8 @@ def test_merge_rewrites_only_touched_buckets(spark, root):
     untouched_before = {k: v for k, v in before.items() if k.split("/")[0] not in changed_buckets}
     for name, sig in untouched_before.items():
         assert after.get(name) == sig, f"untouched file {name} changed"
+    # an unchanged layout is never rewritten
+    assert [os.stat(r).st_mtime_ns for r in records] == stamps
 
     # correctness preserved across the pruned merge
     enriched = spark.read.parquet(t.enriched)
@@ -211,6 +233,15 @@ def test_merge_custom_n_buckets(spark, root):
     assert enriched.filter(F.col("content_txt") != F.col("text")).count() == 0
 
 
+def _shout_only(urls):
+    """a backfill stage that returns a new column for ``urls`` only"""
+    def stage(_spark, rows):
+        return rows.filter(F.col("url").isin(urls)).select(
+            "url", F.upper(F.col("title_txt")).alias("title_shout")
+        )
+    return stage
+
+
 def test_backfill_rewrites_only_touched_buckets(spark, root):
     """a backfill whose stage returns a few urls rewrites only those
     urls' bucket dirs, in the enriched table AND the checkpoint; every
@@ -228,25 +259,144 @@ def test_backfill_rewrites_only_touched_buckets(spark, root):
     }
     before = {p: _bucket_file_state(p) for p in (t.enriched, t.checkpoint)}
 
-    def shout_picked(_spark, rows):
-        return rows.filter(F.col("url").isin(picked)).select(
-            "url", F.upper(F.col("title_txt")).alias("title_shout")
-        )
-
-    assert run_backfill(spark, root, "shout", shout_picked, fields=("title_txt",)) == 3
+    assert run_backfill(spark, root, "shout", _shout_only(picked), fields=("title_txt",)) == 3
     for path, state in before.items():
         after = _bucket_file_state(path)
         changed = {n.split("/")[0] for n in set(state) | set(after) if state.get(n) != after.get(n)}
         assert changed == touched, path
-    # the picked rows carry the new column; mergeSchema, because the
-    # untouched bucket files do not have it
-    enriched = spark.read.option("mergeSchema", "true").parquet(t.enriched)
+    # the picked rows carry the new column
+    enriched = spark.read.parquet(t.enriched)
     shouted = enriched.filter(F.col("title_shout").isNotNull())
     assert sorted(r.url for r in shouted.collect()) == sorted(picked)
     marked = spark.read.parquet(t.checkpoint).filter(
         F.array_contains("stages_done", "shout")
     )
     assert sorted(r.url for r in marked.collect()) == sorted(picked)
+
+
+def test_backfilled_column_survives_every_rewrite(spark, root):
+    """a column a backfill wrote into only some bucket dirs is in the
+    table's layout record: a plain read shows it, and its values
+    survive a rewrite of every bucket, a recrawl merge into one of its
+    buckets and a whole-row merge of a batch narrower than the table."""
+    from open_semantic_etl_spark.plans.backfill import run_backfill
+    from open_semantic_etl_spark.plans.checkpoint import bucket_expr, merge_by_url
+    from open_semantic_etl_spark.plans.maintenance import delete_where
+
+    run_incremental(spark, _pages(spark, 100), root)
+    t = Tables(root)
+    buckets = dict(
+        spark.createDataFrame([(i, page_record(i, 42)["url"]) for i in range(100)],
+                              "i int, url string")
+        .select("i", bucket_expr()).collect()
+    )
+    # a picked url whose bucket also holds a changeable url (i % 10 != 9)
+    picked, neighbour = next(
+        (i, j) for i in range(100) for j in range(100)
+        if i != j and j % 10 != 9 and buckets[i] == buckets[j]
+    )
+    others = [i for i in range(100) if buckets[i] != buckets[picked]][:2]
+    urls = [page_record(i, 42)["url"] for i in (picked, *others)]
+    assert run_backfill(spark, root, "shout", _shout_only(urls), fields=("title_txt",)) == 3
+
+    def shouted():
+        enriched = spark.read.parquet(t.enriched)
+        assert "title_shout" in enriched.columns
+        return {r.url: r.title_shout
+                for r in enriched.filter(F.col("title_shout").isNotNull()).collect()}
+
+    want = shouted()
+    assert sorted(want) == sorted(urls)
+    assert delete_where(spark, root, F.lit(False)) == 0  # rewrites every bucket
+    assert shouted() == want
+    recrawl = _pages(spark, 100, reseed_from=neighbour, reseed_to=neighbour + 1)
+    assert run_incremental(spark, recrawl, root)["processed"] == 1
+    assert shouted() == want
+    narrow = spark.createDataFrame(
+        [(page_record(neighbour, 42)["url"], "narrow")], "url string, title_txt string"
+    )
+    merge_by_url(spark, narrow, t.enriched)
+    assert shouted() == want
+
+
+def _assert_record_covers_files(path: str) -> None:
+    """the layout record names every column any part file holds"""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    recorded = set(pq.read_schema(f"{path}/_common_metadata").names)
+    for part in glob.glob(f"{path}/*/*.parquet"):
+        assert set(pq.read_schema(part).names) <= recorded, part
+
+
+def test_layout_record_covers_files_through_swap_crash(spark, tmp_path, monkeypatch):
+    """the commit that adds a column records it BEFORE its bucket swap:
+    a backfill that crashes in the swap leaves a table whose plain read
+    still shows every column, and whose rerun converges to the table a
+    clean run leaves."""
+    from open_semantic_etl_spark.plans import checkpoint as C
+    from open_semantic_etl_spark.plans.backfill import run_backfill
+
+    urls = [page_record(i, 42)["url"] for i in (3, 17, 29)]
+    roots = {name: str(tmp_path / name) for name in ("clean", "crashed")}
+    for r in roots.values():
+        run_incremental(spark, _pages(spark, 40), r, run_id="base")
+    tables = {name: Tables(r) for name, r in roots.items()}
+
+    def check_cover(name: str) -> None:
+        for path in (tables[name].enriched, tables[name].checkpoint):
+            _assert_record_covers_files(path)
+
+    check_cover("crashed")
+    assert run_backfill(spark, roots["clean"], "shout", _shout_only(urls), ("title_txt",)) == 3
+    check_cover("clean")
+
+    def crash(*_args):
+        raise RuntimeError("simulated crash in the bucket swap")
+
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated"):
+        m.setattr(C, "_swap_buckets", crash)
+        run_backfill(spark, roots["crashed"], "shout", _shout_only(urls), ("title_txt",))
+    check_cover("crashed")
+    assert "title_shout" in spark.read.parquet(tables["crashed"].enriched).columns
+
+    assert run_backfill(spark, roots["crashed"], "shout", _shout_only(urls), ("title_txt",)) == 3
+    check_cover("crashed")
+    for table in ("enriched", "checkpoint"):
+        got, want = (
+            spark.read.parquet(getattr(tables[name], table)).orderBy("url").collect()
+            for name in ("crashed", "clean")
+        )
+        assert got == want, table
+
+
+def test_legacy_table_gets_its_layout_at_next_merge(spark, root):
+    """a table written without a layout record still reads and merges,
+    and its next merge records every column any of its files holds,
+    with the merge's bucket count."""
+    import os
+
+    from open_semantic_etl_spark.plans.checkpoint import (
+        merge_by_url,
+        rewrite_buckets,
+        table_buckets,
+    )
+
+    path = os.path.join(root, "t")
+    rows = spark.createDataFrame([(f"u{i}", i) for i in range(20)], "url string, v long")
+    merge_by_url(spark, rows, path, n_buckets=4)
+    bucket = spark.read.parquet(path).first()["_bucket"]
+    rewrite_buckets(spark, path, [bucket], lambda df: df.withColumn("extra", F.col("v") * 10))
+    want = {r.url: r.v * 10 for r in spark.read.parquet(path).filter(F.col("_bucket") == bucket).collect()}
+    os.remove(os.path.join(path, "_common_metadata"))  # the layout of an older build
+    assert table_buckets(path) == 64
+
+    merge_by_url(spark, spark.createDataFrame([("new", 99)], "url string, v long"), path, n_buckets=4)
+    assert table_buckets(path) == 4
+    merged = spark.read.parquet(path)
+    assert merged.count() == 21
+    assert {r.url: r.extra for r in merged.filter(F.col("extra").isNotNull()).collect()} == want
 
 
 def test_swap_crash_rolls_forward(spark, root):

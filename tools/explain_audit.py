@@ -363,7 +363,7 @@ def main() -> int:
         run_incremental(spark, pages, root)
         t = Tables(root)
         victims = [r["url"] for r in spark.read.parquet(t.enriched).limit(2).collect()]
-        buckets = _url_buckets(spark, victims)
+        buckets = _url_buckets(spark, t.enriched, victims)
         df = spark.read.parquet(t.enriched)
         part = df.filter(F.col("_bucket").isin(buckets))
         delete_frame = part.filter(~F.coalesce(F.col("url").isin(victims), F.lit(False)))
