@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from open_semantic_etl_spark.plans.checkpoint import (
+    bucket_expr,
     buckets_of,
     has_data,
     recover_table,
@@ -216,6 +217,24 @@ def minhash_signature(text: Column, num_hashes: int = 64, shingle_n: int = 3) ->
     return udf(text)
 
 
+def _signatures(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    shingle_n: int,
+    signatures: DataFrame | None = None,
+) -> DataFrame:
+    """(_id, sig): the caller's ``signatures`` (``id_col, sig``), else
+    the MinHash of ``text_col``."""
+    if signatures is not None:
+        return signatures.select(F.col(id_col).alias("_id"), F.col("sig"))
+    return df.select(
+        F.col(id_col).alias("_id"),
+        minhash_signature(F.col(text_col), num_hashes, shingle_n).alias("sig"),
+    )
+
+
 def _band_table(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(_id, sig) → (_id, band, bh): one row per LSH band, band hash =
     xxhash64 over the signature slice — the ~20 B/row key-only shape
@@ -265,14 +284,7 @@ def lsh_candidate_pairs(
     so MinHash is computed once per doc; when omitted, the signature
     plan is evaluated per join branch (fine at test scale).
     """
-    sig = signatures
-    if sig is None:
-        sig = df.select(
-            F.col(id_col).alias("_id"),
-            minhash_signature(F.col(text_col), num_hashes, shingle_n).alias("sig"),
-        )
-    else:
-        sig = sig.select(F.col(id_col).alias("_id"), F.col("sig"))
+    sig = _signatures(df, text_col, id_col, num_hashes, shingle_n, signatures)
     exploded = _band_table(sig, num_hashes, bands)
     # one short-key shuffle: bucket-join on (band, band_hash)
     a = exploded.alias("a")
@@ -303,22 +315,66 @@ def lsh_candidate_pairs(
 #
 # The 100 TB dedup problem is incremental: each ingest batch must dedup
 # against the ENTIRE existing corpus without recomputing it.  The index
-# is two append-only parquet tables:
+# is two parquet tables plus the record of its LSH family:
 #
 #   <path>/bands/_bb=<k>/…   (_id, band, bh)  hive-partitioned on
 #                            _bb = pmod(xxhash64(bh), n_buckets)
 #   <path>/sigs/_sb=<k>/…    (_id, sig)       partitioned on
 #                            _sb = pmod(xxhash64(_id), n_buckets)
+#   <path>/_lsh_meta.json    num_hashes, bands, shingle_n, n_buckets
 #
-# Probe shape: the batch's band table joins index bands on (band, bh) —
-# key-only shuffle, ~20 B/row, the same trim as lsh_candidate_pairs;
-# `_bb` rides along so the parquet scan partition-prunes when the probe
-# batch is small relative to n_buckets (and Spark's dynamic partition
-# pruning applies when it is selective).  Signatures rejoin ONLY the
-# candidate pair set (candidates ≪ corpus → AQE broadcasts them; the
-# index signature table never shuffles).  Appends touch only the
-# buckets the new batch hashes into — the merge_by_url bucket-pruning
-# rule applied to the dedup index.
+# The record decides the family: build_lsh_index writes it for the
+# parameters it rebuilds with, dedup_ingest_batch writes the default
+# family on a fresh index, and ingest/probe/delete/compact read it.
+# Probe shape: the batch's band table joins index bands on
+# (band, bh) — key-only shuffle, ~20 B/row, the same trim as
+# lsh_candidate_pairs; `_bb` rides along so the parquet scan
+# partition-prunes when the probe batch is small relative to n_buckets
+# (and Spark's dynamic partition pruning applies when it is selective).
+# Signatures rejoin ONLY the candidate pair set (candidates ≪ corpus →
+# AQE broadcasts them; the index signature table never shuffles).
+# Ingest appends touch only the buckets the new batch hashes into — the
+# merge_by_url bucket-pruning rule applied to the dedup index.
+
+# the default family: build_lsh_index's defaults, and what
+# dedup_ingest_batch records on an index that has no record yet
+_LSH_FAMILY = {"num_hashes": 64, "bands": 16, "shingle_n": 3, "n_buckets": 64}
+
+
+def _write_index_tables(sig: DataFrame, root: str, family: dict) -> None:
+    """write ``(_id, sig)`` and its band table as ``root/sigs`` and
+    ``root/bands`` (overwrite), bucketed by ``family["n_buckets"]``.
+    Sigs FIRST: the bands dir doubles as the index-exists marker the
+    probe checks, so a crash between the two writes leaves the marker
+    absent, not a bands-without-sigs wedge."""
+    n = family["n_buckets"]
+    sig.withColumn("_sb", bucket_expr("_id", n)).write.mode(
+        "overwrite"
+    ).partitionBy("_sb").parquet(f"{root}/sigs")
+    _band_table(sig, family["num_hashes"], family["bands"]).withColumn(
+        "_bb", bucket_expr("bh", n)
+    ).write.mode("overwrite").partitionBy("_bb").parquet(f"{root}/bands")
+
+
+def _write_lsh_meta(index_path: str, family: dict) -> None:
+    """record the index's family (tmp + os.replace: never torn)."""
+    os.makedirs(index_path, exist_ok=True)
+    meta_path = os.path.join(index_path, "_lsh_meta.json")
+    with open(meta_path + ".tmp", "w") as f:
+        json.dump(family, f)
+    os.replace(meta_path + ".tmp", meta_path)
+
+
+def _lsh_index_meta(index_path: str) -> dict:
+    """the family recorded in ``_lsh_meta.json``.  A missing record
+    raises FileNotFoundError and an unparseable one ValueError: guessing
+    the family would silently miss collisions."""
+    meta_path = os.path.join(index_path, "_lsh_meta.json")
+    with open(meta_path) as f:
+        try:
+            return json.load(f)
+        except ValueError:
+            raise ValueError(f"corrupt {meta_path} — rebuild the index") from None
 
 
 def build_lsh_index(
@@ -326,112 +382,37 @@ def build_lsh_index(
     index_path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    n_buckets: int = 64,
-    mode: str = "append",
+    num_hashes: int = _LSH_FAMILY["num_hashes"],
+    bands: int = _LSH_FAMILY["bands"],
+    shingle_n: int = _LSH_FAMILY["shingle_n"],
+    n_buckets: int = _LSH_FAMILY["n_buckets"],
     signatures: DataFrame | None = None,
 ) -> None:
-    """persist (or extend) the LSH index with this batch's bands and
-    signatures.  ``n_buckets`` sizing follows the checkpoint rule:
-    buckets ≈ index_bytes / target_rewrite_unit.  A plain append is
-    not idempotent under retry — ingest goes through
-    ``dedup_ingest_batch``'s staged commit.
-
-    The LSH family parameters are recorded in ``_lsh_meta.json`` on
-    first build and validated on every later build/probe: probing with
-    different num_hashes/bands/shingle_n/n_buckets would silently miss
-    collisions (r4 review).  ``signatures`` (``id_col, sig``) skips the
-    MinHash recompute when the caller already has them."""
-    _recover_lsh_compaction(index_path)  # an append directly after a
-    # crashed compaction would otherwise recreate the live dir and let
-    # the next probe's recovery DELETE the parked full-corpus copy
-    meta = _lsh_index_meta(
-        index_path, num_hashes, bands, shingle_n, n_buckets, create=True,
-        refresh=(mode == "overwrite"),
-    )
-    num_hashes, bands, shingle_n, n_buckets = meta
-    if signatures is None:
-        sig = df.select(
-            F.col(id_col).alias("_id"),
-            minhash_signature(F.col(text_col), num_hashes, shingle_n).alias("sig"),
-        )
-    else:
-        sig = signatures.select(F.col(id_col).alias("_id"), F.col("sig"))
-    # sigs FIRST: the bands dir doubles as the index-exists marker the
-    # probe checks, so a crash between the two writes must leave the
-    # marker absent, not a bands-without-sigs wedge (r4 review)
-    sig.withColumn(
-        "_sb", F.pmod(F.xxhash64("_id"), F.lit(n_buckets))
-    ).write.mode(mode).partitionBy("_sb").parquet(f"{index_path}/sigs")
-    bands_df = _band_table(sig, num_hashes, bands).withColumn(
-        "_bb", F.pmod(F.xxhash64("bh"), F.lit(n_buckets))
-    )
-    bands_df.write.mode(mode).partitionBy("_bb").parquet(f"{index_path}/bands")
-
-
-def _lsh_index_meta(
-    index_path: str,
-    num_hashes: int,
-    bands: int,
-    shingle_n: int,
-    n_buckets: int,
-    create: bool = False,
-    refresh: bool = False,
-) -> tuple[int, int, int, int]:
-    """read (or on first build, write) the index's recorded family
-    parameters; mismatching caller parameters raise rather than
-    silently probing the wrong band space.  ``refresh`` (full-table
-    overwrite builds) re-records the caller's parameters — the one
-    legitimate re-parameterization path.  The write is tmp+os.replace
-    so a crash mid-write can never wedge later probes on a truncated
-    JSON (r4 review)."""
-    meta_path = os.path.join(index_path, "_lsh_meta.json")
-    want = {
-        "num_hashes": num_hashes,
-        "bands": bands,
-        "shingle_n": shingle_n,
-        "n_buckets": n_buckets,
-    }
-
-    def write() -> None:
-        os.makedirs(index_path, exist_ok=True)
-        tmp = meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(want, f)
-        os.replace(tmp, meta_path)
-
-    if os.path.exists(meta_path) and not refresh:
-        try:
-            with open(meta_path) as f:
-                stored = json.load(f)
-        except ValueError:
-            # torn write from a crashed pre-fix build: a build
-            # self-heals (it owns the params); a probe fails LOUDLY —
-            # guessing the family silently misses collisions
-            if create:
-                write()
-                stored = want
-            else:
-                raise ValueError(
-                    f"corrupt _lsh_meta.json at {index_path} — rebuild the index"
-                ) from None
-        if stored != want:
-            raise ValueError(
-                f"LSH index at {index_path} was built with {stored}, "
-                f"called with {want} — collisions would be silently missed"
-            )
-        return tuple(stored[k] for k in ("num_hashes", "bands", "shingle_n", "n_buckets"))
-    if create:
-        write()
-    return num_hashes, bands, shingle_n, n_buckets
-
-
-def _stored_lsh_meta(index_path: str) -> dict:
-    """the family parameters recorded by the index's first build."""
-    with open(os.path.join(index_path, "_lsh_meta.json")) as f:
-        return json.load(f)
+    """(re)build the LSH index from ``df`` alone: a full rebuild that
+    replaces the bands, sigs and family record, and drops the batch
+    manifest (``_batches/``) — the rebuilt index holds none of the
+    ingested batches' keep-sets, so a replay or expiry of one must not
+    act on it.  ``dedup_ingest_batch`` is the only way an index grows,
+    so a non-default family is chosen here only (an empty ``df`` starts
+    an ingest-grown index in it).
+    ``n_buckets`` sizing follows the checkpoint rule: buckets ≈
+    index_bytes / target_rewrite_unit.  ``signatures`` (``id_col,
+    sig``) skips the MinHash recompute when the caller already has
+    them."""
+    # recover first: what a crashed commit left (a parked bucket swap,
+    # a staged batch) would otherwise be rolled onto the rebuild by
+    # the next probe; the batches it commits go with the manifest.
+    # The bands dir (the exists-marker) goes before the record changes:
+    # a crash mid-rebuild then reads as an absent, all-novel index, not
+    # old-family bands probed in the new record's family
+    _recover_lsh_compaction(index_path)
+    for sub in ("_batches", "bands"):
+        shutil.rmtree(f"{index_path}/{sub}", ignore_errors=True)
+    family = {"num_hashes": num_hashes, "bands": bands, "shingle_n": shingle_n,
+              "n_buckets": n_buckets}
+    _write_lsh_meta(index_path, family)
+    sig = _signatures(df, text_col, id_col, num_hashes, shingle_n, signatures)
+    _write_index_tables(sig, index_path, family)
 
 
 def probe_lsh_index(
@@ -439,10 +420,6 @@ def probe_lsh_index(
     index_path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    n_buckets: int = 64,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
     """dedup a new batch against the persisted index WITHOUT touching
@@ -451,14 +428,13 @@ def probe_lsh_index(
     One row per (index doc, probe doc) band collision pair (deduped on
     the id pair before signatures rejoin), plus one ``matched=false``
     row (null index_id/est_jaccard) for every novel probe doc — the
-    keep-set of an incremental ingest.  A missing/empty index (the
-    streaming bootstrap batch) yields all-novel."""
+    keep-set of an incremental ingest.  The LSH family comes from the
+    index's record; ``signatures`` must be of that family.  A
+    missing/empty index (the streaming bootstrap batch) yields
+    all-novel."""
     spark = df.sparkSession
     id_type = df.schema[id_col].dataType
     _recover_lsh_compaction(index_path)
-    num_hashes, bands, shingle_n, n_buckets = _lsh_index_meta(
-        index_path, num_hashes, bands, shingle_n, n_buckets
-    )
     # BOTH tables must hold data for the index to count as present: a
     # crash mid-first-build can leave one without the other, and a
     # wedged probe would block every streaming retry (r4 review).  The
@@ -474,21 +450,19 @@ def probe_lsh_index(
             F.lit(None).cast("double").alias("est_jaccard"),
             F.lit(False).alias("matched"),
         )
+    family = _lsh_index_meta(index_path)
+    num_hashes = family["num_hashes"]
     idx_bands = spark.read.parquet(f"{index_path}/bands").select(
         F.col("_id").alias("_iid"), "band", "bh", "_bb"
     )
     idx_sigs = spark.read.parquet(f"{index_path}/sigs").select(
         F.col("_id").alias("index_id"), F.col("sig").alias("sig_i")
     )
-    if signatures is None:
-        sig = df.select(
-            F.col(id_col).alias("_id"),
-            minhash_signature(F.col(text_col), num_hashes, shingle_n).alias("sig"),
-        )
-    else:
-        sig = signatures.select(F.col(id_col).alias("_id"), F.col("sig"))
-    probe_bands = _band_table(sig, num_hashes, bands).withColumn(
-        "_bb", F.pmod(F.xxhash64("bh"), F.lit(n_buckets))
+    sig = _signatures(
+        df, text_col, id_col, num_hashes, family["shingle_n"], signatures
+    )
+    probe_bands = _band_table(sig, num_hashes, family["bands"]).withColumn(
+        "_bb", bucket_expr("bh", family["n_buckets"])
     )
     # key-only pair join; _bb in the key lets the scan partition-prune
     pairs = (
@@ -1080,16 +1054,16 @@ def dedup_ingest_batch(
     batch_id: str,
     text_col: str = "text",
     id_col: str = "url",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    n_buckets: int = 64,
 ) -> DataFrame:
     """one-call incremental dedup ingest — the one way an LSH index
     grows (``stream_dedup_ingest`` calls it once per micro-batch): dedup
     the batch against the whole already-ingested corpus via the
     persisted band index, dedup within the batch, append the keep-set
     to the index, and return the kept rows.
+
+    The index's record decides the LSH family; an index without one
+    gets ``build_lsh_index``'s default family recorded before anything
+    is staged.
 
     Scale shape: duplicate ids collapse first; ONE MinHash pass per
     batch threads through probe, within-batch dedup and the index
@@ -1119,6 +1093,9 @@ def dedup_ingest_batch(
             "(it names filesystem directories)"
         )
     _recover_lsh_compaction(index_path)
+    if not os.path.exists(os.path.join(index_path, "_lsh_meta.json")):
+        _write_lsh_meta(index_path, _LSH_FAMILY)
+    family = _lsh_index_meta(index_path)
 
     def kept_rows(ids_path: str) -> DataFrame:
         if not has_data(ids_path):
@@ -1143,14 +1120,11 @@ def dedup_ingest_batch(
     shutil.rmtree(staging, ignore_errors=True)  # partial stage
 
     batch = batch_df.dropDuplicates([id_col]).localCheckpoint(eager=True)
-    sigs = batch.select(
-        F.col(id_col),
-        minhash_signature(F.col(text_col), num_hashes, shingle_n).alias("sig"),
-    ).localCheckpoint(eager=True)
+    sigs = _signatures(
+        batch, text_col, id_col, family["num_hashes"], family["shingle_n"]
+    ).toDF(id_col, "sig").localCheckpoint(eager=True)
     probed = probe_lsh_index(
-        batch, index_path, text_col=text_col, id_col=id_col,
-        num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-        n_buckets=n_buckets, signatures=sigs,
+        batch, index_path, text_col=text_col, id_col=id_col, signatures=sigs
     )
     novel_ids = probed.filter(~F.col("matched")).select(
         F.col("probe_id").alias(id_col)
@@ -1159,8 +1133,8 @@ def dedup_ingest_batch(
     drop = (
         lsh_candidate_pairs(
             novel, text_col=text_col, id_col=id_col,
-            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
             signatures=sigs.join(novel_ids, id_col),
+            **{k: family[k] for k in ("num_hashes", "bands", "shingle_n")},
         )
         .select(F.col("id_b").alias(id_col))
         .distinct()
@@ -1168,19 +1142,10 @@ def dedup_ingest_batch(
     kept = novel.join(drop, id_col, "left_anti").localCheckpoint(eager=True)
     # staged append: all three writes land OUTSIDE the live tables, so
     # a crash before _STAGED never perturbs the index
-    meta = _lsh_index_meta(
-        index_path, num_hashes, bands, shingle_n, n_buckets, create=True
-    )
-    num_hashes, bands, shingle_n, n_buckets = meta
     kept_sigs = sigs.join(kept.select(id_col), id_col).select(
         F.col(id_col).alias("_id"), "sig"
     )
-    kept_sigs.withColumn(
-        "_sb", F.pmod(F.xxhash64("_id"), F.lit(n_buckets))
-    ).write.mode("overwrite").partitionBy("_sb").parquet(f"{staging}/sigs")
-    _band_table(kept_sigs, num_hashes, bands).withColumn(
-        "_bb", F.pmod(F.xxhash64("bh"), F.lit(n_buckets))
-    ).write.mode("overwrite").partitionBy("_bb").parquet(f"{staging}/bands")
+    _write_index_tables(kept_sigs, staging, family)
     kept.select(F.col(id_col).alias("_id")).write.mode("overwrite").parquet(
         f"{staging}/kept_ids"
     )
@@ -1248,8 +1213,8 @@ def expire_lsh_batches(
 
 def delete_from_lsh_index(spark, index_path: str, ids) -> None:
     """remove documents from the persisted LSH index (takedowns,
-    recrawl-replaced urls, TTL expiry) — the DELETE twin of the
-    append-only build.
+    recrawl-replaced urls, TTL expiry) — the DELETE twin of
+    ``dedup_ingest_batch``'s append.
 
     Bucket-pruned, the merge_by_url rule (plans/checkpoint.py) applied
     to the index: a doc's sig lives in ``_sb = pmod(xxhash64(id),
@@ -1269,8 +1234,8 @@ def delete_from_lsh_index(spark, index_path: str, ids) -> None:
     them.  Ids absent from the index are a no-op.
     """
     _recover_lsh_compaction(index_path)
-    meta = _stored_lsh_meta(index_path)  # a non-index raises loudly
-    num_hashes, bands, n_buckets = (meta[k] for k in ("num_hashes", "bands", "n_buckets"))
+    family = _lsh_index_meta(index_path)  # a non-index raises loudly
+    n_buckets = family["n_buckets"]
     sigs_path = f"{index_path}/sigs"
     bands_path = f"{index_path}/bands"
     sigs_live, bands_live = has_data(sigs_path), has_data(bands_path)
@@ -1288,9 +1253,9 @@ def delete_from_lsh_index(spark, index_path: str, ids) -> None:
     is_deleted = F.col("_id") == F.col("_del_id")
     sig_buckets, band_buckets = [], []
     if sigs_live:
-        cand_buckets = buckets_of(ids_df.select(
-            F.pmod(F.xxhash64("_del_id"), F.lit(n_buckets)).alias("_sb")
-        ), "_sb")
+        cand_buckets = buckets_of(
+            ids_df.select(bucket_expr("_del_id", n_buckets).alias("_sb")), "_sb"
+        )
         cand_sigs = spark.read.parquet(sigs_path).filter(
             F.col("_sb").isin(cand_buckets)
         )
@@ -1305,8 +1270,8 @@ def delete_from_lsh_index(spark, index_path: str, ids) -> None:
         # too — no scan of the full bands table.
         sig_buckets = buckets_of(del_sigs, "_sb")
         del_bands = _band_table(
-            del_sigs.select("_id", "sig"), num_hashes, bands
-        ).withColumn("_bb", F.pmod(F.xxhash64("bh"), F.lit(n_buckets)))
+            del_sigs.select("_id", "sig"), family["num_hashes"], family["bands"]
+        ).withColumn("_bb", bucket_expr("bh", n_buckets))
     else:
         # bands without sigs: no sig to recompute band rows from
         del_bands = spark.read.parquet(bands_path).join(
@@ -1344,7 +1309,7 @@ def compact_lsh_index(spark, index_path: str) -> None:
     a batch committed mid-compaction lands in a live bucket dir the
     swap replaces."""
     _recover_lsh_compaction(index_path)
-    n_buckets = _stored_lsh_meta(index_path)["n_buckets"]
+    n_buckets = _lsh_index_meta(index_path)["n_buckets"]
     for sub, part_col in (("bands", "_bb"), ("sigs", "_sb")):
         rewrite_buckets(
             spark, f"{index_path}/{sub}", None,

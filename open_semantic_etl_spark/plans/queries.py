@@ -315,8 +315,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     marker = os.path.join(index_path, "_complete")
     if not os.path.exists(marker):
         build_lsh_index(
-            docs.filter(even), index_path, mode="overwrite",
-            signatures=sigs.filter(even),
+            docs.filter(even), index_path, signatures=sigs.filter(even)
         )
         with open(marker, "w") as fh:
             fh.write("ok")

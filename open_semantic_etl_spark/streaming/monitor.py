@@ -25,6 +25,29 @@ from open_semantic_etl_spark.plans.pipeline import enrich_pages
 from open_semantic_etl_spark.schema import PAGES_SCHEMA
 
 
+def _start_stream(
+    spark: SparkSession,
+    landing_dir: str,
+    checkpoint_dir: str,
+    process_batch,
+    max_files_per_trigger: int,
+    trigger_once: bool,
+):
+    """readStream(landing parquet) → ``foreachBatch(process_batch)``,
+    started: ``availableNow`` when ``trigger_once``, else every 10 s."""
+    writer = (
+        spark.readStream.schema(PAGES_SCHEMA)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(landing_dir)
+        .writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+    if trigger_once:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(processingTime="10 seconds").start()
+
+
 def stream_enrich(
     spark: SparkSession,
     landing_dir: str,
@@ -47,26 +70,14 @@ def stream_enrich(
     enriched_path = os.path.join(out_root, "enriched")
     n_buckets = table_buckets(enriched_path, n_buckets)
 
-    stream = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(landing_dir)
-    )
-
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         out = enrich_pages(batch_df, gazetteer=gazetteer)
         merge_by_url(batch_df.sparkSession, out, enriched_path, n_buckets=n_buckets)
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _start_stream(
+        spark, landing_dir, checkpoint_dir, process_batch,
+        max_files_per_trigger=64, trigger_once=trigger_once,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="10 seconds")
-    return writer.start()
 
 
 def stream_dedup_ingest(
@@ -75,8 +86,6 @@ def stream_dedup_ingest(
     out_root: str,
     checkpoint_dir: str,
     trigger_once: bool = True,
-    n_buckets: int = 64,
-    max_files_per_trigger: int = 1,
 ):
     """streaming incremental dedup: each micro-batch is one
     ``dedup_ingest_batch`` call (probe the persisted LSH index, keep
@@ -95,7 +104,9 @@ def stream_dedup_ingest(
     all-zero signature, so they form ONE dup class — the first
     text-less page wins, the rest drop (run quality filtering ahead
     of ingest if empty docs should not dedup together).
-    Returns the StreamingQuery."""
+    Each landing file is its own micro-batch.  A new index takes
+    ``dedup_ingest_batch``'s default LSH family; an existing one keeps
+    the family it records.  Returns the StreamingQuery."""
     import os
 
     from open_semantic_etl_spark.operators.dedup import dedup_ingest_batch
@@ -103,33 +114,18 @@ def stream_dedup_ingest(
     index_path = os.path.join(out_root, "lsh_index")
     kept_root = os.path.join(out_root, "kept")
 
-    stream = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
-
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         query_id = batch_df.sparkSession.sparkContext.getLocalProperty(
             "sql.streaming.queryId"
         )
         batch_id = f"{query_id}-{epoch_id}"
-        kept = dedup_ingest_batch(
-            spark, batch_df, index_path, batch_id, id_col="url",
-            n_buckets=n_buckets,
-        )
+        kept = dedup_ingest_batch(spark, batch_df, index_path, batch_id, id_col="url")
         kept.write.mode("overwrite").parquet(f"{kept_root}/_batch={batch_id}")
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _start_stream(
+        spark, landing_dir, checkpoint_dir, process_batch,
+        max_files_per_trigger=1, trigger_once=trigger_once,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="10 seconds")
-    return writer.start()
 
 
 def windowed_event_metrics(events_stream: DataFrame) -> DataFrame:

@@ -20,6 +20,15 @@ _BASE = (
     "watches from the old wooden fence near the quiet river bank every "
     "single morning before the sun rises over the green hills"
 )
+# shares no word with _BASE, so the two never collide; a doc holding
+# both texts collides with each (one LSH band apiece, different
+# estimates) — two index docs one probe matches, where neither is a
+# duplicate an ingest would drop
+_KITCHEN = (
+    "in a small kitchen downtown a patient cook slices onions peppers and "
+    "garlic then simmers tomatoes with basil oregano and olive oil for hours "
+    "so the sauce thickens slowly"
+)
 
 
 @pytest.fixture(scope="module")
@@ -719,7 +728,7 @@ def test_incremental_lsh_probe_matches_batch_relation(spark, corpus, tmp_path):
     idx_docs = corpus.filter(F.col("doc_id") % 2 == 0)
     probe_docs = corpus.filter(F.col("doc_id") % 2 == 1)
     path = str(tmp_path / "lsh_index")
-    D.build_lsh_index(idx_docs, path, mode="overwrite")
+    D.build_lsh_index(idx_docs, path)
     probed = D.probe_lsh_index(probe_docs, path).collect()
 
     batch = D.lsh_candidate_pairs(corpus).collect()
@@ -740,14 +749,18 @@ def test_incremental_lsh_probe_matches_batch_relation(spark, corpus, tmp_path):
 
 
 def test_incremental_lsh_append_extends_index(spark, corpus, tmp_path):
-    """a second batch appends: the probe then collides with members of
-    BOTH builds (the append-only ingest flow)."""
+    """a second ingest batch appends: the probe then collides with
+    members of BOTH batches (the append-only ingest flow)."""
     path = str(tmp_path / "idx")
-    D.build_lsh_index(corpus.filter(F.col("doc_id") == 0), path, mode="overwrite")
-    probe = corpus.filter(F.col("doc_id") == 2)  # near-dup of 0 and of 7
+
+    def docs(*rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    D.dedup_ingest_batch(spark, docs((0, _BASE)), path, "b1", id_col="doc_id")
+    probe = docs((2, _BASE + " " + _KITCHEN))  # near-dup of 0 and of 7
     first = {r.index_id for r in D.probe_lsh_index(probe, path).collect() if r.matched}
     assert first == {0}
-    D.build_lsh_index(corpus.filter(F.col("doc_id") == 7), path)  # append
+    D.dedup_ingest_batch(spark, docs((7, _KITCHEN)), path, "b2", id_col="doc_id")
     second = {r.index_id for r in D.probe_lsh_index(probe, path).collect() if r.matched}
     assert second == {0, 7}
 
@@ -757,7 +770,7 @@ def test_incremental_lsh_probe_shuffle_carries_no_signatures(spark, corpus, tmp_
     column riding that shuffle is the payload-shuffle anti-pattern the
     r3 review caught in lsh_topk."""
     path = str(tmp_path / "idx2")
-    D.build_lsh_index(corpus.filter(F.col("doc_id") % 2 == 0), path, mode="overwrite")
+    D.build_lsh_index(corpus.filter(F.col("doc_id") % 2 == 0), path)
     plan = D.probe_lsh_index(
         corpus.filter(F.col("doc_id") % 2 == 1), path
     )._jdf.queryExecution().executedPlan().toString()
@@ -848,15 +861,54 @@ def test_pq_scored_rows_carry_codes_not_vectors(spark, embeddings):
 
 
 def test_incremental_lsh_meta_guards_family_params(spark, corpus, tmp_path):
-    """probing with different LSH family parameters than the build
-    would silently miss collisions — the recorded meta raises instead
-    (r4 review)."""
-    path = str(tmp_path / "idx_meta")
-    D.build_lsh_index(corpus, path, mode="overwrite")
-    with pytest.raises(ValueError, match="silently missed"):
-        D.probe_lsh_index(corpus, path, n_buckets=32)
-    with pytest.raises(ValueError, match="silently missed"):
-        D.build_lsh_index(corpus, path, bands=8)
+    """the index's record decides its LSH family: an ingest takes no
+    family arguments and appends in the recorded family, so it can
+    never probe or grow an index in another band space.
+    A rebuild over an empty frame starts an ingest-grown index in a
+    non-default family."""
+    for name, seed in (("idx_meta", [0]), ("idx_meta_empty", [])):
+        path = str(tmp_path / name)
+        D.build_lsh_index(
+            corpus.filter(F.col("doc_id").isin(seed)), path, bands=8, n_buckets=4
+        )
+        if not seed:
+            D.dedup_ingest_batch(
+                spark, corpus.filter(F.col("doc_id") == 0), path, "b0", id_col="doc_id"
+            )
+        # the recorded family: doc 1 (exact dup of 0) collides and
+        # drops, doc 5 lands with 8 band rows in the 4 recorded buckets
+        kept = D.dedup_ingest_batch(
+            spark, corpus.filter(F.col("doc_id").isin([1, 5])), path, "b1",
+            id_col="doc_id",
+        )
+        assert [r.doc_id for r in kept.collect()] == [5], name
+        bands5 = spark.read.parquet(f"{path}/bands").filter(F.col("_id") == 5).collect()
+        assert len(bands5) == 8 and all(r._bb < 4 for r in bands5), name
+
+
+def test_crashed_rebuild_reads_as_absent_index(spark, corpus, tmp_path, monkeypatch):
+    """a rebuild that crashes between its sigs and bands writes must not
+    leave the old family's bands live under the new family's record —
+    the probe would hash in the wrong band space and silently miss
+    duplicates.  The rebuild drops the bands dir (the exists-marker)
+    before it rewrites the record, so the crashed index probes
+    all-novel, like a crashed first build."""
+    import os
+
+    path = str(tmp_path / "idx_crashed_rebuild")
+    D.build_lsh_index(corpus, path)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash between the sigs and bands writes")
+
+    with monkeypatch.context() as m:
+        m.setattr(D, "_band_table", crash)
+        with pytest.raises(RuntimeError, match="crash between"):
+            D.build_lsh_index(corpus, path, bands=8, n_buckets=4)
+    assert D._lsh_index_meta(path)["n_buckets"] == 4
+    assert not os.path.isdir(f"{path}/bands")
+    probed = D.probe_lsh_index(corpus.filter(F.col("doc_id") == 1), path).collect()
+    assert [(r.probe_id, r.matched) for r in probed] == [(1, False)]
 
 
 def test_incremental_lsh_partial_first_build_is_empty_index(spark, corpus, tmp_path):
@@ -867,7 +919,7 @@ def test_incremental_lsh_partial_first_build_is_empty_index(spark, corpus, tmp_p
     import shutil
 
     path = str(tmp_path / "idx_partial")
-    D.build_lsh_index(corpus, path, mode="overwrite")
+    D.build_lsh_index(corpus, path)
     shutil.rmtree(f"{path}/sigs")  # simulate the crash window
     probed = D.probe_lsh_index(corpus.limit(2), path).collect()
     assert all(not r.matched for r in probed)
@@ -880,7 +932,7 @@ def test_compaction_crash_window_recovers(spark, corpus, tmp_path):
     import os
 
     path = str(tmp_path / "idx_crash")
-    D.build_lsh_index(corpus, path, mode="overwrite")
+    D.build_lsh_index(corpus, path)
     os.rename(f"{path}/bands", f"{path}/bands__old_deadbeef")
     probe = corpus.filter(F.col("doc_id") == 1)  # exact dup of 0
     got = {r.index_id for r in D.probe_lsh_index(probe, path).collect() if r.matched}
@@ -984,24 +1036,26 @@ def test_bigram_lm_perplexity_prefers_reference_like_docs(spark):
 
 
 def test_lsh_overwrite_reparameterizes_and_meta_self_heals(spark, corpus, tmp_path):
-    """a full overwrite build may change family params (it rewrites
-    everything, meta included); a torn meta file self-heals on build
-    and fails loudly on probe (r4 review, both found in the meta
-    guard's first cut)."""
+    """a rebuild may change the family (it rewrites everything, record
+    included) and the probe follows the record; a torn record fails
+    the probe loudly and the next rebuild replaces it."""
     path = str(tmp_path / "idx_meta2")
-    D.build_lsh_index(corpus, path, mode="overwrite")
-    # re-parameterize via overwrite: allowed, meta refreshed
-    D.build_lsh_index(corpus, path, mode="overwrite", bands=8)
-    with pytest.raises(ValueError, match="silently missed"):
-        D.probe_lsh_index(corpus, path)  # default bands=16 now mismatches
-    assert D.probe_lsh_index(corpus, path, bands=8).count() > 0
-    # torn meta: probe raises loudly, overwrite build heals
+    probe = corpus.filter(F.col("doc_id") == 1)  # exact dup of 0
+
+    def matched():
+        return {r.index_id for r in D.probe_lsh_index(probe, path).collect() if r.matched}
+
+    D.build_lsh_index(corpus, path)
+    D.build_lsh_index(corpus, path, bands=8)
+    # 8-row bands share no hash with 4-row ones: a probe in the
+    # default family would find nothing
+    assert {0, 1} <= matched()
     with open(f"{path}/_lsh_meta.json", "w") as f:
         f.write('{"num_hash')  # truncated write
-    with pytest.raises(ValueError, match="corrupt"):
-        D.probe_lsh_index(corpus, path, bands=8)
-    D.build_lsh_index(corpus, path, mode="overwrite", bands=8)
-    assert D.probe_lsh_index(corpus, path, bands=8).count() > 0
+    with pytest.raises(ValueError, match="corrupt .*_lsh_meta.json"):
+        D.probe_lsh_index(probe, path)
+    D.build_lsh_index(corpus, path, bands=8)
+    assert {0, 1} <= matched()
 
 
 def test_lsh_probe_raises_on_conflicting_layout(spark, corpus, tmp_path):
@@ -1009,7 +1063,7 @@ def test_lsh_probe_raises_on_conflicting_layout(spark, corpus, tmp_path):
     RAISE, not silently report every doc novel (the exact failure the
     old blanket AnalysisException catch hid — r5 review)."""
     path = str(tmp_path / "idx_mixed")
-    D.build_lsh_index(corpus.filter(F.col("doc_id") == 0), path, mode="overwrite")
+    D.build_lsh_index(corpus.filter(F.col("doc_id") == 0), path)
     # corrupt the layout the way the pre-guard epoch append did
     bands = spark.read.parquet(f"{path}/bands")
     bands.write.mode("overwrite").partitionBy("_bb").parquet(
@@ -1025,7 +1079,7 @@ def test_lsh_orphan_sig_rows_do_not_duplicate_matches(spark, corpus, tmp_path):
     must not fan each collision out to multiple matched rows
     (r5 review)."""
     path = str(tmp_path / "idx_orphan")
-    D.build_lsh_index(corpus.filter(F.col("doc_id") == 0), path, mode="overwrite")
+    D.build_lsh_index(corpus.filter(F.col("doc_id") == 0), path)
     sigs = spark.read.parquet(f"{path}/sigs")
     sigs.write.mode("append").partitionBy("_sb").parquet(f"{path}/sigs")
     probed = D.probe_lsh_index(corpus.filter(F.col("doc_id") == 1), path).collect()
@@ -1054,7 +1108,7 @@ def test_delete_from_lsh_index_removes_doc_and_prunes_buckets(spark, corpus, tmp
     import os
 
     path = str(tmp_path / "idx_del")
-    D.build_lsh_index(corpus, path, mode="overwrite")
+    D.build_lsh_index(corpus, path)
     probe = corpus.filter(F.col("doc_id") == 1)
     before = {r.index_id for r in D.probe_lsh_index(probe, path).collect() if r.matched}
     assert 0 in before and 2 in before
@@ -1094,7 +1148,7 @@ def test_delete_from_lsh_index_edge_cases(spark, corpus, tmp_path):
     # n_buckets=4 so every bucket holds rows: deleting an absent id
     # must leave even its would-be bucket byte-identical (the rewrite
     # keys on where deleted rows EXIST, not where they would hash)
-    D.build_lsh_index(corpus, path, mode="overwrite", n_buckets=4)
+    D.build_lsh_index(corpus, path, n_buckets=4)
     snap = _index_file_hashes(path)
     D.delete_from_lsh_index(spark, path, [999999])  # not indexed
     assert _index_file_hashes(path) == snap
@@ -1112,7 +1166,7 @@ def test_delete_crash_window_recovers(spark, corpus, tmp_path):
     import os
 
     path = str(tmp_path / "idx_del3")
-    D.build_lsh_index(corpus, path, mode="overwrite")
+    D.build_lsh_index(corpus, path)
     # stage a real delete, then recreate the crash window by hand:
     D.delete_from_lsh_index(spark, path, [0])
     bb = [
@@ -1206,6 +1260,23 @@ def test_expire_lsh_batches_ttl_sweep(spark, corpus, tmp_path):
     assert D.list_lsh_batches(path) == []
 
 
+def test_rebuild_drops_the_batch_manifest(spark, tmp_path):
+    """a rebuild replaces every ingested batch's rows, so it drops
+    their manifest too: expiring a batch ingested before the rebuild
+    must not delete the rebuilt copy of a doc that batch once kept."""
+    path = str(tmp_path / "rebuilt")
+
+    def pages(*rows):
+        return spark.createDataFrame(rows, "url string, text string")
+
+    D.dedup_ingest_batch(spark, pages(("a://1", _BASE)), path, "a")
+    D.build_lsh_index(pages(("a://1", _BASE), ("a://2", _KITCHEN)), path, id_col="url")
+    assert D.list_lsh_batches(path) == []
+    D.expire_lsh_batches(spark, path, ["a"], strict=False)
+    probed = D.probe_lsh_index(pages(("p://1", _BASE)), path, id_col="url").collect()
+    assert [r.index_id for r in probed if r.matched] == ["a://1"]
+
+
 def test_lsh_paths_and_batch_ids_validated(spark, corpus, tmp_path):
     """URI-schemed index paths raise loudly (os-path presence checks
     would read a remote index as absent and admit every duplicate);
@@ -1276,16 +1347,20 @@ def test_dedup_ingest_batch_staged_commit_rolled_forward_by_probe(
 
 
 def test_build_after_crashed_compaction_recovers_first(spark, corpus, tmp_path):
-    """an append arriving after a crashed compaction swap must restore
+    """an ingest arriving after a crashed compaction swap must restore
     the __old_* full-corpus dir BEFORE writing — otherwise the next
     probe's recovery deletes it, silently unindexing the whole corpus
     (r4 review)."""
     import os
 
     path = str(tmp_path / "idx_crash2")
-    D.build_lsh_index(corpus.filter(F.col("doc_id") == 0), path, mode="overwrite")
+    D.dedup_ingest_batch(
+        spark, corpus.filter(F.col("doc_id") == 0), path, "b1", id_col="doc_id"
+    )
     os.rename(f"{path}/bands", f"{path}/bands__old_cafe")  # crashed swap
-    D.build_lsh_index(corpus.filter(F.col("doc_id") == 4), path)  # append
+    D.dedup_ingest_batch(  # append
+        spark, corpus.filter(F.col("doc_id") == 4), path, "b2", id_col="doc_id"
+    )
     probe = corpus.filter(F.col("doc_id") == 1)  # exact dup of 0
     got = {r.index_id for r in D.probe_lsh_index(probe, path).collect() if r.matched}
     assert 0 in got  # doc 0's bands survived the crash + append
@@ -1299,7 +1374,7 @@ def test_compaction_crash_recovers_on_glob_special_path(spark, corpus, tmp_path)
     import shutil
 
     path = str(tmp_path / "idx[ab]")
-    D.build_lsh_index(corpus, path, mode="overwrite")
+    D.build_lsh_index(corpus, path)
     shutil.copytree(f"{path}/bands", f"{path}/bands__tmp_cafe")
     os.rename(f"{path}/bands", f"{path}/bands__old_deadbeef")  # crashed swap
     D._recover_lsh_compaction(path)
@@ -1344,8 +1419,10 @@ def test_lsh_probe_keeps_max_estimate_for_reingested_id(spark, corpus, tmp_path)
     """an id appended twice with different texts carries two sigs; the
     probe reports ONE row for the pair, with the higher estimate — not
     whichever row a dropDuplicates happened to keep."""
-    texts = dict(corpus.select("doc_id", "text").collect())
-    probe = corpus.filter(F.col("doc_id") == 2)  # near dup of 0 and of 7
+    texts = {0: _BASE, 7: _KITCHEN}
+    probe = spark.createDataFrame(  # near dup of 0 and of 7
+        [(2, _BASE + " " + _KITCHEN)], "doc_id long, text string"
+    )
 
     def doc99(text):
         return spark.createDataFrame([(99, text)], "doc_id long, text string")
@@ -1360,12 +1437,12 @@ def test_lsh_probe_keeps_max_estimate_for_reingested_id(spark, corpus, tmp_path)
     single = {}
     for src in (0, 7):
         path = str(tmp_path / f"idx_only{src}")
-        D.build_lsh_index(doc99(texts[src]), path, mode="overwrite")
+        D.build_lsh_index(doc99(texts[src]), path)
         ((_, single[src]),) = estimates(path)
     assert single[0] != single[7]
     path = str(tmp_path / "idx_twice")
-    D.build_lsh_index(doc99(texts[0]), path, mode="overwrite")
-    D.build_lsh_index(doc99(texts[7]), path)  # same id, new text
+    for src in (0, 7):  # same id, new text: novel, so it appends
+        D.dedup_ingest_batch(spark, doc99(texts[src]), path, f"b{src}", id_col="doc_id")
     assert estimates(path) == [(99, max(single.values()))]
 
 
@@ -1378,7 +1455,7 @@ def test_delete_sweeps_a_table_whose_twin_is_missing(spark, corpus, tmp_path):
 
     for gone, kept in (("bands", "sigs"), ("sigs", "bands")):
         path = str(tmp_path / f"idx_no_{gone}")
-        D.build_lsh_index(corpus, path, mode="overwrite")
+        D.build_lsh_index(corpus, path)
         shutil.rmtree(f"{path}/{gone}")
         D.delete_from_lsh_index(spark, path, [0])
         ids = {r[0] for r in spark.read.parquet(f"{path}/{kept}").select("_id").collect()}

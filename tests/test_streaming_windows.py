@@ -204,14 +204,14 @@ def test_stream_dedup_ingest_incremental(spark, tmp_path):
 
 
 def test_compact_lsh_index_preserves_probe_results(spark, tmp_path):
-    """compaction rewrites the small files of repeated appends into one
+    """compaction rewrites the small files of repeated ingests into one
     file per bucket dir, keeping each table's bucket dirs and rows;
     probes before and after must agree."""
     import os
 
     from open_semantic_etl_spark.operators.dedup import (
-        build_lsh_index,
         compact_lsh_index,
+        dedup_ingest_batch,
         probe_lsh_index,
     )
 
@@ -223,7 +223,7 @@ def test_compact_lsh_index_preserves_probe_results(spark, tmp_path):
     path = str(tmp_path / "idx")
     for i, t in texts.items():
         df = spark.createDataFrame([(i, t)], "doc_id long, text string")
-        build_lsh_index(df, path)
+        dedup_ingest_batch(spark, df, path, f"b{i}", id_col="doc_id")
 
     def files_per_bucket():
         return [

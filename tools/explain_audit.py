@@ -325,9 +325,7 @@ def main() -> int:
         )
 
         idx_path = idxroot + "/lsh"
-        build_lsh_index(
-            docs.filter("doc_id % 2 = 0"), idx_path, mode="overwrite"
-        )
+        build_lsh_index(docs.filter("doc_id % 2 = 0"), idx_path)
         probe = probe_lsh_index(docs.filter("doc_id % 2 = 1"), idx_path)
         section(
             "incremental LSH probe — key-only index join, no text read",
