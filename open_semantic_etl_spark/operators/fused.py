@@ -7,7 +7,10 @@ processes at peak — the measured scaling collapse at local[32]
 (BENCH history: 0.37 efficiency unfused). This operator does all
 per-byte Python work in ONE scalar pandas UDF over ``html`` and ``url``:
 html bytes cross the boundary once, everything downstream is JVM-only
-column algebra.
+column algebra. The UDF's struct is flattened once: one column per
+field, under its Solr name (``schema.SOLR_NAMES`` — content_txt,
+title_txt, description_txt, extract_ok, extract_err), with
+``title_txt`` already cleaned (url-basename fallback).
 
 The fused stage reproduces the exact same observable columns as the
 per-operator chain (tests/test_fused.py asserts equality), including
@@ -19,9 +22,13 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from open_semantic_etl_spark.functions.path import clean_title
+from open_semantic_etl_spark.functions.textmeta import analysis_text
 from open_semantic_etl_spark.operators.entity_linking import Gazetteer
+from open_semantic_etl_spark.operators.html_extract import solr_columns
 from open_semantic_etl_spark.operators.htmlx import extract_html
 from open_semantic_etl_spark.operators.langdetect import detect_language
 from open_semantic_etl_spark.operators.numerize import numerize_en
@@ -59,22 +66,16 @@ _FUSED_STRUCT_TYPE = T.StructType(list(EXTRACT_RESULT_TYPE.fields) + _EXTRA_FIEL
 _FUSED_FIELDS = [f.name for f in _FUSED_STRUCT_TYPE.fields]
 
 
-def with_fused_extraction(
-    df: DataFrame,
-    gazetteer: Gazetteer | None = None,
-    html_col: str = "html",
-    id_col: str = "url",
-) -> DataFrame:
-    """One Python pass: html → extract struct fields + text_analysis +
-    language_s + entities + text_numerized (flattened columns).
+def with_fused_extraction(df: DataFrame, gazetteer: Gazetteer | None = None) -> DataFrame:
+    """One Python pass: html → one column per extraction field under its
+    Solr name (title_txt already cleaned) + language_s + entities +
+    text_numerized, and the JVM-rebuilt text_analysis.
 
     Implemented as a SCALAR pandas UDF over the html and url columns —
     the other passthrough columns (warc_ts, …) never cross the Arrow
     boundary, halving serialization traffic vs a mapInPandas that
     carries the whole row through Python.
     """
-    import pyspark.sql.functions as F
-
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast(gazetteer) if gazetteer is not None else None
 
@@ -106,24 +107,18 @@ def with_fused_extraction(
         return out
 
     udf = F.pandas_udf(run, returnType=_FUSED_STRUCT_TYPE)
-    df = df.withColumn("_fused", udf(F.col(html_col), F.col(id_col)))
-    for name in _FUSED_FIELDS:
-        if name not in df.columns:
-            df = df.withColumn(name, F.col("_fused")[name])
-    df = df.drop("_fused")
+    fused = F.col("_fused")
+    cols = solr_columns(fused, _FUSED_FIELDS)
+    # clean_title rewrites title_txt in place (title → url basename), and
+    # the reference's get_text runs after it (etl.py sort order)
+    cols["title_txt"] = clean_title(fused["title"], None, F.col("url"))
+    df = df.withColumn("_fused", udf(F.col("html"), F.col("url")))
+    df = df.withColumns(cols).drop("_fused")
     # JVM twin of the Python analysis concat over the SAME fields →
-    # equal bytes; get_text contract (etl_plugin_core.py:146-162) with
-    # the reference's clean_title-before-get_text ordering
-    from open_semantic_etl_spark.functions.path import clean_title
-    from open_semantic_etl_spark.functions.textmeta import analysis_text
-
+    # equal bytes; get_text contract (etl_plugin_core.py:146-162)
     df = df.withColumn(
         "text_analysis",
-        analysis_text(
-            clean_title(F.col("title"), None, F.col(id_col)),
-            F.col("description"),
-            F.col("content"),
-        ),
+        analysis_text(F.col("title_txt"), F.col("description_txt"), F.col("content_txt")),
     )
     return df.withColumn(
         "text_numerized", F.coalesce(F.col("text_numerized"), F.col("text_analysis"))

@@ -2,13 +2,14 @@
 
 The DataFrame-level replacement for the reference's per-document Tika
 call (enhance_extract_text_tika_server.py:33-262): one Arrow batch of
-pages in, one struct column out. No HTTP, no services, no per-row
+pages in, one extraction struct out. No HTTP, no services, no per-row
 Python UDF — batches cross the JVM boundary via Arrow
 (``spark.sql.execution.arrow.maxRecordsPerBatch`` caps batch bytes for
 large pages, see session.py).
 
 Scale: pure map-side — no shuffle. Catalyst prunes to the ``html``
-column for the UDF input; downstream projections read struct fields.
+column for the UDF input. The struct is flattened once: one column per
+field, under its Solr name (``schema.SOLR_NAMES``).
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from open_semantic_etl_spark.operators.htmlx import extract_html
-from open_semantic_etl_spark.schema import EXTRACT_RESULT_TYPE
+from open_semantic_etl_spark.schema import EXTRACT_RESULT_TYPE, SOLR_NAMES
 
 _FIELDS = [f.name for f in EXTRACT_RESULT_TYPE.fields]
 
@@ -28,28 +29,22 @@ def _extract_batch(series: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=_FIELDS)
 
 
-def extract_expr(html_col: str = "html") -> Column:
-    """Column expression: html bytes → extraction-result struct."""
+def extract_expr() -> Column:
+    """Column expression: ``html`` bytes → extraction-result struct."""
     udf = F.pandas_udf(_extract_batch, returnType=EXTRACT_RESULT_TYPE)
-    return udf(F.col(html_col))
+    return udf(F.col("html"))
 
 
-def with_extraction(df: DataFrame, html_col: str = "html", out: str = "extract") -> DataFrame:
-    """Append the extraction struct plus the hot flattened columns.
+def solr_columns(struct: Column, fields: list[str]) -> dict[str, Column]:
+    """One column per struct field, named by ``SOLR_NAMES`` (else the
+    field's own name): content_txt, title_txt, description_txt,
+    extract_ok, extract_err, content_type, needs_ocr, …"""
+    return {SOLR_NAMES.get(f, f): struct[f] for f in fields}
 
-    Flattened fields mirror the reference's Solr field names
-    (enhance_extract_text_tika_server.py:25-31):
-    content_txt, title_txt, description_txt, content_type_ss (scalar
-    here — typed model), plus extraction health columns.
-    """
-    df = df.withColumn(out, extract_expr(html_col))
-    e = F.col(out)
-    return (
-        df.withColumn("content_txt", e["content"])
-        .withColumn("title_txt", e["title"])
-        .withColumn("description_txt", e["description"])
-        .withColumn("content_type", e["content_type"])
-        .withColumn("needs_ocr", e["needs_ocr"])
-        .withColumn("extract_ok", e["ok"])
-        .withColumn("extract_err", e["err"])
-    )
+
+def with_extraction(df: DataFrame) -> DataFrame:
+    """Append one column per extraction field under its Solr name
+    (enhance_extract_text_tika_server.py:25-31); content_type is scalar
+    here (typed model)."""
+    df = df.withColumn("_extract", extract_expr())
+    return df.withColumns(solr_columns(F.col("_extract"), _FIELDS)).drop("_extract")

@@ -278,6 +278,10 @@ def merge_by_url(
     The first write creates the table with ``n_buckets`` (default
     ``N_BUCKETS``) and records its layout; a later merge uses the
     recorded count (see ``table_buckets``) and records a legacy table's.
+    A recorded column the batch lacks survives the merge, NULL on the
+    batch's rows: an enriched table written before each extraction
+    field got one column keeps its six copy columns (content, title,
+    description, ok, err, text_analysis), NULL on re-enriched rows.
     """
     # recover BEFORE the existence check: a table parked as __old_* by a
     # crashed whole-table swap would otherwise read as absent and be
@@ -330,7 +334,7 @@ def pending_rows(
     return pages.join(todo_keys, "url", "left_semi")
 
 
-def _with_partition_metrics(df: DataFrame, run_id: str, stage: str) -> DataFrame:
+def _with_partition_metrics(df: DataFrame, run_id: str) -> DataFrame:
     """append lineage columns; metrics aggregate per partition at write."""
     return df.withColumn("_partition_id", F.spark_partition_id()).withColumn(
         "_run_id", F.lit(run_id)
@@ -389,32 +393,32 @@ def run_incremental(
 
     todo = pending_rows(spark, pages, tables, stages)
     enriched = enrich_pages(todo, gazetteer=gazetteer, repartition=repartition)
-    enriched = _with_partition_metrics(enriched, run_id, "enrich")
+    enriched = _with_partition_metrics(enriched, run_id)
 
     # persist the in-flight batch ONCE: the merge, metrics rollup, and
     # checkpoint rows all read it, and none of them may re-scan the
     # (table-sized) enriched output — run cost must track the batch
     out = enriched.persist()
-
-    # 1. output commit (MERGE by url — idempotent under replay,
-    #    bucket-pruned so write volume ∝ batch)
-    merge_by_url(spark, out, tables.enriched, n_buckets=n_buckets)
-
-    # 2. lineage/metrics commit — per-partition rollup from the batch
-    elapsed_ms = int((time.time() - t0) * 1000)
-    metrics = batch_metrics(out, run_id, elapsed_ms)
-    metrics.write.mode("append").parquet(tables.metrics)
-
-    # 3. checkpoint commit (AFTER output — crash replays, never skips);
-    #    url-keyed upsert → same bucket-pruned merge as the output
-    ckpt = (
-        out.select("url", "content_hash")
-        .withColumn("stages_done", F.array(*[F.lit(s) for s in stages]))
-        .withColumn("pipeline_version", F.lit(PIPELINE_VERSION))
-    )
-    merge_by_url(spark, ckpt, tables.checkpoint, n_buckets=n_buckets)
-
     n_done = out.count()
+    if n_done:  # an empty batch commits nothing and appends no metrics
+        # 1. output commit (MERGE by url — idempotent under replay,
+        #    bucket-pruned so write volume ∝ batch)
+        merge_by_url(spark, out, tables.enriched, n_buckets=n_buckets)
+
+        # 2. lineage/metrics commit — per-partition rollup from the batch
+        elapsed_ms = int((time.time() - t0) * 1000)
+        metrics = batch_metrics(out, run_id, elapsed_ms)
+        metrics.write.mode("append").parquet(tables.metrics)
+
+        # 3. checkpoint commit (AFTER output — crash replays, never
+        #    skips); url-keyed upsert → same bucket-pruned merge
+        ckpt = (
+            out.select("url", "content_hash")
+            .withColumn("stages_done", F.array(*[F.lit(s) for s in stages]))
+            .withColumn("pipeline_version", F.lit(PIPELINE_VERSION))
+        )
+        merge_by_url(spark, ckpt, tables.checkpoint, n_buckets=n_buckets)
+
     out.unpersist()
     return {
         "run_id": run_id,

@@ -9,10 +9,11 @@ column; content-type gating (etl.py:71-145) becomes conditional column
 expressions rather than row filtering.
 
 Stage order:
-  1. extraction        (html → content/title/… — the Tika replacement)
-  2. path/title/ctype  (enhance_path, clean_title, contenttype_group,
-                        file mtime/size)
-  3. analysis text     (get_text concat)
+  1. extraction        (html → one column per field under its Solr name:
+                        content_txt, title_txt, … — the Tika replacement;
+                        clean_title rewrites title_txt in place)
+  2. path/ctype        (enhance_path, contenttype_group, file mtime/size)
+  3. analysis text     (get_text concat over the cleaned title)
   4. language id       (enhance_detect_language)
   5. gazetteer NER     (enhance_entity_linking)
   6. regex extractors  (emails, phones, hashtags, IBAN, law, money)
@@ -46,6 +47,7 @@ from open_semantic_etl_spark.functions import extract as X
 from open_semantic_etl_spark.functions import path as P
 from open_semantic_etl_spark.functions import textmeta as M
 from open_semantic_etl_spark.operators.entity_linking import Gazetteer
+from open_semantic_etl_spark.operators.fused import with_fused_extraction
 from open_semantic_etl_spark.operators.law_money import with_law, with_money
 
 PIPELINE_VERSION = "1"
@@ -87,24 +89,8 @@ def enrich_pages(
         # explicit hash partitioning on url: even spread under sorted/
         # hot-host inputs (north rule; SURVEY.md §4 item 1)
         df = df.repartition(repartition, F.xxhash64("url"))
-    return _enrich_after_python(
-        _fused_python_stage(df, gazetteer), currency_labels, langs
-    )
-
-
-def _fused_python_stage(df: DataFrame, gazetteer) -> DataFrame:
-    """single-pass Python stage + hot-column aliases."""
-    from open_semantic_etl_spark.operators.fused import with_fused_extraction
-
-    df = with_fused_extraction(df, gazetteer)
-    return (
-        df.withColumn("content_txt", F.col("content"))
-        .withColumn("title_txt", F.col("title"))
-        .withColumn("description_txt", F.col("description"))
-        .withColumn("extract_ok", F.col("ok"))
-        .withColumn("extract_err", F.col("err"))
-        .withColumn("content_hash", content_hash())
-    )
+    df = with_fused_extraction(df, gazetteer).withColumn("content_hash", content_hash())
+    return _enrich_after_python(df, currency_labels, langs)
 
 
 def _enrich_after_python(
@@ -114,13 +100,11 @@ def _enrich_after_python(
 ) -> DataFrame:
     """all remaining stages — pure JVM column algebra, no Python.
 
-    Consumes the Python stage's ``title_txt``, ``content_type``,
-    ``text_analysis`` and ``text_numerized`` columns plus the input's
-    ``url``, ``warc_ts`` and ``html``."""
+    Consumes the Python stage's ``content_type``, ``text_analysis`` and
+    ``text_numerized`` columns plus the input's ``url``, ``warc_ts`` and
+    ``html``; drops the two text copies it consumed (``text_all`` is
+    the persisted one, the reference's ``_text_``)."""
     df = P.with_path_facets(df, id_col="url")
-    df = df.withColumn(
-        "title_txt", P.clean_title(F.col("title_txt"), None, F.col("url"))
-    )
     df = df.withColumn(
         "content_type_group_ss",
         P.content_type_group(F.col("content_type"), F.col("url")),
@@ -142,5 +126,4 @@ def _enrich_after_python(
     df = with_law(df)
     df = with_money(df, currency_labels, numerized_col="text_numerized")
     df = df.drop("text_numerized")
-    df = M.with_multilingual(df, langs=langs)
-    return df
+    return M.with_multilingual(df, langs=langs).drop("text_analysis")

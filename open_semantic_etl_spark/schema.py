@@ -33,9 +33,9 @@ PAGES_SCHEMA = T.StructType(
 # ---------------------------------------------------------------------------
 EXTRACT_RESULT_TYPE = T.StructType(
     [
-        T.StructField("content", T.StringType(), True),  # content_txt
-        T.StructField("title", T.StringType(), True),  # title_txt
-        T.StructField("description", T.StringType(), True),  # description_txt
+        T.StructField("content", T.StringType(), True),
+        T.StructField("title", T.StringType(), True),
+        T.StructField("description", T.StringType(), True),
         T.StructField("content_type", T.StringType(), True),  # content_type_ss
         T.StructField("encoding", T.StringType(), True),
         T.StructField("links", T.ArrayType(T.StringType()), True),
@@ -49,6 +49,17 @@ EXTRACT_RESULT_TYPE = T.StructType(
         T.StructField("err", T.StringType(), True),  # etl_error_txt analogue
     ]
 )
+
+#: the enriched row's column for each renamed extraction field — its
+#: Solr name (enhance_extract_text_tika_server.py:25-31). Every other
+#: field keeps its own name; this map is the only renamer.
+SOLR_NAMES = {
+    "content": "content_txt",
+    "title": "title_txt",
+    "description": "description_txt",
+    "ok": "extract_ok",
+    "err": "extract_err",
+}
 
 # ---------------------------------------------------------------------------
 # Entities: typed replacement for enhance_entity_linking's five packed

@@ -32,9 +32,10 @@ _GAZ = Gazetteer(
 )
 
 _COLS = [
-    "url", "content_txt", "title_txt", "language_s", "email_ss", "money_ss",
-    "law_clause_ss", "law_code_ss", "law_code_clause_ss", "text_all",
-    "file_size_i", "content_hash", "path0_s", "path_basename_s", "entities",
+    "url", "content_txt", "title_txt", "description_txt", "extract_ok",
+    "extract_err", "language_s", "email_ss", "money_ss", "law_clause_ss",
+    "law_code_ss", "law_code_clause_ss", "text_all", "file_size_i",
+    "content_hash", "path0_s", "path_basename_s", "entities",
 ]
 
 
@@ -93,13 +94,34 @@ def test_fused_equals_modular_titleless(spark):
     pages = spark.createDataFrame(
         rows, "url string, warc_ts timestamp, html binary, text string, lang string"
     )
-    cols = ["url", "title_txt", "text_analysis", "language_s", "entities", "text_all"]
+    cols = ["url", "title_txt", "language_s", "entities", "text_all"]
     fused = enrich_pages(pages, gazetteer=_GAZ).select(cols).toPandas()
     modular = _enrich_modular(pages, _GAZ).select(cols).toPandas()
     fused = fused.sort_values("url").reset_index(drop=True)
     modular = modular.sort_values("url").reset_index(drop=True)
     # basename fallback landed in the analysis text in both paths
     assert fused["title_txt"][0] == "page-0.html"
-    assert fused["text_analysis"][0].startswith("page-0.html\n")
+    assert fused["text_all"][0].startswith("page-0.html\n")
     for c in cols:
         assert [str(v) for v in fused[c]] == [str(v) for v in modular[c]], c
+
+
+def test_enriched_row_names_each_field_once(spark):
+    """One column per field: the extraction struct is flattened once
+    under its Solr names, so the struct names (content, title,
+    description, ok, err) and the internal analysis text (text_analysis;
+    text_all is its persisted copy) are not enriched columns."""
+    cols = enrich_pages(pages_df(spark, 4, partitions=1), gazetteer=_GAZ).columns
+    assert sorted(cols) == sorted([
+        "url", "warc_ts", "html", "text", "lang",
+        "content_txt", "title_txt", "description_txt", "content_type", "encoding",
+        "links", "headings", "meta_ts", "n_blocks", "n_kept_blocks", "needs_ocr",
+        "n_images", "extract_ok", "extract_err", "language_s", "entities",
+        "content_hash", "path_ss", "path0_s", "path1_s", "path2_s", "path3_s",
+        "path4_s", "path5_s", "path_basename_s", "filename_extension_s",
+        "content_type_group_ss", "file_modified_dt", "file_size_i", "email_ss",
+        "email_domain_ss", "message_from_ss", "message_to_ss", "phone_ss",
+        "phone_normalized_ss", "hashtag_ss", "iban_ss", "law_clause_ss",
+        "law_code_ss", "law_code_clause_ss", "money_ss", "text_all", "text_txt_en",
+        "text_txt_de", "text_txt_fr", "text_txt_es", "text_txt_hunspell_hu",
+    ])

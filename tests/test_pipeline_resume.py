@@ -125,6 +125,35 @@ def test_kill_and_rerun_converges(spark, root, monkeypatch):
     assert run_incremental(spark, pages_mod, root)["processed"] == 0
 
 
+def test_noop_run_commits_nothing(spark, root):
+    """A rerun with nothing pending stops after counting its empty batch:
+    no file under the root is written (no table commit, no empty
+    metrics file) and it runs at most 6 Spark jobs (the pending-row
+    probe plus that count; the three commits ran 15)."""
+    import os
+
+    def tree_state() -> dict[str, tuple[int, int]]:
+        state = {}
+        for dirpath, _dirs, files in os.walk(root):
+            for f in files:
+                st = os.stat(os.path.join(dirpath, f))
+                state[os.path.join(dirpath, f)] = (st.st_size, st.st_mtime_ns)
+        return state
+
+    pages = _pages(spark, 60)
+    run_incremental(spark, pages, root)
+    before = tree_state()
+    sc = spark.sparkContext
+    sc.setJobGroup("noop_rerun", "run_incremental with nothing pending")
+    try:
+        assert run_incremental(spark, pages, root)["processed"] == 0
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("noop_rerun"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert tree_state() == before
+    assert n_jobs <= 6, n_jobs
+
+
 def _bucket_file_state(path: str) -> dict[str, tuple[int, float, str]]:
     """bucket-dir file inventory: name -> (size, mtime, md5)."""
     import hashlib

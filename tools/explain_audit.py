@@ -235,7 +235,7 @@ def main() -> int:
         t = Tables(root)
         run_incremental(spark, pages, root)
         out = _with_partition_metrics(
-            enrich_pages(pages, gazetteer=bench._gazetteer()), "auditrun", "enrich"
+            enrich_pages(pages, gazetteer=bench._gazetteer()), "auditrun"
         ).persist()
         out.count()
         metrics = batch_metrics(out, "auditrun", 0)
