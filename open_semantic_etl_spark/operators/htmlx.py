@@ -349,8 +349,12 @@ def sniff_content_type(data: bytes) -> str | None:
         # with them — require the whole following header to be ASCII
         # hex (newc) / octal (odc) before claiming the label
         return "application/x-cpio"
-    if len(data) > 16 * 2048 + 8 and data[32769:32774] == b"CD001" and data[32768] in (0, 1, 2, 3, 255):
-        return "application/x-iso9660-image"  # ECMA-119 descriptor @ sector 16
+    if len(data) > 16 * 2048:
+        # ECMA-119 descriptor @ sector 16 (operators/iso9660.py sniff_iso)
+        from open_semantic_etl_spark.operators.iso9660 import sniff_iso
+
+        if sniff_iso(data):
+            return "application/x-iso9660-image"
     if data.startswith(b"From ") and _MBOX_FROM_RE.match(data):
         return "application/mbox"  # From_ envelope line w/ asctime year
     if data[:3] == b"ORC" and len(data) >= 8 and data[-4:-1] == b"ORC":

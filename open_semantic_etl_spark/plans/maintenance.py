@@ -6,7 +6,8 @@ Small utilities completing the reference's operator surface:
   by id / by query) → a ``rewrite_buckets`` commit of the enriched
   table (Iceberg: ``DELETE FROM enriched WHERE url = ?``).
 - ``move_url``: move_indexed_file.py:9-53 — rewrite a document's id and
-  its derived path facets after a filesystem move.
+  its derived path facets after a filesystem move, in the enriched
+  table and the checkpoint.
 - ``join_annotations``: enhance_annotations.py:21-39 — pull external
   per-url annotations via a LEFT JOIN against an annotations table
   (replaces the per-doc HTTP GET; add-distinct merge = array_union).
@@ -82,23 +83,31 @@ def delete_where(spark: SparkSession, root: str, predicate: Column) -> int:
 
 def move_url(spark: SparkSession, root: str, src: str, dst: str) -> None:
     """rewrite a moved document's id + path facets (move_indexed_file)
-    — touches exactly the src and dst buckets."""
+    — one rewrite of exactly the src and dst buckets per table.  In the
+    enriched table and the checkpoint alike, src's row becomes dst's
+    and replaces any dst row (a Solr update with an existing id
+    overwrites the doc), so a src that comes back is indexed again."""
     tables = Tables(root)
     buckets = _url_buckets(spark, tables.enriched, [src, dst])
     n_buckets = table_buckets(tables.enriched)
 
     def transform(df):
-        moved = df.withColumn(
-            "url", F.when(F.col("url") == src, F.lit(dst)).otherwise(F.col("url"))
-        )
         path_cols = [
-            c for c in moved.columns if c.startswith("path") or c == "filename_extension_s"
+            c for c in df.columns if c.startswith("path") or c == "filename_extension_s"
         ]
-        refreshed = with_path_facets(moved.drop(*path_cols), id_col="url")
-        rebucketed = refreshed.withColumn("_bucket", bucket_expr(n_buckets=n_buckets))
-        return rebucketed.select(*df.columns)
+        moved = with_path_facets(
+            df.filter(F.col("url") == src).drop(*path_cols).withColumn("url", F.lit(dst)),
+            id_col="url",
+        ).withColumn("_bucket", bucket_expr(n_buckets=n_buckets))
+        kept = df.filter(~F.col("url").eqNullSafe(src)).join(
+            moved.select("url"), "url", "left_anti"
+        )
+        return kept.unionByName(moved.select(*df.columns)).select(*df.columns)
 
     rewrite_buckets(spark, tables.enriched, buckets, transform)
+    recover_table(tables.checkpoint)
+    if has_data(tables.checkpoint):
+        rewrite_buckets(spark, tables.checkpoint, buckets, transform)
 
 
 def join_annotations(

@@ -31,13 +31,12 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from open_semantic_etl_spark.sources.explode import (
     SQLITE_CHILD_TYPE,
     SQLITE_MAX_ROWS_TOTAL,
+    explode_rows,
 )
 
 __all__ = ["explode_columnar", "columnar_kind"]
@@ -156,30 +155,7 @@ def _columnar_rows(data: bytes, base_id: str) -> list[dict]:
     return out
 
 
-def explode_columnar(
-    df: DataFrame, id_col: str = "url", bytes_col: str = "html"
-) -> DataFrame:
+def explode_columnar(df: DataFrame) -> DataFrame:
     """parquet/ORC/feather/avro rows → one child row per data row
     (sqlite-tier contract); corrupt payloads yield zero children."""
-
-    def run(series: pd.Series, ids: pd.Series) -> pd.Series:
-        res = []
-        for data, base in zip(series, ids):
-            try:
-                res.append(_columnar_rows(bytes(data), base))
-            except Exception:  # noqa: BLE001 — bad file → no children
-                res.append([])
-        return pd.Series(res)
-
-    udf = F.pandas_udf(run, SQLITE_CHILD_TYPE)
-    ex = df.withColumn("_children", udf(F.col(bytes_col), F.col(id_col)))
-    ex = ex.select(F.col(id_col).alias("parent_id"), F.explode("_children").alias("c"))
-    return ex.select(
-        F.col("c.child_id").alias("url"),
-        F.col("c.page_i").alias("page_i"),
-        F.col("c.container_s").alias("container_s"),
-        F.col("c.table_s").alias("table_s"),
-        F.col("c.fields").alias("fields"),
-        F.col("c.numbers").alias("numbers"),
-        "parent_id",
-    )
+    return explode_rows(df, _columnar_rows, SQLITE_CHILD_TYPE)

@@ -6,7 +6,9 @@ enhance_warc.py:64-106, enhance_csv.py:205-253, enhance_pdf_page.py:
 62-147, enhance_sentence_segmentation.py:89-129). Here each becomes a
 pandas-UDF stage producing ``array<struct<…>>`` followed by
 ``posexplode`` — the child rows then flow through the same enrichment
-pipeline (plans/pipeline.py) as any page.
+pipeline (plans/pipeline.py) as any page.  The per-row container
+explodes (zip, warc, pst, mbox, csv, dbf, sqlite, and
+sources/columnar.py) all run through one helper, ``explode_rows``.
 
 Child-id schemes preserved exactly:
   zip member   → ``<id>/<member path>``, ``container_s`` = outermost zip
@@ -18,11 +20,35 @@ Child-id schemes preserved exactly:
   mbox message → ``<id>#msg=<n>`` (1-based), raw RFC-822 bytes
   sentence     → ``<id>#sentence<n>`` (1-based)
 
-All parsers are stdlib (zipfile / tarfile / csv / minimal WARC reader)
-running on binary columns inside Arrow batches — no temp files, no
-subprocesses.  Tar archives (plain or gz/bz2/xz-compressed, Tika's
-TarParser tier) ride the same child-id scheme and bomb guards as zip;
-zip-in-tar and tar-in-zip recurse with the shared depth/byte budget.
+One container walk (``_walk``) serves ``explode_zip`` rows and every
+member inside them, at any depth.  Like Tika (one detector, a registry
+of parsers), the mimetype sniff ``htmlx.sniff_content_type`` names the
+payload and ``_WALKERS`` maps the label to its walker:
+
+  application/zip                    zipfile (+ zipcodecs legacy methods)
+  application/x-7z-compressed        operators/sevenzip.py
+  application/x-archive              ar (.deb / .a)
+  application/x-cpio                 cpio newc / odc
+  application/x-iso9660-image        operators/iso9660.py
+  application/vnd.rar                operators/rar.py
+  application/vnd.ms-cab-compressed  operators/cab.py
+  application/x-arj                  operators/arj.py
+
+Three input rules differ by depth: a nested ``PK`` payload is walked as
+a zip only when its name ends in ``.zip`` (``.docx``/``.epub`` members
+stay documents); a nested tar is recognised by ``_sniff_tar`` (ustar,
+or tar name + compression magic) before the label lookup; a top-level
+row whose label has no walker tries ``tarfile r:*`` (plain or
+gz/bz2/xz/Z/zst/lz4/lzma/sz) and then a zip with leading junk.  At
+both depths a payload whose label has no walker first tries the
+archive behind a self-extracting EXE stub (``_sfx_archive``).
+
+Degrade rule: a walker that raises means "not this format".  A member
+no walker accepts is one opaque member row (its bytes are never lost,
+and its siblings stay); a top-level row no walker accepts yields no
+children.  Every walk shares one byte budget per top-level row and the
+nesting-depth cap.  All parsers are stdlib or in-repo, running on
+binary columns inside Arrow batches — no temp files, no subprocesses.
 """
 
 from __future__ import annotations
@@ -31,12 +57,56 @@ import csv as _csv
 import io
 import re
 import zipfile
+from functools import partial
+from typing import Callable
+
 import pandas as pd
 from pyspark.sql import DataFrame
-
-from open_semantic_etl_spark.operators.sevenzip import SEVENZIP_MAGIC
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from open_semantic_etl_spark.operators.arj import arj_members
+from open_semantic_etl_spark.operators.cab import cab_members
+from open_semantic_etl_spark.operators.htmlx import sniff_content_type
+from open_semantic_etl_spark.operators.iso9660 import iso_members
+from open_semantic_etl_spark.operators.rar import rar_members
+from open_semantic_etl_spark.operators.sevenzip import sevenzip_members
+
+
+#: child struct field → output column; every other field keeps its name
+_CHILD_NAMES = {"child_id": "url", "bytes": "html"}
+
+
+def explode_rows(
+    df: DataFrame,
+    parse: Callable[[bytes, str], list[dict]],
+    child_type: T.ArrayType,
+) -> DataFrame:
+    """the one per-row explode: ``parse(html bytes, url)`` → child
+    dicts of ``child_type``; one output row per child, a column per
+    struct field (``child_id`` → ``url``, ``bytes`` → ``html``) plus
+    ``parent_id``.  A row whose parse raises yields no children."""
+
+    def run(series: pd.Series, ids: pd.Series) -> pd.Series:
+        res = []
+        for data, base in zip(series, ids):
+            try:
+                res.append(parse(bytes(data), base))
+            except Exception:  # noqa: BLE001 — bad payload → no children
+                res.append([])
+        return pd.Series(res)
+
+    udf = F.pandas_udf(run, child_type)
+    ex = df.withColumn("_children", udf(F.col("html"), F.col("url")))
+    ex = ex.select(F.col("url").alias("parent_id"), F.explode("_children").alias("c"))
+    return ex.select(
+        *[
+            F.col(f"c.{f.name}").alias(_CHILD_NAMES.get(f.name, f.name))
+            for f in child_type.elementType.fields
+        ],
+        "parent_id",
+    )
+
 
 # ---------------------------------------------------------------------------
 # ZIP — enhance_zip semantics (recursive, outermost container wins)
@@ -62,20 +132,23 @@ ZIP_MAX_ARCHIVE_BYTES = 1 << 30  # 1 GB decompressed per container
 _ZIP_MAX_DEPTH = 8               # zip-in-zip nesting
 
 
-def _walk_pairs(
-    members,  # iterable of (name, payload) — lists and generators both
+def _pair_rows(
+    reader: Callable[..., list[tuple[str, bytes]]],
+    data: bytes,
     base_id: str,
     container: str,
-    _depth: int,
-    _budget: list[int],
+    _depth: int = 0,
+    _budget: list[int] | None = None,
 ) -> list[dict]:
-    """shared (name, payload) → member-row loop for the native archive
-    readers (7z/iso/rar/cab/arj): zip-tier id scheme, byte budget with
-    a 64 B minimum charge (a million empty members cannot spin the
-    worker), oversized-member skip, nesting dispatch.  ``_budget`` is
-    required: every caller initializes it first because the reader
-    itself needs ``_budget[0]`` as its decode cap (r4 review: the old
-    None-default here was dead code)."""
+    """a native archive reader (operators/: ``reader(data, max_member,
+    max_total)`` → [(name, payload)], caps enforced from DECLARED sizes
+    before it decompresses; raises on what it cannot read) as a walker:
+    zip-tier id scheme, byte budget with a 64 B minimum charge (a
+    million empty members cannot spin the worker), oversized-member
+    skip, nesting dispatch."""
+    if _budget is None:
+        _budget = [ZIP_MAX_ARCHIVE_BYTES]
+    members = reader(data, max_member=ZIP_MAX_MEMBER_BYTES, max_total=max(_budget[0], 1))
     out: list[dict] = []
     for name, payload in members:
         if len(payload) > min(ZIP_MAX_MEMBER_BYTES, _budget[0]):
@@ -199,127 +272,6 @@ def _sniff_tar(payload: bytes, name: str) -> bool:
             or payload[:10] == b"\xff\x06\x00\x00sNaPpY"
             or payload[:3] == b"\x5d\x00\x00"
         )
-    )
-
-
-def _tar_or_member(
-    payload: bytes, child_id: str, container: str, depth: int, budget: list[int]
-) -> list[dict]:
-    """recurse into a sniffed nested tar; corrupt ones degrade to a
-    plain member row (the sniff is a heuristic — never lose bytes)."""
-    try:
-        return _tar_members(payload, child_id, container, depth, budget)
-    except Exception:  # noqa: BLE001
-        return [{"child_id": child_id, "container_s": container, "bytes": payload}]
-
-
-def _7z_or_member(
-    payload: bytes, child_id: str, container: str, depth: int, budget: list[int]
-) -> list[dict]:
-    """nested .7z: recurse, corrupt/unsupported-coder ones keep their
-    bytes as an opaque member row (same degrade rule as nested tar)."""
-    try:
-        return _7z_members(payload, child_id, container, depth, budget)
-    except Exception:  # noqa: BLE001
-        return [{"child_id": child_id, "container_s": container, "bytes": payload}]
-
-
-def _7z_members(
-    data: bytes,
-    base_id: str,
-    container: str,
-    _depth: int = 0,
-    _budget: list[int] | None = None,
-) -> list[dict]:
-    """7z archive → member rows with the zip tier's id scheme, byte
-    budget, and nesting dispatch (Tika's SevenZParser tier; child
-    semantics enhance_zip.py:31-116).  The parser enforces the member/
-    total caps from the DECLARED unpack sizes before decompressing, so
-    a 7z bomb dies before it allocates — on any parse failure the
-    caller's degrade policy applies (operators/sevenzip.py contract).
-    Each member is charged at least 64 B so an archive of millions of
-    empty files cannot spin the worker."""
-    from open_semantic_etl_spark.operators.sevenzip import sevenzip_members
-
-    if _budget is None:
-        _budget = [ZIP_MAX_ARCHIVE_BYTES]
-    return _walk_pairs(
-        sevenzip_members(
-            data, max_member=ZIP_MAX_MEMBER_BYTES, max_total=max(_budget[0], 1)
-        ),
-        base_id, container, _depth, _budget,
-    )
-
-
-def _rar_members(
-    data: bytes,
-    base_id: str,
-    container: str,
-    _depth: int = 0,
-    _budget: list[int] | None = None,
-) -> list[dict]:
-    """RAR 4/5 archive → member rows with the zip tier's id scheme,
-    byte budget, and nesting dispatch (Tika's RarParser tier; child
-    semantics enhance_zip.py:31-116).  STORED members only —
-    compressed/encrypted archives raise and degrade to an opaque row
-    (operators/rar.py contract: fail loudly, never guess RARLAB's
-    proprietary codec)."""
-    from open_semantic_etl_spark.operators.rar import rar_members
-
-    if _budget is None:
-        _budget = [ZIP_MAX_ARCHIVE_BYTES]
-    return _walk_pairs(
-        rar_members(
-            data, max_member=ZIP_MAX_MEMBER_BYTES, max_total=max(_budget[0], 1)
-        ),
-        base_id, container, _depth, _budget,
-    )
-
-
-def _cab_members(
-    data: bytes,
-    base_id: str,
-    container: str,
-    _depth: int = 0,
-    _budget: list[int] | None = None,
-) -> list[dict]:
-    """Microsoft cabinet → member rows with the zip tier's id scheme,
-    byte budget, and nesting dispatch (Tika's cab tier; child
-    semantics enhance_zip.py:31-116).  none/MSZIP folders decode;
-    QUANTUM/LZX and multi-cabinet sets raise and degrade to an opaque
-    row (operators/cab.py contract)."""
-    from open_semantic_etl_spark.operators.cab import cab_members
-
-    if _budget is None:
-        _budget = [ZIP_MAX_ARCHIVE_BYTES]
-    return _walk_pairs(
-        cab_members(
-            data, max_member=ZIP_MAX_MEMBER_BYTES, max_total=max(_budget[0], 1)
-        ),
-        base_id, container, _depth, _budget,
-    )
-
-
-def _arj_members(
-    data: bytes,
-    base_id: str,
-    container: str,
-    _depth: int = 0,
-    _budget: list[int] | None = None,
-) -> list[dict]:
-    """ARJ archive → member rows with the zip tier's id scheme, byte
-    budget, and nesting dispatch (Commons Compress
-    ArjArchiveInputStream tier — which, like operators/arj.py, reads
-    STORED entries only and throws on compressed ones)."""
-    from open_semantic_etl_spark.operators.arj import arj_members
-
-    if _budget is None:
-        _budget = [ZIP_MAX_ARCHIVE_BYTES]
-    return _walk_pairs(
-        arj_members(
-            data, max_member=ZIP_MAX_MEMBER_BYTES, max_total=max(_budget[0], 1)
-        ),
-        base_id, container, _depth, _budget,
     )
 
 
@@ -570,28 +522,64 @@ def _cpio_members(
     return out
 
 
-def _iso_members(
-    data: bytes,
-    base_id: str,
-    container: str,
-    _depth: int = 0,
-    _budget: list[int] | None = None,
-) -> list[dict]:
-    """ISO 9660 disc image → member rows with the zip tier's id
-    scheme, byte budget, and nesting dispatch (operators/iso9660.py:
-    budgeted ECMA-119 walk, Joliet names preferred).  Extent sizes are
-    DECLARED in directory records, so the member/total caps apply
-    before any slice."""
-    from open_semantic_etl_spark.operators.iso9660 import iso_members
+#: ISO 9660 images (operators/iso9660.py: budgeted ECMA-119 walk,
+#: Joliet names preferred) — named, since tests walk one directly
+_iso_members = partial(_pair_rows, iso_members)
 
-    if _budget is None:
-        _budget = [ZIP_MAX_ARCHIVE_BYTES]
-    return _walk_pairs(
-        iso_members(
-            data, max_member=ZIP_MAX_MEMBER_BYTES, max_total=max(_budget[0], 1)
-        ),
-        base_id, container, _depth, _budget,
-    )
+#: ``sniff_content_type`` label → walker ``(data, base_id, container,
+#: depth, budget)`` → member rows; a walker raises on a payload it
+#: cannot read.  7z/rar/cab/arj readers decode STORED (rar/arj) or
+#: their supported coders only and raise on the rest — fail loudly,
+#: never guess a proprietary codec.
+_WALKERS = {
+    "application/zip": _zip_members,
+    "application/x-7z-compressed": partial(_pair_rows, sevenzip_members),
+    "application/x-archive": _ar_members,
+    "application/x-cpio": _cpio_members,
+    "application/x-iso9660-image": _iso_members,
+    "application/vnd.rar": partial(_pair_rows, rar_members),
+    "application/vnd.ms-cab-compressed": partial(_pair_rows, cab_members),
+    "application/x-arj": partial(_pair_rows, arj_members),
+}
+
+
+def _walk(
+    payload: bytes,
+    child_id: str,
+    container: str,
+    depth: int,
+    budget: list[int],
+    name: str | None = None,
+) -> list[dict] | None:
+    """The one container walk: the rows of ``payload`` as an archive
+    (``child_id`` prefixes its members, ``container`` stays the
+    outermost id), or None when no walker accepts it.  ``name`` is the
+    member name of a nested payload, None for a top-level row.
+
+    Walkers are tried in order and the first that does not raise
+    wins: a nested tar sniffed by name/magic; the walker of the sniff
+    label (a nested ``PK`` payload only when named ``*.zip``); without
+    one, the archive behind a self-extracting EXE, and for a top-level
+    row then tar ``r:*`` and a zip with leading junk.  The EXE goes
+    before the junk-prefixed zip: a RAR/7z installer often stores a
+    zip whose tail zipfile would find first."""
+    label = sniff_content_type(payload)
+    walker = _WALKERS.get(label)
+    tries = [_tar_members] if name is not None and _sniff_tar(payload, name) else []
+    if walker is not None and (
+        name is None or label != "application/zip" or name.lower().endswith(".zip")
+    ):
+        tries.append(walker)
+    else:
+        tries.append(_sfx_members)
+        if name is None:
+            tries += [_tar_members, _zip_members]
+    for walk in tries:
+        try:
+            return walk(payload, child_id, container, depth, budget)
+        except Exception:  # noqa: BLE001 — not this format: try the next
+            pass
+    return None
 
 
 def _dispatch_member(
@@ -602,63 +590,15 @@ def _dispatch_member(
     _depth: int,
     _budget: list[int],
 ) -> list[dict]:
-    """shared nested-container dispatch: recurse into zip/tar/7z/ar/
-    cpio/iso members (outermost container id kept), else one member
-    row."""
+    """one member of an archive walked at ``_depth`` → its rows: a
+    nested archive walks one level deeper (outermost container id
+    kept) until the depth cap; anything no walker accepts — including
+    a corrupt nested archive — is one opaque member row."""
     if _depth < _ZIP_MAX_DEPTH:
-        if payload[:4] == b"PK\x03\x04" and name.lower().endswith(".zip"):
-            return _zip_members(payload, child_id, container, _depth + 1, _budget)
-        if _sniff_tar(payload, name):
-            return _tar_or_member(payload, child_id, container, _depth + 1, _budget)
-        if payload[:6] == SEVENZIP_MAGIC:
-            return _7z_or_member(payload, child_id, container, _depth + 1, _budget)
-        if payload[:8] == AR_MAGIC or payload[:6] in _CPIO_MAGICS:
-            walker = _ar_members if payload[:8] == AR_MAGIC else _cpio_members
-            try:
-                return walker(payload, child_id, container, _depth + 1, _budget)
-            except Exception:  # noqa: BLE001 — corrupt: never lose bytes
-                pass
-        if _sniff_iso_payload(payload):
-            try:
-                return _iso_members(payload, child_id, container, _depth + 1, _budget)
-            except Exception:  # noqa: BLE001 — corrupt: never lose bytes
-                pass
-        if payload[:7] == b"Rar!\x1a\x07\x00" or payload[:8] == b"Rar!\x1a\x07\x01\x00":
-            try:
-                return _rar_members(payload, child_id, container, _depth + 1, _budget)
-            except Exception:  # noqa: BLE001 — compressed/corrupt: opaque row
-                pass
-        if _sniff_cab_payload(payload):
-            try:
-                return _cab_members(payload, child_id, container, _depth + 1, _budget)
-            except Exception:  # noqa: BLE001 — LZX/corrupt: opaque row
-                pass
-        if _sniff_arj_payload(payload):
-            try:
-                return _arj_members(payload, child_id, container, _depth + 1, _budget)
-            except Exception:  # noqa: BLE001 — compressed/corrupt: opaque row
-                pass
-        sfx = _sfx_archive(payload)
-        if sfx is not None:
-            try:
-                return _dispatch_member(
-                    sfx, child_id, name, container, _depth, _budget
-                )
-            except Exception:  # noqa: BLE001 — stub-data false hit: opaque row
-                pass
+        rows = _walk(payload, child_id, container, _depth + 1, _budget, name)
+        if rows is not None:
+            return rows
     return [{"child_id": child_id, "container_s": container, "bytes": payload}]
-
-
-def _sniff_cab_payload(payload: bytes) -> bool:
-    from open_semantic_etl_spark.operators.cab import sniff_cab
-
-    return sniff_cab(payload)
-
-
-def _sniff_arj_payload(payload: bytes) -> bool:
-    from open_semantic_etl_spark.operators.arj import sniff_arj
-
-    return sniff_arj(payload)
 
 
 _SFX_SCAN_CAP = 4 << 20  # installer stubs sit well under 4 MiB
@@ -672,8 +612,8 @@ def _sfx_archive(data: bytes) -> bytes | None:
     archive by scanning for its signature (SFX zips need no scan:
     zipfile finds the end-of-central-directory from the TAIL).  The
     scan is capped: a real stub is tens of KB, and an archive magic
-    appearing deep inside random EXE data would fail its own header
-    checks and degrade to no children anyway."""
+    appearing deep inside random EXE data fails its own walker, so
+    the payload stays opaque (nested) or childless (top level)."""
     if data[:2] != b"MZ":
         return None
     best = None
@@ -685,75 +625,39 @@ def _sfx_archive(data: bytes) -> bytes | None:
         return None
     i, sig = best
     tail = data[i:]
-    if sig == b"MSCF" and not _sniff_cab_payload(tail):
+    if sig == b"MSCF" and sniff_content_type(tail) != "application/vnd.ms-cab-compressed":
         return None  # "MSCF" string inside the stub, not a cabinet
     return tail
 
 
-def _sniff_iso_payload(payload: bytes) -> bool:
-    from open_semantic_etl_spark.operators.iso9660 import sniff_iso
+def _sfx_members(
+    data: bytes, base_id: str, container: str, _depth: int, _budget: list[int]
+) -> list[dict]:
+    """the archive behind a self-extracting EXE stub, walked in the
+    EXE's place; raises when there is none or it does not walk."""
+    sfx = _sfx_archive(data)
+    rows = None if sfx is None else _walk(sfx, base_id, container, _depth, _budget)
+    if rows is None:
+        raise ValueError("no self-extracting archive")
+    return rows
 
-    return len(payload) > 16 * 2048 and sniff_iso(payload)
+
+def _archive_rows(data: bytes, base_id: str) -> list[dict]:
+    """one top-level row's members: one byte budget for the whole
+    walk; a row no walker accepts has no children."""
+    return _walk(data, base_id, base_id, 0, [ZIP_MAX_ARCHIVE_BYTES]) or []
 
 
-def explode_zip(df: DataFrame, id_col: str = "url", bytes_col: str = "html") -> DataFrame:
+def explode_zip(df: DataFrame) -> DataFrame:
     """archive rows → one row per (recursively reached) member file.
 
-    Accepts zip, 7z (native reader, operators/sevenzip.py), AND tar
-    (plain/gz/bz2/xz/Z/zst/lz4/lzma/sz — sniffed per row: ``PK`` →
-    zipfile; anything else tried as ``tarfile r:*``, which validates
-    the header checksum, then as a zip with leading junk — zipfile
-    finds the end-of-central-directory from the TAIL, so
-    self-extracting archives and prefix-padded zips must keep
-    exploding even though they don't start with ``PK``); named
-    ``explode_zip`` for the reference operator it mirrors
-    (enhance_zip.py:31-116)."""
-
-    def run(series: pd.Series, ids: pd.Series) -> pd.Series:
-        res = []
-        for data, base in zip(series, ids):
-            try:
-                data = bytes(data)
-                if data[:4] == b"PK\x03\x04":
-                    res.append(_zip_members(data, base, base))
-                elif data[:6] == SEVENZIP_MAGIC:
-                    res.append(_7z_members(data, base, base))
-                elif data[:8] == AR_MAGIC:
-                    res.append(_ar_members(data, base, base))
-                elif data[:6] in _CPIO_MAGICS:
-                    res.append(_cpio_members(data, base, base))
-                elif _sniff_iso_payload(data):
-                    res.append(_iso_members(data, base, base))
-                elif data[:7] == b"Rar!\x1a\x07\x00" or data[:8] == b"Rar!\x1a\x07\x01\x00":
-                    res.append(_rar_members(data, base, base))
-                elif _sniff_cab_payload(data):
-                    res.append(_cab_members(data, base, base))
-                elif _sniff_arj_payload(data):
-                    res.append(_arj_members(data, base, base))
-                elif (sfx := _sfx_archive(data)) is not None:
-                    res.append(
-                        _dispatch_member(sfx, base, base, base, 0, None)
-                    )
-                else:
-                    try:
-                        res.append(_tar_members(data, base, base))
-                    except Exception:  # noqa: BLE001 — not a tar: SFX zip?
-                        res.append(_zip_members(data, base, base))
-            except Exception:  # noqa: BLE001 — bad archive → no children
-                res.append([])
-        return pd.Series(res)
-
-    udf = F.pandas_udf(run, ZIP_CHILD_TYPE)
-    ex = df.withColumn("_children", udf(F.col(bytes_col), F.col(id_col)))
-    ex = ex.select(
-        F.col(id_col).alias("parent_id"), F.explode("_children").alias("c")
-    )
-    return ex.select(
-        F.col("c.child_id").alias("url"),
-        F.col("c.container_s").alias("container_s"),
-        F.col("c.bytes").alias("html"),
-        "parent_id",
-    )
+    Accepts every format in ``_WALKERS`` plus tar (plain/gz/bz2/xz/Z/
+    zst/lz4/lzma/sz), self-extracting EXEs and zips with leading junk
+    (zipfile finds the end-of-central-directory from the TAIL, so
+    prefix-padded zips keep exploding though they don't start with
+    ``PK``); named ``explode_zip`` for the reference operator it
+    mirrors (enhance_zip.py:31-116)."""
+    return explode_rows(df, _archive_rows, ZIP_CHILD_TYPE)
 
 
 # ---------------------------------------------------------------------------
@@ -895,25 +799,10 @@ def parse_warc(data: bytes) -> list[dict]:
     return out
 
 
-def explode_warc(df: DataFrame, id_col: str = "url", bytes_col: str = "html") -> DataFrame:
-    def run(series: pd.Series) -> pd.Series:
-        res = []
-        for data in series:
-            try:
-                res.append(parse_warc(data))
-            except Exception:  # noqa: BLE001
-                res.append([])
-        return pd.Series(res)
-
-    udf = F.pandas_udf(run, WARC_CHILD_TYPE)
-    ex = df.withColumn("_children", udf(F.col(bytes_col)))
-    ex = ex.select(F.col(id_col).alias("parent_id"), F.explode("_children").alias("c"))
-    return ex.select(
-        F.col("c.child_id").alias("url"),
-        F.col("c.target_uri").alias("target_uri"),
-        F.to_timestamp(F.col("c.warc_date")).alias("warc_ts"),
-        F.col("c.bytes").alias("html"),
-        "parent_id",
+def explode_warc(df: DataFrame) -> DataFrame:
+    out = explode_rows(df, lambda data, _base: parse_warc(data), WARC_CHILD_TYPE)
+    return out.select(
+        "url", "target_uri", F.to_timestamp("warc_date").alias("warc_ts"), "html", "parent_id"
     )
 
 
@@ -1000,26 +889,10 @@ def parse_pst_members(data: bytes, base_id: str, container: str) -> list[dict]:
     return out
 
 
-def explode_pst(df: DataFrame, id_col: str = "url", bytes_col: str = "html") -> DataFrame:
+def explode_pst(df: DataFrame) -> DataFrame:
     """pst rows → one row per extracted member (mail or attachment)."""
-
-    def run(series: pd.Series, ids: pd.Series) -> pd.Series:
-        res = []
-        for data, base in zip(series, ids):
-            try:
-                res.append(parse_pst_members(data, base, base))
-            except Exception:  # noqa: BLE001 — bad/real-PST payload → no children
-                res.append([])
-        return pd.Series(res)
-
-    udf = F.pandas_udf(run, PST_CHILD_TYPE)
-    ex = df.withColumn("_children", udf(F.col(bytes_col), F.col(id_col)))
-    ex = ex.select(F.col(id_col).alias("parent_id"), F.explode("_children").alias("c"))
-    return ex.select(
-        F.col("c.child_id").alias("url"),
-        F.col("c.container_s").alias("container_s"),
-        F.col("c.bytes").alias("html"),
-        "parent_id",
+    return explode_rows(
+        df, lambda data, base: parse_pst_members(data, base, base), PST_CHILD_TYPE
     )
 
 
@@ -1068,37 +941,17 @@ def _mbox_messages(data: bytes) -> list[bytes]:
     return out
 
 
-def explode_mbox(df: DataFrame, id_col: str = "url", bytes_col: str = "html") -> DataFrame:
+def _mbox_rows(data: bytes, base_id: str) -> list[dict]:
+    return [
+        {"child_id": f"{base_id}#msg={n}", "container_s": base_id, "bytes": msg}
+        for n, msg in enumerate(_mbox_messages(data), start=1)
+    ]
+
+
+def explode_mbox(df: DataFrame) -> DataFrame:
     """mbox rows → one row per contained message (``<id>#msg=<n>``,
     1-based); non-mbox / corrupt payloads yield zero children."""
-
-    def run(series: pd.Series, ids: pd.Series) -> pd.Series:
-        res = []
-        for data, base in zip(series, ids):
-            try:
-                res.append(
-                    [
-                        {
-                            "child_id": f"{base}#msg={n}",
-                            "container_s": base,
-                            "bytes": msg,
-                        }
-                        for n, msg in enumerate(_mbox_messages(bytes(data)), start=1)
-                    ]
-                )
-            except Exception:  # noqa: BLE001 — bad mailbox → no children
-                res.append([])
-        return pd.Series(res)
-
-    udf = F.pandas_udf(run, MBOX_CHILD_TYPE)
-    ex = df.withColumn("_children", udf(F.col(bytes_col), F.col(id_col)))
-    ex = ex.select(F.col(id_col).alias("parent_id"), F.explode("_children").alias("c"))
-    return ex.select(
-        F.col("c.child_id").alias("url"),
-        F.col("c.container_s").alias("container_s"),
-        F.col("c.bytes").alias("html"),
-        "parent_id",
-    )
+    return explode_rows(df, _mbox_rows, MBOX_CHILD_TYPE)
 
 
 # ---------------------------------------------------------------------------
@@ -1162,28 +1015,9 @@ def _csv_rows(data: bytes, base_id: str, title_row: int | None = 0) -> list[dict
     return out
 
 
-def explode_csv(
-    df: DataFrame, id_col: str = "url", bytes_col: str = "html", title_row: int | None = 0
-) -> DataFrame:
-    def run(series: pd.Series, ids: pd.Series) -> pd.Series:
-        res = []
-        for data, base in zip(series, ids):
-            try:
-                res.append(_csv_rows(data, base, title_row))
-            except Exception:  # noqa: BLE001
-                res.append([])
-        return pd.Series(res)
-
-    udf = F.pandas_udf(run, CSV_CHILD_TYPE)
-    ex = df.withColumn("_children", udf(F.col(bytes_col), F.col(id_col)))
-    ex = ex.select(F.col(id_col).alias("parent_id"), F.explode("_children").alias("c"))
-    return ex.select(
-        F.col("c.child_id").alias("url"),
-        F.col("c.page_i").alias("page_i"),
-        F.col("c.container_s").alias("container_s"),
-        F.col("c.fields").alias("fields"),
-        F.col("c.numbers").alias("numbers"),
-        "parent_id",
+def explode_csv(df: DataFrame, title_row: int | None = 0) -> DataFrame:
+    return explode_rows(
+        df, lambda data, base: _csv_rows(data, base, title_row), CSV_CHILD_TYPE
     )
 
 
@@ -1369,31 +1203,10 @@ def _dbf_rows(data: bytes, base_id: str) -> list[dict]:
     return out
 
 
-def explode_dbf(df: DataFrame, id_col: str = "url", bytes_col: str = "html") -> DataFrame:
+def explode_dbf(df: DataFrame) -> DataFrame:
     """dbf rows → one row per active record (Tika DBFParser tier);
     corrupt / non-dbf payloads yield zero children."""
-
-    def run(series: pd.Series, ids: pd.Series) -> pd.Series:
-        res = []
-        for data, base in zip(series, ids):
-            try:
-                res.append(_dbf_rows(bytes(data), base))
-            except Exception:  # noqa: BLE001 — bad table → no children
-                res.append([])
-        return pd.Series(res)
-
-    udf = F.pandas_udf(run, SQLITE_CHILD_TYPE)
-    ex = df.withColumn("_children", udf(F.col(bytes_col), F.col(id_col)))
-    ex = ex.select(F.col(id_col).alias("parent_id"), F.explode("_children").alias("c"))
-    return ex.select(
-        F.col("c.child_id").alias("url"),
-        F.col("c.page_i").alias("page_i"),
-        F.col("c.container_s").alias("container_s"),
-        F.col("c.table_s").alias("table_s"),
-        F.col("c.fields").alias("fields"),
-        F.col("c.numbers").alias("numbers"),
-        "parent_id",
-    )
+    return explode_rows(df, _dbf_rows, SQLITE_CHILD_TYPE)
 
 
 def build_dbf(rows: list[list[str]], columns: list[tuple[str, str, int]]) -> bytes:
@@ -1424,31 +1237,10 @@ def build_dbf(rows: list[list[str]], columns: list[tuple[str, str, int]]) -> byt
     return bytes(out)
 
 
-def explode_sqlite(df: DataFrame, id_col: str = "url", bytes_col: str = "html") -> DataFrame:
+def explode_sqlite(df: DataFrame) -> DataFrame:
     """sqlite rows → one row per user-table row (Tika SQLite3Parser
     tier); corrupt / non-sqlite payloads yield zero children."""
-
-    def run(series: pd.Series, ids: pd.Series) -> pd.Series:
-        res = []
-        for data, base in zip(series, ids):
-            try:
-                res.append(_sqlite_rows(bytes(data), base))
-            except Exception:  # noqa: BLE001 — bad database → no children
-                res.append([])
-        return pd.Series(res)
-
-    udf = F.pandas_udf(run, SQLITE_CHILD_TYPE)
-    ex = df.withColumn("_children", udf(F.col(bytes_col), F.col(id_col)))
-    ex = ex.select(F.col(id_col).alias("parent_id"), F.explode("_children").alias("c"))
-    return ex.select(
-        F.col("c.child_id").alias("url"),
-        F.col("c.page_i").alias("page_i"),
-        F.col("c.container_s").alias("container_s"),
-        F.col("c.table_s").alias("table_s"),
-        F.col("c.fields").alias("fields"),
-        F.col("c.numbers").alias("numbers"),
-        "parent_id",
-    )
+    return explode_rows(df, _sqlite_rows, SQLITE_CHILD_TYPE)
 
 
 # ---------------------------------------------------------------------------
@@ -1465,7 +1257,7 @@ PDF_PAGES_TYPE = T.StructType(
 )
 
 
-def explode_pdf_pages(df: DataFrame, id_col: str = "url", bytes_col: str = "html") -> DataFrame:
+def explode_pdf_pages(df: DataFrame) -> DataFrame:
     """pdf rows → one row per page: id#page=N, parent title/author copied
     onto every page doc (enhance_pdf_page.py:123-147)."""
     from open_semantic_etl_spark.operators.pdfio import parse_pdf
@@ -1485,9 +1277,9 @@ def explode_pdf_pages(df: DataFrame, id_col: str = "url", bytes_col: str = "html
         return pd.DataFrame(recs)
 
     udf = F.pandas_udf(run, PDF_PAGES_TYPE)
-    ex = df.withColumn("_pdf", udf(F.col(bytes_col)))
+    ex = df.withColumn("_pdf", udf(F.col("html")))
     ex = ex.select(
-        F.col(id_col).alias("parent_id"),
+        F.col("url").alias("parent_id"),
         F.col("_pdf.title").alias("title_txt"),
         F.col("_pdf.author").alias("author_ss"),
         F.col("_pdf.npages").alias("pages_i"),
@@ -1519,14 +1311,14 @@ def split_sentences(text: str | None) -> list[str]:
     return [p for p in parts if p]
 
 
-def explode_sentences(df: DataFrame, id_col: str = "url", text_col: str = "content_txt") -> DataFrame:
+def explode_sentences(df: DataFrame) -> DataFrame:
     def run(series: pd.Series) -> pd.Series:
         return series.map(split_sentences)
 
     udf = F.pandas_udf(run, T.ArrayType(T.StringType()))
-    ex = df.withColumn("_sents", udf(F.col(text_col)))
+    ex = df.withColumn("_sents", udf(F.col("content_txt")))
     ex = ex.select(
-        F.col(id_col).alias("parent_id"),
+        F.col("url").alias("parent_id"),
         F.posexplode("_sents").alias("_pos", "sentence_txt"),
     )
     return ex.select(

@@ -9,6 +9,8 @@ import io
 import zipfile
 from datetime import datetime
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from open_semantic_etl_spark.operators.pdfio import build_pdf
@@ -737,3 +739,61 @@ def test_warc_conversion_and_resource_records():
     assert got["http://w.example.com//urn:uuid:w1"] == wet_text
     assert got["http://w.example.com//urn:uuid:s1"] == b"raw resource bytes"
     assert got["http://w.example.com//urn:uuid:r1"] == b"<html>x</html>"
+
+
+# --- one container walk: the same degrade rule and walkers at every depth --
+
+
+def test_corrupt_nested_zip_keeps_its_siblings(spark):
+    """a corrupt nested zip is one opaque member row, like a corrupt
+    nested 7z or tar; its siblings are not lost"""
+    broken = b"PK\x03\x04" + b"not a zip at all" * 8
+    outer = _zip_bytes({"a.html": b"<p>a</p>", "inner.zip": broken, "b.html": b"<p>b</p>"})
+    df = spark.createDataFrame([("http://x/o.zip", outer)], "url string, html binary")
+    rows = {r["url"]: bytes(r["html"]) for r in E.explode_zip(df).collect()}
+    assert rows == {
+        "http://x/o.zip/a.html": b"<p>a</p>",
+        "http://x/o.zip/inner.zip": broken,
+        "http://x/o.zip/b.html": b"<p>b</p>",
+    }
+
+
+def test_broken_sfx_yields_no_child(spark):
+    """an EXE stub followed by a RAR signature and garbage is not an
+    archive: the top-level row has no children, and above all none
+    whose url is the row's own"""
+    blob = b"MZ" + b"\x90" * 100 + b"Rar!\x1a\x07\x01\x00" + b"garbage" * 20
+    df = spark.createDataFrame([("http://x/setup.exe", blob)], "url string, html binary")
+    rows = E.explode_zip(df).collect()
+    assert [r for r in rows if r["url"] == r["parent_id"]] == []
+    assert rows == []
+
+
+def _members(data: bytes, base: str, prefix: str) -> list[tuple[str, str, bytes]]:
+    """top-level walk of row ``base`` → (id after ``prefix``, container, bytes)"""
+    return sorted(
+        (r["child_id"][len(prefix):], r["container_s"], bytes(r["bytes"]))
+        for r in E._archive_rows(data, base)
+    )
+
+
+@pytest.mark.parametrize("kind", range(12))
+def test_both_depths_walk_the_same(kind):
+    """each oracle container kind walks the same at the top level and
+    nested as ``x.<ext>`` inside a zip (same members, outermost
+    container id); truncated copies never raise out of the walk and
+    never yield a child carrying its parent's url"""
+    from open_semantic_etl_spark.plans.queries_ext import _ARCHIVE_BUILD, _ARCHIVE_EXT
+
+    data = _ARCHIVE_BUILD[kind](kind)
+    ext = _ARCHIVE_EXT[kind]
+    top = _members(data, "http://a/t", "http://a/t")
+    assert len(top) == 2 and {c for _, c, _ in top} == {"http://a/t"}
+    nested = _members(_zip_bytes({f"x.{ext}": data}), "http://a/o.zip", f"http://a/o.zip/x.{ext}")
+    assert [(i, b) for i, _, b in nested] == [(i, b) for i, _, b in top]
+    assert {c for _, c, _ in nested} == {"http://a/o.zip"}
+    for cut in (1, 8, 64, len(data) // 2, len(data) - 1):
+        part = data[:cut]
+        for row in (part, _zip_bytes({f"x.{ext}": part, "y.txt": b"y"})):
+            got = E._archive_rows(row, "http://a/cut")
+            assert all(r["child_id"] != "http://a/cut" for r in got)

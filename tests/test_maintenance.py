@@ -114,6 +114,35 @@ def test_move(spark, tmp_path):
     assert moved["path_basename_s"] == "home.html"
 
 
+def test_moved_src_is_indexed_again(spark, tmp_path):
+    """a move takes src's checkpoint row along: when src comes back
+    with the same content, the next run indexes it again (the
+    reference re-indexes it, since Solr no longer holds a src doc)."""
+    root = _dataset(spark, tmp_path)
+    t = Tables(root)
+    src = sorted(r["url"] for r in spark.read.parquet(t.enriched).select("url").collect())[0]
+    move_url(spark, root, src, "https://moved.example.net/back.html")
+    s = run_incremental(spark, pages_df(spark, 40, partitions=2), root)
+    assert s["processed"] == 1
+    urls = [r["url"] for r in spark.read.parquet(t.enriched).select("url").collect()]
+    assert urls.count(src) == 1 and len(urls) == 41
+
+
+def test_move_onto_an_indexed_url_leaves_one_row(spark, tmp_path):
+    """moving onto an already-indexed url replaces its row (a Solr
+    update with an existing id overwrites the doc), in the enriched
+    table and the checkpoint."""
+    root = _dataset(spark, tmp_path)
+    t = Tables(root)
+    src, dst = sorted(r["url"] for r in spark.read.parquet(t.enriched).select("url").collect())[:2]
+    src_hash = spark.read.parquet(t.enriched).filter(F.col("url") == src).first()["content_hash"]
+    move_url(spark, root, src, dst)
+    for path in (t.enriched, t.checkpoint):
+        rows = spark.read.parquet(path).filter(F.col("url").isin(src, dst)).collect()
+        assert [(r["url"], r["content_hash"]) for r in rows] == [(dst, src_hash)], path
+    assert spark.read.parquet(t.enriched).count() == 39
+
+
 def test_join_annotations(spark):
     df = spark.createDataFrame(
         [("u1", ["a"]), ("u2", ["b"])], "url string, tag_ss array<string>"
