@@ -53,7 +53,6 @@ CFB_MAGIC = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
 _FREESECT = 0xFFFFFFFF
 _ENDOFCHAIN = 0xFFFFFFFE
 _FATSECT = 0xFFFFFFFD
-_DIFSECT = 0xFFFFFFFC
 _NOSTREAM = 0xFFFFFFFF
 
 _MAX_SECTORS = 1 << 20       # 512 MB of 512-byte sectors — loop guard

@@ -23,11 +23,8 @@ columns needed.
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import re
-import shutil
 
 import numpy as np
 import pandas as pd
@@ -37,12 +34,18 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from open_semantic_etl_spark.plans.checkpoint import (
+    append_batch,
+    batch_manifests,
     bucket_expr,
     buckets_of,
+    create_table,
+    drop_table,
     has_data,
+    recover_appends,
     recover_table,
     require_local,
     rewrite_buckets,
+    table_record,
 )
 
 # ---------------------------------------------------------------------------
@@ -298,15 +301,17 @@ def lsh_candidate_pairs(
     # signatures re-join ONLY the candidate set (broadcast-able)
     sa = sig.select(F.col("_id").alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sig.select(F.col("_id").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = (
-        F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
-        / F.lit(num_hashes)
-    )
     return (
         pairs.join(sa, "id_a")
         .join(sb, "id_b")
-        .select("id_a", "id_b", est.alias("est_jaccard"))
+        .select("id_a", "id_b", _est_jaccard("sig_a", "sig_b", num_hashes).alias("est_jaccard"))
     )
+
+
+def _est_jaccard(a: str, b: str, num_hashes: int) -> Column:
+    """MinHash Jaccard estimate: the share of equal signature slots."""
+    same = F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda v: v)
+    return F.size(same) / F.lit(num_hashes)
 
 
 # ---------------------------------------------------------------------------
@@ -315,18 +320,19 @@ def lsh_candidate_pairs(
 #
 # The 100 TB dedup problem is incremental: each ingest batch must dedup
 # against the ENTIRE existing corpus without recomputing it.  The index
-# is two parquet tables plus the record of its LSH family:
+# is two bucketed tables, each recording the LSH family (num_hashes,
+# bands, shingle_n) beside n_buckets in its layout record:
 #
 #   <path>/bands/_bb=<k>/…   (_id, band, bh)  hive-partitioned on
 #                            _bb = pmod(xxhash64(bh), n_buckets)
 #   <path>/sigs/_sb=<k>/…    (_id, sig)       partitioned on
 #                            _sb = pmod(xxhash64(_id), n_buckets)
-#   <path>/_lsh_meta.json    num_hashes, bands, shingle_n, n_buckets
+#   <path>/_batches/<id>/…   the keep-set of each committed ingest
 #
-# The record decides the family: build_lsh_index writes it for the
-# parameters it rebuilds with, dedup_ingest_batch writes the default
-# family on a fresh index, and ingest/probe/delete/compact read it.
-# Probe shape: the batch's band table joins index bands on
+# Every write is a plans/checkpoint.py commit: build_lsh_index creates
+# the tables in its family, dedup_ingest_batch appends in the family
+# they record (the default on a fresh index), delete and compaction
+# rewrite buckets.  Probe shape: the batch's band table joins index bands on
 # (band, bh) — key-only shuffle, ~20 B/row, the same trim as
 # lsh_candidate_pairs; `_bb` rides along so the parquet scan
 # partition-prunes when the probe batch is small relative to n_buckets
@@ -336,45 +342,43 @@ def lsh_candidate_pairs(
 # Ingest appends touch only the buckets the new batch hashes into — the
 # merge_by_url bucket-pruning rule applied to the dedup index.
 
-# the default family: build_lsh_index's defaults, and what
-# dedup_ingest_batch records on an index that has no record yet
+# the default family: build_lsh_index's defaults, and a fresh
+# index's first dedup_ingest_batch
 _LSH_FAMILY = {"num_hashes": 64, "bands": 16, "shingle_n": 3, "n_buckets": 64}
+_INDEX_TABLES = {"bands": "_bb", "sigs": "_sb"}  # table -> its bucket column
 
 
-def _write_index_tables(sig: DataFrame, root: str, family: dict) -> None:
-    """write ``(_id, sig)`` and its band table as ``root/sigs`` and
-    ``root/bands`` (overwrite), bucketed by ``family["n_buckets"]``.
-    Sigs FIRST: the bands dir doubles as the index-exists marker the
-    probe checks, so a crash between the two writes leaves the marker
-    absent, not a bands-without-sigs wedge."""
-    n = family["n_buckets"]
-    sig.withColumn("_sb", bucket_expr("_id", n)).write.mode(
-        "overwrite"
-    ).partitionBy("_sb").parquet(f"{root}/sigs")
-    _band_table(sig, family["num_hashes"], family["bands"]).withColumn(
-        "_bb", bucket_expr("bh", n)
-    ).write.mode("overwrite").partitionBy("_bb").parquet(f"{root}/bands")
+def _band_rows(sig: DataFrame, family: dict) -> DataFrame:
+    """the band table of ``sig`` in ``family``, bucketed on ``_bb``."""
+    return _band_table(sig, family["num_hashes"], family["bands"]).withColumn(
+        "_bb", bucket_expr("bh", family["n_buckets"])
+    )
 
 
-def _write_lsh_meta(index_path: str, family: dict) -> None:
-    """record the index's family (tmp + os.replace: never torn)."""
-    os.makedirs(index_path, exist_ok=True)
-    meta_path = os.path.join(index_path, "_lsh_meta.json")
-    with open(meta_path + ".tmp", "w") as f:
-        json.dump(family, f)
-    os.replace(meta_path + ".tmp", meta_path)
+def _recover_index(index_path: str) -> None:
+    """recover both index tables (a swap interrupted mid-delete or
+    -compaction would read as an EMPTY index — r4 review), then roll
+    staged appends forward.  Every index operation calls it first."""
+    for table, part_col in _INDEX_TABLES.items():
+        recover_table(f"{index_path}/{table}", part_col)
+    recover_appends(index_path)
 
 
-def _lsh_index_meta(index_path: str) -> dict:
-    """the family recorded in ``_lsh_meta.json``.  A missing record
-    raises FileNotFoundError and an unparseable one ValueError: guessing
-    the family would silently miss collisions."""
-    meta_path = os.path.join(index_path, "_lsh_meta.json")
-    with open(meta_path) as f:
-        try:
-            return json.load(f)
-        except ValueError:
-            raise ValueError(f"corrupt {meta_path} — rebuild the index") from None
+def _index_family(index_path: str, fresh: dict | None = None) -> dict:
+    """the LSH family (with ``n_buckets``) the index's tables record —
+    bands', else sigs' (a crashed rebuild leaves sigs alone); ``fresh``
+    (else FileNotFoundError) when neither exists.  Tables with data but
+    no record predate it: guessing would miss collisions, so raise."""
+    for table in _INDEX_TABLES:
+        record = table_record(f"{index_path}/{table}")
+        if record is not None:
+            return record
+    if any(has_data(f"{index_path}/{table}") for table in _INDEX_TABLES):
+        raise ValueError(f"the LSH index at {index_path} predates its tables' family "
+                         "record: rebuild it with build_lsh_index")
+    if fresh is None:
+        raise FileNotFoundError(f"no LSH index at {index_path}")
+    return fresh
 
 
 def build_lsh_index(
@@ -389,30 +393,30 @@ def build_lsh_index(
     signatures: DataFrame | None = None,
 ) -> None:
     """(re)build the LSH index from ``df`` alone: a full rebuild that
-    replaces the bands, sigs and family record, and drops the batch
-    manifest (``_batches/``) — the rebuilt index holds none of the
-    ingested batches' keep-sets, so a replay or expiry of one must not
-    act on it.  ``dedup_ingest_batch`` is the only way an index grows,
-    so a non-default family is chosen here only (an empty ``df`` starts
-    an ingest-grown index in it).
+    creates the bands and sigs tables in the given family, and drops
+    the batch manifest (``_batches/``) — the rebuilt index holds none
+    of the ingested batches' keep-sets, so a replay or expiry of one
+    must not act on it.  ``dedup_ingest_batch`` is the only way an
+    index grows, so a non-default family is chosen here only (an empty
+    ``df`` starts an ingest-grown index in it).
     ``n_buckets`` sizing follows the checkpoint rule: buckets ≈
     index_bytes / target_rewrite_unit.  ``signatures`` (``id_col,
     sig``) skips the MinHash recompute when the caller already has
     them."""
-    # recover first: what a crashed commit left (a parked bucket swap,
-    # a staged batch) would otherwise be rolled onto the rebuild by
-    # the next probe; the batches it commits go with the manifest.
-    # The bands dir (the exists-marker) goes before the record changes:
-    # a crash mid-rebuild then reads as an absent, all-novel index, not
-    # old-family bands probed in the new record's family
-    _recover_lsh_compaction(index_path)
-    for sub in ("_batches", "bands"):
-        shutil.rmtree(f"{index_path}/{sub}", ignore_errors=True)
+    # recover first: a crashed commit (a parked bucket swap, a staged
+    # batch) would otherwise be rolled onto the rebuild by the next
+    # probe.  The bands table is the exists-marker the probe checks: it
+    # goes first and comes back last, so a crash mid-rebuild reads as
+    # an absent index, not old-family bands or bands without sigs
+    _recover_index(index_path)
+    drop_table(batch_manifests(index_path))
+    drop_table(f"{index_path}/bands")
     family = {"num_hashes": num_hashes, "bands": bands, "shingle_n": shingle_n,
               "n_buckets": n_buckets}
-    _write_lsh_meta(index_path, family)
     sig = _signatures(df, text_col, id_col, num_hashes, shingle_n, signatures)
-    _write_index_tables(sig, index_path, family)
+    sig_rows = sig.withColumn("_sb", bucket_expr("_id", n_buckets))
+    create_table(sig_rows, f"{index_path}/sigs", "_sb", family)
+    create_table(_band_rows(sig, family), f"{index_path}/bands", "_bb", family)
 
 
 def probe_lsh_index(
@@ -429,28 +433,28 @@ def probe_lsh_index(
     the id pair before signatures rejoin), plus one ``matched=false``
     row (null index_id/est_jaccard) for every novel probe doc — the
     keep-set of an incremental ingest.  The LSH family comes from the
-    index's record; ``signatures`` must be of that family.  A
+    index tables' record; ``signatures`` must be of that family.  A
     missing/empty index (the streaming bootstrap batch) yields
     all-novel."""
     spark = df.sparkSession
     id_type = df.schema[id_col].dataType
-    _recover_lsh_compaction(index_path)
-    # BOTH tables must hold data for the index to count as present: a
-    # crash mid-first-build can leave one without the other, and a
-    # wedged probe would block every streaming retry (r4 review).  The
-    # presence test is a direct filesystem check, NOT a caught
-    # AnalysisException: a corrupt partition layout raises the same
-    # exception class at plan time ("Conflicting directory structures"),
-    # and swallowing it would silently report every doc novel and admit
-    # every duplicate (r5 review).  Any read error on real data raises.
-    if not (has_data(f"{index_path}/bands") and has_data(f"{index_path}/sigs")):
-        return df.select(
-            F.lit(None).cast(id_type).alias("index_id"),
-            F.col(id_col).alias("probe_id"),
-            F.lit(None).cast("double").alias("est_jaccard"),
-            F.lit(False).alias("matched"),
+    probe_ids = df.select(F.col(id_col).alias("probe_id"))
+
+    def as_novel(ids: DataFrame) -> DataFrame:
+        return ids.select(
+            F.lit(None).cast(id_type).alias("index_id"), "probe_id",
+            F.lit(None).cast("double").alias("est_jaccard"), F.lit(False).alias("matched"),
         )
-    family = _lsh_index_meta(index_path)
+
+    _recover_index(index_path)
+    # present = BOTH tables hold data: a crash mid-build can leave one
+    # without the other, and a wedged probe would block every streaming
+    # retry (r4 review).  A filesystem check, NOT a caught
+    # AnalysisException: a corrupt layout raises that class too, and
+    # swallowing it would admit every duplicate (r5 review).
+    if not (has_data(f"{index_path}/bands") and has_data(f"{index_path}/sigs")):
+        return as_novel(probe_ids)
+    family = _index_family(index_path)
     num_hashes = family["num_hashes"]
     idx_bands = spark.read.parquet(f"{index_path}/bands").select(
         F.col("_id").alias("_iid"), "band", "bh", "_bb"
@@ -461,45 +465,27 @@ def probe_lsh_index(
     sig = _signatures(
         df, text_col, id_col, num_hashes, family["shingle_n"], signatures
     )
-    probe_bands = _band_table(sig, num_hashes, family["bands"]).withColumn(
-        "_bb", bucket_expr("bh", family["n_buckets"])
-    )
     # key-only pair join; _bb in the key lets the scan partition-prune
     pairs = (
-        probe_bands.join(idx_bands, on=["_bb", "band", "bh"], how="inner")
+        _band_rows(sig, family).join(idx_bands, on=["_bb", "band", "bh"], how="inner")
         .select(F.col("_iid").alias("index_id"), F.col("_id").alias("probe_id"))
         .distinct()
     )
     probe_sigs = sig.select(F.col("_id").alias("probe_id"), F.col("sig").alias("sig_p"))
-    est = (
-        F.size(F.filter(F.zip_with("sig_i", "sig_p", lambda x, y: x == y), lambda v: v))
-        / F.lit(num_hashes)
-    )
     dups = (
         pairs.join(idx_sigs, "index_id")
         .join(probe_sigs, "probe_id")
-        # a crash between an append's sigs and bands writes
-        # leaves orphan sig rows the retry re-appends, and an id
-        # re-ingested with new text carries two sigs; either would fan
-        # each collision out to N rows here.  Collapse on the PAIR
+        # an id with two sig rows (re-ingested with new text, or a row
+        # written twice) would fan each collision out.  Collapse on the PAIR
         # (candidates ≪ corpus — cheap), keeping the highest estimate
         # so the output is deterministic (r5 review).
         .groupBy("index_id", "probe_id")
-        .agg(F.max(est).alias("est_jaccard"))
+        .agg(F.max(_est_jaccard("sig_i", "sig_p", num_hashes)).alias("est_jaccard"))
         .withColumn("matched", F.lit(True))
     )
-    novel = (
-        df.select(F.col(id_col).alias("probe_id"))
-        .join(pairs.select("probe_id").distinct(), "probe_id", "left_anti")
-        .select(
-            F.lit(None).cast(id_type).alias("index_id"),
-            "probe_id",
-            F.lit(None).cast("double").alias("est_jaccard"),
-            F.lit(False).alias("matched"),
-        )
-    )
+    novel = probe_ids.join(pairs.select("probe_id").distinct(), "probe_id", "left_anti")
     return dups.select("index_id", "probe_id", "est_jaccard", "matched").unionByName(
-        novel
+        as_novel(novel)
     )
 
 
@@ -982,71 +968,6 @@ def semdedup_pairs(
     )
 
 
-def _recover_lsh_compaction(index_path: str) -> None:
-    """recover_table both index tables — a compaction or delete
-    interrupted mid-swap would otherwise read as an EMPTY index and
-    admit every duplicate (r4 review) — then roll committed-but-
-    unpublished batch appends forward.  Called at the top of every
-    probe, build, ingest, delete and compaction."""
-    for sub, part_col in (("bands", "_bb"), ("sigs", "_sb")):
-        recover_table(f"{index_path}/{sub}", part_col)
-    # roll staged-COMPLETE batch appends forward (dedup_ingest_batch
-    # crashed between _STAGED and the marker publish).  Un-staged
-    # ``__batch_*`` dirs are left alone: they are either a concurrent
-    # in-flight writer's staging or dead weight the next ingest of that
-    # batch_id discards itself — deleting them here would race a live
-    # writer.
-    for staging in glob.glob(f"{glob.escape(index_path)}/__batch_*"):
-        if os.path.isfile(os.path.join(staging, "_STAGED")):
-            batch_id = os.path.basename(staging)[len("__batch_"):]
-            _commit_batch_staging(
-                index_path, staging, f"{index_path}/_batches/{batch_id}"
-            )
-
-
-def _lsh_batch_paths(index_path: str, batch_id: str) -> tuple[str, str]:
-    """(staging dir, committed marker dir) for one ingest batch."""
-    return (
-        f"{index_path}/__batch_{batch_id}",
-        f"{index_path}/_batches/{batch_id}",
-    )
-
-
-def _commit_batch_staging(index_path: str, staging: str, marker: str) -> None:
-    """roll a fully-staged batch append (``_STAGED`` present) forward:
-    move each staged parquet part file into its live bucket dir (names
-    are Spark-unique uuids, so a resumed move never double-lands a
-    file), then publish the kept-ids dir as the committed marker (one
-    atomic rename), then drop the staging dir.  Every step is
-    idempotent under crash-retry — the recovery path and the happy path
-    are the same code — and safe against a concurrent committer (a
-    probe in another process rolling the same batch forward): a part
-    file or kept-ids dir the other side moved first is skipped."""
-    for sub in ("bands", "sigs"):
-        src_root = os.path.join(staging, sub)
-        if not os.path.isdir(src_root):
-            continue
-        for d, _s, files in os.walk(src_root):
-            rel = os.path.relpath(d, src_root)
-            for f in files:
-                if not f.endswith(".parquet"):
-                    continue
-                dst_dir = os.path.join(index_path, sub, rel)
-                os.makedirs(dst_dir, exist_ok=True)
-                try:
-                    os.rename(os.path.join(d, f), os.path.join(dst_dir, f))
-                except FileNotFoundError:
-                    pass  # the concurrent committer moved it first
-    if not os.path.isdir(marker):
-        os.makedirs(os.path.dirname(marker), exist_ok=True)
-        try:
-            os.rename(os.path.join(staging, "kept_ids"), marker)
-        except OSError:
-            if not os.path.isdir(marker):
-                raise
-    shutil.rmtree(staging, ignore_errors=True)
-
-
 def dedup_ingest_batch(
     spark,
     batch_df: DataFrame,
@@ -1061,9 +982,8 @@ def dedup_ingest_batch(
     persisted band index, dedup within the batch, append the keep-set
     to the index, and return the kept rows.
 
-    The index's record decides the LSH family; an index without one
-    gets ``build_lsh_index``'s default family recorded before anything
-    is staged.
+    The LSH family is the one the index's tables record; a fresh index
+    gets ``build_lsh_index``'s default.
 
     Scale shape: duplicate ids collapse first; ONE MinHash pass per
     batch threads through probe, within-batch dedup and the index
@@ -1074,28 +994,22 @@ def dedup_ingest_batch(
 
     Idempotence: ``batch_id`` is any string uniquely naming this
     batch's CONTENT — a landing-file manifest hash, an ingest sequence
-    number, a stream's query id + epoch.  The index append is staged
-    under ``__batch_<id>`` and committed by moving part files into the live
-    bucket dirs, with the kept-id set published to ``_batches/<id>`` as
-    the commit marker (and audit trail).  Replaying a committed batch
+    number, a stream's query id + epoch.  The index append is one
+    ``append_batch`` commit, publishing the kept ids to ``_batches/<id>``
+    (the batch's manifest and audit trail).  Replaying a committed batch
     returns the recorded keep-set without touching the index; a crash
-    anywhere — between the sigs and bands writes, mid-commit, before
-    the marker — either discards the un-staged attempt (recompute, the
-    live index was never touched) or rolls the staged commit forward
-    (every probe/build also rolls staged-complete batches forward via
-    ``_recover_lsh_compaction``)."""
+    before the stage completes is recomputed (the live index was never
+    touched), one after it is rolled forward by the next index
+    operation's ``_recover_index`` — and then replays."""
     if not re.fullmatch(r"[A-Za-z0-9._-]{1,128}", batch_id):
-        # '/' or other path chars would nest the __batch_ staging dir,
-        # hiding its _STAGED file from recovery's one-level glob and
-        # breaking the roll-forward promise (r5 review)
+        # '/' would nest the staging dir, hiding its _STAGED file from
+        # recovery's one-level glob (r5 review)
         raise ValueError(
             f"batch_id {batch_id!r} must match [A-Za-z0-9._-]{{1,128}} "
             "(it names filesystem directories)"
         )
-    _recover_lsh_compaction(index_path)
-    if not os.path.exists(os.path.join(index_path, "_lsh_meta.json")):
-        _write_lsh_meta(index_path, _LSH_FAMILY)
-    family = _lsh_index_meta(index_path)
+    _recover_index(index_path)
+    family = _index_family(index_path, _LSH_FAMILY)
 
     def kept_rows(ids_path: str) -> DataFrame:
         if not has_data(ids_path):
@@ -1108,16 +1022,9 @@ def dedup_ingest_batch(
         )
         return batch_df.dropDuplicates([id_col]).join(kept_ids, id_col)
 
-    staging, marker = _lsh_batch_paths(index_path, batch_id)
-    if os.path.isdir(marker):
-        return kept_rows(marker)  # committed replay
-    if os.path.isfile(os.path.join(staging, "_STAGED")):
-        # staged-complete crash window: finish the commit, then
-        # return the RECORDED keep-set (recomputing would probe an
-        # index that may already hold part of this batch)
-        _commit_batch_staging(index_path, staging, marker)
-        return kept_rows(marker)
-    shutil.rmtree(staging, ignore_errors=True)  # partial stage
+    manifest = os.path.join(batch_manifests(index_path), batch_id)
+    if os.path.isdir(manifest):
+        return kept_rows(manifest)  # committed (or just rolled forward) replay
 
     batch = batch_df.dropDuplicates([id_col]).localCheckpoint(eager=True)
     sigs = _signatures(
@@ -1140,18 +1047,12 @@ def dedup_ingest_batch(
         .distinct()
     )
     kept = novel.join(drop, id_col, "left_anti").localCheckpoint(eager=True)
-    # staged append: all three writes land OUTSIDE the live tables, so
-    # a crash before _STAGED never perturbs the index
     kept_sigs = sigs.join(kept.select(id_col), id_col).select(
         F.col(id_col).alias("_id"), "sig"
     )
-    _write_index_tables(kept_sigs, staging, family)
-    kept.select(F.col(id_col).alias("_id")).write.mode("overwrite").parquet(
-        f"{staging}/kept_ids"
-    )
-    with open(os.path.join(staging, "_STAGED"), "w") as fh:
-        fh.write("ok")
-    _commit_batch_staging(index_path, staging, marker)
+    sig_rows = kept_sigs.withColumn("_sb", bucket_expr("_id", family["n_buckets"]))
+    tables = [("sigs", sig_rows, "_sb"), ("bands", _band_rows(kept_sigs, family), "_bb")]
+    append_batch(index_path, batch_id, tables, family, kept.select(F.col(id_col).alias("_id")))
     return kept
 
 
@@ -1159,7 +1060,7 @@ def list_lsh_batches(index_path: str) -> list[str]:
     """committed batch ids recorded in the index (sorted) — the
     manifest a retention sweep enumerates."""
     require_local(index_path)
-    root = f"{index_path}/_batches"
+    root = batch_manifests(index_path)
     return sorted(os.listdir(root)) if os.path.isdir(root) else []
 
 
@@ -1167,34 +1068,27 @@ def expire_lsh_batches(
     spark, index_path: str, batch_ids: list[str], strict: bool = True
 ) -> None:
     """TTL / retention sweep: remove whole ingest batches from the
-    index.  Each ``_batches/<id>`` marker (written by
-    ``dedup_ingest_batch`` — once per batch ingest, and once per
-    micro-batch of ``stream_dedup_ingest``, whose ids are
-    ``<query id>-<epoch>``) records exactly the doc ids that batch
-    contributed; expiry processes batches ONE AT A TIME —
-    ``delete_from_lsh_index`` over that batch's keep-set, then its
-    marker drops — so a crash leaves every earlier batch fully expired
-    and the current one retryable (delete is idempotent; marker
-    removal comes after it, else a crash would leak the rows forever).
+    index.  Each ``_batches/<id>`` manifest (one per
+    ``dedup_ingest_batch``, so one per ``stream_dedup_ingest``
+    micro-batch, id ``<query id>-<epoch>``) records exactly the doc ids
+    that batch contributed; expiry goes ONE BATCH AT A TIME —
+    ``delete_from_lsh_index`` over its keep-set, THEN its manifest
+    drops (the other order could leak the rows forever) — so a crash
+    leaves every earlier batch expired and the current one retryable.
 
-    ``strict=True`` (default) raises on a batch id with no marker —
-    silently expiring nothing would defeat a retention requirement.
-    After a crashed multi-batch sweep, retry with ``strict=False`` (or
-    re-enumerate via :func:`list_lsh_batches`): already-expired
-    batches' markers are gone and are skipped.
+    ``strict=True`` (default) raises on a batch id with no manifest —
+    silently expiring nothing would defeat a retention requirement; a
+    crashed sweep's retry passes ``strict=False`` to skip expired ones.
 
-    Attribution caveat (by design, document-level dedup): a doc is
-    recorded in the ONE batch that first kept it; later batches that
-    re-submit it drop it as a duplicate and do NOT refresh attribution.
-    Expiring an old batch therefore deletes docs that newer batches
-    re-submitted inside the retention window — the next arrival simply
-    re-ingests them as novel.  Retention policies that must never drop
-    recently-re-seen content should refresh attribution at probe time
-    (move matched index ids into the current batch's manifest) before
-    relying on batch expiry."""
+    Attribution caveat (document-level dedup): a doc is recorded in the
+    ONE batch that first kept it; a later batch re-submitting it drops
+    it as a duplicate without refreshing attribution, so expiring the
+    old batch deletes it — its next arrival re-ingests it as novel.
+    Policies that must keep recently re-seen content need probe-time
+    attribution refresh first."""
     require_local(index_path)
     for bid in batch_ids:
-        marker = f"{index_path}/_batches/{bid}"
+        marker = os.path.join(batch_manifests(index_path), bid)
         if not os.path.isdir(marker):
             if strict:
                 raise FileNotFoundError(
@@ -1208,7 +1102,7 @@ def expire_lsh_batches(
             delete_from_lsh_index(
                 spark, index_path, spark.read.parquet(marker).select("_id")
             )
-        shutil.rmtree(marker, ignore_errors=True)
+        drop_table(marker)
 
 
 def delete_from_lsh_index(spark, index_path: str, ids) -> None:
@@ -1222,34 +1116,30 @@ def delete_from_lsh_index(spark, index_path: str, ids) -> None:
     (sig-derived, deterministic) band hashes, so each table is one
     ``rewrite_buckets`` commit of ONLY those buckets; untouched bucket
     files stay byte-identical on disk.  Cost tracks the DELETE BATCH,
-    not the corpus.  Crash windows are the commit's staged bucket
-    swap, rolled forward by every probe/build via recover_table; bands
-    commit BEFORE sigs, and either half-state probes correctly (a band
-    collision without a sig row drops at the inner sig join, so a
-    half-deleted doc never resurfaces).  Each table that holds data is
-    swept, so orphan sig rows left by a crash between a build's sigs
-    and bands writes are removed too.
+    not the corpus.  Crash windows are the commit's staged bucket swap,
+    rolled forward by every index operation's recovery; bands commit
+    BEFORE sigs, and either half-state probes correctly (a band
+    collision without a sig row drops at the inner sig join).  Each
+    table that holds data is swept, so a crashed build's lone table is
+    cleaned too.
 
     ``ids``: list of doc-id values, or a single-column DataFrame of
     them.  Ids absent from the index are a no-op.
     """
-    _recover_lsh_compaction(index_path)
-    family = _lsh_index_meta(index_path)  # a non-index raises loudly
+    _recover_index(index_path)
+    family = _index_family(index_path)  # a non-index raises loudly
     n_buckets = family["n_buckets"]
     sigs_path = f"{index_path}/sigs"
     bands_path = f"{index_path}/bands"
     sigs_live, bands_live = has_data(sigs_path), has_data(bands_path)
     if not (sigs_live or bands_live):
         return  # nothing indexed yet — delete is a no-op
-    if isinstance(ids, DataFrame):
-        ids_df = ids.toDF("_del_id").dropDuplicates(["_del_id"])
-    else:
+    if not isinstance(ids, DataFrame):
         ids = list(ids)
         if not ids:
             return
-        ids_df = spark.createDataFrame(
-            [(i,) for i in ids], ["_del_id"]
-        ).dropDuplicates(["_del_id"])
+        ids = spark.createDataFrame([(i,) for i in ids], ["_del_id"])
+    ids_df = ids.toDF("_del_id").dropDuplicates(["_del_id"])
     is_deleted = F.col("_id") == F.col("_del_id")
     sig_buckets, band_buckets = [], []
     if sigs_live:
@@ -1262,16 +1152,12 @@ def delete_from_lsh_index(spark, index_path: str, ids) -> None:
         del_sigs = cand_sigs.join(F.broadcast(ids_df), is_deleted).select(
             "_id", "sig", "_sb"
         )
-        # rewrite only buckets where deleted rows ACTUALLY exist — ids
-        # not in the index must leave every file byte-identical, not
-        # churn their would-be bucket (cand_buckets only prunes the
-        # lookup scan).  The deleted docs' band rows are recomputed FROM
-        # THEIR SIGS (deterministic), so the touched _bb set is exact
-        # too — no scan of the full bands table.
+        # rewrite only buckets where deleted rows ACTUALLY exist (an
+        # absent id leaves every file byte-identical; cand_buckets only
+        # prunes the lookup).  Band rows are recomputed FROM THE SIGS,
+        # so the touched _bb set is exact with no bands-table scan.
         sig_buckets = buckets_of(del_sigs, "_sb")
-        del_bands = _band_table(
-            del_sigs.select("_id", "sig"), family["num_hashes"], family["bands"]
-        ).withColumn("_bb", bucket_expr("bh", n_buckets))
+        del_bands = _band_rows(del_sigs.select("_id", "sig"), family)
     else:
         # bands without sigs: no sig to recompute band rows from
         del_bands = spark.read.parquet(bands_path).join(
@@ -1296,21 +1182,18 @@ def compact_lsh_index(spark, index_path: str) -> None:
     bucket dir.
 
     Every batch append (``dedup_ingest_batch``, so every streaming
-    micro-batch too) adds a few files to each bucket it touches, and
-    thousands of small batches mean thousands of tiny files per
-    bucket.  Compaction is one ``rewrite_buckets`` commit of every
-    bucket dir per table, shuffled on the partition key into the
-    index's ``n_buckets`` (read from ``_lsh_meta.json``) partitions;
-    each row keeps its bucket.  Crash windows are the commit's staged
-    bucket swap, rolled forward by recover_table (run here and by
-    every probe).  The two tables commit independently; the layout is
-    the same before and after, so a crash between them leaves a
-    correct index.  Run it between ingests, not concurrently with one:
-    a batch committed mid-compaction lands in a live bucket dir the
-    swap replaces."""
-    _recover_lsh_compaction(index_path)
-    n_buckets = _lsh_index_meta(index_path)["n_buckets"]
-    for sub, part_col in (("bands", "_bb"), ("sigs", "_sb")):
+    micro-batch) adds a few files to each bucket it touches.  Compaction
+    is one ``rewrite_buckets`` commit of every bucket dir per table,
+    shuffled on the partition key into the recorded ``n_buckets``
+    partitions; each row keeps its bucket.  Crash windows are the
+    commit's staged bucket swap, rolled forward by the next recovery;
+    the two tables commit independently, and a crash between them leaves
+    a correct index.  Run it between ingests, not concurrently with one:
+    a batch committed mid-compaction lands in a bucket dir the swap
+    replaces."""
+    _recover_index(index_path)
+    n_buckets = _index_family(index_path)["n_buckets"]
+    for sub, part_col in _INDEX_TABLES.items():
         rewrite_buckets(
             spark, f"{index_path}/{sub}", None,
             lambda df, col=part_col: df.repartition(n_buckets, F.col(col)),

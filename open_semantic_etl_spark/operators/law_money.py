@@ -27,7 +27,6 @@ from open_semantic_etl_spark.functions.extract import (
 LAW_CODE_BLACKLIST_DEFAULT = ("CC",)
 
 LAW_FACET = "law_code_ss"
-CURRENCY_FACET = "currency_ss"
 
 #: cheap gate for the (expensive, alternation-heavy) clause regex:
 #: every LAW_CLAUSE_RE match is one of the prefixes §|Article|Artikel|

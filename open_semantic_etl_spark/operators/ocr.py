@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 FAKE_IMG_PREFIX = b"FAKEIMG:"
-OCR_PENDING_MARKER = "[Image (no OCR yet)]"  # reference sentinel (:235-236)
 
 
 class OcrEngineError(RuntimeError):

@@ -21,20 +21,23 @@ The Spark-native replacement for the reference's incremental machinery:
 
 Storage: this sandbox has no Iceberg/Delta jars, so tables are parquet
 directories HASH-BUCKETED by url — hive-partitioned on
-``_bucket = pmod(xxhash64(url), n_buckets)``.  ``rewrite_buckets`` is
-the one commit every table write goes through (merge, backfill,
-delete, move, and the LSH index's delete and compaction): only the
-named buckets are read (partition pruning), transformed and rewritten
-(per-bucket directory swap); untouched bucket files stay
-byte-identical, so incremental write cost tracks the BATCH, not the
-table. On a real cluster the same call sites map to ``MERGE INTO
-enriched USING batch ON url`` over Iceberg (snapshot commit = our
-swap; Iceberg's bucket(url, N) transform = our ``_bucket``; the
-copy-on-write MERGE rewrites exactly the same file set).
+``_bucket = pmod(xxhash64(url), n_buckets)``.  Every table write is one
+of three commits: ``create_table`` (a first merge, an LSH index build),
+``append_batch`` (the LSH index's ingest: staged files move in, one
+rename publishes the batch) and ``rewrite_buckets`` (merge, backfill,
+delete, move, LSH delete and compaction): only the named buckets are
+read (partition pruning), transformed and rewritten (per-bucket
+directory swap); untouched bucket files stay byte-identical, so
+incremental write cost tracks the BATCH, not the table. On a real
+cluster the same call sites map to Iceberg's CTAS, append and ``MERGE
+INTO enriched USING batch ON url`` (snapshot commit = our swap;
+Iceberg's bucket(url, N) transform = our ``_bucket``; the copy-on-write
+MERGE rewrites exactly the same file set).
 
 Each table records its schema and ``n_buckets`` (Iceberg's table
 metadata: schema + partition spec) in ``<table>/_common_metadata``, which
 Spark's schema inference reads first: plain reads see every column.
+A creator may record more (the LSH index's family): ``table_record``.
 
 Scale: the anti-join shuffles only ``(url, content_hash)`` — 16 bytes +
 url per row, NOT the html payload: the join is planned on the slim
@@ -51,7 +54,7 @@ import os
 import shutil
 import time
 import uuid
-from typing import Callable
+from typing import Callable, Iterable
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -95,11 +98,13 @@ class Tables:
         self.metrics = os.path.join(root, "metrics")
 
 
-# The commit protocol for every table dir the engine rewrites (enriched,
-# checkpoint, the LSH index's bands/sigs): rewrite_buckets writes into a
-# ``<path>__tmp_*`` sibling, _swap_buckets renames its bucket dirs in,
-# and every reader or writer runs recover_table first.  Iceberg
-# equivalent: the snapshot commit, where all of this is free.
+# The commit protocol for every table dir the engine writes (enriched,
+# checkpoint, the LSH index's bands/sigs): create_table records the
+# layout before the data; rewrite_buckets writes a ``<path>__tmp_*``
+# sibling and _swap_buckets renames its bucket dirs in; append_batch
+# stages under ``<root>/__batch_<id>`` and _commit_append moves it in.
+# Every reader or writer runs recover_table (and recover_appends) first.
+# Iceberg equivalent: the snapshot commit, where all of this is free.
 
 
 def require_local(path: str) -> None:
@@ -112,7 +117,8 @@ def require_local(path: str) -> None:
             f"table and index paths must be driver-local filesystem paths "
             f"in this build (got {path!r}); remote-FS support needs the "
             "Hadoop FileSystem API behind plans/checkpoint.py's commit "
-            "protocol (has_data, rewrite_buckets, recover_table)"
+            "protocol (has_data, create_table, rewrite_buckets, "
+            "append_batch, recover_table, recover_appends)"
         )
 
 
@@ -133,35 +139,60 @@ def buckets_of(df: DataFrame, part_col: str = "_bucket") -> list:
 _SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _layout(path: str) -> tuple[StructType, int] | None:
-    """``(data columns, n_buckets)`` recorded in ``path/_common_metadata``,
-    or None for a table without a record."""
+def _layout(path: str) -> tuple[StructType, dict[str, int]] | None:
+    """``(data columns, record)`` from ``path/_common_metadata`` — the
+    record holds ``n_buckets`` and any other int its creator recorded —
+    or None for a table without a layout record."""
     record = os.path.join(path, "_common_metadata")
     if not os.path.isfile(record):
         return None
     meta = pq.read_schema(record).metadata
-    return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA])), int(meta[b"n_buckets"])
+    columns = StructType.fromJson(json.loads(meta.pop(_SPARK_SCHEMA)))
+    return columns, {k.decode(): int(v) for k, v in meta.items()}
 
 
-def _record_layout(path: str, columns: StructType, n_buckets: int) -> None:
+def _record_layout(path: str, columns: StructType, record: dict[str, int]) -> None:
     """write the layout record: a footer-only parquet file, on the driver
     (no Spark job); the '.' tmp name is hidden from Spark's listing."""
-    meta = {_SPARK_SCHEMA: columns.json(), b"n_buckets": str(n_buckets)}
+    meta = {_SPARK_SCHEMA: columns.json(), **{k: str(v) for k, v in record.items()}}
     tmp = os.path.join(path, ".common_metadata.tmp")
     pq.write_metadata(to_arrow_schema(columns).with_metadata(meta), tmp)
     os.replace(tmp, os.path.join(path, "_common_metadata"))
+
+
+def table_record(path: str) -> dict[str, int] | None:
+    """the ints ``path``'s layout record holds (``n_buckets`` and any
+    its creator added, such as an LSH index's family), or None."""
+    layout = _layout(path)
+    return None if layout is None else layout[1]
 
 
 def table_buckets(path: str, n_buckets: int | None = None) -> int:
     """the bucket count ``path`` records, else ``n_buckets`` (default
     ``N_BUCKETS``).  A creator's ``n_buckets`` that disagrees with the
     record raises: writing into another bucket space duplicates urls."""
-    layout = _layout(path)
-    if layout is None:
+    recorded = (table_record(path) or {}).get("n_buckets")
+    if recorded is None:
         return N_BUCKETS if n_buckets is None else n_buckets
-    if n_buckets is not None and n_buckets != layout[1]:
-        raise ValueError(f"table {path} records n_buckets={layout[1]}, not {n_buckets}")
-    return layout[1]
+    if n_buckets is not None and n_buckets != recorded:
+        raise ValueError(f"table {path} records n_buckets={recorded}, not {n_buckets}")
+    return recorded
+
+
+def drop_table(path: str) -> None:
+    """remove the table (or batch manifest) at ``path``; absent is a no-op."""
+    require_local(path)
+    shutil.rmtree(path, ignore_errors=True)
+
+
+def create_table(df: DataFrame, path: str, part_col: str, record: dict[str, int]) -> None:
+    """replace ``path`` with ``df`` partitioned by ``part_col``.  The
+    layout record (``df``'s data columns plus ``record``, which holds
+    ``n_buckets``) goes in BEFORE the data it must cover."""
+    drop_table(path)
+    os.makedirs(path)
+    _record_layout(path, df.drop(part_col).schema, record)
+    df.write.mode("append").partitionBy(part_col).parquet(path)
 
 
 def _swap_buckets(tmp: str, path: str, buckets: list, part_col: str) -> None:
@@ -256,11 +287,88 @@ def rewrite_buckets(
     out.write.mode("overwrite").partitionBy(part_col).parquet(tmp)
     layout = _layout(path)
     if layout is not None:  # record a new column BEFORE any data file holds it
-        columns, n_buckets = layout
+        columns, record = layout
         added = [f for f in out.schema if f.name not in columns.names + [part_col]]
         if added:
-            _record_layout(path, StructType(columns.fields + added), n_buckets)
+            _record_layout(path, StructType(columns.fields + added), record)
     _swap_buckets(tmp, path, buckets, part_col)
+
+
+def batch_manifests(root: str) -> str:
+    """the dir of ``<batch id>`` manifests each append under ``root`` publishes."""
+    return os.path.join(root, "_batches")
+
+
+def append_batch(
+    root: str, batch_id: str, tables: Iterable[tuple[str, DataFrame, str]],
+    record: dict[str, int], manifest: DataFrame,
+) -> None:
+    """The one append: add ``tables``' ``(name, rows, part_col)`` to the
+    tables under ``root`` and publish ``manifest`` as batch ``batch_id``.
+    Each is staged by ``create_table`` (layout ``record``) under
+    ``<root>/__batch_<id>``, then ``_STAGED`` is written and
+    ``_commit_append`` moves the stage in.  A crash before ``_STAGED``
+    left every live table untouched; one after it is rolled forward by
+    ``recover_appends``.  Only files are added, so the write cost tracks
+    the batch (Iceberg's append snapshot)."""
+    staging = os.path.join(root, f"__batch_{batch_id}")
+    drop_table(staging)  # a partial stage: no live table saw it
+    for name, rows, part_col in tables:
+        create_table(rows, os.path.join(staging, name), part_col, record)
+    manifest.write.mode("overwrite").parquet(os.path.join(staging, "manifest"))
+    open(os.path.join(staging, "_STAGED"), "w").close()
+    _commit_append(root, batch_id)
+
+
+def _move(src: str, dst: str) -> None:
+    """rename; a ``src`` a concurrent committer moved first is skipped."""
+    try:
+        os.rename(src, dst)
+    except FileNotFoundError:
+        pass
+
+
+def _commit_append(root: str, batch_id: str) -> None:
+    """roll batch ``batch_id``'s staged-complete append forward: per table,
+    the staged layout record first when the live table has none, then
+    each part file (Spark-unique names: a resumed move never lands one
+    twice); then one rename publishes the manifest — the commit point.
+    Idempotent under crash-retry and safe against a concurrent committer
+    (another process's probe): whatever the other side moved is skipped."""
+    staging = os.path.join(root, f"__batch_{batch_id}")
+    manifest = os.path.join(batch_manifests(root), batch_id)
+    try:
+        names = sorted(os.listdir(staging))
+    except FileNotFoundError:
+        return  # a concurrent committer finished this append
+    for name in names:
+        src = os.path.join(staging, name)
+        if name == "manifest" or not os.path.isdir(src):
+            continue
+        live = os.path.join(root, name)
+        os.makedirs(live, exist_ok=True)
+        if not os.path.isfile(os.path.join(live, "_common_metadata")):
+            _move(os.path.join(src, "_common_metadata"), os.path.join(live, "_common_metadata"))
+        for d, _s, files in os.walk(src):
+            dst = os.path.join(live, os.path.relpath(d, src))
+            for f in files:
+                if f.endswith(".parquet"):
+                    os.makedirs(dst, exist_ok=True)
+                    _move(os.path.join(d, f), os.path.join(dst, f))
+    os.makedirs(os.path.dirname(manifest), exist_ok=True)
+    _move(os.path.join(staging, "manifest"), manifest)
+    if not os.path.isdir(manifest):
+        raise FileNotFoundError(f"{staging} staged no manifest")
+    drop_table(staging)
+
+
+def recover_appends(root: str) -> None:
+    """roll every staged-complete append under ``root`` forward.  An
+    un-staged ``__batch_*`` dir is a live writer's stage or dead weight
+    its batch's next append drops — never dropped here."""
+    require_local(root)
+    for staged in glob.glob(os.path.join(glob.escape(root), "__batch_*", "_STAGED")):
+        _commit_append(root, os.path.basename(os.path.dirname(staged))[len("__batch_"):])
 
 
 def merge_by_url(
@@ -290,12 +398,11 @@ def merge_by_url(
     n_buckets = table_buckets(path, n_buckets)
     new = new.withColumn("_bucket", bucket_expr(n_buckets=n_buckets))
     if not has_data(path):
-        new.write.mode("overwrite").partitionBy("_bucket").parquet(path)
-        _record_layout(path, new.drop("_bucket").schema, n_buckets)
+        create_table(new, path, "_bucket", {"n_buckets": n_buckets})
         return
     if _layout(path) is None:  # a table written before layouts were recorded
         every_column = spark.read.option("mergeSchema", "true").parquet(path)
-        _record_layout(path, every_column.drop("_bucket").schema, n_buckets)
+        _record_layout(path, every_column.drop("_bucket").schema, {"n_buckets": n_buckets})
     rewrite_buckets(
         spark, path, buckets_of(new),
         lambda old: old.join(new.select("url"), "url", "left_anti").unionByName(

@@ -124,8 +124,12 @@ def _build_tar(d: int, mode: str) -> bytes:
 
 def _build_tgz(d: int) -> bytes:
     """same member layout as _build_zip, but a gzip-compressed tar —
-    exercises the tar tier + zip-in-tar recursion under one oracle."""
-    return _build_tar(d, "w:gz")
+    exercises the tar tier + zip-in-tar recursion under one oracle.
+    The gzip header's mtime is pinned to 0, so the bytes never depend
+    on the clock."""
+    import gzip
+
+    return gzip.compress(_build_tar(d, "w"), mtime=0)
 
 
 def _build_tar_z(d: int) -> bytes:

@@ -95,8 +95,9 @@ def stream_dedup_ingest(
 
     The batch id is ``<query id>-<epoch>``.  The query id is stable
     across restarts from the same checkpoint, so a retried epoch
-    replays its committed keep-set (or rolls its staged commit
-    forward) instead of re-ingesting against itself.  A fresh
+    replays its committed keep-set (the ingest's recovery first rolls
+    a staged ``append_batch`` commit forward) instead of re-ingesting
+    against itself.  A fresh
     checkpoint is a new query id and therefore a new ingest: it dedups
     against everything already indexed, whichever session wrote it.
     Semantics notes: duplicate urls within a batch collapse to one row
@@ -106,7 +107,9 @@ def stream_dedup_ingest(
     of ingest if empty docs should not dedup together).
     Each landing file is its own micro-batch.  A new index takes
     ``dedup_ingest_batch``'s default LSH family; an existing one keeps
-    the family it records.  Returns the StreamingQuery."""
+    the family its tables record (an index whose tables record none
+    raises until ``build_lsh_index`` rebuilds it).  Returns the
+    StreamingQuery."""
     import os
 
     from open_semantic_etl_spark.operators.dedup import dedup_ingest_batch

@@ -1,16 +1,20 @@
 """The commit protocol lives in plans/checkpoint.py alone.
 
-Every table rewrite goes through ``checkpoint.rewrite_buckets``; the
-tmp-dir and swap steps behind it, and the writer of each table's layout
-record (``_common_metadata``, written with pyarrow's
-``write_metadata``), are private to that module. A program file that
-names one of them — as a call, an attribute or an import — brings back
-per-module commit choreography, and fails this test.
+Every table write goes through one of its commits (``create_table``,
+``rewrite_buckets``, ``append_batch``); the tmp-dir, swap and staged
+append steps behind them, and the writer of each table's layout record
+(``_common_metadata``, written with pyarrow's ``write_metadata``), are
+private to that module. A program file that names one of them — as a
+call, an attribute or an import — brings back per-module commit
+choreography, and fails this test. So does a raw filesystem mutator
+(rename, replace, remove, unlink, rmtree, move) anywhere else, except
+at the listed scratch sites that hold no table.
 """
 
 from __future__ import annotations
 
 import ast
+from collections import Counter
 from pathlib import Path
 
 from test_dead_plans import ROOT, _program_files
@@ -18,8 +22,19 @@ from test_dead_plans import ROOT, _program_files
 CHECKPOINT = ROOT / "open_semantic_etl_spark" / "plans" / "checkpoint.py"
 PROTOCOL = {
     "swap_buckets", "tmp_path", "swap_table", "atomic_overwrite",
-    "record_layout", "write_metadata",
+    "record_layout", "write_metadata", "commit_append", "move",
 }
+MUTATORS = {
+    "os": {"rename", "replace", "remove", "unlink"},
+    "shutil": {"rmtree", "move"},
+}
+# non-table scratch: the driver queries' atexit tmp index dir, the OCR
+# stage's tempfile, bench.py's stale output file
+SCRATCH_SITES = Counter({
+    "open_semantic_etl_spark/plans/queries.py:shutil.rmtree": 1,
+    "open_semantic_etl_spark/operators/ocr.py:os.unlink": 1,
+    "bench.py:os.unlink": 1,
+})
 
 
 def _protocol_names(path: Path) -> set[str]:
@@ -40,6 +55,21 @@ def _protocol_names(path: Path) -> set[str]:
     return out
 
 
+def _mutators(path: Path) -> list[str]:
+    """``module.name`` of each raw filesystem mutator ``path`` uses, as
+    an attribute (``os.rename``, called or passed) or an import."""
+    out = []
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+            module, names = node.value.id, [node.attr]
+        elif isinstance(node, ast.ImportFrom):
+            module, names = node.module, [a.name for a in node.names]
+        else:
+            continue
+        out += [f"{module}.{n}" for n in names if n in MUTATORS.get(module, ())]
+    return out
+
+
 def test_commit_protocol_stays_in_checkpoint():
     leaks = sorted(
         f"{path.relative_to(ROOT)}:{name}"
@@ -49,4 +79,21 @@ def test_commit_protocol_stays_in_checkpoint():
     )
     assert not leaks, f"commit protocol used outside plans/checkpoint.py: {leaks}"
     # the guard is live: the steps it looks for exist in checkpoint.py
-    assert {"_swap_buckets", "_record_layout", "write_metadata"} <= _protocol_names(CHECKPOINT)
+    assert {"_swap_buckets", "_record_layout", "write_metadata", "_commit_append"} <= (
+        _protocol_names(CHECKPOINT)
+    )
+
+
+def test_raw_mutators_stay_in_checkpoint():
+    sites = Counter(
+        f"{path.relative_to(ROOT)}:{name}"
+        for path in _program_files()
+        if path != CHECKPOINT
+        for name in _mutators(path)
+    )
+    leaks = sorted((sites - SCRATCH_SITES).elements())
+    assert not leaks, f"raw filesystem mutator outside plans/checkpoint.py: {leaks}"
+    # the guard is live: it sees checkpoint.py's own mutators and every
+    # allowlisted scratch site
+    assert {"os.rename", "os.replace", "shutil.rmtree"} <= set(_mutators(CHECKPOINT))
+    assert sites & SCRATCH_SITES == SCRATCH_SITES

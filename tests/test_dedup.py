@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from open_semantic_etl_spark.operators import dedup as D
 from open_semantic_etl_spark.operators import similarity as S
 from open_semantic_etl_spark.operators import textstats as TS
+from open_semantic_etl_spark.plans import checkpoint as C
 
 _BASE = (
     "the quick brown fox jumps over the lazy dog while the busy farmer "
@@ -891,8 +892,8 @@ def test_crashed_rebuild_reads_as_absent_index(spark, corpus, tmp_path, monkeypa
     leave the old family's bands live under the new family's record —
     the probe would hash in the wrong band space and silently miss
     duplicates.  The rebuild drops the bands dir (the exists-marker)
-    before it rewrites the record, so the crashed index probes
-    all-novel, like a crashed first build."""
+    before it recreates sigs, so the crashed index probes all-novel,
+    like a crashed first build."""
     import os
 
     path = str(tmp_path / "idx_crashed_rebuild")
@@ -905,10 +906,55 @@ def test_crashed_rebuild_reads_as_absent_index(spark, corpus, tmp_path, monkeypa
         m.setattr(D, "_band_table", crash)
         with pytest.raises(RuntimeError, match="crash between"):
             D.build_lsh_index(corpus, path, bands=8, n_buckets=4)
-    assert D._lsh_index_meta(path)["n_buckets"] == 4
+    assert C.table_buckets(f"{path}/sigs") == 4
     assert not os.path.isdir(f"{path}/bands")
     probed = D.probe_lsh_index(corpus.filter(F.col("doc_id") == 1), path).collect()
     assert [(r.probe_id, r.matched) for r in probed] == [(1, False)]
+
+
+def test_index_tables_record_their_family(spark, corpus, tmp_path):
+    """each index table records the index's bucket count and LSH family
+    in its own layout record: a build in the family it is given, a
+    first ingest on a fresh path in the default one."""
+    built, ingested = str(tmp_path / "rec_built"), str(tmp_path / "rec_ingested")
+    D.build_lsh_index(corpus, built, bands=8, n_buckets=4)
+    D.dedup_ingest_batch(
+        spark, corpus.filter(F.col("doc_id") == 0), ingested, "b0", id_col="doc_id"
+    )
+    for path, n_buckets, bands in ((built, 4, 8), (ingested, 64, 16)):
+        for table in ("bands", "sigs"):
+            assert C.table_buckets(f"{path}/{table}") == n_buckets, (path, table)
+            assert C.table_record(f"{path}/{table}") == {
+                "num_hashes": 64, "bands": bands, "shingle_n": 3, "n_buckets": n_buckets,
+            }, (path, table)
+
+
+def test_legacy_json_only_index_must_be_rebuilt(spark, corpus, tmp_path):
+    """an index whose family lives only in a ``_lsh_meta.json`` beside
+    tables that record none (the layout of earlier builds) raises on
+    probe, ingest, delete and compaction, naming build_lsh_index; the
+    rebuild serves it again."""
+    import glob
+    import json
+    import os
+
+    path = str(tmp_path / "idx_legacy")
+    D.build_lsh_index(corpus, path)
+    for record in glob.glob(f"{path}/*/_common_metadata"):
+        os.remove(record)
+    with open(f"{path}/_lsh_meta.json", "w") as f:
+        json.dump({"num_hashes": 64, "bands": 16, "shingle_n": 3, "n_buckets": 64}, f)
+    probe = corpus.filter(F.col("doc_id") == 1)  # exact dup of 0
+    for op in (
+        lambda: D.probe_lsh_index(probe, path),
+        lambda: D.dedup_ingest_batch(spark, probe, path, "b1", id_col="doc_id"),
+        lambda: D.delete_from_lsh_index(spark, path, [0]),
+        lambda: D.compact_lsh_index(spark, path),
+    ):
+        with pytest.raises(ValueError, match="build_lsh_index"):
+            op()
+    D.build_lsh_index(corpus, path)
+    assert 0 in {r.index_id for r in D.probe_lsh_index(probe, path).collect() if r.matched}
 
 
 def test_incremental_lsh_partial_first_build_is_empty_index(spark, corpus, tmp_path):
@@ -1036,9 +1082,9 @@ def test_bigram_lm_perplexity_prefers_reference_like_docs(spark):
 
 
 def test_lsh_overwrite_reparameterizes_and_meta_self_heals(spark, corpus, tmp_path):
-    """a rebuild may change the family (it rewrites everything, record
-    included) and the probe follows the record; a torn record fails
-    the probe loudly and the next rebuild replaces it."""
+    """a rebuild may change the family (it rewrites everything, the
+    tables' records included) and the probe follows the record; a torn
+    record fails the probe loudly and the next rebuild replaces it."""
     path = str(tmp_path / "idx_meta2")
     probe = corpus.filter(F.col("doc_id") == 1)  # exact dup of 0
 
@@ -1050,9 +1096,9 @@ def test_lsh_overwrite_reparameterizes_and_meta_self_heals(spark, corpus, tmp_pa
     # 8-row bands share no hash with 4-row ones: a probe in the
     # default family would find nothing
     assert {0, 1} <= matched()
-    with open(f"{path}/_lsh_meta.json", "w") as f:
-        f.write('{"num_hash')  # truncated write
-    with pytest.raises(ValueError, match="corrupt .*_lsh_meta.json"):
+    with open(f"{path}/bands/_common_metadata", "r+b") as f:
+        f.truncate(10)  # truncated write
+    with pytest.raises(ValueError, match="corrupt"):
         D.probe_lsh_index(probe, path)
     D.build_lsh_index(corpus, path, bands=8)
     assert {0, 1} <= matched()
@@ -1310,7 +1356,7 @@ def test_dedup_ingest_batch_crash_resume(spark, corpus, tmp_path, monkeypatch):
     bands_before = spark.read.parquet(f"{path}/bands").count()
     b2 = corpus.filter(F.col("doc_id").isin([1, 5]))
     with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated"):
-        m.setattr(D, "_commit_batch_staging", _crash_before_commit)
+        m.setattr(C, "_commit_append", _crash_before_commit)
         D.dedup_ingest_batch(spark, b2, path, batch_id="b2", id_col="doc_id")
     # staged but not committed: live index untouched
     assert spark.read.parquet(f"{path}/bands").count() == bands_before
@@ -1331,12 +1377,12 @@ def test_dedup_ingest_batch_staged_commit_rolled_forward_by_probe(
     spark, corpus, tmp_path, monkeypatch
 ):
     """a staged-complete batch left by a crash is committed by the NEXT
-    index operation (probe/build run _recover_lsh_compaction), so the
+    index operation (probe/build run _recover_index), so the
     keep-set becomes visible without the original caller retrying."""
     path = str(tmp_path / "ing4")
     b1 = corpus.filter(F.col("doc_id").isin([0]))
     with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated"):
-        m.setattr(D, "_commit_batch_staging", _crash_before_commit)
+        m.setattr(C, "_commit_append", _crash_before_commit)
         D.dedup_ingest_batch(spark, b1, path, batch_id="b1", id_col="doc_id")
     probe = corpus.filter(F.col("doc_id") == 1)  # exact dup of 0
     got = {r.index_id for r in D.probe_lsh_index(probe, path, id_col="doc_id").collect() if r.matched}
@@ -1377,7 +1423,7 @@ def test_compaction_crash_recovers_on_glob_special_path(spark, corpus, tmp_path)
     D.build_lsh_index(corpus, path)
     shutil.copytree(f"{path}/bands", f"{path}/bands__tmp_cafe")
     os.rename(f"{path}/bands", f"{path}/bands__old_deadbeef")  # crashed swap
-    D._recover_lsh_compaction(path)
+    D._recover_index(path)
     assert os.path.isdir(f"{path}/bands")
     assert not os.path.isdir(f"{path}/bands__old_deadbeef")
     assert not os.path.isdir(f"{path}/bands__tmp_cafe")
@@ -1393,7 +1439,7 @@ def test_commit_batch_staging_tolerates_concurrent_committer(
 
     path = str(tmp_path / "ing_race")
     with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated"):
-        m.setattr(D, "_commit_batch_staging", _crash_before_commit)
+        m.setattr(C, "_commit_append", _crash_before_commit)
         D.dedup_ingest_batch(
             spark, corpus.filter(F.col("doc_id").isin([0, 4])), path,
             batch_id="b1", id_col="doc_id",
@@ -1405,9 +1451,9 @@ def test_commit_batch_staging_tolerates_concurrent_committer(
             real_rename(src, dst)  # the concurrent committer moves it first
         return real_rename(src, dst)
 
-    staging, marker = D._lsh_batch_paths(path, "b1")
+    staging, marker = f"{path}/__batch_b1", f"{C.batch_manifests(path)}/b1"
     monkeypatch.setattr(os, "rename", racing_rename)
-    D._commit_batch_staging(path, staging, marker)
+    C._commit_append(path, "b1")
     monkeypatch.undo()
     assert os.path.isdir(marker)
     assert not os.path.isdir(staging)

@@ -777,6 +777,20 @@ def _members(data: bytes, base: str, prefix: str) -> list[tuple[str, str, bytes]
     )
 
 
+def test_tgz_oracle_container_ignores_the_clock(monkeypatch):
+    """the .tgz oracle container is the same bytes whenever it is built:
+    nothing in its gzip header follows the wall clock"""
+    import time
+
+    from open_semantic_etl_spark.plans.queries_ext import _build_tgz
+
+    built = []
+    for clock in (1_000_000_000.0, 1_700_000_000.0):
+        monkeypatch.setattr(time, "time", lambda clock=clock: clock)
+        built.append(_build_tgz(2))
+    assert built[0] == built[1]
+
+
 @pytest.mark.parametrize("kind", range(12))
 def test_both_depths_walk_the_same(kind):
     """each oracle container kind walks the same at the top level and

@@ -467,6 +467,59 @@ def test_swap_crash_rolls_forward(spark, root):
     assert recovered.select("url").distinct().count() == 50
 
 
+def test_staged_append_crash_rolls_forward(spark, root, monkeypatch):
+    """an append that crashes after some of its part files moved into the
+    live bucket dirs, but before its manifest is published, is rolled
+    forward by the next recover_appends: every row lands exactly once,
+    the manifest is published, and no file the append did not add
+    changes — an append only adds files."""
+    import os
+
+    from open_semantic_etl_spark.plans import checkpoint as C
+
+    path = os.path.join(root, "t")
+    rows = spark.createDataFrame([(f"u{i}", i) for i in range(40)], "url string, v long")
+    C.create_table(
+        rows.withColumn("_bucket", C.bucket_expr(n_buckets=8)), path, "_bucket", {"n_buckets": 8}
+    )
+    before = _bucket_file_state(path)
+    batch = spark.createDataFrame(
+        [(f"n{i}", 100 + i) for i in range(6)], "url string, v long"
+    ).withColumn("_bucket", C.bucket_expr(n_buckets=8))
+    touched = {f"_bucket={b}" for b in C.buckets_of(batch)}
+
+    real_move, moved = C._move, []
+
+    def crash_after_first_move(src, dst):
+        if moved:
+            raise RuntimeError("simulated crash mid-commit")
+        real_move(src, dst)
+        moved.append(dst)
+
+    staging = os.path.join(root, "__batch_b1")
+    manifest = os.path.join(C.batch_manifests(root), "b1")
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated"):
+        m.setattr(C, "_move", crash_after_first_move)
+        C.append_batch(root, "b1", [("t", batch, "_bucket")], {"n_buckets": 8}, batch.select("url"))
+    # the crash window: one part file live, others still staged, no manifest
+    assert len(moved) == 1 and moved[0].endswith(".parquet")
+    assert any(f.endswith(".parquet") for _d, _s, fs in os.walk(staging) for f in fs)
+    assert not os.path.isdir(manifest)
+
+    C.recover_appends(root)
+    assert not os.path.isdir(staging)
+    assert sorted(r.url for r in spark.read.parquet(manifest).collect()) == [f"n{i}" for i in range(6)]
+    table = spark.read.parquet(path)
+    assert table.count() == 46
+    assert table.select("url").distinct().count() == 46
+    assert {r.v for r in table.filter(F.col("url").startswith("n")).collect()} == set(range(100, 106))
+    after = _bucket_file_state(path)
+    assert {k: after[k] for k in before} == before  # no file rewritten
+    assert {k.split("/")[0] for k in set(after) - set(before)} <= touched
+    C.recover_appends(root)  # idempotent: nothing left to roll forward
+    assert _bucket_file_state(path) == after
+
+
 def test_crashed_table_swap_is_restored_before_merge(spark, root):
     """a crash between swap_table's two renames (delete_where, legacy
     migration) leaves the live table parked as ``__old_*``; the next
