@@ -1033,9 +1033,11 @@ def dedup_ingest_batch(
     probed = probe_lsh_index(
         batch, index_path, text_col=text_col, id_col=id_col, signatures=sigs
     )
+    # materialized once (at most one batch of ids): every branch below
+    # reads it, and each re-derivation would scan the bands table again
     novel_ids = probed.filter(~F.col("matched")).select(
         F.col("probe_id").alias(id_col)
-    )
+    ).localCheckpoint(eager=True)
     novel = batch.join(novel_ids, id_col)
     drop = (
         lsh_candidate_pairs(

@@ -32,6 +32,7 @@ field mapping at enhance_extract_text_tika_server.py:25-31).
 
 from __future__ import annotations
 
+import importlib
 import re
 from datetime import datetime, timezone
 from html.parser import HTMLParser
@@ -673,26 +674,49 @@ def _fast_feed(parser: _ContentParser, text: str) -> None:
                 pos = n
 
 
-def _extract_xml_doc(data: bytes, res: dict) -> dict | None:
-    """SVG / FictionBook2 raw-XML route (Tika SVGParser /
+#: the office-result shape every document extractor returns
+#: (operators/office.py, cfb.py, media.py); ``_adopt`` copies it
+_DOC_FIELDS = ("content", "title", "author", "content_type", "n_blocks", "ok", "err")
+#: what a media extractor reads beyond that shape
+_MEDIA_FIELDS = ("description", "width", "height", "duration_ms", "datetime")
+
+
+def _adopt(res: dict, doc: dict) -> dict:
+    """``res`` carrying the extractor result ``doc``: a document
+    extractor keeps every block it reads."""
+    for k in _DOC_FIELDS:
+        res[k] = doc[k]
+    res["n_kept_blocks"] = doc["n_blocks"]
+    return res
+
+
+def _operators(module: str):
+    return importlib.import_module(f"open_semantic_etl_spark.operators.{module}")
+
+
+#: the document extractor for each ``sniff_content_type`` label that
+#: names one, looked up when a payload carries that label: only such a
+#: payload imports office/cfb, never an HTML, PDF or gzip page
+_LABEL_EXTRACTORS = {
+    # office documents are zips of XML (DOCX/XLSX/PPTX/ODT/EPUB/XPS/…);
+    # a non-office zip keeps the container label and flows to the
+    # zip-explode operator instead
+    "application/zip": lambda: _operators("office").extract_office,
+    # legacy OLE family (.doc/.xls/.ppt/.msg) and TNEF (winmail.dat)
+    "application/x-ole-storage": lambda: _operators("cfb").extract_cfb,
+    "application/vnd.ms-tnef": lambda: _operators("cfb").extract_tnef,
+    # binary property list (the XML form takes the XML-root route)
+    "application/x-plist": lambda: _operators("office").extract_plist,
+}
+
+
+def _xml_root_doc(data: bytes) -> dict | None:
+    """SVG / FictionBook2 raw-XML root (Tika SVGParser /
     FictionBookParser parity); None = not one of these roots, keep the
     generic XML handling."""
-    from open_semantic_etl_spark.operators.office import (
-        extract_fb2,
-        extract_svg,
-    )
+    from open_semantic_etl_spark.operators.office import extract_fb2, extract_svg
 
-    doc = extract_svg(data) or extract_fb2(data)
-    if doc is None:
-        return None
-    res["content_type"] = doc["content_type"]
-    res["content"] = doc["content"]
-    res["title"] = doc["title"]
-    res["n_blocks"] = doc["n_blocks"]
-    res["n_kept_blocks"] = doc["n_blocks"]
-    res["ok"] = doc["ok"]
-    res["err"] = doc["err"]
-    return res
+    return extract_svg(data) or extract_fb2(data)
 
 
 def _iso_to_dt(s: str | None) -> "datetime | None":
@@ -712,9 +736,14 @@ def _iso_to_dt(s: str | None) -> "datetime | None":
 def extract_html(data: bytes | None, _depth: int = 0) -> dict:
     """Run the full contract over raw page bytes.
 
-    Returns a dict matching schema.EXTRACT_RESULT_TYPE field names.
-    PDF payloads are detected by magic bytes and routed to the PDF
-    parser (content-type sniffing ≈ enhance_mimetype.py:27-35).
+    Returns a dict holding schema.EXTRACT_RESULT_TYPE's fields plus
+    what the chosen extractor read beyond them: ``author`` (Tika's
+    dc:creator → author_ss), and for media ``width``, ``height``,
+    ``duration_ms`` and ``datetime`` (ISO str).  This is the one
+    function that picks a document's extractor (content-type sniffing
+    ≈ enhance_mimetype.py:27-35): by ``sniff_content_type``'s label
+    (``_LABEL_EXTRACTORS``), else by the ordered rules below — media
+    magic, the ``{\\rtf`` prefix, the RFC 822 gate, PDF, the XML root.
     Single-member gzip/bzip2/xz payloads are transparently
     decompressed (size-capped) and re-dispatched, at most twice
     (``_depth`` — nested-bomb guard).
@@ -734,54 +763,23 @@ def extract_html(data: bytes | None, _depth: int = 0) -> dict:
         "n_images": 0,
         "ok": True,
         "err": None,
+        "author": None,
+        "width": None,
+        "height": None,
+        "duration_ms": None,
+        "datetime": None,
     }
     try:
         if not data:
             res["content_type"] = None
             return res
         sniffed = sniff_content_type(data)
-        if sniffed == "application/zip":
-            # office documents are zips of XML (DOCX/XLSX/PPTX/ODT/…):
-            # route through the native office tier (the reference gets
-            # these from Tika, enhance_extract_text_tika_server.py:33-262);
-            # non-office zips keep the container content-type and flow
-            # to the zip-explode operator instead
-            from open_semantic_etl_spark.operators.office import extract_office
-
-            off = extract_office(data)
-            if off is not None:
-                res["content_type"] = off["content_type"]
-                res["content"] = off["content"]
-                res["title"] = off["title"]
-                res["n_blocks"] = off["n_blocks"]
-                res["n_kept_blocks"] = off["n_blocks"]
-                res["ok"] = off["ok"]
-                res["err"] = off["err"]
-                return res
-        if sniffed in ("application/x-ole-storage", "application/vnd.ms-tnef"):
-            # legacy OLE family (.doc/.xls/.ppt/.msg) and TNEF
-            # (winmail.dat) — native CFB/TNEF tier (reference: Tika
-            # OfficeParser/TNEFParser via
-            # enhance_extract_text_tika_server.py:33-262)
-            from open_semantic_etl_spark.operators.cfb import (
-                extract_cfb,
-                extract_tnef,
-            )
-
-            ole = (
-                extract_cfb(data)
-                if sniffed == "application/x-ole-storage"
-                else extract_tnef(data)
-            )
-            if ole is not None:
-                res["content_type"] = ole["content_type"]
-                res["content"] = ole["content"]
-                res["title"] = ole["title"]
-                res["n_blocks"] = ole["n_blocks"]
-                res["n_kept_blocks"] = ole["n_blocks"]
-                res["ok"] = ole["ok"]
-                res["err"] = ole["err"]
-                return res
+        # the reference gets every one of these from Tika
+        # (enhance_extract_text_tika_server.py:33-262)
+        if sniffed in _LABEL_EXTRACTORS:
+            doc = _LABEL_EXTRACTORS[sniffed]()(data)
+            if doc is not None:
+                return _adopt(res, doc)
         if sniffed in _COMPRESSED_TYPES and _depth < 2:
             inner = _decompress_member(data, sniffed)
             if inner is not None and not inner.startswith(b"WARC/"):
@@ -810,33 +808,26 @@ def extract_html(data: bytes | None, _depth: int = 0) -> dict:
         from open_semantic_etl_spark.operators.media import (
             OCR_IMAGE_TYPES,
             extract_media,
-            sniff_media,
         )
 
-        if sniff_media(data) is not None:
-            # image/audio/video metadata tier (reference: Tika surfaces
-            # EXIF/ID3/container metadata for media payloads — its test
-            # pins content_type_ss == 'image/jpeg' etc.); pixel/sample
-            # DECODE stays behind the multimodal seam, but dims, EXIF
-            # title/author/date, ID3 tags, durations are plain struct
-            # parsing (operators/media.py). Raster images additionally
-            # flag needs_ocr — the reference's enhance_ocr tesseracts
-            # exactly these content types.
-            mr = extract_media(data)
-            if mr is not None:
-                res["content_type"] = mr["content_type"]
-                res["content"] = mr["content"]
-                res["title"] = mr["title"]
-                res["description"] = mr["description"]
-                res["meta_ts"] = _iso_to_dt(mr["datetime"])
-                res["n_blocks"] = mr["n_blocks"]
-                res["n_kept_blocks"] = mr["n_blocks"]
-                if mr["content_type"] in OCR_IMAGE_TYPES:
-                    res["needs_ocr"] = True
-                    res["n_images"] = 1
-                res["ok"] = mr["ok"]
-                res["err"] = mr["err"]
-                return res
+        # image/audio/video metadata tier (reference: Tika surfaces
+        # EXIF/ID3/container metadata for media payloads — its test
+        # pins content_type_ss == 'image/jpeg' etc.); pixel/sample
+        # DECODE stays behind the multimodal seam, but dims, EXIF
+        # title/author/date, ID3 tags, durations are plain struct
+        # parsing (operators/media.py). Raster images additionally
+        # flag needs_ocr — the reference's enhance_ocr tesseracts
+        # exactly these content types.
+        mr = extract_media(data)
+        if mr is not None:
+            _adopt(res, mr)
+            for k in _MEDIA_FIELDS:
+                res[k] = mr[k]
+            res["meta_ts"] = _iso_to_dt(mr["datetime"])
+            if mr["content_type"] in OCR_IMAGE_TYPES:
+                res["needs_ocr"] = True
+                res["n_images"] = 1
+            return res
         if data.startswith(b"{\\rtf"):
             # before the generic sniff early-return: an RTF with \binN
             # embedded picture bytes carries NULs in its head and would
@@ -844,28 +835,7 @@ def extract_html(data: bytes | None, _depth: int = 0) -> dict:
             # at offset 0 is decisive
             from open_semantic_etl_spark.operators.office import extract_rtf
 
-            rt = extract_rtf(data)
-            res["content_type"] = rt["content_type"]
-            res["content"] = rt["content"]
-            res["title"] = rt["title"]
-            res["n_blocks"] = rt["n_blocks"]
-            res["n_kept_blocks"] = rt["n_blocks"]
-            res["ok"] = rt["ok"]
-            res["err"] = rt["err"]
-            return res
-        if sniffed == "application/x-plist":
-            from open_semantic_etl_spark.operators.office import extract_plist
-
-            pl = extract_plist(data)
-            if pl is not None:
-                res["content_type"] = pl["content_type"]
-                res["content"] = pl["content"]
-                res["title"] = pl["title"]
-                res["n_blocks"] = pl["n_blocks"]
-                res["n_kept_blocks"] = pl["n_blocks"]
-                res["ok"] = pl["ok"]
-                res["err"] = pl["err"]
-                return res
+            return _adopt(res, extract_rtf(data))
         if sniffed and sniffed != "application/pdf":
             res["content_type"] = sniffed
             return res
@@ -898,6 +868,7 @@ def extract_html(data: bytes | None, _depth: int = 0) -> dict:
             res["content_type"] = "application/pdf"
             res["content"] = "\n".join(_norm(p) for p in (pr["pages"] or []))
             res["title"] = pr["title"]
+            res["author"] = pr["author"]
             res["n_blocks"] = pr["npages"] or 0
             res["n_kept_blocks"] = len(pr["pages"] or [])
             res["n_images"] = pr["n_images"]
@@ -920,15 +891,10 @@ def extract_html(data: bytes | None, _depth: int = 0) -> dict:
 
                 pl = extract_plist(data)
                 if pl is not None:
-                    res["content_type"] = pl["content_type"]
-                    res["content"] = pl["content"]
-                    res["title"] = pl["title"]
-                    res["n_blocks"] = pl["n_blocks"]
-                    res["n_kept_blocks"] = pl["n_blocks"]
-                    return res
-            sx = _extract_xml_doc(data, res)
-            if sx is not None:
-                return sx
+                    return _adopt(res, pl)
+            doc = _xml_root_doc(data)
+            if doc is not None:
+                return _adopt(res, doc)
             # generic XML document (feed bytes, sitemaps, arbitrary
             # exports): honest Tika-style label; the text pull itself
             # is unchanged (structured handling lives in the rdf/feeds
@@ -937,9 +903,9 @@ def extract_html(data: bytes | None, _depth: int = 0) -> dict:
         elif head.startswith(("<svg", "<fictionbook")):
             # raw-XML document formats without an <?xml prologue — the
             # root-name gate inside keeps lookalike tags on the HTML path
-            sx = _extract_xml_doc(data, res)
-            if sx is not None:
-                return sx
+            doc = _xml_root_doc(data)
+            if doc is not None:
+                return _adopt(res, doc)
             res["content_type"] = "application/xml"
         elif not _TAG_HINT_RE.search(text):
             vo = _vobject_sniff(text)

@@ -32,6 +32,10 @@ in-engine:
   MKV/WEBM   EBML walk: DocType, Info duration/title, track
         dims / sample-rate / channels              (RFC 9559)
 
+``extract_html`` (operators/htmlx.py) picks ``extract_media`` by its
+magic sniff and carries its author/dims/duration/date fields; the
+``multimodal`` oracle query's media rows project that result.
+
 Every parser is TOTAL: corrupt bytes yield ok=False + err (the per-row
 error-column contract), never an exception, and all walks are
 work/size-bounded so a crafted file cannot spin or balloon a task.
@@ -48,7 +52,6 @@ import zlib
 
 __all__ = [
     "extract_media",
-    "media_expr",
     "sniff_media",
     "build_jpeg",
     "build_png",
@@ -1147,49 +1150,6 @@ def extract_media(data: bytes) -> dict | None:
     res["content"] = "\n".join(lines)
     res["n_blocks"] = len(lines)
     return res
-
-
-def media_expr(bytes_col):
-    """Arrow-batched Column: media bytes → metadata struct (null fields
-    for non-media payloads) — the office_expr twin for this tier."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    rtype = T.StructType(
-        [
-            T.StructField("content", T.StringType(), True),
-            T.StructField("title", T.StringType(), True),
-            T.StructField("author", T.StringType(), True),
-            T.StructField("content_type", T.StringType(), True),
-            T.StructField("media_dt", T.StringType(), True),
-            T.StructField("width", T.IntegerType(), True),
-            T.StructField("height", T.IntegerType(), True),
-            T.StructField("duration_ms", T.LongType(), True),
-            T.StructField("ok", T.BooleanType(), True),
-            T.StructField("err", T.StringType(), True),
-        ]
-    )
-    empty = {k.name: None for k in rtype.fields}
-
-    def run(series):
-        def one(b):
-            if b is None:
-                return empty
-            r = extract_media(bytes(b))
-            if r is None:
-                return empty
-            return {
-                "content": r["content"], "title": r["title"],
-                "author": r["author"], "content_type": r["content_type"],
-                "media_dt": r["datetime"], "width": r["width"],
-                "height": r["height"], "duration_ms": r["duration_ms"],
-                "ok": r["ok"], "err": r["err"],
-            }
-
-        return pd.DataFrame([one(b) for b in series])
-
-    return F.pandas_udf(run, rtype)(bytes_col)
 
 
 # ---------------------------------------------------------------------------

@@ -24,7 +24,6 @@ tested either way).
 
 from __future__ import annotations
 
-import os
 import re
 from typing import Callable, Iterator
 
@@ -162,33 +161,27 @@ def pdf_page_images_expr(html_col: str = "html"):
     return F.pandas_udf(run, PDF_PAGE_IMAGES_TYPE)(F.col(html_col))
 
 
-def run_ocr_phase(
+def _ocr_with_memo(
     spark: SparkSession,
-    enriched: DataFrame,
+    imgs: DataFrame,
     memo_path: str,
-    engine: str = "fake",
-    id_col: str = "url",
-    html_col: str = "html",
+    engine: str,
+    keys: list[str],
 ) -> DataFrame:
-    """phase-2 job: OCR flagged rows with memoization.
+    """(keys…, ocr_t) from image rows (keys…, pos, img): the OCR texts of
+    each ``keys`` group joined by '\\n' in ``pos`` order.
 
-    Returns (url, ocr_t) for every needs_ocr row; appends new memo
-    entries (img_hash, ocr_text) to ``memo_path``.
-    """
+    Images resolve through the memo table on xxhash64(img), so cache
+    hits never reach the engine; only misses are OCR'd, and their new
+    results are appended to ``memo_path``."""
+    from open_semantic_etl_spark.plans.checkpoint import has_data
+
     ocr_fn = ENGINES[engine]
-
-    flagged = enriched.filter(F.col("needs_ocr")).select(id_col, html_col)
-    imgs = flagged.select(
-        id_col, F.posexplode(extract_images_expr(html_col)).alias("pos", "img")
-    )
+    cols = [*keys, "pos"]
     imgs = imgs.withColumn("img_hash", F.xxhash64("img"))
-
-    memo_exists = os.path.isdir(memo_path) and any(
-        f.endswith(".parquet") for f in os.listdir(memo_path)
-    )
-    if memo_exists:
+    if has_data(memo_path):
         memo = spark.read.parquet(memo_path)
-        hits = imgs.join(memo, "img_hash", "inner").select(id_col, "pos", "ocr_text")
+        hits = imgs.join(memo, "img_hash", "inner").select(*cols, "ocr_text")
         misses = imgs.join(memo.select("img_hash"), "img_hash", "left_anti")
     else:
         hits = None
@@ -197,16 +190,18 @@ def run_ocr_phase(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             pdf["ocr_text"] = [_ocr_or_none(ocr_fn, bytes(b)) for b in pdf["img"]]
-            yield pdf[[id_col, "pos", "img_hash", "ocr_text"]]
+            yield pdf[[*cols, "img_hash", "ocr_text"]]
 
+    schema = T.StructType(
+        [T.StructField(c, imgs.schema[c].dataType) for c in cols]
+        + [T.StructField("img_hash", T.LongType()), T.StructField("ocr_text", T.StringType())]
+    )
     # persist the miss results ONCE: the memo append and the output both
     # read them, and neither may rescan the (ever-growing) memo table —
     # OCR batch cost must track the batch, not the memo size. (A failure
     # replay re-enters this function and resolves through the memo read
     # above, so rereading-for-consistency here is unnecessary.)
-    fresh = misses.mapInPandas(
-        run, schema=f"{id_col} string, pos int, img_hash long, ocr_text string"
-    ).persist()
+    fresh = misses.mapInPandas(run, schema=schema).persist()
     # memoize distinct new results (dedupe per hash — cache semantics).
     # The count doubles as the materialization action for the persisted
     # batch; an all-hits steady run appends NOTHING, so the memo's file
@@ -221,11 +216,11 @@ def run_ocr_phase(
         ).dropDuplicates(["img_hash"]).coalesce(8).write.mode("append").parquet(
             memo_path
         )
-    fresh_rows = fresh.select(id_col, "pos", "ocr_text")
+    fresh_rows = fresh.select(*cols, "ocr_text")
 
     all_rows = fresh_rows if hits is None else hits.unionByName(fresh_rows)
     # stable page-order concat (reference joins per-image texts in order)
-    return all_rows.groupBy(id_col).agg(
+    return all_rows.groupBy(*keys).agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "ocr_text"))),
@@ -234,6 +229,26 @@ def run_ocr_phase(
             "\n",
         ).alias("ocr_t")
     )
+
+
+def run_ocr_phase(
+    spark: SparkSession,
+    enriched: DataFrame,
+    memo_path: str,
+    engine: str = "fake",
+    id_col: str = "url",
+    html_col: str = "html",
+) -> DataFrame:
+    """phase-2 job: OCR flagged rows with memoization.
+
+    Returns (url, ocr_t) for every needs_ocr row; appends new memo
+    entries (img_hash, ocr_text) to ``memo_path``.
+    """
+    flagged = enriched.filter(F.col("needs_ocr")).select(id_col, html_col)
+    imgs = flagged.select(
+        id_col, F.posexplode(extract_images_expr(html_col)).alias("pos", "img")
+    )
+    return _ocr_with_memo(spark, imgs, memo_path, engine, [id_col])
 
 
 def run_pdf_ocr_phase(
@@ -251,10 +266,8 @@ def run_pdf_ocr_phase(
     order (:86-90 ``append_page``). The reference caches by md5 of the
     whole PDF (:71-83); here the memo is finer-grained — per image
     content hash — so a page edit invalidates only its own images.
-    Same batch-proportional memo discipline as run_ocr_phase.
+    Same memo as run_ocr_phase.
     """
-    ocr_fn = ENGINES[engine]
-
     imgs = docs.select(
         F.col(id_col),
         F.posexplode(pdf_page_images_expr(html_col)).alias("pos", "pi"),
@@ -264,48 +277,4 @@ def run_pdf_ocr_phase(
         F.col("pi.page_i").alias("page_i"),
         F.col("pi.image").alias("img"),
     )
-    imgs = imgs.withColumn("img_hash", F.xxhash64("img"))
-
-    memo_exists = os.path.isdir(memo_path) and any(
-        f.endswith(".parquet") for f in os.listdir(memo_path)
-    )
-    if memo_exists:
-        memo = spark.read.parquet(memo_path)
-        hits = imgs.join(memo, "img_hash", "inner").select(
-            id_col, "pos", "page_i", "ocr_text"
-        )
-        misses = imgs.join(memo.select("img_hash"), "img_hash", "left_anti")
-    else:
-        hits = None
-        misses = imgs
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf["ocr_text"] = [_ocr_or_none(ocr_fn, bytes(b)) for b in pdf["img"]]
-            yield pdf[[id_col, "pos", "page_i", "img_hash", "ocr_text"]]
-
-    fresh = misses.mapInPandas(
-        run,
-        schema=f"{id_col} string, pos int, page_i int, img_hash long, ocr_text string",
-    ).persist()
-    # skip-empty + coalesce: same memo-file-count discipline as
-    # run_ocr_phase — steady all-hits reps must not append empty files
-    if fresh.count():
-        # same retry discipline as run_ocr_phase: failures not memoized
-        fresh.filter(F.col("ocr_text").isNotNull()).select(
-            "img_hash", "ocr_text"
-        ).dropDuplicates(["img_hash"]).coalesce(8).write.mode("append").parquet(
-            memo_path
-        )
-    fresh_rows = fresh.select(id_col, "pos", "page_i", "ocr_text")
-
-    all_rows = fresh_rows if hits is None else hits.unionByName(fresh_rows)
-    return all_rows.groupBy(id_col, "page_i").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "ocr_text"))),
-                lambda x: x["ocr_text"],
-            ),
-            "\n",
-        ).alias("ocr_t")
-    )
+    return _ocr_with_memo(spark, imgs, memo_path, engine, [id_col, "page_i"])

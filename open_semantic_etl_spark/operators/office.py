@@ -6,9 +6,15 @@ The reference reaches these formats through an HTTP hop to Apache Tika
 title/author → ``title_txt``/``author_ss``); this module is the
 from-scratch in-engine replacement, running stdlib ``zipfile`` +
 ``xml.etree`` inside the same Arrow-batched UDFs as the HTML/PDF tier.
-Routing: ``extract_html`` (operators/htmlx.py) sends every sniffed
-``PK\\x03\\x04`` payload here first; non-office zips fall back to the
-plain container content-type (and the zip-explode operator).
+Routing: ``extract_html`` (operators/htmlx.py) is the one function
+that picks an extractor here — ``extract_office`` for a sniffed
+``PK\\x03\\x04`` payload (non-office zips fall back to the plain
+container content-type and the zip-explode operator), ``extract_plist``
+for both plist forms, ``extract_rtf`` for the ``{\\rtf`` prefix and
+``extract_svg``/``extract_fb2`` for those XML roots. Every extractor
+returns the same office-result shape (content/title/author/
+content_type/n_blocks/ok/err), which extract_html adopts whole; the
+``office_extract`` query projects that result.
 
 Format knowledge is the public ECMA-376 (OOXML) and OASIS ODF 1.2
 specs:
@@ -498,40 +504,6 @@ def _xps_extract(
 
 
 # --------------------------------------------------------------------------
-
-
-def extract_vobject(data: bytes) -> dict | None:
-    """iCalendar / vCard payloads under the office-extraction result
-    shape (content/title/author/content_type/n_blocks/ok/err); None
-    when the payload is not a vObject. Routing + unfold semantics live
-    in htmlx (_vobject_sniff/_vobject_extract) so extract_html and this
-    chain stay observably identical."""
-    from open_semantic_etl_spark.operators.htmlx import (
-        _vobject_extract,
-        _vobject_sniff,
-    )
-
-    try:
-        text = data.decode("utf-8", "replace")
-    except Exception:  # noqa: BLE001 — total-function contract
-        return None
-    vo = _vobject_sniff(text)
-    if vo is None:
-        return None
-    _, ctype, titleprop = vo
-    body, title = _vobject_extract(text, titleprop)
-    return {
-        "content": body.strip(),
-        "title": title,
-        "author": None,
-        "content_type": ctype,
-        "n_blocks": 1,
-        "ok": True,
-        "err": None,
-    }
-
-
-# --------------------------------------------------------------------------
 # EPUB (OCF zip container + OPF package; chapters are XHTML and ride
 # the repo's HTML scanner — reference covers EPUB via Tika's EpubParser,
 # enhance_extract_text_tika_server.py:33-262)
@@ -884,63 +856,6 @@ def extract_rtf(data: bytes) -> dict | None:
         res["ok"] = False
         res["err"] = f"{type(e).__name__}: {e}"
     return res
-
-
-# --------------------------------------------------------------------------
-# Spark stage: full office struct (content + title + AUTHOR — the
-# generic extract_html result carries no author field, so the office
-# query exposes it through this dedicated expr)
-# --------------------------------------------------------------------------
-
-
-def office_expr(bytes_col):
-    """Arrow-batched Column: zip bytes → office-extraction struct
-    (null struct fields for non-office payloads)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    rtype = T.StructType(
-        [
-            T.StructField("content", T.StringType(), True),
-            T.StructField("title", T.StringType(), True),
-            T.StructField("author", T.StringType(), True),
-            T.StructField("content_type", T.StringType(), True),
-            T.StructField("n_blocks", T.IntegerType(), True),
-            T.StructField("ok", T.BooleanType(), True),
-            T.StructField("err", T.StringType(), True),
-        ]
-    )
-    empty = {k.name: None for k in rtype.fields}
-
-    # NOTE: no type annotations on `run` — pandas is imported locally,
-    # so the stringified hints (PEP 563) would not resolve when
-    # pandas_udf inspects the signature
-    def run(series):
-        from open_semantic_etl_spark.operators.cfb import (
-            extract_cfb,
-            extract_tnef,
-        )
-
-        def one(b):
-            if b is None:
-                return empty
-            b = bytes(b)
-            return (
-                extract_office(b)
-                or extract_rtf(b)
-                or extract_cfb(b)
-                or extract_tnef(b)
-                or extract_plist(b)
-                or extract_svg(b)
-                or extract_fb2(b)
-                or extract_vobject(b)
-                or empty
-            )
-
-        return pd.DataFrame([one(b) for b in series])
-
-    return F.pandas_udf(run, rtype)(bytes_col)
 
 
 # --------------------------------------------------------------------------

@@ -19,6 +19,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
 # shared: small deterministic slices of the documents table
@@ -640,23 +641,29 @@ def _build_office(d: int) -> bytes:
     )
 
 
+#: extract_html's office-result fields
+_OFFICE_TYPE = T.StructType(
+    [T.StructField(n, T.StringType()) for n in ("content", "title", "author", "content_type")]
+    + [T.StructField("n_blocks", T.IntegerType())]
+)
+
+
 def q_office_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """native office text extraction: content lines + core-properties
     title/author + sniffed mimetype for DOCX / XLSX / ODT / RTF payloads
     plus the legacy OLE family (.doc piece table, .xls BIFF8, .ppt text
     atoms, .msg property streams — operators/cfb.py), EPUB (OCF/OPF
     spine walk), iCalendar (RFC 5545 unfold + SUMMARY title), XPS
-    (ECMA-388 fdseq→fdoc→fpage Glyphs walk) and binary plists
-    (plistlib render). The
-    same extraction also rides the generic extract_html PK/OLE-sniff
-    routing (pytest-pinned in tests/test_office_eml.py + test_cfb.py);
-    this query pins the field values against the DuckDB oracle."""
-    from open_semantic_etl_spark.operators.office import office_expr
+    (ECMA-388 fdseq→fdoc→fpage Glyphs walk), SVG, FictionBook2 and
+    binary plists (plistlib render). A projection of the enrichment's
+    own extract_html dispatch (``extract_expr``), so the oracle pins
+    the routing production runs."""
+    from open_semantic_etl_spark.operators.html_extract import extract_expr
 
     src = _binary_source(
         spark, sf_dir, 200, _build_office, "file:///docs/{d}.office"
     )
-    o = src.select("url", office_expr(F.col("html")).alias("o"))
+    o = src.select("url", extract_expr(_OFFICE_TYPE).alias("o"))
     return o.select(
         "url",
         F.col("o.content").alias("content_txt"),
@@ -834,23 +841,33 @@ def _build_media(d: int) -> bytes:
                                         "ARTIST": f"Artist {d}"})
 
 
+#: extract_html's media fields (``datetime`` is the ISO string)
+_MEDIA_TYPE = T.StructType(
+    [T.StructField(n, T.StringType())
+     for n in ("content", "title", "author", "content_type", "datetime")]
+    + [T.StructField("width", T.IntegerType()), T.StructField("height", T.IntegerType()),
+       T.StructField("duration_ms", T.LongType()), T.StructField("ok", T.BooleanType())]
+)
+
+
 def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """real binary media metadata: EXIF/PNG-text/GIF/TIFF/BMP dims +
     ID3/RIFF-INFO/Vorbis/ilst tags + durations (operators/media.py;
     reference: Tika's image/audio parsers via
-    enhance_extract_text_tika_server.py:33-262)."""
-    from open_semantic_etl_spark.operators.media import media_expr
+    enhance_extract_text_tika_server.py:33-262) — a projection of
+    extract_html's media route (``extract_expr``)."""
+    from open_semantic_etl_spark.operators.html_extract import extract_expr
 
     src = _binary_source(spark, sf_dir, 200, _build_media, "file:///media/{d}.bin")
     m = F.col("m")
-    return src.select("url", media_expr(F.col("html")).alias("m")).select(
+    return src.select("url", extract_expr(_MEDIA_TYPE).alias("m")).select(
         "url",
         m["width"].alias("width"), m["height"].alias("height"),
         m["duration_ms"].alias("duration_ms"),
         m["title"].alias("title_txt"), m["author"].alias("author_s"),
         m["content_type"].alias("content_type_s"),
         m["content"].alias("content_txt"),
-        m["media_dt"].alias("media_dt_s"),
+        m["datetime"].alias("media_dt_s"),
         m["ok"].cast("int").alias("ok"),
     )
 

@@ -292,7 +292,7 @@ def test_office_expr_chain_handles_cfb():
 
     doc = build_doc(["chain order check."])
     assert extract_office(doc) is None
-    assert extract_rtf(doc) is None  # cfb is the third link in office_expr
+    assert extract_rtf(doc) is None  # only the OLE label's extractor reads it
 
 
 def test_truncations_never_raise():

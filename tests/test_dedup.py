@@ -1246,6 +1246,34 @@ def test_dedup_ingest_batch_flow_and_committed_replay(spark, corpus, tmp_path):
     assert spark.read.parquet(f"{path}/bands").count() == n_bands
 
 
+def test_dedup_ingest_batch_scans_bands_once(spark, corpus, tmp_path, monkeypatch):
+    """one ingest reads the persisted bands table once: the probe's
+    novel ids are materialized before the keep-set plan, whose
+    branches would each re-derive (and rescan) them."""
+    import re
+
+    path = str(tmp_path / "ing_scan")
+    D.dedup_ingest_batch(spark, corpus.filter(F.col("doc_id") < 4), path,
+                         batch_id="b1", id_col="doc_id")
+    plans = []
+    local_checkpoint = type(corpus).localCheckpoint
+
+    def recording(df, *args, **kwargs):
+        plans.append(spark.sparkContext._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"))
+        return local_checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(type(corpus), "localCheckpoint", recording)
+    kept = D.dedup_ingest_batch(spark, corpus.filter(F.col("doc_id") >= 4), path,
+                                batch_id="b2", id_col="doc_id")
+    assert {r.doc_id for r in kept.collect()} == {4, 5, 6}
+    # a formatted plan details each node in its own paragraph; a bands
+    # scan is the one whose output carries the bands bucket column _bb
+    scans = [node for plan in plans for node in plan.split("\n\n")
+             if re.match(r"\(\d+\) Scan parquet", node) and "_bb" in node]
+    assert len(scans) == 1, scans
+
+
 def test_dedup_ingest_batch_within_batch_dedup(spark, corpus, tmp_path):
     """colliding docs within one batch keep the smaller id (the
     stream_dedup_ingest rule)."""

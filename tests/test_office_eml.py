@@ -403,10 +403,7 @@ def test_epub_spine_order_and_opf_metadata():
 
 def test_vobject_ics_vcf_labeling_and_unfold():
     """iCalendar/vCard: content-type labels, RFC 5545 line unfolding,
-    SUMMARY/FN as title, body preserved as one block; both the
-    extract_html path and the office_expr chain adapter agree."""
-    from open_semantic_etl_spark.operators.office import extract_vobject
-
+    SUMMARY/FN as title, body preserved as one block."""
     ics = (
         b"BEGIN:VCALENDAR\r\nVERSION:2.0\r\nBEGIN:VEVENT\r\n"
         b"SUMMARY;LANGUAGE=de:Planungstreffen im\r\n  Haus B\r\n"
@@ -418,15 +415,11 @@ def test_vobject_ics_vcf_labeling_and_unfold():
     assert r["title"] == "Planungstreffen im Haus B"
     assert "SUMMARY;LANGUAGE=de:Planungstreffen im Haus B" in r["content"]
     assert r["n_blocks"] == 1 and r["ok"]
-    a = extract_vobject(ics)
-    assert a["content"] == r["content"] and a["title"] == r["title"]
-    assert a["content_type"] == "text/calendar" and a["author"] is None
 
     vcf = b"BEGIN:VCARD\nVERSION:4.0\nFN:Erika Mustermann\nEND:VCARD"
     v = extract_html(vcf)
     assert v["content_type"] == "text/vcard" and v["title"] == "Erika Mustermann"
     # non-vobject text is untouched
-    assert extract_vobject(b"just some text") is None
     assert extract_html(b"BEGINNING of a story")["content_type"] == "text/plain"
 
 

@@ -18,6 +18,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from open_semantic_etl_spark.operators.eml import parse_eml
+from open_semantic_etl_spark.operators.htmlx import extract_html
 from open_semantic_etl_spark.operators.office import (
     build_docx,
     build_epub,
@@ -25,11 +26,15 @@ from open_semantic_etl_spark.operators.office import (
     build_xlsx,
     extract_office,
     extract_rtf,
-    extract_vobject,
     sniff_office,
 )
+from open_semantic_etl_spark.schema import EXTRACT_RESULT_TYPE
 
 _OFFICE_KEYS = {"content", "title", "author", "content_type", "n_blocks", "ok", "err"}
+#: extract_html's result: the extraction struct plus what its extractor read
+_EXTRACT_KEYS = {f.name for f in EXTRACT_RESULT_TYPE.fields} | {
+    "author", "width", "height", "duration_ms", "datetime",
+}
 _EML_KEYS = {
     "message_from_ss", "message_to_ss", "subject_txt", "message_dt",
     "content_txt", "ok", "err",
@@ -51,6 +56,11 @@ def _check_office_shape(r):
     for k in ("content", "title", "author", "err"):
         if r[k] is not None:
             r[k].encode("utf-8")
+
+
+def _check_extract_shape(r):
+    assert set(r) == _EXTRACT_KEYS
+    _check_office_shape({k: r[k] for k in _OFFICE_KEYS})
 
 
 @st.composite
@@ -103,7 +113,7 @@ def test_office_rtf_total_on_random_bytes(data):
 def test_office_rtf_total_on_mutated_documents(data):
     _check_office_shape(extract_office(data))
     _check_office_shape(extract_rtf(data))
-    _check_office_shape(extract_vobject(data))
+    _check_extract_shape(extract_html(data))
 
 
 @settings(max_examples=150, deadline=None)
