@@ -33,6 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
+from open_semantic_etl_spark.functions.binding import let
+from open_semantic_etl_spark.operators.textstats import _word_ngrams
 from open_semantic_etl_spark.plans.checkpoint import (
     append_batch,
     batch_manifests,
@@ -138,6 +140,11 @@ def dedup_paragraphs(
 # ---------------------------------------------------------------------------
 
 
+def _words(text: Column) -> Column:
+    """the dedup tokenizer: lowercase, trim, split on whitespace."""
+    return F.split(F.lower(F.trim(text)), r"\s+")
+
+
 def word_shingles(text: Column, n: int = 3, pad_short: bool = True) -> Column:
     """lowercased word n-grams (distinct), pure Column expression.
 
@@ -151,18 +158,14 @@ def word_shingles(text: Column, n: int = 3, pad_short: bool = True) -> Column:
     tokenizing split runs once per row — captured free in the
     per-gram lambda it re-ran per ELEMENT (~230×/doc, the single
     hottest line of the decontamination scan before binding)."""
-    from open_semantic_etl_spark.functions.binding import let
 
     def shingles(words: Column) -> Column:
-        k = F.size(words) - (n - 1)
-        short = F.array(words[0]) if pad_short else F.array().cast("array<string>")
-        grams = F.when(k >= 1, F.transform(
-            F.sequence(F.lit(1), k),
-            lambda i: F.concat_ws(" ", *[F.element_at(words, i + j) for j in range(n)]),
-        )).otherwise(short)
+        grams = _word_ngrams(words, n)
+        if pad_short:
+            grams = F.when(F.size(words) >= n, grams).otherwise(F.array(words[0]))
         return F.array_distinct(grams)
 
-    return let(F.split(F.lower(F.trim(text)), r"\s+"), shingles)
+    return let(_words(text), shingles)
 
 
 def _minhash_batch_factory(num_hashes: int, shingle_n: int):
@@ -669,32 +672,6 @@ def ngram_decontaminate(
 # ---------------------------------------------------------------------------
 
 
-def _tokens_and_grams(text: Column, n: int) -> Column:
-    """struct<nt:int, gs:array<string>>: token count plus word
-    ``n``-grams in document order (NOT distinct — positions matter;
-    index in the array == 0-based start token). Tokenizer is
-    single-sourced with :func:`word_shingles` (lowercase, trim, split
-    on whitespace); BOTH outputs come from one let-bound token array
-    so the split runs once per row — not once per gram, and not again
-    for the count."""
-    from open_semantic_etl_spark.functions.binding import let
-
-    def body(words: Column) -> Column:
-        k = F.size(words) - (n - 1)
-        gs = F.when(
-            k >= 1,
-            F.transform(
-                F.sequence(F.lit(1), k),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(words, i + j) for j in range(n)]
-                ),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        return F.struct(F.size(words).alias("nt"), gs.alias("gs"))
-
-    return let(F.split(F.lower(F.trim(text)), r"\s+"), body)
-
-
 def exact_substring_spans(
     df: DataFrame,
     text_col: str = "text",
@@ -726,9 +703,13 @@ def exact_substring_spans(
     tier at all (SURVEY §2 LLM-ops addendum); semantics follow the
     paper.
     """
+    # token count and document-order grams (index == 0-based start
+    # token) from one let-bound token array: the split runs once per row
     base = df.select(
         F.col(id_col).alias("_id"),
-        _tokens_and_grams(F.col(text_col), n).alias("_tg"),
+        let(_words(F.col(text_col)), lambda w: F.struct(
+            F.size(w).alias("nt"), _word_ngrams(w, n).alias("gs")
+        )).alias("_tg"),
     ).select(
         "_id",
         F.col("_tg.nt").alias("total_tokens"),
@@ -892,6 +873,25 @@ def cosine(a: Column, b: Column) -> Column:
     return dot / (na * nb)
 
 
+def _cosine_pairs(vecs: DataFrame, threshold: float, on: str | None = None) -> DataFrame:
+    """``(id_a, id_b, cos)`` over the pairs of ``vecs`` (``_id``,
+    ``v`` array<double>) joined on ``on`` (None: all pairs), ``id_a <
+    id_b``, ``cos`` = JVM left-fold cosine rounded to 4 dp, kept when
+    ``≥ threshold`` — the one pair tail of the brute and SemDeDup
+    paths."""
+    a, b = vecs.alias("a"), vecs.alias("b")
+    return (
+        (a.crossJoin(b) if on is None else a.join(b, on))
+        .filter(F.col("a._id") < F.col("b._id"))
+        .select(
+            F.col("a._id").alias("id_a"),
+            F.col("b._id").alias("id_b"),
+            F.round(cosine(F.col("a.v"), F.col("b.v")), 4).alias("cos"),
+        )
+        .filter(F.col("cos") >= threshold)
+    )
+
+
 def embedding_dup_pairs(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -901,15 +901,8 @@ def embedding_dup_pairs(
     """pairs with cosine ≥ threshold (brute self-join — verification
     path; the scale path blocks candidates via sign-LSH first,
     see operators/similarity.py)."""
-    v = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("v"))
-    a, b = v.alias("a"), v.alias("b")
-    cos = cosine(F.col("a.v").cast("array<double>"), F.col("b.v").cast("array<double>"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"), F.round(cos, 4).alias("cos"))
-        .filter(F.col("cos") >= threshold)
-    )
+    v = F.col(vec_col).cast("array<double>")
+    return _cosine_pairs(df.select(F.col(id_col).alias("_id"), v.alias("v")), threshold)
 
 
 def semdedup_pairs(
@@ -938,9 +931,12 @@ def semdedup_pairs(
     is written partitioned BY cell once (the IVF layout — same
     quantizer, same table) and each cell's pair scan runs
     partition-local with no further exchange.  The coarse quantizer is
-    the shared deterministic trainer (similarity.train_centroids), so
-    the ``semdedup`` golden (tools/gen_goldens.py) re-derives cells,
-    pairs, and left-fold cosines bit-identically."""
+    the IVF one: pass the ``centroids`` an IVF index already trained
+    (the ``neardup_embedding`` query shares the ``ann`` query's), else
+    ``similarity.train_centroids`` trains them here.  The pair tail is
+    :func:`embedding_dup_pairs`'s, so the ``semdedup`` golden
+    (tools/gen_goldens.py) re-derives cells, pairs, and left-fold
+    cosines bit-identically."""
     from open_semantic_etl_spark.operators.similarity import (
         nearest_cells_expr,
         train_centroids,
@@ -954,18 +950,7 @@ def semdedup_pairs(
         v.alias("v"),
         nearest_cells_expr(v, centroids, 1)[0].alias("cell"),
     ).filter(F.col("cell").isNotNull())
-    a, b = base.alias("a"), base.alias("b")
-    cos = cosine(F.col("a.v"), F.col("b.v"))
-    return (
-        a.join(b, "cell")
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.round(cos, 4).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
-    )
+    return _cosine_pairs(base, threshold, on="cell")
 
 
 def dedup_ingest_batch(

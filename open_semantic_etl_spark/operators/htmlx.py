@@ -855,6 +855,8 @@ def extract_html(data: bytes | None, _depth: int = 0) -> dict:
             res["content_type"] = "message/rfc822"
             res["content"] = pe["content_txt"] or ""
             res["title"] = pe["subject_txt"]
+            # the sender, as the .msg / TNEF routes report it
+            res["author"] = (pe["message_from_ss"] or [None])[0]
             res["meta_ts"] = _iso_to_dt(pe["message_dt"])
             res["n_blocks"] = 1 if res["content"] else 0
             res["n_kept_blocks"] = res["n_blocks"]

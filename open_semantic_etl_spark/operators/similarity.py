@@ -13,7 +13,14 @@ only candidate rows. The IVF path (``ivf_topk``) replaces the random
 planes with a k-means coarse quantizer — same plumbing, different
 bucketer: cells adapt to the data distribution, so recall per probed
 candidate is higher on clustered embeddings (the common case for real
-encoder outputs).
+encoder outputs). PQ/ADC (``pq_topk``, ``ivfpq_topk``) scans m-byte
+codes instead of vectors.
+
+Each kernel is written once: ``_sqdist`` is the one squared-L2 matrix
+(Lloyd's assignment, cell routing, PQ codes, ADC tables); ``_lloyd``
+over ``_train_sample`` trains the IVF centroids and every PQ subspace;
+``_matrix_udf`` is the one null-safe numpy UDF (large-plane signatures,
+cells, codes); ``_rank_topk`` ranks every path's candidates.
 """
 
 from __future__ import annotations
@@ -21,9 +28,30 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from open_semantic_etl_spark.operators.dedup import cosine
+
+
+def _rank_topk(cands: DataFrame, score: Column, k: int) -> DataFrame:
+    """``(query_id, nbr_id, cos, rk)``: ``score`` (``cos``) per
+    candidate row, ranked per query — descending score, ties to the
+    lower nbr_id — and cut at ``rk ≤ k``.  The one ranker of every ANN
+    path: one shuffle for the per-query window over the candidate
+    set."""
+    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("nbr_id"))
+    return (
+        cands.select("query_id", "nbr_id", score.alias("cos"))
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("query_id", "nbr_id", "cos", "rk")
+    )
+
+
+def _cos_topk(cands: DataFrame, k: int) -> DataFrame:
+    """:func:`_rank_topk` by the 4-dp JVM-fold cosine of ``qv``·``v``."""
+    return _rank_topk(cands, F.round(cosine(F.col("qv"), F.col("v")), 4), k)
 
 
 def brute_force_topk(
@@ -45,20 +73,48 @@ def brute_force_topk(
     scored = base.crossJoin(F.broadcast(queries)).filter(
         F.col("nbr_id") != F.col("query_id")
     )
-    scored = scored.select(
-        "query_id", "nbr_id", F.round(cosine(F.col("qv"), F.col("v")), 4).alias("cos")
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "nbr_id", "cos", "rk")
-    )
+    return _cos_topk(scored, k)
 
 
 def random_planes(dim: int, n_planes: int = 16, seed: int = 42) -> np.ndarray:
     """deterministic Gaussian hyperplanes (public sign-LSH scheme)."""
     return np.random.RandomState(seed).randn(n_planes, dim)
+
+
+def _sqdist(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """(rows of X) × (rows of C) squared-L2 matrix — the one distance
+    kernel of Lloyd's assignment, cell routing, PQ encoding and the ADC
+    tables.  Its arithmetic (broadcast difference, square, last-axis
+    sum) is part of the golden contract (tools/gen_goldens.py)."""
+    return ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
+
+
+def _normalize(X: np.ndarray) -> np.ndarray:
+    """rows of ``X`` over their L2 norms (a zero row stays zero) — the
+    PQ space: codebooks, codes and ADC queries all live in it."""
+    norms = np.sqrt((X * X).sum(axis=1))
+    norms[norms == 0] = 1.0
+    return X / norms[:, None]
+
+
+def _matrix_udf(vec: Column, dim: int, rows_fn, out_type) -> Column:
+    """one vectorized numpy pandas UDF over ``vec``: the batch's valid
+    rows (non-null, length ``dim``) stack into one float64 matrix and
+    ``rows_fn`` maps it to one value per row; a null or wrong-length
+    vector gets null instead of poisoning the batch with an
+    object-dtype array.  Whatever ``rows_fn`` closes over (planes,
+    centroids, codebooks) ships once per task in the closure, one Arrow
+    crossing per batch."""
+    import pandas as pd
+
+    def batch(vs):
+        ok = [v is not None and len(v) == dim for v in vs]
+        if not any(ok):
+            return pd.Series([None] * len(vs), dtype=object)
+        vals = iter(rows_fn(np.array([np.asarray(v, np.float64) for v, g in zip(vs, ok) if g])))
+        return pd.Series([next(vals) if g else None for g in ok], dtype=object)
+
+    return F.pandas_udf(batch, out_type)(vec)
 
 
 #: above this many plane coefficients the JVM-literal form is replaced
@@ -71,37 +127,20 @@ def signature_expr(vec: Column, planes: np.ndarray) -> Column:
     """bit-packed sign signature: bit_j = (v · plane_j) > 0.
 
     Small plane matrices inline as JVM Column algebra (whole-stage
-    codegen, zero Python). Large ones (dim×n_planes > 2048) switch to a
-    vectorized numpy pandas UDF whose plane matrix ships ONCE per task
-    in the serialized closure instead of as plan literals — at dim 768
-    × 16 planes the literal form is a 12k-node expression tree.
+    codegen, zero Python). Large ones (dim×n_planes > 2048) switch to
+    :func:`_matrix_udf`, whose plane matrix ships ONCE per task in the
+    serialized closure instead of as plan literals — at dim 768 × 16
+    planes the literal form is a 12k-node expression tree.
     """
     if planes.size > _MAX_INLINE_COEFFS:
-        import pandas as pd
-        from pyspark.sql import types as T
-
         P = planes.astype(np.float64)
-        dim = P.shape[1]
+        weights = (1 << np.arange(P.shape[0], dtype=np.uint64)).astype(np.uint64)
 
-        def sig_batch(batch):
-            # null / wrong-length vectors get a null signature (same
-            # semantics as the inline JVM path) instead of poisoning the
-            # whole batch matmul with an object-dtype array
-            ok = np.fromiter(
-                (v is not None and len(v) == dim for v in batch),
-                dtype=bool, count=len(batch),
-            )
-            out = np.full(len(batch), None, dtype=object)
-            if ok.any():
-                M = np.array(
-                    [np.asarray(v, dtype=np.float64) for v, g in zip(batch, ok) if g]
-                )
-                bits = (M @ P.T) > 0  # (valid rows, n_planes)
-                weights = (1 << np.arange(P.shape[0], dtype=np.uint64)).astype(np.uint64)
-                out[ok] = [int(x) for x in (bits.astype(np.uint64) @ weights).view(np.int64)]
-            return pd.Series(out)
+        def sigs(M):
+            bits = (M @ P.T) > 0  # (valid rows, n_planes)
+            return [int(x) for x in (bits.astype(np.uint64) @ weights).view(np.int64)]
 
-        return F.pandas_udf(sig_batch, T.LongType())(vec)
+        return _matrix_udf(vec, P.shape[1], sigs, T.LongType())
     bits = []
     for j, plane in enumerate(planes):
         arr = F.array(*[F.lit(float(x)) for x in plane])
@@ -115,27 +154,12 @@ def signature_expr(vec: Column, planes: np.ndarray) -> Column:
     return out.cast("long")
 
 
-def train_centroids(
-    df: DataFrame,
-    k_cells: int = 16,
-    iters: int = 5,
-    sample: int = 4096,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+def _train_sample(
+    df: DataFrame, sample: int, vec_col: str, id_col: str, k: int
 ) -> np.ndarray:
-    """deterministic Lloyd's k-means coarse quantizer for IVF.
-
-    Trains on a BOUNDED sample collected to the driver (first ``sample``
-    vectors in id order) — the standard IVF recipe (faiss trains on
-    O(100×k) samples; centroids are k×dim floats, trivially
-    broadcastable), so the driver action is O(sample), never O(N).
-    Determinism contract (pinned by the ann_ivf golden): init = the
-    first ``k_cells`` sample vectors in id order; assignment = argmin of
-    the squared-L2 matrix ``((X[:,None,:]-C[None,:,:])**2).sum(-1)``
-    (ties → lowest centroid index, numpy argmin); update = float64
-    ``np.mean`` over members in id order; an emptied cell keeps its
-    previous centroid; exactly ``iters`` rounds (no early stop).
-    """
+    """the bounded driver training sample: the first ``sample`` non-null
+    vectors in id order (the faiss recipe trains on O(100×k)), so the
+    driver action is O(sample), never O(N); raises below ``k`` rows."""
     rows = (
         df.select(F.col(id_col).alias("i"), F.col(vec_col).cast("array<double>").alias("v"))
         .filter(F.col("v").isNotNull())
@@ -144,45 +168,53 @@ def train_centroids(
         .collect()
     )
     X = np.array([r["v"] for r in rows], dtype=np.float64)
-    if len(X) < k_cells:
-        raise ValueError(f"need >= {k_cells} vectors to train, got {len(X)}")
-    C = X[:k_cells].copy()
+    if len(X) < k:
+        raise ValueError(f"need >= {k} vectors to train, got {len(X)}")
+    return X
+
+
+def _lloyd(X: np.ndarray, k: int, iters: int) -> np.ndarray:
+    """deterministic Lloyd's k-means: init = the first ``k`` rows;
+    assignment = argmin of :func:`_sqdist` (ties → lowest centroid
+    index, numpy argmin); update = float64 ``np.mean`` over members in
+    row order; an emptied cell keeps its previous centroid; exactly
+    ``iters`` rounds (no early stop)."""
+    C = X[:k].copy()
     for _ in range(iters):
-        assign = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1).argmin(axis=1)
-        for c in range(k_cells):
+        assign = _sqdist(X, C).argmin(axis=1)
+        for c in range(k):
             members = X[assign == c]
             if len(members):
                 C[c] = members.mean(axis=0)
     return C
 
 
+def train_centroids(
+    df: DataFrame,
+    k_cells: int = 16,
+    iters: int = 5,
+    sample: int = 4096,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> np.ndarray:
+    """deterministic Lloyd's k-means coarse quantizer for IVF:
+    :func:`_lloyd` over :func:`_train_sample` — centroids are k×dim
+    floats, trivially broadcastable.  The determinism contract is
+    pinned by the ann_ivf golden."""
+    return _lloyd(_train_sample(df, sample, vec_col, id_col, k_cells), k_cells, iters)
+
+
 def nearest_cells_expr(vec: Column, centroids: np.ndarray, nprobe: int = 1) -> Column:
     """array<int> of the ``nprobe`` nearest centroid ids, distance order
-    (ties → lower id). Vectorized numpy pandas UDF — the centroid matrix
-    ships once per task in the closure, one Arrow crossing per batch;
+    (ties → lower id) — a :func:`_matrix_udf` over :func:`_sqdist`;
     null / wrong-length vectors get a null cell list."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
     C = centroids.astype(np.float64)
-    dim = C.shape[1]
 
-    def cells_batch(batch):
-        ok = np.fromiter(
-            (v is not None and len(v) == dim for v in batch),
-            dtype=bool, count=len(batch),
-        )
-        out = np.full(len(batch), None, dtype=object)
-        if ok.any():
-            M = np.array([np.asarray(v, dtype=np.float64) for v, g in zip(batch, ok) if g])
-            d = ((M[:, None, :] - C[None, :, :]) ** 2).sum(-1)  # (rows, k)
-            idx = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
-            vals = np.empty(idx.shape[0], dtype=object)
-            vals[:] = [[int(c) for c in r] for r in idx]
-            out[ok] = vals
-        return pd.Series(out)
+    def cells(M):
+        idx = np.argsort(_sqdist(M, C), axis=1, kind="stable")[:, :nprobe]
+        return [[int(c) for c in r] for r in idx]
 
-    return F.pandas_udf(cells_batch, T.ArrayType(T.IntegerType()))(vec)
+    return _matrix_udf(vec, C.shape[1], cells, T.ArrayType(T.IntegerType()))
 
 
 def ivf_topk(
@@ -229,15 +261,7 @@ def ivf_topk(
         base.join(F.broadcast(qex), "cell")
         .filter(F.col("nbr_id") != F.col("query_id"))
     )
-    scored = cands.select(
-        "query_id", "nbr_id", F.round(cosine(F.col("qv"), F.col("v")), 4).alias("cos")
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "nbr_id", "cos", "rk")
-    )
+    return _cos_topk(cands, k)
 
 
 def lsh_topk(
@@ -249,19 +273,17 @@ def lsh_topk(
     n_planes: int = 16,
     bands: int = 4,
     seed: int = 42,
-    dim: int | None = None,
+    *,
+    dim: int,
 ) -> DataFrame:
     """approximate top-k: candidates share ≥1 sign-LSH band with the query.
 
     16 planes in 4 bands of 4 bits → a candidate must agree with the
     query on all 4 signs of some band (collision prob (1-θ/π)^4 per
-    band — high for near-0 angles, steeply decaying).
+    band — high for near-0 angles, steeply decaying).  ``dim`` (the
+    embedding schema's width) sizes the planes; it is required so plan
+    construction runs no driver action.
     """
-    if dim is None:
-        # dim inference costs a driver action inside plan construction —
-        # callers at scale should pass dim (it's part of the embedding
-        # schema contract); kept as a convenience for ad-hoc use
-        dim = len(df.select(vec_col).first()[0])
     planes = random_planes(dim, n_planes, seed)
     rows = n_planes // bands
     mask = (1 << rows) - 1
@@ -308,15 +330,7 @@ def lsh_topk(
     cands = vecs.join(F.broadcast(cand_ids), "nbr_id").join(
         F.broadcast(qvecs), "query_id"
     )
-    scored = cands.select(
-        "query_id", "nbr_id", F.round(cosine(F.col("qv"), F.col("v")), 4).alias("cos")
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "nbr_id", "cos", "rk")
-    )
+    return _cos_topk(cands, k)
 
 
 # ---------------------------------------------------------------------------
@@ -333,83 +347,38 @@ def train_pq_codebooks(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> np.ndarray:
-    """deterministic per-subspace Lloyd's codebooks, shape (m, ks, d/m),
-    trained on the L2-NORMALIZED bounded driver sample (Jégou et al.
-    2011 product quantization; the faiss recipe trains on O(100·ks)).
-
-    Same determinism contract as ``train_centroids`` per subspace —
-    init = first ``ks`` sample sub-vectors in id order, argmin
-    assignment (ties → lowest index), float64 ``np.mean`` update,
-    emptied cells keep their centroid, exactly ``iters`` rounds — so
-    the ann_pq golden (tools/gen_goldens.py, an independent
-    re-derivation) is bit-identical."""
-    rows = (
-        df.select(F.col(id_col).alias("i"), F.col(vec_col).cast("array<double>").alias("v"))
-        .filter(F.col("v").isNotNull())
-        .orderBy("i")
-        .limit(sample)
-        .collect()
-    )
-    X = np.array([r["v"] for r in rows], dtype=np.float64)
-    if len(X) < ks:
-        raise ValueError(f"need >= {ks} vectors to train, got {len(X)}")
+    """deterministic per-subspace Lloyd's codebooks, shape (m, ks, d/m):
+    :func:`_lloyd` on each subspace of the L2-NORMALIZED
+    :func:`_train_sample` (Jégou et al. 2011 product quantization; the
+    faiss recipe trains on O(100·ks)) — the ``train_centroids``
+    contract per subspace, so the ann_pq golden (tools/gen_goldens.py,
+    an independent re-derivation) is bit-identical."""
+    X = _train_sample(df, sample, vec_col, id_col, ks)
     dim = X.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
-    norms = np.sqrt((X * X).sum(axis=1))
-    norms[norms == 0] = 1.0
-    X = X / norms[:, None]
+    X = _normalize(X)
     dsub = dim // m
-    books = np.empty((m, ks, dsub), dtype=np.float64)
-    for j in range(m):
-        S = X[:, j * dsub : (j + 1) * dsub]
-        C = S[:ks].copy()
-        for _ in range(iters):
-            assign = ((S[:, None, :] - C[None, :, :]) ** 2).sum(-1).argmin(axis=1)
-            for c in range(ks):
-                members = S[assign == c]
-                if len(members):
-                    C[c] = members.mean(axis=0)
-        books[j] = C
-    return books
+    return np.stack([_lloyd(X[:, j * dsub : (j + 1) * dsub], ks, iters) for j in range(m)])
 
 
 def pq_codes_expr(vec: Column, books: np.ndarray) -> Column:
     """array<int> of m codebook ids (argmin per subspace over the
-    L2-normalized vector) — vectorized pandas UDF, codebooks ship once
+    L2-normalized vector) — a :func:`_matrix_udf`, codebooks ship once
     per task in the closure.  The corpus compresses to m small ints
     (32× at dim 64 / m 8 vs float64): THIS is what PQ buys at 10^12
     rows — the vector column itself never has to be scanned again."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
     B = books.astype(np.float64)
     m, ks, dsub = B.shape
-    dim = m * dsub
 
-    def codes_batch(batch):
-        ok = np.fromiter(
-            (v is not None and len(v) == dim for v in batch),
-            dtype=bool, count=len(batch),
-        )
-        out = np.full(len(batch), None, dtype=object)
-        if ok.any():
-            M = np.array([np.asarray(v, dtype=np.float64) for v, g in zip(batch, ok) if g])
-            norms = np.sqrt((M * M).sum(axis=1))
-            norms[norms == 0] = 1.0
-            M = M / norms[:, None]
-            codes = np.empty((M.shape[0], m), dtype=np.int64)
-            for j in range(m):
-                S = M[:, j * dsub : (j + 1) * dsub]
-                codes[:, j] = (
-                    ((S[:, None, :] - B[j][None, :, :]) ** 2).sum(-1).argmin(axis=1)
-                )
-            vals = np.empty(codes.shape[0], dtype=object)
-            vals[:] = [[int(c) for c in r] for r in codes]
-            out[ok] = vals
-        return pd.Series(out)
+    def codes(M):
+        M = _normalize(M)
+        per_sub = [
+            _sqdist(M[:, j * dsub : (j + 1) * dsub], B[j]).argmin(axis=1) for j in range(m)
+        ]
+        return [[int(c) for c in r] for r in zip(*per_sub)]
 
-    return F.pandas_udf(codes_batch, T.ArrayType(T.IntegerType()))(vec)
+    return _matrix_udf(vec, m * dsub, codes, T.ArrayType(T.IntegerType()))
 
 
 def _adc_query_tables(
@@ -433,43 +402,26 @@ def _adc_query_tables(
         .orderBy("i")
         .collect()
     )
-    qtabs = []
-    for r in qrows:
-        q = np.asarray(r["q"], dtype=np.float64)
-        n = np.sqrt((q * q).sum())
-        if n == 0:
-            n = 1.0
-        q = q / n
-        flat: list[float] = []
-        for j in range(m):
-            qj = q[j * dsub : (j + 1) * dsub]
-            flat.extend(float(x) for x in ((B[j] - qj[None, :]) ** 2).sum(-1))
-        qtabs.append((int(r["i"]), flat))
+    Q = _normalize(np.array([r["q"] for r in qrows], np.float64).reshape(len(qrows), m * dsub))
+    tabs = np.concatenate(
+        [_sqdist(Q[:, j * dsub : (j + 1) * dsub], B[j]) for j in range(m)], axis=1
+    )
+    qtabs = [(int(r["i"]), [float(x) for x in t]) for r, t in zip(qrows, tabs)]
     return df.sparkSession.createDataFrame(qtabs, "query_id long, qtab array<double>")
 
 
 def _adc_score_topk(cands: DataFrame, m: int, ks: int, k: int) -> DataFrame:
     """ADC fold + per-query top-k over (query_id, nbr_id, codes, qtab)
     candidate rows — the shared tail of pq_topk / ivfpq_topk.  The JVM
-    folds ``Σ_j qtab[j·ks + code_j]`` per row; ranking ties break on
-    nbr_id like every ANN path."""
+    folds ``Σ_j qtab[j·ks + code_j]`` per row, ranked by
+    :func:`_rank_topk` like every ANN path."""
     total = F.aggregate(
         F.sequence(F.lit(0), F.lit(m - 1)),
         F.lit(0.0),
         lambda acc, j: acc
         + F.element_at(F.col("qtab"), j * ks + F.element_at(F.col("codes"), j + 1) + 1),
     )
-    scored = cands.select(
-        "query_id",
-        "nbr_id",
-        F.round(F.lit(1.0) - F.lit(0.5) * total, 4).alias("cos"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "nbr_id", "cos", "rk")
-    )
+    return _rank_topk(cands, F.round(F.lit(1.0) - F.lit(0.5) * total, 4), k)
 
 
 def encode_corpus(

@@ -8,8 +8,12 @@ it composes with the extraction pipeline at zero Python cost.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from open_semantic_etl_spark.functions.binding import let
 
 # small shared English function-word list for the stopword-ratio signal
 _QUALITY_STOPWORDS = (
@@ -124,7 +128,11 @@ def _rep_stats(arr: Column) -> Column:
 
 
 def _word_ngrams(toks: Column, n: int) -> Column:
-    """space-joined word n-grams (empty array when fewer than n tokens)."""
+    """space-joined word ``n``-grams of a token array, in order (empty
+    when fewer than ``n`` tokens) — the one n-gram window: shingles,
+    exact-substring grams, repetition signals and the hashed bigram
+    features all call it.  ``toks`` must be let-bound (or a plain
+    column): the window lambda captures it."""
     idx = F.when(
         F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
     ).otherwise(F.array().cast("array<int>"))
@@ -354,8 +362,6 @@ def chunk_tokens(
     shuffle); output size is input tokens × size/stride, and the
     explode happens AFTER slicing so no quadratic intermediate exists.
     """
-    from open_semantic_etl_spark.functions.binding import let
-
     def windows(toks: Column) -> Column:
         # toks is let-bound: captured free in the per-window lambda the
         # tokenizer split would re-run per window (functions/binding.py).
@@ -396,6 +402,11 @@ def chunk_tokens(
 # deterministic stand-in (quality_clf_weights) — a trained model is
 # exactly this vector and loads through the same parameter — while the
 # featurization, hashing, scoring, and plan shape are the real thing.
+#
+# The classifier, DSIR and the bigram LM share one feature-hashing
+# sketch: _md5_bucket is the only bucket formula, _hashed_features the
+# only unigram+bigram featurization, _bucket_counts the only training
+# count pass and _bucket_score the only per-document weighted fold.
 # ---------------------------------------------------------------------------
 QUALITY_CLF_DIM = 256
 
@@ -407,6 +418,83 @@ def quality_clf_weights(dim: int = QUALITY_CLF_DIM) -> list[float]:
     return [round(((j * 2654435761) % 1997) / 1997 - 0.5, 6) for j in range(dim)]
 
 
+def _md5_bucket(f: Column, dim: int) -> Column:
+    """int bucket of one feature string: first 60 bits of md5(f) mod
+    ``dim`` — md5 (not xxhash64) precisely so the DuckDB twin re-derives
+    it independently (``('0x' || substr(md5(f),1,15))::UBIGINT``)."""
+    return (
+        F.conv(F.substring(F.md5(f), 1, 15), 16, 10).cast("long") % dim
+    ).cast("int")
+
+
+def _doc_tokens(text: Column) -> Column:
+    """the hashed estimators' tokens: lowercased whitespace tokens."""
+    return whitespace_tokens(F.lower(text))
+
+
+def _hashed_buckets(toks: Column, dim: int) -> Column:
+    """array<int> of hashed unigram+bigram feature buckets (unigrams,
+    then bigrams, in document order) — the ONE featurization shared by
+    the clf scorer and trainer and DSIR: each feature's bucket is a
+    :func:`_md5_bucket` call."""
+    return F.transform(
+        F.concat(toks, _word_ngrams(toks, 2)), lambda f: _md5_bucket(f, dim)
+    )
+
+
+def _hashed_features(text: Column, dim: int) -> Column:
+    """:func:`_hashed_buckets` of a text column, its token array
+    let-bound so the tokenizer runs once per row."""
+    return let(_doc_tokens(text), lambda t: _hashed_buckets(t, dim))
+
+
+def _bucket_score(text: Column, dim: int, table: list[float], finish) -> Column:
+    """``finish(total, n)`` over a document's hashed features, where
+    ``total`` left-folds ``table[bucket]`` over them and ``n`` counts
+    them; NULL for a featureless document.  The table rides the plan as
+    a literal array (the LSH-planes pattern); the bucket array is
+    let-bound, so ``size()`` and ``aggregate()`` share one md5 pass
+    (plan-audited: one md5 per scorer)."""
+    arr = F.array(*[F.lit(float(w)) for w in table])
+
+    def score(feats: Column) -> Column:
+        total = F.aggregate(
+            feats, F.lit(0.0), lambda acc, b: acc + F.element_at(arr, b + 1)
+        )
+        return F.when(F.size(feats) > 0, finish(total, F.size(feats)))
+
+    return let(_hashed_features(text, dim), score)
+
+
+def _bucket_counts(
+    df: DataFrame, flag: Column, text_col: str, dim: int
+) -> tuple[list[float], list[float]]:
+    """``(flagged, every)`` feature-occurrence counts per bucket: ONE
+    shuffle on int bucket keys (≤ ``dim`` groups, map-side partial agg)
+    and an O(dim) driver collect — the one training pass of the NB
+    classifier and DSIR, so corpus text is read but never shuffled."""
+    counts = (
+        df.select(
+            flag.cast("long").alias("t"),
+            F.explode(_hashed_features(F.col(text_col), dim)).alias("b"),
+        )
+        .groupBy("b")
+        .agg(F.sum("t").alias("nt"), F.count("*").alias("nr"))
+        .collect()
+    )
+    flagged, every = [0.0] * dim, [0.0] * dim
+    for r in counts:
+        flagged[r["b"]] = float(r["nt"])
+        every[r["b"]] = float(r["nr"])
+    return flagged, every
+
+
+def _log_ratio(p: list[float], q: list[float]) -> list[float]:
+    """``ln(p_j/Σp) − ln(q_j/Σq)`` per bucket."""
+    tp, tq = sum(p), sum(q)
+    return [math.log(a / tp) - math.log(b / tq) for a, b in zip(p, q)]
+
+
 def with_quality_clf(
     df: DataFrame,
     text_col: str = "text",
@@ -416,77 +504,21 @@ def with_quality_clf(
 ) -> DataFrame:
     """Adds ``clf_score`` = sigmoid(mean weight of hashed features).
 
-    Features = lowercased whitespace tokens + adjacent bigrams; bucket
-    = first 60 bits of md5(feature) mod dim — md5 (not xxhash64)
-    precisely so the DuckDB oracle can re-derive the bucketing
-    independently (``('0x' || substr(md5(f),1,15))::UBIGINT``). The
-    weight vector rides the plan as a literal array (same pattern as
-    the LSH planes); everything is JVM Column algebra — zero shuffle,
-    zero Python — and the token array is let-bound so the tokenizer
-    runs once per row. Empty documents score NULL.
+    Features = :func:`_hashed_buckets` (lowercased whitespace tokens +
+    adjacent bigrams, md5-bucketed).  The weight vector rides the plan
+    as a literal array; everything is JVM Column algebra — zero
+    shuffle, zero Python — through the :func:`_bucket_score` fold.
+    Empty documents score NULL.
     """
-    from open_semantic_etl_spark.functions.binding import let
-
     W = weights if weights is not None else quality_clf_weights()
-    dim = len(W)
-    warr = F.array(*[F.lit(float(w)) for w in W])
-
-    def score(toks: Column) -> Column:
-        bis = F.when(
-            F.size(toks) >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - 1),
-                lambda i: F.concat_ws(
-                    " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-                ),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        feats = F.concat(toks, bis)
-        total = F.aggregate(
-            feats,
-            F.lit(0.0),
-            lambda acc, f: acc
-            + F.element_at(
-                warr,
-                (
-                    F.conv(F.substring(F.md5(f), 1, 15), 16, 10).cast("long")
-                    % dim
-                    + 1
-                ).cast("int"),
-            ),
-        )
-        mean = total / F.size(feats)
-        return F.when(
-            F.size(feats) > 0, F.lit(1.0) / (F.lit(1.0) + F.exp(-mean))
-        )
-
     return df.withColumn(
         out_col,
-        F.round(let(whitespace_tokens(F.lower(F.col(text_col))), score), round_to),
-    )
-
-
-def _hashed_buckets(toks: Column, dim: int) -> Column:
-    """array<int> of hashed unigram+bigram feature buckets — the ONE
-    featurization spec shared by the DSIR estimator, the quality-clf
-    trainer and (via the same md5 formula) the clf scorer: bucket =
-    first 60 bits of md5(feature) mod dim, md5 precisely so the DuckDB
-    twin re-derives it independently
-    (``('0x' || substr(md5(f),1,15))::UBIGINT``)."""
-    bis = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(toks, i), F.element_at(toks, i + 1)
+        _bucket_score(
+            F.col(text_col), len(W), W,
+            lambda total, n: F.round(
+                F.lit(1.0) / (F.lit(1.0) + F.exp(-(total / n))), round_to
             ),
         ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.transform(
-        F.concat(toks, bis),
-        lambda f: (
-            F.conv(F.substring(F.md5(f), 1, 15), 16, 10).cast("long") % dim
-        ).cast("int"),
     )
 
 
@@ -505,50 +537,25 @@ def train_quality_clf(
     returned vector threads straight into :func:`with_quality_clf`
     (``weights=``): scoring stays the same map-only plan-literal
     machinery, now with LEARNED weights.  Featurization is
-    :func:`_hashed_buckets` — identical to the scorer's md5 spec, so a
+    :func:`_hashed_buckets` — identical to the scorer's, so a
     DuckDB twin re-derives the trained weights bit-exactly from the
     same labeled table (the DSIR pattern, q_host_cap oracle).
 
-    Scale shape (same as :func:`dsir_importance`): ONE shuffle on int
-    bucket keys (≤ ``dim`` groups, map-side partial agg) and an O(dim)
-    driver collect; training cost is one corpus pass however large the
-    corpus.  Reference bar: the reference engine has no model-based
+    Scale shape: :func:`_bucket_counts`, the pass DSIR trains with.
+    Reference bar: the reference engine has no model-based
     quality gate (SURVEY §2 LLM-ops addendum); semantics follow the
     fastText-style hashing-trick classifier (Joulin et al. 2016) with
     closed-form NB log-odds instead of SGD."""
-    import math
-
-    from open_semantic_etl_spark.functions.binding import let
-
     dim = dim if dim is not None else QUALITY_CLF_DIM
-    fcol = let(
-        whitespace_tokens(F.lower(F.col(text_col))),
-        lambda t: _hashed_buckets(t, dim),
-    )
     # an unlabeled (NULL) document is neither class: counted, it would
-    # add to the negatives through nr - np
-    counts = (
-        df.filter(label_cond.isNotNull())
-        .select(label_cond.cast("long").alias("t"), F.explode(fcol).alias("b"))
-        .groupBy("b")
-        .agg(F.sum("t").alias("np"), F.count("*").alias("nr"))
-        .collect()
+    # add to the negatives through every - pos
+    pos, every = _bucket_counts(
+        df.filter(label_cond.isNotNull()), label_cond, text_col, dim
     )
-    pos = [smoothing] * dim
-    neg = [smoothing] * dim
-    for r in counts:
-        pos[r["b"]] += float(r["np"])
-        neg[r["b"]] += float(r["nr"]) - float(r["np"])
-    tp, tn = sum(pos), sum(neg)
-    return [math.log(pos[b] / tp) - math.log(neg[b] / tn) for b in range(dim)]
-
-
-def _md5_bucket(f: Column, dim: int) -> Column:
-    """int bucket of one feature string — the md5 formula every hashed
-    estimator here shares with its DuckDB twin."""
-    return (
-        F.conv(F.substring(F.md5(f), 1, 15), 16, 10).cast("long") % dim
-    ).cast("int")
+    return _log_ratio(
+        [smoothing + p for p in pos],
+        [smoothing + (e - p) for p, e in zip(pos, every)],
+    )
 
 
 def _bigram_pair_buckets(toks: Column, dim: int) -> Column:
@@ -557,21 +564,13 @@ def _bigram_pair_buckets(toks: Column, dim: int) -> Column:
     joined bigram.  The LM trainer counts both sides from this ONE
     array (single explode, single int-key shuffle) and the scorer
     folds over it."""
-    return F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.struct(
-                _md5_bucket(F.element_at(toks, i), dim).alias("c"),
-                _md5_bucket(
-                    F.concat_ws(
-                        " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-                    ),
-                    dim,
-                ).alias("b"),
-            ),
+    return F.transform(
+        _word_ngrams(toks, 2),
+        lambda g, i: F.struct(
+            _md5_bucket(F.element_at(toks, i + 1), dim).alias("c"),
+            _md5_bucket(g, dim).alias("b"),
         ),
-    ).otherwise(F.array().cast("array<struct<c:int,b:int>>"))
+    )
 
 
 def train_bigram_lm(
@@ -595,13 +594,8 @@ def train_bigram_lm(
     is map-only JVM Column algebra.  md5 bucketing is single-sourced
     with the DuckDB twin, which re-derives the trained tables (ln
     counts) bit-compatibly at the oracle's 4 dp rounding."""
-    import math
-
-    from open_semantic_etl_spark.functions.binding import let
-
     pairs_arr = let(
-        whitespace_tokens(F.lower(F.col(text_col))),
-        lambda t: _bigram_pair_buckets(t, dim),
+        _doc_tokens(F.col(text_col)), lambda t: _bigram_pair_buckets(t, dim)
     )
     # one explode → (kind, bucket) rows: kind 0 counts the bigram
     # bucket, kind 1 the context bucket — one shuffle covers both
@@ -642,8 +636,6 @@ def with_lm_perplexity(
     quality-clf pattern), the pair array is let-bound so the tokenizer
     and the md5 bucketing run once per row.  Docs with < 2 tokens score
     NULL."""
-    from open_semantic_etl_spark.functions.binding import let
-
     A, B = model
     dim = len(A)
     arrA = F.array(*[F.lit(float(x)) for x in A])
@@ -665,7 +657,7 @@ def with_lm_perplexity(
     return df.withColumn(
         out_col,
         let(
-            whitespace_tokens(F.lower(F.col(text_col))),
+            _doc_tokens(F.col(text_col)),
             lambda t: let(_bigram_pair_buckets(t, dim), score),
         ),
     )
@@ -690,50 +682,18 @@ def dsir_importance(
     the target slice score high; downstream sampling keeps
     proportionally (stratified_sample / top_k_per_key compose).
 
-    Scale shape: phase 1 aggregates feature counts with ONE shuffle on
-    int bucket keys (≤ ``dim`` groups, map-side partial agg) and
-    collects O(dim) rows to the driver — the IVF-trainer pattern;
-    phase 2 is map-only JVM Column algebra with the log-ratio table as
-    a plan literal (the quality-clf weight-vector pattern), so corpus
+    Scale shape: phase 1 is :func:`_bucket_counts` (the classifier
+    trainer's pass — the IVF-trainer pattern); phase 2 is map-only JVM
+    Column algebra with the log-ratio table as a plan literal through
+    :func:`_bucket_score` (the classifier scorer's fold), so corpus
     text is read but never shuffled.  Bucketing is md5-based
     (single-sourced with the DuckDB oracle, like clf_score); empty
     docs score NULL."""
-    import math
-
-    from open_semantic_etl_spark.functions.binding import let
-
-    def bucket_arr(toks: Column) -> Column:
-        return _hashed_buckets(toks, dim)
-
-    fcol = let(whitespace_tokens(F.lower(F.col(text_col))), bucket_arr)
-    counts = (
-        df.select(target_cond.cast("long").alias("t"), F.explode(fcol).alias("b"))
-        .groupBy("b")
-        .agg(F.sum("t").alias("nt"), F.count("*").alias("nr"))
-        .collect()
-    )
-    tgt = [smoothing] * dim
-    raw = [smoothing] * dim
-    for r in counts:
-        tgt[r["b"]] += float(r["nt"])
-        raw[r["b"]] += float(r["nr"])
-    tt, tr = sum(tgt), sum(raw)
-    ratio = [math.log(tgt[b] / tt) - math.log(raw[b] / tr) for b in range(dim)]
-    rarr = F.array(*[F.lit(float(v)) for v in ratio])
-
-    def weight(toks: Column) -> Column:
-        def score(feats: Column) -> Column:
-            total = F.aggregate(
-                feats,
-                F.lit(0.0),
-                lambda acc, b: acc + F.element_at(rarr, (b + 1).cast("int")),
-            )
-            return F.when(F.size(feats) > 0, F.round(total, 4))
-
-        # let-bound: size() and aggregate() would otherwise each
-        # re-evaluate the md5-per-feature subtree (the CLAUDE.md rule)
-        return let(bucket_arr(toks), score)
-
+    tgt, raw = _bucket_counts(df, target_cond, text_col, dim)
+    ratio = _log_ratio([smoothing + t for t in tgt], [smoothing + r for r in raw])
     return df.withColumn(
-        "dsir_weight_d", let(whitespace_tokens(F.lower(F.col(text_col))), weight)
+        "dsir_weight_d",
+        _bucket_score(
+            F.col(text_col), dim, ratio, lambda total, n: F.round(total, 4)
+        ),
     )

@@ -351,8 +351,12 @@ def q_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-means cells, PQ/ADC over the compressed corpus, and the composed
     IVF∘PQ production split (all four approximations golden-oracled);
     `method` tags the strategy."""
+    import os
+
     from open_semantic_etl_spark.operators.similarity import (
+        _adc_query_tables,
         brute_force_topk,
+        encode_corpus,
         ivf_topk,
         ivfpq_topk,
         lsh_topk,
@@ -360,10 +364,6 @@ def q_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_centroids,
         train_pq_codebooks,
     )
-
-    import os
-
-    from open_semantic_etl_spark.operators.similarity import encode_corpus
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     qids = list(range(10))
@@ -373,19 +373,15 @@ def q_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measure query cost only; the cold rep carries train+encode (the
     # q_minhash_lsh build-once idiom). Results are unchanged: same
     # trainers, same params, same codes.
-    fp = _content_fp(sf_dir, "embeddings")
-    if fp not in _ANN_MEMO:
-        _ANN_MEMO[fp] = (train_centroids(emb), train_pq_codebooks(emb))
-    cents, books = _ANN_MEMO[fp]
-    enc_path = _tmp_sidecar(sf_dir, fp, "ann_encoded")
+    cents = _ann_quantizer(sf_dir, emb, train_centroids)
+    books = _ann_quantizer(sf_dir, emb, train_pq_codebooks)
+    enc_path = _tmp_sidecar(sf_dir, _content_fp(sf_dir, "embeddings"), "ann_encoded")
     marker = os.path.join(enc_path, "_SUCCESS")
     if not os.path.exists(marker):
         encode_corpus(emb, cents, books).write.mode("overwrite").parquet(enc_path)
     enc = spark.read.parquet(enc_path)
     # one ADC table build serves both PQ-family methods (same queries,
     # same codebooks — the qtabs= reuse twin of encoded=)
-    from open_semantic_etl_spark.operators.similarity import _adc_query_tables
-
     qtabs = _adc_query_tables(emb, qids, books, "embedding", "vec_id")
     b = brute_force_topk(emb, query_ids=qids, k=5).withColumn("method", F.lit("brute"))
     l = lsh_topk(emb, query_ids=qids, k=5, dim=64).withColumn("method", F.lit("lsh"))
@@ -525,8 +521,19 @@ def q_doc_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: trained clf weights per input-content fingerprint (process-scoped)
 _CLF_TRAINED_MEMO: dict[str, tuple] = {}
 
-#: trained ANN quantizers (centroids, codebooks) per content fingerprint
-_ANN_MEMO: dict[str, tuple] = {}
+#: trained ANN quantizers per (content fingerprint, trainer name)
+_ANN_MEMO: dict[tuple[str, str], object] = {}
+
+
+def _ann_quantizer(sf_dir: str, emb: DataFrame, trainer):
+    """``trainer(emb)`` (a similarity.py quantizer trainer, its default
+    parameters) once per (process, embeddings content): the ann and
+    neardup_embedding queries share the IVF centroids, so whichever runs
+    first trains them."""
+    key = (_content_fp(sf_dir, "embeddings"), trainer.__name__)
+    if key not in _ANN_MEMO:
+        _ANN_MEMO[key] = trainer(emb)
+    return _ANN_MEMO[key]
 
 
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

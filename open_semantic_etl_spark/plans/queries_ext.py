@@ -1970,6 +1970,8 @@ def q_neardup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         embedding_dup_pairs,
         semdedup_pairs,
     )
+    from open_semantic_etl_spark.operators.similarity import train_centroids
+    from open_semantic_etl_spark.plans.queries import _ann_quantizer
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     brute = embedding_dup_pairs(
@@ -1978,8 +1980,12 @@ def q_neardup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("kind", F.lit("brute"))
     # threshold 0.3: the synthetic embeddings top out at cos ~0.48
     # (test fixtures plant 0.99 twins; testdata does not), so 0.3 makes
-    # the golden non-trivial at every sf
-    sd = semdedup_pairs(emb, threshold=0.3).withColumn("kind", F.lit("semdedup"))
+    # the golden non-trivial at every sf.  The cells are the ann query's
+    # IVF centroids (semdedup_pairs' defaults are train_centroids')
+    cents = _ann_quantizer(sf_dir, emb, train_centroids)
+    sd = semdedup_pairs(emb, threshold=0.3, centroids=cents).withColumn(
+        "kind", F.lit("semdedup")
+    )
     return brute.unionByName(sd).select("kind", "id_a", "id_b", "cos")
 
 

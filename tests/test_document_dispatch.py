@@ -90,6 +90,18 @@ def test_author_is_the_kind_extractors_author():
     assert len(authors) > 10  # most kinds carry one
 
 
+def test_rfc822_author_is_the_sender_like_msg():
+    """a standalone RFC 822 message reports its From address as
+    ``author``, as the same message saved as an Outlook .msg does."""
+    eml = (b"From: sender@example.org\r\nTo: rcpt@example.org\r\n"
+           b"Subject: Subj\r\nMIME-Version: 1.0\r\n"
+           b"Content-Type: text/plain; charset=utf-8\r\n\r\nbody text\r\n")
+    got = extract_html(eml)
+    assert got["content_type"] == "message/rfc822"
+    msg = extract_html(cfb.build_msg("Subj", "sender@example.org", "body text"))
+    assert got["author"] == msg["author"] == "sender@example.org"
+
+
 def test_media_fields_are_the_media_extractors():
     for d in range(14):  # every _build_media kind
         b = _build_media(d)

@@ -587,6 +587,30 @@ def main() -> int:
         [("tokenizer split appears exactly once", lambda p: p.count("split(") == 1)],
     )
 
+    # 17c. the hashed scorers (textstats.py) bucket each feature once:
+    # the bucket array is let-bound, so a scorer's size() and
+    # aggregate() share one md5 pass; the LM's pair array hashes the
+    # context unigram and the bigram (two md5 calls).  A scorer that
+    # re-derives the buckets outside the binding adds an md5 here.
+    from open_semantic_etl_spark.operators import textstats as TS
+
+    tdocs = docs.select("doc_id", "text")
+    ref = F.col("doc_id") % 10 == 0
+    for name, scored, n_md5 in (
+        ("with_quality_clf", TS.with_quality_clf(tdocs), 1),
+        ("dsir_importance", TS.dsir_importance(tdocs, ref), 1),
+        ("with_lm_perplexity",
+         TS.with_lm_perplexity(tdocs, TS.train_bigram_lm(tdocs.filter(ref))), 2),
+    ):
+        section(
+            f"{name} — md5 buckets and tokenizer split each evaluated once",
+            scored,
+            [
+                (f"md5 appears exactly {n_md5}x", lambda p, n=n_md5: p.count("md5(") == n),
+                ("tokenizer split appears exactly once", lambda p: p.count("split(") == 1),
+            ],
+        )
+
     # 18. robots gate: the rules dim broadcasts; the winner resolution
     # is a partial-aggregatable groupBy (no window)
     from open_semantic_etl_spark.sources.crawl import robots_gate

@@ -203,11 +203,11 @@ def ann_lsh_golden(emb: pd.DataFrame, query_ids=tuple(range(10)), k=5,
 
 # ---------------------------------------------------------------------------
 # IVF ANN top-k (spec: operators/similarity.py train_centroids/ivf_topk —
-# deterministic Lloyd's: init = first k_cells vectors in id order,
-# squared-L2 assignment via ((X[:,None,:]-C[None,:,:])**2).sum(-1) with
-# argmin ties → lowest index, float64 np.mean update in id order, empty
-# cell keeps its centroid, exactly `iters` rounds, trained on the first
-# `sample` vectors in id order)
+# _lloyd over _train_sample: init = first k_cells vectors in id order,
+# squared-L2 assignment via _sqdist ((X[:,None,:]-C[None,:,:])**2).sum(-1)
+# with argmin ties → lowest index, float64 np.mean update in id order,
+# empty cell keeps its centroid, exactly `iters` rounds, trained on the
+# first `sample` vectors in id order; ranked by _rank_topk)
 # ---------------------------------------------------------------------------
 
 def ann_ivf_golden(emb: pd.DataFrame, query_ids=tuple(range(10)), k=5,
@@ -251,8 +251,8 @@ def ann_ivf_golden(emb: pd.DataFrame, query_ids=tuple(range(10)), k=5,
 
 # ---------------------------------------------------------------------------
 # ANN: product quantization + ADC (spec: similarity.py train_pq_codebooks /
-# pq_topk — normalized sample, per-subspace Lloyd's with the train_centroids
-# determinism contract, cos ~= 1 - 0.5 * sum_j ||q_j - c_code_j||^2, the JVM
+# pq_topk — _normalize'd _train_sample, per-subspace _lloyd, codes and ADC
+# tables via _sqdist, cos ~= 1 - 0.5 * sum_j ||q_j - c_code_j||^2, the JVM
 # left-folds the per-subspace table values in j order)
 # ---------------------------------------------------------------------------
 
@@ -378,7 +378,8 @@ def ann_ivfpq_golden(emb: pd.DataFrame, query_ids=tuple(range(10)), k=5,
 
 # ---------------------------------------------------------------------------
 # SemDeDup pairs (spec: dedup.py semdedup_pairs — ann_ivf's trained
-# cells, within-cell all-pairs left-fold cosine >= threshold)
+# cells, within-cell all-pairs left-fold cosine >= threshold via
+# _cosine_pairs)
 # ---------------------------------------------------------------------------
 
 def semdedup_golden(emb: pd.DataFrame, k_cells=16, threshold=0.3,
