@@ -21,3 +21,7 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+from open_semantic_etl_spark import _worker_setup
+
+_worker_setup.install()

@@ -130,7 +130,9 @@ def signature_expr(vec: Column, planes: np.ndarray) -> Column:
     codegen, zero Python). Large ones (dim×n_planes > 2048) switch to
     :func:`_matrix_udf`, whose plane matrix ships ONCE per task in the
     serialized closure instead of as plan literals — at dim 768 × 16
-    planes the literal form is a 12k-node expression tree.
+    planes the literal form is a 12k-node expression tree. On both paths
+    a null or wrong-length vector gets null, not 0 (which would share
+    every all-zero LSH band).
     """
     if planes.size > _MAX_INLINE_COEFFS:
         P = planes.astype(np.float64)
@@ -151,7 +153,7 @@ def signature_expr(vec: Column, planes: np.ndarray) -> Column:
     out = bits[0]
     for b in bits[1:]:
         out = out + b
-    return out.cast("long")
+    return F.when(F.size(vec) == planes.shape[1], out.cast("long"))
 
 
 def _train_sample(

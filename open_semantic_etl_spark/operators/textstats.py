@@ -676,7 +676,8 @@ def dsir_importance(
 ) -> DataFrame:
     """Adds ``dsir_weight_d``: hashed n-gram importance log-ratio —
     DSIR (Xie et al. 2023, data selection via importance resampling).
-    ``target_cond`` marks the in-domain slice; each doc scores
+    ``target_cond`` marks the in-domain slice (NULL counts as not
+    target); each doc scores
     ``Σ_f [ln p_target(f) − ln p_raw(f)]`` over its hashed unigram +
     bigram features (add-``smoothing`` estimates).  Docs resembling
     the target slice score high; downstream sampling keeps
@@ -689,7 +690,7 @@ def dsir_importance(
     text is read but never shuffled.  Bucketing is md5-based
     (single-sourced with the DuckDB oracle, like clf_score); empty
     docs score NULL."""
-    tgt, raw = _bucket_counts(df, target_cond, text_col, dim)
+    tgt, raw = _bucket_counts(df, F.coalesce(target_cond, F.lit(False)), text_col, dim)
     ratio = _log_ratio([smoothing + t for t in tgt], [smoothing + r for r in raw])
     return df.withColumn(
         "dsir_weight_d",

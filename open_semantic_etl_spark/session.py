@@ -11,6 +11,12 @@ Scale notes (targets a 1000-executor cluster; tested on local[N]):
   memory (the reference's one-doc-at-a-time memory model, SURVEY.md §4).
 - UTC session timezone so parquet timestamps compare cleanly against
   the DuckDB oracle.
+- No ``spark.python.worker.module``: pyspark/daemon.py silently falls
+  back to ``pyspark.worker`` for a module whose name does not start
+  with ``pyspark``, and the module would have to be on the executors'
+  path before any ``--py-files`` arrive. The per-task worker fix lives
+  in the package instead (``_worker_setup``, installed on its first
+  import inside a worker).
 """
 
 from __future__ import annotations

@@ -206,6 +206,29 @@ def test_signature_expr_udf_path_null_and_ragged(spark):
     assert got[0] is not None and got[3] is not None
 
 
+def test_signature_expr_jvm_path_null_and_ragged(spark):
+    """the inline JVM path (24 dims × 16 planes) gives a null or
+    wrong-length vector a NULL signature like the numpy path — not 0,
+    which would put the row in every all-zero band of lsh_topk."""
+    rng = np.random.RandomState(11)
+    rows = [
+        (0, [float(x) for x in rng.randn(24)]),
+        (1, None),
+        (2, [1.0, 2.0]),  # ragged: wrong dim
+    ]
+    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    planes = S.random_planes(24, 16, seed=42)
+    assert planes.size <= S._MAX_INLINE_COEFFS  # the JVM path
+    got = {
+        r["vec_id"]: r["s"]
+        for r in df.select(
+            "vec_id", S.signature_expr(F.col("embedding"), planes).alias("s")
+        ).collect()
+    }
+    assert got[1] is None and got[2] is None
+    assert got[0] is not None
+
+
 def test_ngram_decontaminate(spark):
     """benchmark-overlap flagging: docs sharing an n-gram with the
     benchmark set are contaminated; clean docs get n_overlap 0."""
@@ -1008,6 +1031,23 @@ def test_dsir_importance_prefers_target_like_docs(spark):
     out2 = {r.doc_id: r.dsir_weight_d
             for r in TS.dsir_importance(df.repartition(7), F.col("doc_id") < 10).collect()}
     assert got == out2  # partitioning-independent
+
+
+def test_dsir_importance_null_target_counts_as_not_target(spark):
+    """a NULL ``target_cond`` is "not target" in every bucket — also in
+    one whose every occurrence is NULL, which used to sum to NULL and
+    raise TypeError in the driver's count loop."""
+    rows = [("alpha beta", None), ("gamma delta", True)]
+    nulls = spark.createDataFrame(rows, "text string, flag boolean")
+    falses = spark.createDataFrame(
+        [(t, bool(f)) for t, f in rows], "text string, flag boolean"
+    )
+    got = {r.text: r.dsir_weight_d
+           for r in TS.dsir_importance(nulls, F.col("flag")).collect()}
+    want = {r.text: r.dsir_weight_d
+            for r in TS.dsir_importance(falses, F.col("flag")).collect()}
+    assert got == want
+    assert got["gamma delta"] > got["alpha beta"]
 
 
 def test_train_quality_clf_separates_target_class(spark):
