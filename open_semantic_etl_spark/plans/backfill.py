@@ -32,7 +32,6 @@ from open_semantic_etl_spark.plans.checkpoint import (
     merge_by_url,
     recover_table,
     rewrite_buckets,
-    table_buckets,
 )
 from open_semantic_etl_spark.plans.pipeline import PIPELINE_VERSION
 
@@ -86,7 +85,7 @@ def run_backfill(
     # files the swap is about to replace (Iceberg snapshots make this a
     # non-issue on a real cluster; locally localCheckpoint pins the rows)
     result = stage_fn(spark, pruned).localCheckpoint(eager=True)
-    n_buckets = table_buckets(tables.enriched)
+    n_buckets = tables.buckets()
     buckets = buckets_of(result.select(bucket_expr(n_buckets=n_buckets).alias("_bucket")))
     cols = [c for c in result.columns if c != "url"]
     hit = F.col("_hit").isNotNull()
@@ -105,10 +104,9 @@ def run_backfill(
 
     rewrite_buckets(spark, tables.enriched, buckets, set_cols)
 
-    # a url with no checkpoint row (a stream_enrich root, or a run that
-    # crashed before its checkpoint commit) gains one carrying its
-    # enriched content_hash; pending_rows still re-enriches it, because
-    # the base STAGES are not recorded
+    # a url with no checkpoint row (its run crashed before the checkpoint
+    # commit) gains one carrying its enriched content_hash; pending_rows
+    # still re-enriches it: the base STAGES are not recorded
     fresh = (
         spark.read.parquet(tables.enriched)
         .filter(F.col("_bucket").isin(buckets))

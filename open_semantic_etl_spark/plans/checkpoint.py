@@ -97,6 +97,10 @@ class Tables:
         self.checkpoint = os.path.join(root, "checkpoint")
         self.metrics = os.path.join(root, "metrics")
 
+    def buckets(self, n_buckets: int | None = None) -> int:
+        """``table_buckets`` of the enriched and checkpoint tables alike."""
+        return table_buckets(self.checkpoint, table_buckets(self.enriched, n_buckets))
+
 
 # The commit protocol for every table dir the engine writes (enriched,
 # checkpoint, the LSH index's bands/sigs): create_table records the
@@ -226,19 +230,13 @@ def _swap_buckets(tmp: str, path: str, buckets: list, part_col: str) -> None:
 
 def recover_table(path: str, part_col: str = "_bucket") -> None:
     """finish or undo whatever a crash left of a commit to ``path``:
-    restore ``__old_*`` when the live dir is missing (the whole-table
-    swap of earlier builds parked the live dir there), reap stale
-    ``__tmp_*`` dirs, and roll an interrupted bucket swap forward (a
-    bucket whose live dir went missing mid-swap is restored from its
-    staged ``new__*`` copy).  Pure os-path checks when nothing is
-    staged; run it before any existence check or read, so
+    reap stale ``__tmp_*`` dirs, and roll an interrupted bucket swap
+    forward (a bucket whose live dir went missing mid-swap is restored
+    from its staged ``new__*`` copy).  Pure os-path checks when nothing
+    is staged; run it before any existence check or read, so
     replay-after-crash converges."""
     require_local(path)
-    pattern = glob.escape(path)
-    olds = sorted(glob.glob(f"{pattern}__old_*"))
-    if olds and not os.path.isdir(path):
-        os.rename(olds.pop(), path)
-    for stale in olds + glob.glob(f"{pattern}__tmp_*"):
+    for stale in glob.glob(f"{glob.escape(path)}__tmp_*"):
         shutil.rmtree(stale, ignore_errors=True)
     sw = f"{path}__swap"
     if not os.path.isdir(sw):
@@ -385,14 +383,12 @@ def merge_by_url(
 
     The first write creates the table with ``n_buckets`` (default
     ``N_BUCKETS``) and records its layout; a later merge uses the
-    recorded count (see ``table_buckets``) and records a legacy table's.
-    A recorded column the batch lacks survives the merge, NULL on the
-    batch's rows: an enriched table written before each extraction
-    field got one column keeps its six copy columns (content, title,
-    description, ok, err, text_analysis), NULL on re-enriched rows.
+    recorded count (see ``table_buckets``); a table with data but no
+    layout record raises.  A recorded column the batch lacks survives
+    the merge, NULL on the batch's rows.
     """
-    # recover BEFORE the existence check: a table parked as __old_* by a
-    # crashed whole-table swap would otherwise read as absent and be
+    # recover BEFORE the existence check: a table whose every bucket a
+    # crashed swap parked would otherwise read as absent and be
     # replaced by the batch
     recover_table(path)
     n_buckets = table_buckets(path, n_buckets)
@@ -400,9 +396,9 @@ def merge_by_url(
     if not has_data(path):
         create_table(new, path, "_bucket", {"n_buckets": n_buckets})
         return
-    if _layout(path) is None:  # a table written before layouts were recorded
-        every_column = spark.read.option("mergeSchema", "true").parquet(path)
-        _record_layout(path, every_column.drop("_bucket").schema, {"n_buckets": n_buckets})
+    if _layout(path) is None:
+        raise ValueError(f"table {path} holds data but records no layout "
+                         "(_common_metadata): rebuild it (drop_table, re-run its job)")
     rewrite_buckets(
         spark, path, buckets_of(new),
         lambda old: old.join(new.select("url"), "url", "left_anti").unionByName(
@@ -495,7 +491,7 @@ def run_incremental(
     t0 = time.time()
     run_id = run_id or uuid.uuid4().hex[:12]
     tables = Tables(root)
-    n_buckets = table_buckets(tables.checkpoint, table_buckets(tables.enriched, n_buckets))
+    n_buckets = tables.buckets(n_buckets)
     os.makedirs(root, exist_ok=True)
 
     todo = pending_rows(spark, pages, tables, stages)

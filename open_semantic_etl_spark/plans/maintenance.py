@@ -89,7 +89,7 @@ def move_url(spark: SparkSession, root: str, src: str, dst: str) -> None:
     overwrites the doc), so a src that comes back is indexed again."""
     tables = Tables(root)
     buckets = _url_buckets(spark, tables.enriched, [src, dst])
-    n_buckets = table_buckets(tables.enriched)
+    n_buckets = tables.buckets()
 
     def transform(df):
         path_cols = [

@@ -2,13 +2,15 @@
 
 The reference watches directories with pyinotify and enqueues one
 Celery task per CLOSE_WRITE/MOVED_TO event (etl_filemonitoring.py:
-24-60). The Spark-native equivalent is a file-source stream over the
-pages landing directory: new parquet files are discovered per
-micro-batch, run through the SAME batch pipeline via ``foreachBatch``
-(exactly-once per sink commit), and merged into the enriched table.
-
-``foreachBatch`` + the url-keyed merge gives the same idempotent
-at-least-once semantics as the batch path (plans/checkpoint.py);
+24-60), the same per-file task a directory scan queues (tasks.py:
+64-81). The Spark-native equivalent is a file-source stream over the
+pages landing directory whose ``foreachBatch`` runs each micro-batch
+through the batch path itself: ``run_incremental`` (plans/checkpoint.py)
+under run id ``<query id>-<epoch>``. A streamed page therefore gets the
+batch path's checkpoint skip (unchanged pages, re-landed or enriched by
+a batch run, are not re-enriched), checkpoint and metrics rows, and
+replay (a retried epoch skips what it checkpointed and re-merges the
+rest idempotently by url).
 checkpointLocation makes the stream resumable mid-run. Windowed
 per-event-type metrics with a watermark demonstrate the late-data path
 for the events stream table.
@@ -20,9 +22,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from open_semantic_etl_spark.operators.entity_linking import Gazetteer
-from open_semantic_etl_spark.plans.checkpoint import merge_by_url, table_buckets
-from open_semantic_etl_spark.plans.pipeline import enrich_pages
+from open_semantic_etl_spark.plans.checkpoint import Tables, run_incremental
 from open_semantic_etl_spark.schema import PAGES_SCHEMA
+
+
+def _batch_id(batch_df: DataFrame, epoch_id: int) -> str:
+    """``<query id>-<epoch>``: the query id is stable across restarts
+    from the same checkpoint, so a retried epoch keeps its batch id."""
+    query_id = batch_df.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
+    return f"{query_id}-{epoch_id}"
 
 
 def _start_stream(
@@ -57,22 +65,20 @@ def stream_enrich(
     trigger_once: bool = True,
     n_buckets: int | None = None,
 ):
-    """readStream(landing parquet) → enrich → merge into enriched table.
+    """readStream(landing parquet) → ``run_incremental`` per micro-batch,
+    run id ``<query id>-<epoch>`` (the batch path's semantics, above).
 
     Returns the StreamingQuery. ``trigger_once`` processes the backlog
     and stops (deterministic for tests/batch-catchup); production would
-    use a processingTime trigger. ``n_buckets`` sizes an enriched table
-    the stream creates; an existing table's recorded count must match
-    it (ValueError before the query starts).
+    use a processingTime trigger. ``n_buckets`` sizes the tables the
+    stream creates; a table recording another count raises ValueError
+    before the query starts.
     """
-    import os
-
-    enriched_path = os.path.join(out_root, "enriched")
-    n_buckets = table_buckets(enriched_path, n_buckets)
+    n_buckets = Tables(out_root).buckets(n_buckets)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        out = enrich_pages(batch_df, gazetteer=gazetteer)
-        merge_by_url(batch_df.sparkSession, out, enriched_path, n_buckets=n_buckets)
+        run_incremental(batch_df.sparkSession, batch_df, out_root, gazetteer=gazetteer,
+                        run_id=_batch_id(batch_df, epoch_id), n_buckets=n_buckets)
 
     return _start_stream(
         spark, landing_dir, checkpoint_dir, process_batch,
@@ -93,13 +99,12 @@ def stream_dedup_ingest(
     within the batch, commit the keep-set's bands to the index), and
     the keep-set lands in ``kept/_batch=<batch id>`` with overwrite.
 
-    The batch id is ``<query id>-<epoch>``.  The query id is stable
-    across restarts from the same checkpoint, so a retried epoch
-    replays its committed keep-set (the ingest's recovery first rolls
-    a staged ``append_batch`` commit forward) instead of re-ingesting
-    against itself.  A fresh
-    checkpoint is a new query id and therefore a new ingest: it dedups
-    against everything already indexed, whichever session wrote it.
+    A retried epoch keeps its ``_batch_id``, so it replays its committed
+    keep-set (the ingest's recovery first rolls a staged
+    ``append_batch`` commit forward) instead of re-ingesting against
+    itself.  A fresh checkpoint is a new query id and therefore a new
+    ingest: it dedups against everything already indexed, whichever
+    session wrote it.
     Semantics notes: duplicate urls within a batch collapse to one row
     first (re-crawl landing files), and empty-text docs share the
     all-zero signature, so they form ONE dup class — the first
@@ -118,10 +123,7 @@ def stream_dedup_ingest(
     kept_root = os.path.join(out_root, "kept")
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        query_id = batch_df.sparkSession.sparkContext.getLocalProperty(
-            "sql.streaming.queryId"
-        )
-        batch_id = f"{query_id}-{epoch_id}"
+        batch_id = _batch_id(batch_df, epoch_id)
         kept = dedup_ingest_batch(spark, batch_df, index_path, batch_id, id_col="url")
         kept.write.mode("overwrite").parquet(f"{kept_root}/_batch={batch_id}")
 

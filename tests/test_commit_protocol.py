@@ -8,7 +8,9 @@ private to that module. A program file that names one of them — as a
 call, an attribute or an import — brings back per-module commit
 choreography, and fails this test. So does a raw filesystem mutator
 (rename, replace, remove, unlink, rmtree, move) anywhere else, except
-at the listed scratch sites that hold no table.
+at the listed scratch sites that hold no table. A DataFrame ``.write``
+or ``.writeStream`` anywhere else must be one of the listed sites,
+each with the reason it writes no table.
 """
 
 from __future__ import annotations
@@ -34,6 +36,34 @@ SCRATCH_SITES = Counter({
     "open_semantic_etl_spark/plans/queries.py:shutil.rmtree": 1,
     "open_semantic_etl_spark/operators/ocr.py:os.unlink": 1,
     "bench.py:os.unlink": 1,
+})
+
+# DataFrame writes outside the commit protocol, none of them into an
+# enriched, checkpoint or LSH index table:
+# - sinks.py: export_json's output dir, an export the caller owns;
+# - ocr.py: the OCR memo, an append-only cache of OCR text by image
+#   hash that holds no document row (a lost append re-runs its images);
+# - queries.py: the driver queries' ANN encoded sidecar, a per-process
+#   tmp dir rewritten whole until its _SUCCESS marker exists;
+# - monitor.py writeStream: the stream's foreachBatch sink, whose
+#   commits are run_incremental's and dedup_ingest_batch's;
+# - monitor.py write: the keep-set of a stream_dedup_ingest batch,
+#   overwritten whole in its own ``kept/_batch=<id>`` dir and rewritten
+#   by a retried epoch. A crash mid-write leaves a partial dir until the
+#   epoch replays; create_table also drops the dir and then writes in
+#   place, so routing the keep-set through it would be no more atomic.
+#   It becomes atomic with a per-table commit log (ROADMAP);
+# - bench.py and tools/explain_audit.py: their generated input pages
+#   (and the audit's seeded OCR memo) under /tmp, and bench.py's two
+#   noop-format timing writes, which write no file.
+WRITE_SITES = Counter({
+    "open_semantic_etl_spark/sinks.py:write": 1,
+    "open_semantic_etl_spark/operators/ocr.py:write": 1,
+    "open_semantic_etl_spark/plans/queries.py:write": 1,
+    "open_semantic_etl_spark/streaming/monitor.py:writeStream": 1,
+    "open_semantic_etl_spark/streaming/monitor.py:write": 1,
+    "bench.py:write": 3,
+    "tools/explain_audit.py:write": 2,
 })
 
 
@@ -97,3 +127,32 @@ def test_raw_mutators_stay_in_checkpoint():
     # allowlisted scratch site
     assert {"os.rename", "os.replace", "shutil.rmtree"} <= set(_mutators(CHECKPOINT))
     assert sites & SCRATCH_SITES == SCRATCH_SITES
+
+
+def _df_writes(path: Path) -> list[str]:
+    """each ``.write`` / ``.writeStream`` attribute ``path`` uses that is
+    not itself called (a DataFrame's writer, not ``f.write(b"...")``)."""
+    tree = ast.parse(path.read_text())
+    called = {id(node.func) for node in ast.walk(tree) if isinstance(node, ast.Call)}
+    return [
+        node.attr
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute)
+        and node.attr in ("write", "writeStream")
+        and id(node) not in called
+    ]
+
+
+def test_dataframe_writes_stay_in_checkpoint():
+    sites = Counter(
+        f"{path.relative_to(ROOT)}:{name}"
+        for path in _program_files()
+        if path != CHECKPOINT
+        for name in _df_writes(path)
+    )
+    leaks = sorted((sites - WRITE_SITES).elements())
+    assert not leaks, f"DataFrame write outside plans/checkpoint.py: {leaks}"
+    # the guard is live: it sees checkpoint.py's own writes and every
+    # allowlisted site
+    assert "write" in _df_writes(CHECKPOINT)
+    assert sites & WRITE_SITES == WRITE_SITES

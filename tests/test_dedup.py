@@ -995,19 +995,23 @@ def test_incremental_lsh_partial_first_build_is_empty_index(spark, corpus, tmp_p
 
 
 def test_compaction_crash_window_recovers(spark, corpus, tmp_path):
-    """simulated crash between the two swap renames: the live dir is
-    gone, only __old_ remains — the next probe must restore it, not
-    treat a full corpus index as empty (r4 review)."""
+    """simulated crash mid-compaction swap: every bands bucket dir is
+    parked in ``bands__swap`` (the live dir gone, its rewrite staged as
+    ``new__*``) — the next probe must roll the swap forward, not treat
+    a full corpus index as empty (r4 review)."""
     import os
+
+    from test_pipeline_resume import crash_mid_swap
 
     path = str(tmp_path / "idx_crash")
     D.build_lsh_index(corpus, path)
-    os.rename(f"{path}/bands", f"{path}/bands__old_deadbeef")
+    crash_mid_swap(f"{path}/bands", "_bb")
+    assert not C.has_data(f"{path}/bands")
     probe = corpus.filter(F.col("doc_id") == 1)  # exact dup of 0
     got = {r.index_id for r in D.probe_lsh_index(probe, path).collect() if r.matched}
     assert 0 in got  # index restored, collision found
-    assert os.path.isdir(f"{path}/bands")
-    assert not os.path.isdir(f"{path}/bands__old_deadbeef")
+    assert C.has_data(f"{path}/bands")
+    assert not os.path.isdir(f"{path}/bands__swap")
 
 
 def test_dsir_importance_prefers_target_like_docs(spark):
@@ -1461,39 +1465,48 @@ def test_dedup_ingest_batch_staged_commit_rolled_forward_by_probe(
 
 
 def test_build_after_crashed_compaction_recovers_first(spark, corpus, tmp_path):
-    """an ingest arriving after a crashed compaction swap must restore
-    the __old_* full-corpus dir BEFORE writing — otherwise the next
-    probe's recovery deletes it, silently unindexing the whole corpus
-    (r4 review)."""
-    import os
+    """an ingest arriving after a crashed compaction swap must roll the
+    parked bucket dirs forward BEFORE writing — otherwise its append
+    recreates live bucket dirs, and the next recovery drops the staged
+    copies of those buckets, silently unindexing their rows (r4
+    review)."""
+    from test_pipeline_resume import crash_mid_swap
 
     path = str(tmp_path / "idx_crash2")
     D.dedup_ingest_batch(
         spark, corpus.filter(F.col("doc_id") == 0), path, "b1", id_col="doc_id"
     )
-    os.rename(f"{path}/bands", f"{path}/bands__old_cafe")  # crashed swap
+    n_bands = spark.read.parquet(f"{path}/bands").count()
+    crash_mid_swap(f"{path}/bands", "_bb")
     D.dedup_ingest_batch(  # append
         spark, corpus.filter(F.col("doc_id") == 4), path, "b2", id_col="doc_id"
     )
     probe = corpus.filter(F.col("doc_id") == 1)  # exact dup of 0
     got = {r.index_id for r in D.probe_lsh_index(probe, path).collect() if r.matched}
     assert 0 in got  # doc 0's bands survived the crash + append
+    bands = spark.read.parquet(f"{path}/bands")
+    assert bands.filter(F.col("_id") == 0).count() == n_bands
 
 
 def test_compaction_crash_recovers_on_glob_special_path(spark, corpus, tmp_path):
-    """recovery must treat the index path literally: a path holding
-    glob metacharacters used to match no ``__old_*`` sibling, so after
-    a crashed compaction swap the index read as empty."""
+    """recovery must treat the index path literally: on a path holding
+    glob metacharacters it still reaps a stale ``__tmp_*`` sibling and
+    rolls a crashed compaction swap forward."""
     import os
     import shutil
 
+    from test_pipeline_resume import _bucket_file_state, crash_mid_swap
+
     path = str(tmp_path / "idx[ab]")
     D.build_lsh_index(corpus, path)
+    before = _bucket_file_state(f"{path}/bands")
     shutil.copytree(f"{path}/bands", f"{path}/bands__tmp_cafe")
-    os.rename(f"{path}/bands", f"{path}/bands__old_deadbeef")  # crashed swap
+    crash_mid_swap(f"{path}/bands", "_bb")
     D._recover_index(path)
-    assert os.path.isdir(f"{path}/bands")
-    assert not os.path.isdir(f"{path}/bands__old_deadbeef")
+    assert {k: v[2] for k, v in _bucket_file_state(f"{path}/bands").items()} == {
+        k: v[2] for k, v in before.items()
+    }
+    assert not os.path.isdir(f"{path}/bands__swap")
     assert not os.path.isdir(f"{path}/bands__tmp_cafe")
 
 

@@ -106,17 +106,18 @@ def test_backfill_keeps_every_other_column(spark, tmp_path):
         assert row == before[url], url
 
 
-def test_backfill_on_root_without_checkpoint(spark, tmp_path):
-    """a stream_enrich root has an enriched table and no checkpoint
-    table: the backfill must keep every column, write the checkpoint
-    rows it needs, and converge (it used to NULL content_txt on every
-    row and then fail reading the missing checkpoint)."""
-    from open_semantic_etl_spark.streaming.monitor import stream_enrich
+def test_backfill_on_root_without_checkpoint(spark, tmp_path, monkeypatch):
+    """a first run that crashed between its enriched and checkpoint
+    commits leaves an enriched table and no checkpoint table: the
+    backfill must keep every column, write the checkpoint rows it
+    needs, and converge (it used to NULL content_txt on every row and
+    then fail reading the missing checkpoint)."""
+    from test_pipeline_resume import crash_before_checkpoint
 
-    landing, root = str(tmp_path / "landing"), str(tmp_path / "out")
-    pages_df(spark, 20, partitions=2).write.mode("overwrite").parquet(landing)
-    q = stream_enrich(spark, landing, root, str(tmp_path / "ckpt"), trigger_once=True)
-    assert q.awaitTermination(120)
+    root = str(tmp_path / "out")
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated crash"):
+        crash_before_checkpoint(m, root)
+        run_incremental(spark, pages_df(spark, 20, partitions=2), root)
     t = Tables(root)
     assert not os.path.isdir(t.checkpoint)
     before = _rows(spark, t.enriched)
@@ -242,23 +243,54 @@ def test_multimodal(spark):
 
 
 def test_stream_enrich(spark, tmp_path):
-    landing = str(tmp_path / "landing")
-    out_root = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    pages_df(spark, 40, partitions=2).write.mode("overwrite").parquet(landing)
+    """each micro-batch is one run_incremental under run id
+    ``<query id>-<epoch>``: the epoch writes its metrics rows, a batch
+    run over the streamed pages has nothing left to do, and a re-landed
+    unchanged file rewrites no bucket and writes no metrics."""
+    from test_pipeline_resume import _bucket_file_state
 
     from open_semantic_etl_spark.streaming.monitor import stream_enrich
 
+    landing = str(tmp_path / "landing")
+    out_root = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    pages = pages_df(spark, 40, partitions=2)
+    pages.write.mode("overwrite").parquet(landing)
+    t = Tables(out_root)
+
+    def docs_per_run() -> dict[str, int]:
+        per_run = spark.read.parquet(t.metrics).groupBy("run_id").agg(F.sum("docs").alias("docs"))
+        return {r.run_id: r.docs for r in per_run.collect()}
+
     q = stream_enrich(spark, landing, out_root, ckpt, trigger_once=True)
     assert q.awaitTermination(120)
-    enriched = spark.read.parquet(os.path.join(out_root, "enriched"))
+    enriched = spark.read.parquet(t.enriched)
     assert enriched.count() == 40
     assert enriched.filter(F.col("content_txt") != F.col("text")).count() == 0
+    assert docs_per_run() == {f"{q.id}-0": 40}
+
+    # the batch path sees every streamed page as done
+    assert run_incremental(spark, pages, out_root)["processed"] == 0
 
     # restart with no new files → no duplicates (checkpointed source)
     q2 = stream_enrich(spark, landing, out_root, ckpt, trigger_once=True)
     assert q2.awaitTermination(120)
-    assert spark.read.parquet(os.path.join(out_root, "enriched")).count() == 40
+    assert spark.read.parquet(t.enriched).count() == 40
+
+    # the same rows re-landed as a new file: epoch 1 skips every page
+    before = _bucket_file_state(t.enriched)
+    pages.write.mode("append").parquet(landing)
+    q3 = stream_enrich(spark, landing, out_root, ckpt, trigger_once=True)
+    assert q3.awaitTermination(120)
+    assert q3.id == q.id
+    assert [p["batchId"] for p in q3.recentProgress if p["numInputRows"]] == [1]
+    assert _bucket_file_state(t.enriched) == before
+    assert docs_per_run() == {f"{q.id}-0": 40}
+
+    # a bucket count the tables do not record is refused before the query starts
+    with pytest.raises(ValueError, match="records n_buckets=64"):
+        stream_enrich(spark, landing, out_root, str(tmp_path / "ckpt2"), n_buckets=8)
+    assert not os.path.exists(tmp_path / "ckpt2")
 
 
 def test_pdf_ocr_per_page(spark, tmp_path):

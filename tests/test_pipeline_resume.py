@@ -400,32 +400,26 @@ def test_layout_record_covers_files_through_swap_crash(spark, tmp_path, monkeypa
         assert got == want, table
 
 
-def test_legacy_table_gets_its_layout_at_next_merge(spark, root):
-    """a table written without a layout record still reads and merges,
-    and its next merge records every column any of its files holds,
-    with the merge's bucket count."""
+def test_table_without_layout_record_is_refused_at_merge(spark, root):
+    """a table that holds data but records no layout (written before
+    layout records) raises at the next merge, naming the rebuild, and
+    the merge changes nothing on disk."""
     import os
 
-    from open_semantic_etl_spark.plans.checkpoint import (
-        merge_by_url,
-        rewrite_buckets,
-        table_buckets,
-    )
+    from open_semantic_etl_spark.plans.checkpoint import merge_by_url
 
     path = os.path.join(root, "t")
     rows = spark.createDataFrame([(f"u{i}", i) for i in range(20)], "url string, v long")
     merge_by_url(spark, rows, path, n_buckets=4)
-    bucket = spark.read.parquet(path).first()["_bucket"]
-    rewrite_buckets(spark, path, [bucket], lambda df: df.withColumn("extra", F.col("v") * 10))
-    want = {r.url: r.v * 10 for r in spark.read.parquet(path).filter(F.col("_bucket") == bucket).collect()}
     os.remove(os.path.join(path, "_common_metadata"))  # the layout of an older build
-    assert table_buckets(path) == 64
+    before = _bucket_file_state(path)
 
-    merge_by_url(spark, spark.createDataFrame([("new", 99)], "url string, v long"), path, n_buckets=4)
-    assert table_buckets(path) == 4
-    merged = spark.read.parquet(path)
-    assert merged.count() == 21
-    assert {r.url: r.extra for r in merged.filter(F.col("extra").isNotNull()).collect()} == want
+    batch = spark.createDataFrame([("new", 99)], "url string, v long")
+    with pytest.raises(ValueError, match="records no layout.*rebuild"):
+        merge_by_url(spark, batch, path, n_buckets=4)
+    assert _bucket_file_state(path) == before
+    assert not os.path.exists(os.path.join(path, "_common_metadata"))
+    assert sorted(os.listdir(root)) == ["t"]
 
 
 def test_swap_crash_rolls_forward(spark, root):
@@ -520,26 +514,47 @@ def test_staged_append_crash_rolls_forward(spark, root, monkeypatch):
     assert _bucket_file_state(path) == after
 
 
+def crash_mid_swap(path: str, part_col: str = "_bucket") -> None:
+    """leave ``path`` as a bucket swap that crashed with every bucket
+    dir parked: each live dir moved to ``<path>__swap/old__<b>__<token>``
+    beside its rewrite (here a copy) staged as ``new__<b>__<token>``, so
+    the table dir holds no data file until recover_table rolls the swap
+    forward."""
+    import os
+    import shutil
+
+    sw = f"{path}__swap"
+    os.makedirs(sw, exist_ok=True)
+    for d in sorted(os.listdir(path)):
+        if d.startswith(f"{part_col}="):
+            b = d.split("=", 1)[1]
+            shutil.copytree(os.path.join(path, d), os.path.join(sw, f"new__{b}__deadbeef"))
+            os.rename(os.path.join(path, d), os.path.join(sw, f"old__{b}__deadbeef"))
+
+
 def test_crashed_table_swap_is_restored_before_merge(spark, root):
-    """a crash between swap_table's two renames (delete_where, legacy
-    migration) leaves the live table parked as ``__old_*``; the next
-    merge must restore it before its existence check instead of
-    replacing the table with the batch."""
+    """a merge that crashed mid-swap with every bucket dir parked in
+    ``<table>__swap`` leaves a table dir with no data file; the next
+    merge must roll the swap forward before its existence check instead
+    of replacing the table with the batch."""
     import os
 
-    from open_semantic_etl_spark.plans.checkpoint import merge_by_url
+    from open_semantic_etl_spark.plans.checkpoint import has_data, merge_by_url
 
     path = os.path.join(root, "enriched")
     os.makedirs(root, exist_ok=True)
     df = spark.createDataFrame(
         [(f"u{i}", f"v{i}") for i in range(50)], "url string, val string"
     )
-    merge_by_url(spark, df, path)
-    os.rename(path, f"{path}__old_deadbeef")  # the crash window
+    merge_by_url(spark, df, path, n_buckets=4)
+    crash_mid_swap(path)  # the crash window
+    assert not has_data(path)
     batch = spark.createDataFrame([("u50", "v50")], "url string, val string")
     merge_by_url(spark, batch, path)
-    assert spark.read.parquet(path).count() == 51
-    assert not [n for n in os.listdir(root) if "__old_" in n]
+    merged = spark.read.parquet(path)
+    assert merged.count() == 51
+    assert merged.select("url").distinct().count() == 51
+    assert sorted(os.listdir(root)) == ["enriched"]
 
 
 def test_remote_root_is_refused(spark, tmp_path, monkeypatch):
