@@ -23,7 +23,6 @@ columns needed.
 
 from __future__ import annotations
 
-import os
 import re
 
 import numpy as np
@@ -36,18 +35,11 @@ from pyspark.sql.window import Window as W
 from open_semantic_etl_spark.functions.binding import let
 from open_semantic_etl_spark.operators.textstats import _word_ngrams
 from open_semantic_etl_spark.plans.checkpoint import (
-    append_batch,
-    batch_manifests,
+    Commit,
+    Snapshot,
     bucket_expr,
     buckets_of,
-    create_table,
-    drop_table,
-    has_data,
-    recover_appends,
-    recover_table,
-    require_local,
-    rewrite_buckets,
-    table_record,
+    snapshot,
 )
 
 # ---------------------------------------------------------------------------
@@ -323,19 +315,22 @@ def _est_jaccard(a: str, b: str, num_hashes: int) -> Column:
 #
 # The 100 TB dedup problem is incremental: each ingest batch must dedup
 # against the ENTIRE existing corpus without recomputing it.  The index
-# is two bucketed tables, each recording the LSH family (num_hashes,
-# bands, shingle_n) beside n_buckets in its layout record:
+# is a root (plans/checkpoint.py) of bucketed tables, each recording the
+# LSH family (num_hashes, bands, shingle_n) beside n_buckets in its
+# layout:
 #
 #   <path>/bands/_bb=<k>/…   (_id, band, bh)  hive-partitioned on
 #                            _bb = pmod(xxhash64(bh), n_buckets)
 #   <path>/sigs/_sb=<k>/…    (_id, sig)       partitioned on
 #                            _sb = pmod(xxhash64(_id), n_buckets)
-#   <path>/_batches/<id>/…   the keep-set of each committed ingest
+#   <path>/_batch=<id>/…     (_id) the keep-set of each committed ingest
 #
-# Every write is a plans/checkpoint.py commit: build_lsh_index creates
-# the tables in its family, dedup_ingest_batch appends in the family
-# they record (the default on a fresh index), delete and compaction
-# rewrite buckets.  Probe shape: the batch's band table joins index bands on
+# Every operation is one commit of the index's log: build_lsh_index
+# creates the tables in its family, dedup_ingest_batch appends in the
+# family they record (the default on a fresh index) and adds its
+# keep-set, delete, expiry and compaction rewrite buckets.  So a reader
+# sees an index before or after an operation, never between its tables'
+# writes.  Probe shape: the batch's band table joins index bands on
 # (band, bh) — key-only shuffle, ~20 B/row, the same trim as
 # lsh_candidate_pairs; `_bb` rides along so the parquet scan
 # partition-prunes when the probe batch is small relative to n_buckets
@@ -349,6 +344,7 @@ def _est_jaccard(a: str, b: str, num_hashes: int) -> Column:
 # index's first dedup_ingest_batch
 _LSH_FAMILY = {"num_hashes": 64, "bands": 16, "shingle_n": 3, "n_buckets": 64}
 _INDEX_TABLES = {"bands": "_bb", "sigs": "_sb"}  # table -> its bucket column
+_BATCH = "_batch="  # + batch id: the table of an ingest's keep-set
 
 
 def _band_rows(sig: DataFrame, family: dict) -> DataFrame:
@@ -358,29 +354,16 @@ def _band_rows(sig: DataFrame, family: dict) -> DataFrame:
     )
 
 
-def _recover_index(index_path: str) -> None:
-    """recover both index tables (a swap interrupted mid-delete or
-    -compaction would read as an EMPTY index — r4 review), then roll
-    staged appends forward.  Every index operation calls it first."""
-    for table, part_col in _INDEX_TABLES.items():
-        recover_table(f"{index_path}/{table}", part_col)
-    recover_appends(index_path)
-
-
-def _index_family(index_path: str, fresh: dict | None = None) -> dict:
-    """the LSH family (with ``n_buckets``) the index's tables record —
-    bands', else sigs' (a crashed rebuild leaves sigs alone); ``fresh``
-    (else FileNotFoundError) when neither exists.  Tables with data but
-    no record predate it: guessing would miss collisions, so raise."""
-    for table in _INDEX_TABLES:
-        record = table_record(f"{index_path}/{table}")
-        if record is not None:
-            return record
-    if any(has_data(f"{index_path}/{table}") for table in _INDEX_TABLES):
-        raise ValueError(f"the LSH index at {index_path} predates its tables' family "
-                         "record: rebuild it with build_lsh_index")
+def _index_family(snap: Snapshot, fresh: dict | None = None) -> dict:
+    """the LSH family (with ``n_buckets``) the index's tables record;
+    ``fresh`` (else FileNotFoundError) when there is no index.  Tables
+    with data under a root without a log predate it: guessing would
+    miss collisions, so that raises."""
+    bands = snap.table("bands")
+    if bands is not None:
+        return bands["layout"]["record"]
     if fresh is None:
-        raise FileNotFoundError(f"no LSH index at {index_path}")
+        raise FileNotFoundError(f"no LSH index at {snap.root}")
     return fresh
 
 
@@ -395,31 +378,27 @@ def build_lsh_index(
     n_buckets: int = _LSH_FAMILY["n_buckets"],
     signatures: DataFrame | None = None,
 ) -> None:
-    """(re)build the LSH index from ``df`` alone: a full rebuild that
+    """(re)build the LSH index from ``df`` alone: one commit that
     creates the bands and sigs tables in the given family, and drops
-    the batch manifest (``_batches/``) — the rebuilt index holds none
-    of the ingested batches' keep-sets, so a replay or expiry of one
-    must not act on it.  ``dedup_ingest_batch`` is the only way an
-    index grows, so a non-default family is chosen here only (an empty
-    ``df`` starts an ingest-grown index in it).
+    every ingested batch's keep-set — the rebuilt index holds none of
+    them, so a replay or expiry of one must not act on it.
+    ``dedup_ingest_batch`` is the only way an index grows, so a
+    non-default family is chosen here only (an empty ``df`` starts an
+    ingest-grown index in it).
     ``n_buckets`` sizing follows the checkpoint rule: buckets ≈
     index_bytes / target_rewrite_unit.  ``signatures`` (``id_col,
     sig``) skips the MinHash recompute when the caller already has
     them."""
-    # recover first: a crashed commit (a parked bucket swap, a staged
-    # batch) would otherwise be rolled onto the rebuild by the next
-    # probe.  The bands table is the exists-marker the probe checks: it
-    # goes first and comes back last, so a crash mid-rebuild reads as
-    # an absent index, not old-family bands or bands without sigs
-    _recover_index(index_path)
-    drop_table(batch_manifests(index_path))
-    drop_table(f"{index_path}/bands")
+    c = Commit(index_path, "build")
+    for name in c.base.tables:
+        if name.startswith(_BATCH):
+            c.drop(name)
     family = {"num_hashes": num_hashes, "bands": bands, "shingle_n": shingle_n,
               "n_buckets": n_buckets}
     sig = _signatures(df, text_col, id_col, num_hashes, shingle_n, signatures)
-    sig_rows = sig.withColumn("_sb", bucket_expr("_id", n_buckets))
-    create_table(sig_rows, f"{index_path}/sigs", "_sb", family)
-    create_table(_band_rows(sig, family), f"{index_path}/bands", "_bb", family)
+    c.create("sigs", sig.withColumn("_sb", bucket_expr("_id", n_buckets)), "_sb", family)
+    c.create("bands", _band_rows(sig, family), "_bb", family)
+    c.commit()
 
 
 def probe_lsh_index(
@@ -449,20 +428,18 @@ def probe_lsh_index(
             F.lit(None).cast("double").alias("est_jaccard"), F.lit(False).alias("matched"),
         )
 
-    _recover_index(index_path)
-    # present = BOTH tables hold data: a crash mid-build can leave one
-    # without the other, and a wedged probe would block every streaming
-    # retry (r4 review).  A filesystem check, NOT a caught
-    # AnalysisException: a corrupt layout raises that class too, and
-    # swallowing it would admit every duplicate (r5 review).
-    if not (has_data(f"{index_path}/bands") and has_data(f"{index_path}/sigs")):
+    # the log says whether an index exists, NOT a caught
+    # AnalysisException: a corrupt table raises that class too, and
+    # swallowing it would admit every duplicate
+    snap = snapshot(index_path)
+    if snap.table("bands") is None:
         return as_novel(probe_ids)
-    family = _index_family(index_path)
+    family = _index_family(snap)
     num_hashes = family["num_hashes"]
-    idx_bands = spark.read.parquet(f"{index_path}/bands").select(
+    idx_bands = snap.read(spark, "bands").select(
         F.col("_id").alias("_iid"), "band", "bh", "_bb"
     )
-    idx_sigs = spark.read.parquet(f"{index_path}/sigs").select(
+    idx_sigs = snap.read(spark, "sigs").select(
         F.col("_id").alias("index_id"), F.col("sig").alias("sig_i")
     )
     sig = _signatures(
@@ -979,37 +956,22 @@ def dedup_ingest_batch(
 
     Idempotence: ``batch_id`` is any string uniquely naming this
     batch's CONTENT — a landing-file manifest hash, an ingest sequence
-    number, a stream's query id + epoch.  The index append is one
-    ``append_batch`` commit, publishing the kept ids to ``_batches/<id>``
+    number, a stream's query id + epoch.  The ingest is one commit: the
+    sigs and bands appends and the kept ids as table ``_batch=<id>``
     (the batch's manifest and audit trail).  Replaying a committed batch
     returns the recorded keep-set without touching the index; a crash
-    before the stage completes is recomputed (the live index was never
-    touched), one after it is rolled forward by the next index
-    operation's ``_recover_index`` — and then replays."""
+    before the commit left the index as it was, and the retry
+    recomputes the batch."""
     if not re.fullmatch(r"[A-Za-z0-9._-]{1,128}", batch_id):
-        # '/' would nest the staging dir, hiding its _STAGED file from
-        # recovery's one-level glob (r5 review)
         raise ValueError(
             f"batch_id {batch_id!r} must match [A-Za-z0-9._-]{{1,128}} "
-            "(it names filesystem directories)"
+            "(it names a table directory)"
         )
-    _recover_index(index_path)
-    family = _index_family(index_path, _LSH_FAMILY)
-
-    def kept_rows(ids_path: str) -> DataFrame:
-        if not has_data(ids_path):
-            # an all-duplicate batch records an EMPTY keep-set; some
-            # writers emit no parquet footer for zero rows, which would
-            # make the replay read fail schema inference
-            return batch_df.dropDuplicates([id_col]).limit(0)
-        kept_ids = spark.read.parquet(ids_path).select(
-            F.col("_id").alias(id_col)
-        )
+    c = Commit(index_path, "ingest", batch_id)
+    family = _index_family(c.base, _LSH_FAMILY)
+    if c.base.table(_BATCH + batch_id) is not None:  # a committed replay
+        kept_ids = c.base.read(spark, _BATCH + batch_id).select(F.col("_id").alias(id_col))
         return batch_df.dropDuplicates([id_col]).join(kept_ids, id_col)
-
-    manifest = os.path.join(batch_manifests(index_path), batch_id)
-    if os.path.isdir(manifest):
-        return kept_rows(manifest)  # committed (or just rolled forward) replay
 
     batch = batch_df.dropDuplicates([id_col]).localCheckpoint(eager=True)
     sigs = _signatures(
@@ -1037,33 +999,34 @@ def dedup_ingest_batch(
     kept_sigs = sigs.join(kept.select(id_col), id_col).select(
         F.col(id_col).alias("_id"), "sig"
     )
-    sig_rows = kept_sigs.withColumn("_sb", bucket_expr("_id", family["n_buckets"]))
-    tables = [("sigs", sig_rows, "_sb"), ("bands", _band_rows(kept_sigs, family), "_bb")]
-    append_batch(index_path, batch_id, tables, family, kept.select(F.col(id_col).alias("_id")))
+    c.append("sigs", kept_sigs.withColumn("_sb", bucket_expr("_id", family["n_buckets"])),
+             "_sb", family)
+    c.append("bands", _band_rows(kept_sigs, family), "_bb", family)
+    c.create(_BATCH + batch_id, kept.select(F.col(id_col).alias("_id")), None, {})
+    c.commit()
     return kept
 
 
 def list_lsh_batches(index_path: str) -> list[str]:
     """committed batch ids recorded in the index (sorted) — the
     manifest a retention sweep enumerates."""
-    require_local(index_path)
-    root = batch_manifests(index_path)
-    return sorted(os.listdir(root)) if os.path.isdir(root) else []
+    names = snapshot(index_path).tables
+    return sorted(name[len(_BATCH):] for name in names if name.startswith(_BATCH))
 
 
 def expire_lsh_batches(
     spark, index_path: str, batch_ids: list[str], strict: bool = True
 ) -> None:
     """TTL / retention sweep: remove whole ingest batches from the
-    index.  Each ``_batches/<id>`` manifest (one per
+    index.  Each ``_batch=<id>`` keep-set (one per
     ``dedup_ingest_batch``, so one per ``stream_dedup_ingest``
     micro-batch, id ``<query id>-<epoch>``) records exactly the doc ids
-    that batch contributed; expiry goes ONE BATCH AT A TIME —
-    ``delete_from_lsh_index`` over its keep-set, THEN its manifest
-    drops (the other order could leak the rows forever) — so a crash
-    leaves every earlier batch expired and the current one retryable.
+    that batch contributed; expiry goes ONE BATCH AT A TIME, one commit
+    each — the batch's docs leave sigs and bands and its keep-set drops
+    together — so a crash leaves every earlier batch expired and the
+    current one retryable.
 
-    ``strict=True`` (default) raises on a batch id with no manifest —
+    ``strict=True`` (default) raises on a batch id with no keep-set —
     silently expiring nothing would defeat a retention requirement; a
     crashed sweep's retry passes ``strict=False`` to skip expired ones.
 
@@ -1073,54 +1036,46 @@ def expire_lsh_batches(
     old batch deletes it — its next arrival re-ingests it as novel.
     Policies that must keep recently re-seen content need probe-time
     attribution refresh first."""
-    require_local(index_path)
     for bid in batch_ids:
-        marker = os.path.join(batch_manifests(index_path), bid)
-        if not os.path.isdir(marker):
+        c = Commit(index_path, "expire", bid)
+        if c.base.table(_BATCH + bid) is None:
             if strict:
                 raise FileNotFoundError(
-                    f"no committed batch marker {marker} — wrong id, the "
+                    f"no committed batch {bid} in {index_path} — wrong id, the "
                     "batch never committed, or it was already expired "
                     "(retry a crashed sweep with strict=False)"
                 )
             continue
-        if has_data(marker):
-            # empty = all-duplicate batch: nothing indexed, marker only
-            delete_from_lsh_index(
-                spark, index_path, spark.read.parquet(marker).select("_id")
-            )
-        drop_table(marker)
+        _drop_docs(spark, c, c.base.read(spark, _BATCH + bid).select("_id"))
+        c.drop(_BATCH + bid)
+        c.commit()
 
 
 def delete_from_lsh_index(spark, index_path: str, ids) -> None:
     """remove documents from the persisted LSH index (takedowns,
     recrawl-replaced urls, TTL expiry) — the DELETE twin of
-    ``dedup_ingest_batch``'s append.
+    ``dedup_ingest_batch``'s append, one commit.
 
     Bucket-pruned, the merge_by_url rule (plans/checkpoint.py) applied
     to the index: a doc's sig lives in ``_sb = pmod(xxhash64(id),
     n_buckets)`` and its band rows in the ``_bb`` buckets of its
-    (sig-derived, deterministic) band hashes, so each table is one
-    ``rewrite_buckets`` commit of ONLY those buckets; untouched bucket
-    files stay byte-identical on disk.  Cost tracks the DELETE BATCH,
-    not the corpus.  Crash windows are the commit's staged bucket swap,
-    rolled forward by every index operation's recovery; bands commit
-    BEFORE sigs, and either half-state probes correctly (a band
-    collision without a sig row drops at the inner sig join).  Each
-    table that holds data is swept, so a crashed build's lone table is
-    cleaned too.
+    (sig-derived, deterministic) band hashes, so each table rewrites
+    ONLY those buckets; untouched bucket files stay byte-identical on
+    disk.  Cost tracks the DELETE BATCH, not the corpus.
 
     ``ids``: list of doc-id values, or a single-column DataFrame of
     them.  Ids absent from the index are a no-op.
     """
-    _recover_index(index_path)
-    family = _index_family(index_path)  # a non-index raises loudly
+    c = Commit(index_path, "delete")
+    _drop_docs(spark, c, ids)
+    c.commit()
+
+
+def _drop_docs(spark, c: Commit, ids) -> None:
+    """stage on ``c`` the rewrite of the sigs and bands buckets that
+    hold rows of ``ids``."""
+    family = _index_family(c.base)  # a non-index raises loudly
     n_buckets = family["n_buckets"]
-    sigs_path = f"{index_path}/sigs"
-    bands_path = f"{index_path}/bands"
-    sigs_live, bands_live = has_data(sigs_path), has_data(bands_path)
-    if not (sigs_live or bands_live):
-        return  # nothing indexed yet — delete is a no-op
     if not isinstance(ids, DataFrame):
         ids = list(ids)
         if not ids:
@@ -1128,40 +1083,24 @@ def delete_from_lsh_index(spark, index_path: str, ids) -> None:
         ids = spark.createDataFrame([(i,) for i in ids], ["_del_id"])
     ids_df = ids.toDF("_del_id").dropDuplicates(["_del_id"])
     is_deleted = F.col("_id") == F.col("_del_id")
-    sig_buckets, band_buckets = [], []
-    if sigs_live:
-        cand_buckets = buckets_of(
-            ids_df.select(bucket_expr("_del_id", n_buckets).alias("_sb")), "_sb"
-        )
-        cand_sigs = spark.read.parquet(sigs_path).filter(
-            F.col("_sb").isin(cand_buckets)
-        )
-        del_sigs = cand_sigs.join(F.broadcast(ids_df), is_deleted).select(
-            "_id", "sig", "_sb"
-        )
-        # rewrite only buckets where deleted rows ACTUALLY exist (an
-        # absent id leaves every file byte-identical; cand_buckets only
-        # prunes the lookup).  Band rows are recomputed FROM THE SIGS,
-        # so the touched _bb set is exact with no bands-table scan.
-        sig_buckets = buckets_of(del_sigs, "_sb")
-        del_bands = _band_rows(del_sigs.select("_id", "sig"), family)
-    else:
-        # bands without sigs: no sig to recompute band rows from
-        del_bands = spark.read.parquet(bands_path).join(
-            F.broadcast(ids_df), is_deleted
-        )
-    if bands_live:
-        band_buckets = buckets_of(del_bands, "_bb")
+    cand_buckets = buckets_of(
+        ids_df.select(bucket_expr("_del_id", n_buckets).alias("_sb")), "_sb"
+    )
+    del_sigs = c.base.read(spark, "sigs", cand_buckets).join(
+        F.broadcast(ids_df), is_deleted
+    ).select("_id", "sig", "_sb")
+    # rewrite only buckets where deleted rows ACTUALLY exist (an absent
+    # id leaves every file byte-identical; cand_buckets only prunes the
+    # lookup).  Band rows are recomputed FROM THE SIGS, so the touched
+    # _bb set is exact with no bands-table scan.
+    sig_buckets = buckets_of(del_sigs, "_sb")
+    band_buckets = buckets_of(_band_rows(del_sigs.select("_id", "sig"), family), "_bb")
 
     def drop_deleted(df: DataFrame) -> DataFrame:
         return df.join(F.broadcast(ids_df), is_deleted, "left_anti")
 
-    # bands first: once a doc's band rows are gone it can never match,
-    # whatever happens to its sig rows before the retry finishes
-    if band_buckets:
-        rewrite_buckets(spark, bands_path, band_buckets, drop_deleted, "_bb")
-    if sig_buckets:
-        rewrite_buckets(spark, sigs_path, sig_buckets, drop_deleted, "_sb")
+    c.rewrite(spark, "bands", band_buckets, drop_deleted)
+    c.rewrite(spark, "sigs", sig_buckets, drop_deleted)
 
 
 def compact_lsh_index(spark, index_path: str) -> None:
@@ -1170,19 +1109,16 @@ def compact_lsh_index(spark, index_path: str) -> None:
 
     Every batch append (``dedup_ingest_batch``, so every streaming
     micro-batch) adds a few files to each bucket it touches.  Compaction
-    is one ``rewrite_buckets`` commit of every bucket dir per table,
-    shuffled on the partition key into the recorded ``n_buckets``
-    partitions; each row keeps its bucket.  Crash windows are the
-    commit's staged bucket swap, rolled forward by the next recovery;
-    the two tables commit independently, and a crash between them leaves
-    a correct index.  Run it between ingests, not concurrently with one:
-    a batch committed mid-compaction lands in a bucket dir the swap
-    replaces."""
-    _recover_index(index_path)
-    n_buckets = _index_family(index_path)["n_buckets"]
+    is one commit rewriting every bucket of both tables, shuffled on the
+    partition key into the recorded ``n_buckets`` partitions; each row
+    keeps its bucket.  It replaces only the files it read, so an ingest
+    that commits while it runs keeps its rows: the compaction's commit
+    lands on top of the ingest's entry."""
+    c = Commit(index_path, "compact")
+    n_buckets = _index_family(c.base)["n_buckets"]
     for sub, part_col in _INDEX_TABLES.items():
-        rewrite_buckets(
-            spark, f"{index_path}/{sub}", None,
+        c.rewrite(
+            spark, sub, None,
             lambda df, col=part_col: df.repartition(n_buckets, F.col(col)),
-            part_col,
         )
+    c.commit()

@@ -13,31 +13,36 @@ The Spark-native replacement for the reference's incremental machinery:
   matched rows, 'add-distinct' ``array_union``s the stage into
   ``stages_done``.
 - Celery ``acks_late`` at-least-once redelivery (tasks.py:34-35)
-  becomes: the MERGE commits BEFORE the checkpoint commit, so a crash
-  between the two re-processes those urls on the next run and the
-  url-keyed MERGE makes the replay idempotent.
+  becomes: a run's enriched MERGE, metrics append and checkpoint MERGE
+  are ONE commit, so a crash anywhere before it re-processes the run's
+  urls on the next run (the url-keyed MERGE makes the replay
+  idempotent, and the metrics rows land once), and a crash after it
+  leaves nothing to redo.
 - per-plugin timing fields (etl.py:222-238) become per-partition
   lineage rows appended to a metrics table.
 
 Storage: this sandbox has no Iceberg/Delta jars, so tables are parquet
 directories HASH-BUCKETED by url — hive-partitioned on
-``_bucket = pmod(xxhash64(url), n_buckets)``.  Every table write is one
-of three commits: ``create_table`` (a first merge, an LSH index build),
-``append_batch`` (the LSH index's ingest: staged files move in, one
-rename publishes the batch) and ``rewrite_buckets`` (merge, backfill,
-delete, move, LSH delete and compaction): only the named buckets are
-read (partition pruning), transformed and rewritten (per-bucket
-directory swap); untouched bucket files stay byte-identical, so
-incremental write cost tracks the BATCH, not the table. On a real
-cluster the same call sites map to Iceberg's CTAS, append and ``MERGE
-INTO enriched USING batch ON url`` (snapshot commit = our swap;
+``_bucket = pmod(xxhash64(url), n_buckets)`` — committed through one
+append-only log per root, after the Delta Lake transaction log
+(Armbrust et al., VLDB 2020).  A root is the dir that holds sibling
+tables (``Tables(root)``, an LSH index, a stream's ``kept/``); its
+``_log/<v>.json`` entries each name an operation, its run or batch id,
+and per table the data files it added and removed and, when it changes,
+the table's layout (schema, partition column, ``n_buckets`` and any
+other creator record such as the LSH family: ``table_record``).  Data
+files are immutable and Spark-uniquely named; a commit writes its new
+files, then creates the next entry (a link that fails when the version
+is taken: the commit point), then deletes the files it replaced.
+Readers take the live file set and schema from the log
+(``read_table``); a file no entry names is invisible.  Every write
+rewrites ONLY the buckets it touches (partition pruning at the file
+list): untouched bucket files stay byte-identical, so incremental
+write cost tracks the BATCH, not the table.  On a real cluster the
+same call sites map to Iceberg's CTAS, append and ``MERGE INTO
+enriched USING batch ON url`` (snapshot commit = our log entry;
 Iceberg's bucket(url, N) transform = our ``_bucket``; the copy-on-write
 MERGE rewrites exactly the same file set).
-
-Each table records its schema and ``n_buckets`` (Iceberg's table
-metadata: schema + partition spec) in ``<table>/_common_metadata``, which
-Spark's schema inference reads first: plain reads see every column.
-A creator may record more (the LSH index's family): ``table_record``.
 
 Scale: the anti-join shuffles only ``(url, content_hash)`` — 16 bytes +
 url per row, NOT the html payload: the join is planned on the slim
@@ -48,18 +53,15 @@ the checkpoint join co-locates (storage-partitioned join on Iceberg).
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import shutil
 import time
 import uuid
-from typing import Callable, Iterable
+from typing import Callable, NamedTuple
 
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from open_semantic_etl_spark.operators.entity_linking import Gazetteer
@@ -80,6 +82,8 @@ from open_semantic_etl_spark.plans.pipeline import (
 #: recrawl); bulk B ≥ N batches degrade to a full rewrite, where a real
 #: Iceberg/Delta MERGE (file pruning, merge-on-read) takes over.
 N_BUCKETS = 64
+
+LOG = "_log"  # <root>/_log/<version>.json
 
 
 def bucket_expr(url_col: str = "url", n_buckets: int = N_BUCKETS) -> F.Column:
@@ -102,27 +106,18 @@ class Tables:
         return table_buckets(self.checkpoint, table_buckets(self.enriched, n_buckets))
 
 
-# The commit protocol for every table dir the engine writes (enriched,
-# checkpoint, the LSH index's bands/sigs): create_table records the
-# layout before the data; rewrite_buckets writes a ``<path>__tmp_*``
-# sibling and _swap_buckets renames its bucket dirs in; append_batch
-# stages under ``<root>/__batch_<id>`` and _commit_append moves it in.
-# Every reader or writer runs recover_table (and recover_appends) first.
-# Iceberg equivalent: the snapshot commit, where all of this is free.
-
-
 def require_local(path: str) -> None:
-    """the commit protocol runs on driver-local filesystem primitives; a
+    """the commit log runs on driver-local filesystem primitives; a
     URI-schemed path (hdfs://, s3a://) would make every os.path check
     read as 'absent' — merge_by_url would overwrite the table with the
     batch and the LSH probe would admit every duplicate.  Raise loudly."""
     if "://" in path:
         raise NotImplementedError(
             f"table and index paths must be driver-local filesystem paths "
-            f"in this build (got {path!r}); remote-FS support needs the "
-            "Hadoop FileSystem API behind plans/checkpoint.py's commit "
-            "protocol (has_data, create_table, rewrite_buckets, "
-            "append_batch, recover_table, recover_appends)"
+            f"in this build (got {path!r}); remote-FS support needs a Hadoop "
+            "FileSystem backend for plans/checkpoint.py's commit log (the "
+            "exclusive create of <root>/_log/<v>.json, the log listing, and "
+            "the data-file moves and deletes)"
         )
 
 
@@ -140,35 +135,130 @@ def buckets_of(df: DataFrame, part_col: str = "_bucket") -> list:
     return [r[0] for r in df.select(part_col).distinct().collect()]
 
 
-_SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+# ---------------------------------------------------------------------------
+# the log
+# ---------------------------------------------------------------------------
 
 
-def _layout(path: str) -> tuple[StructType, dict[str, int]] | None:
-    """``(data columns, record)`` from ``path/_common_metadata`` — the
-    record holds ``n_buckets`` and any other int its creator recorded —
-    or None for a table without a layout record."""
-    record = os.path.join(path, "_common_metadata")
-    if not os.path.isfile(record):
-        return None
-    meta = pq.read_schema(record).metadata
-    columns = StructType.fromJson(json.loads(meta.pop(_SPARK_SCHEMA)))
-    return columns, {k.decode(): int(v) for k, v in meta.items()}
+class Snapshot(NamedTuple):
+    """the tables under ``root`` as of log ``version`` (0 = no entry):
+    name -> {"files": data files relative to the table dir, "layout":
+    {"schema": the table's schema as JSON, "part_col": its partition
+    column or None, "record": ``table_record``}}."""
+
+    root: str
+    version: int
+    tables: dict
+
+    def table(self, name: str) -> dict | None:
+        """table ``name``, or None.  A table dir holding data under a
+        root that has no log at all was written before the log: no
+        migration, it raises with the rebuild instruction."""
+        table = self.tables.get(name)
+        path = os.path.join(self.root, name)
+        if table is None and not os.path.isdir(os.path.join(self.root, LOG)) and has_data(path):
+            raise ValueError(
+                f"table {path} holds data but {self.root} has no commit log ({LOG}/): "
+                "rebuild it (drop the dir and re-run the job that wrote it; an "
+                "LSH index: build_lsh_index)"
+            )
+        return table
+
+    def read(self, spark: SparkSession, name: str, buckets: list | None = None) -> DataFrame:
+        """the rows of table ``name`` (only ``buckets``' when given):
+        its files listed explicitly under its logged schema — no dir
+        listing, no schema inference, pruned to the buckets' files.  The
+        names are taken literally: a root path may hold glob
+        metacharacters.  FileNotFoundError when there is no such table."""
+        path = os.path.join(self.root, name)
+        table = self.table(name)
+        if table is None:
+            raise FileNotFoundError(f"no table {path} in {os.path.join(self.root, LOG)}")
+        schema = StructType.fromJson(table["layout"]["schema"])
+        files = _bucket_files(table, buckets)
+        if not files:
+            return spark.createDataFrame([], schema)
+        reader = spark.read.schema(schema).option("basePath", path)
+        return reader.option("__globPaths__", "false").parquet(
+            *(os.path.join(path, f) for f in files)
+        )
 
 
-def _record_layout(path: str, columns: StructType, record: dict[str, int]) -> None:
-    """write the layout record: a footer-only parquet file, on the driver
-    (no Spark job); the '.' tmp name is hidden from Spark's listing."""
-    meta = {_SPARK_SCHEMA: columns.json(), **{k: str(v) for k, v in record.items()}}
-    tmp = os.path.join(path, ".common_metadata.tmp")
-    pq.write_metadata(to_arrow_schema(columns).with_metadata(meta), tmp)
-    os.replace(tmp, os.path.join(path, "_common_metadata"))
+def _replay(root: str) -> Snapshot:
+    """fold ``root``'s log entries, oldest first, into its snapshot."""
+    log = os.path.join(root, LOG)
+    try:
+        names = sorted(n for n in os.listdir(log) if n.endswith(".json"))
+    except FileNotFoundError:
+        names = []
+    tables: dict = {}
+    for name in names:
+        with open(os.path.join(log, name)) as fh:
+            entry = json.load(fh)
+        for table, change in entry["tables"].items():
+            live = tables.setdefault(table, {"files": set(), "layout": None})
+            live["files"].difference_update(change["remove"])
+            live["files"].update(change["add"])
+            live["layout"] = change.get("layout", live["layout"])
+            if live["layout"] is None:
+                del tables[table]  # dropped
+    return Snapshot(root, int(names[-1][:-5]) if names else 0, tables)
+
+
+def _create_entry(root: str, version: int, entry: dict) -> bool:
+    """write ``entry`` whole under a hidden name, then link it to
+    ``_log/<version>.json`` — the commit point.  False when another
+    commit took that version (the link never replaces a file)."""
+    log = os.path.join(root, LOG)
+    tmp = os.path.join(log, f".{version}.{uuid.uuid4().hex}.tmp")
+    with open(tmp, "w") as fh:
+        json.dump(entry, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    try:
+        os.link(tmp, os.path.join(log, f"{version:012d}.json"))
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
+def snapshot(root: str) -> Snapshot:
+    """the live tables under ``root``, read from its log: one snapshot
+    for every table a reader reads together."""
+    require_local(root)
+    return _replay(root)
+
+
+def _split(path: str) -> tuple[str, str]:
+    """``(root, table name)`` of a table path."""
+    require_local(path)
+    return os.path.split(os.path.normpath(path))
+
+
+def _bucket_files(table: dict, buckets: list | None) -> list[str]:
+    """the table's live files, only those in the ``buckets`` dirs when given."""
+    files = table["files"]
+    if buckets is not None:
+        dirs = {f"{table['layout']['part_col']}={b}" for b in buckets}
+        files = [f for f in files if f.split("/", 1)[0] in dirs]
+    return sorted(files)
+
+
+def read_table(spark: SparkSession, path: str, buckets: list | None = None) -> DataFrame:
+    """the live rows of the table at ``path`` (only ``buckets``' when
+    given); FileNotFoundError when its root's log holds no such table."""
+    root, name = _split(path)
+    return _replay(root).read(spark, name, buckets)
 
 
 def table_record(path: str) -> dict[str, int] | None:
-    """the ints ``path``'s layout record holds (``n_buckets`` and any
-    its creator added, such as an LSH index's family), or None."""
-    layout = _layout(path)
-    return None if layout is None else layout[1]
+    """the ints ``path``'s layout records (``n_buckets`` and any its
+    creator added, such as an LSH index's family), or None."""
+    root, name = _split(path)
+    table = _replay(root).table(name)
+    return None if table is None else table["layout"]["record"]
 
 
 def table_buckets(path: str, n_buckets: int | None = None) -> int:
@@ -183,228 +273,185 @@ def table_buckets(path: str, n_buckets: int | None = None) -> int:
     return recorded
 
 
-def drop_table(path: str) -> None:
-    """remove the table (or batch manifest) at ``path``; absent is a no-op."""
-    require_local(path)
-    shutil.rmtree(path, ignore_errors=True)
+def _layout_of(df: DataFrame, part_col: str | None, record: dict[str, int]) -> dict:
+    """the layout of a table holding ``df``: its schema, partition column last."""
+    fields = sorted(df.schema.fields, key=lambda f: f.name == part_col)
+    return {"schema": StructType(fields).jsonValue(), "part_col": part_col, "record": record}
 
 
-def create_table(df: DataFrame, path: str, part_col: str, record: dict[str, int]) -> None:
-    """replace ``path`` with ``df`` partitioned by ``part_col``.  The
-    layout record (``df``'s data columns plus ``record``, which holds
-    ``n_buckets``) goes in BEFORE the data it must cover."""
-    drop_table(path)
-    os.makedirs(path)
-    _record_layout(path, df.drop(part_col).schema, record)
-    df.write.mode("append").partitionBy(part_col).parquet(path)
+def _write_files(df: DataFrame, path: str, part_col: str | None) -> list[str]:
+    """write ``df`` as new data files of the table at ``path``: Spark
+    writes them into a hidden stage dir, and each moves into its bucket
+    dir under its Spark-unique name.  No reader sees them until a log
+    entry names them.  Returns their paths relative to ``path``."""
+    stage = os.path.join(path, f".stage-{uuid.uuid4().hex[:12]}")
+    writer = df.write.mode("errorifexists")
+    (writer.partitionBy(part_col) if part_col else writer).parquet(stage)
+    added = []
+    for d, _sub, files in os.walk(stage):
+        for f in files:
+            if f.endswith(".parquet"):
+                rel = os.path.relpath(os.path.join(d, f), stage)
+                os.makedirs(os.path.dirname(os.path.join(path, rel)), exist_ok=True)
+                os.rename(os.path.join(d, f), os.path.join(path, rel))
+                added.append(rel)
+    shutil.rmtree(stage)
+    return added
 
 
-def _swap_buckets(tmp: str, path: str, buckets: list, part_col: str) -> None:
-    """move tmp's bucket dirs over path's — only touched buckets change;
-    a bucket absent from tmp (all rows deleted) is removed.
-
-    Staged swap: each post-rewrite bucket dir is first parked in the
-    sibling ``__swap`` dir — OUTSIDE the table dir, so partition
-    discovery never sees half-swapped state — and every crash window
-    leaves either the old or the complete new data for the bucket on
-    disk; recover_table() rolls an interrupted swap forward before the
-    next commit reads the table."""
-    sw = f"{path}__swap"
-    os.makedirs(sw, exist_ok=True)
-    token = uuid.uuid4().hex[:8]
-    for b in buckets:
-        src = os.path.join(tmp, f"{part_col}={b}")
-        dst = os.path.join(path, f"{part_col}={b}")
-        stage = os.path.join(sw, f"new__{b}__{token}")
-        old = os.path.join(sw, f"old__{b}__{token}")
-        if os.path.isdir(src):
-            os.rename(src, stage)
-        if os.path.isdir(dst):
-            os.rename(dst, old)
-        if os.path.isdir(stage):
-            os.rename(stage, dst)
-        shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(sw, ignore_errors=True)
+def _reap(root: str, changes: dict) -> None:
+    """delete each table's ``remove`` files in ``changes``."""
+    for name, change in changes.items():
+        for f in change["remove"]:
+            try:
+                os.remove(os.path.join(root, name, f))
+            except FileNotFoundError:
+                pass
 
 
-def recover_table(path: str, part_col: str = "_bucket") -> None:
-    """finish or undo whatever a crash left of a commit to ``path``:
-    reap stale ``__tmp_*`` dirs, and roll an interrupted bucket swap
-    forward (a bucket whose live dir went missing mid-swap is restored
-    from its staged ``new__*`` copy).  Pure os-path checks when nothing
-    is staged; run it before any existence check or read, so
-    replay-after-crash converges."""
-    require_local(path)
-    for stale in glob.glob(f"{glob.escape(path)}__tmp_*"):
-        shutil.rmtree(stale, ignore_errors=True)
-    sw = f"{path}__swap"
-    if not os.path.isdir(sw):
-        return
-    for name in sorted(os.listdir(sw)):  # 'new' sorts before 'old'
-        full = os.path.join(sw, name)
-        parts = name.split("__", 2)
-        if len(parts) == 3 and parts[0] == "new":
-            dst = os.path.join(path, f"{part_col}={parts[1]}")
-            if not os.path.isdir(dst):
-                os.rename(full, dst)
-                continue
-        shutil.rmtree(full, ignore_errors=True)
-    shutil.rmtree(sw, ignore_errors=True)
+class Commit:
+    """One log entry under ``root``: operation ``op`` (its run or batch
+    id ``op_id``) stages table changes — ``create``, ``append``,
+    ``rewrite``, ``drop`` — against the snapshot it started from
+    (``base``), and ``commit`` publishes them all at once.  Every table
+    write of the engine is one of these."""
 
+    def __init__(self, root: str, op: str, op_id: str | None = None) -> None:
+        require_local(root)
+        self.root, self.op, self.op_id = root, op, op_id
+        self.base = _replay(root)
+        self.logged = os.path.isdir(os.path.join(root, LOG))
+        self.changes: dict = {}
 
-def rewrite_buckets(
-    spark: SparkSession,
-    path: str,
-    buckets: list | None,
-    transform: Callable[[DataFrame], DataFrame],
-    part_col: str = "_bucket",
-) -> None:
-    """The one table commit: replace bucket dirs of ``path`` with
-    ``transform`` applied to their current rows.
+    def _put(self, name: str, df: DataFrame, part_col: str | None, remove, layout=None) -> None:
+        # the log dir exists before any data file lands: the strays of a
+        # crashed commit then never read as a table from before the log
+        os.makedirs(os.path.join(self.root, LOG), exist_ok=True)
+        add = _write_files(df, os.path.join(self.root, name), part_col)
+        change = self.changes.setdefault(name, {"add": [], "remove": []})
+        change["add"] += add
+        change["remove"] += sorted(remove)
+        if layout is not None:
+            change["layout"] = layout
 
-    Recovers the table, reads ONLY the ``part_col`` dirs in ``buckets``
-    (a partition filter — ``None`` = every bucket dir on disk), writes
-    ``transform``'s output to a tmp sibling partitioned by ``part_col``
-    and swaps those bucket dirs in; every other bucket file stays
-    byte-identical on disk.  ``transform`` sees the ``part_col`` column
-    and must return it (pass it through, or re-derive it when the key
-    changes).  A bucket the transform leaves empty is removed; a new
-    output column joins the layout record before the swap.  Iceberg
-    equivalent: one copy-on-write snapshot commit replacing the data
-    files of the touched partitions."""
-    recover_table(path, part_col)
-    df = spark.read.parquet(path)
-    if buckets is None:
-        prefix = f"{part_col}="
-        buckets = [d[len(prefix):] for d in os.listdir(path) if d.startswith(prefix)]
-    else:
-        df = df.filter(F.col(part_col).isin(buckets))
-    tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"  # reaped by recover_table
-    out = transform(df)
-    out.write.mode("overwrite").partitionBy(part_col).parquet(tmp)
-    layout = _layout(path)
-    if layout is not None:  # record a new column BEFORE any data file holds it
-        columns, record = layout
-        added = [f for f in out.schema if f.name not in columns.names + [part_col]]
+    def create(self, name: str, df: DataFrame, part_col: str | None, record: dict[str, int]) -> None:
+        """replace table ``name`` with ``df`` (partitioned by
+        ``part_col``, or flat) under a layout recording ``record``."""
+        if not self.logged:  # a dir from before the log: rebuilt whole
+            shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
+        old = self.base.tables.get(name)
+        self._put(name, df, part_col, old["files"] if old else (), _layout_of(df, part_col, record))
+
+    def append(self, name: str, df: DataFrame, part_col: str | None, record: dict[str, int]) -> None:
+        """add ``df``'s rows to table ``name``, created (``record``) when absent."""
+        layout = None if self.base.table(name) else _layout_of(df, part_col, record)
+        self._put(name, df, part_col, (), layout)
+
+    def rewrite(
+        self, spark: SparkSession, name: str, buckets: list | None,
+        transform: Callable[[DataFrame], DataFrame],
+    ) -> None:
+        """replace the rows of table ``name``'s ``buckets`` (``None`` =
+        every bucket) with ``transform`` of them.  Only those buckets'
+        files are read and replaced; every other file stays
+        byte-identical.  ``transform`` sees the partition column and
+        must return it (pass it through, or re-derive it when the key
+        changes); a bucket it leaves empty loses its files, and a new
+        output column joins the layout.  Iceberg equivalent: one
+        copy-on-write snapshot replacing the touched partitions' files."""
+        if buckets is not None and not buckets:
+            return
+        table = self.base.table(name)
+        if table is None:
+            raise FileNotFoundError(f"no table {os.path.join(self.root, name)} to rewrite")
+        layout = table["layout"]
+        out = transform(self.base.read(spark, name, buckets))
+        schema = StructType.fromJson(layout["schema"])
+        added = [f for f in out.schema if f.name not in schema.names]
         if added:
-            _record_layout(path, StructType(columns.fields + added), record)
-    _swap_buckets(tmp, path, buckets, part_col)
+            fields = sorted(schema.fields + added, key=lambda f: f.name == layout["part_col"])
+            layout = {**layout, "schema": StructType(fields).jsonValue()}
+        self._put(name, out, layout["part_col"], _bucket_files(table, buckets),
+                  layout if added else None)
+
+    def drop(self, name: str) -> None:
+        """remove table ``name`` and its files."""
+        table = self.base.table(name)
+        if table is not None:
+            self.changes[name] = {"add": [], "remove": sorted(table["files"]), "layout": None}
+
+    def commit(self) -> None:
+        """create the next log entry, then delete the replaced files.
+
+        A lost race for the next version re-reads the log and retries on
+        top of the newer entries, unless one of them removed a file this
+        commit also removes, or re-laid out or dropped a table this
+        commit touches, or changed a table this commit re-lays out
+        (RuntimeError: the operation must rerun, and the files this
+        commit wrote are deleted).  So an append to an unchanged layout
+        never conflicts, and a compaction keeps the rows of an ingest
+        that committed while it ran."""
+        if not self.changes:
+            return
+        entry = {"op": self.op, "id": self.op_id, "tables": self.changes}
+        snap = self.base
+        while not _create_entry(self.root, snap.version + 1, entry):
+            snap = _replay(self.root)
+            for name, change in self.changes.items():
+                live, base = snap.tables.get(name), self.base.tables.get(name)
+                gone = set(change["remove"]) - (live["files"] if live else set())
+                relaid = "layout" in change or (live and live["layout"]) != (base and base["layout"])
+                if gone or (relaid and live != base):
+                    _reap(self.root, {n: {"remove": ch["add"]} for n, ch in self.changes.items()})
+                    raise RuntimeError(
+                        f"{self.op} {self.op_id or ''} on {os.path.join(self.root, name)} "
+                        f"conflicts with a commit made since log version {self.base.version}"
+                    )
+        _reap(self.root, self.changes)
 
 
-def batch_manifests(root: str) -> str:
-    """the dir of ``<batch id>`` manifests each append under ``root`` publishes."""
-    return os.path.join(root, "_batches")
+# ---------------------------------------------------------------------------
+# the incremental run
+# ---------------------------------------------------------------------------
 
 
-def append_batch(
-    root: str, batch_id: str, tables: Iterable[tuple[str, DataFrame, str]],
-    record: dict[str, int], manifest: DataFrame,
-) -> None:
-    """The one append: add ``tables``' ``(name, rows, part_col)`` to the
-    tables under ``root`` and publish ``manifest`` as batch ``batch_id``.
-    Each is staged by ``create_table`` (layout ``record``) under
-    ``<root>/__batch_<id>``, then ``_STAGED`` is written and
-    ``_commit_append`` moves the stage in.  A crash before ``_STAGED``
-    left every live table untouched; one after it is rolled forward by
-    ``recover_appends``.  Only files are added, so the write cost tracks
-    the batch (Iceberg's append snapshot)."""
-    staging = os.path.join(root, f"__batch_{batch_id}")
-    drop_table(staging)  # a partial stage: no live table saw it
-    for name, rows, part_col in tables:
-        create_table(rows, os.path.join(staging, name), part_col, record)
-    manifest.write.mode("overwrite").parquet(os.path.join(staging, "manifest"))
-    open(os.path.join(staging, "_STAGED"), "w").close()
-    _commit_append(root, batch_id)
-
-
-def _move(src: str, dst: str) -> None:
-    """rename; a ``src`` a concurrent committer moved first is skipped."""
-    try:
-        os.rename(src, dst)
-    except FileNotFoundError:
-        pass
-
-
-def _commit_append(root: str, batch_id: str) -> None:
-    """roll batch ``batch_id``'s staged-complete append forward: per table,
-    the staged layout record first when the live table has none, then
-    each part file (Spark-unique names: a resumed move never lands one
-    twice); then one rename publishes the manifest — the commit point.
-    Idempotent under crash-retry and safe against a concurrent committer
-    (another process's probe): whatever the other side moved is skipped."""
-    staging = os.path.join(root, f"__batch_{batch_id}")
-    manifest = os.path.join(batch_manifests(root), batch_id)
-    try:
-        names = sorted(os.listdir(staging))
-    except FileNotFoundError:
-        return  # a concurrent committer finished this append
-    for name in names:
-        src = os.path.join(staging, name)
-        if name == "manifest" or not os.path.isdir(src):
-            continue
-        live = os.path.join(root, name)
-        os.makedirs(live, exist_ok=True)
-        if not os.path.isfile(os.path.join(live, "_common_metadata")):
-            _move(os.path.join(src, "_common_metadata"), os.path.join(live, "_common_metadata"))
-        for d, _s, files in os.walk(src):
-            dst = os.path.join(live, os.path.relpath(d, src))
-            for f in files:
-                if f.endswith(".parquet"):
-                    os.makedirs(dst, exist_ok=True)
-                    _move(os.path.join(d, f), os.path.join(dst, f))
-    os.makedirs(os.path.dirname(manifest), exist_ok=True)
-    _move(os.path.join(staging, "manifest"), manifest)
-    if not os.path.isdir(manifest):
-        raise FileNotFoundError(f"{staging} staged no manifest")
-    drop_table(staging)
-
-
-def recover_appends(root: str) -> None:
-    """roll every staged-complete append under ``root`` forward.  An
-    un-staged ``__batch_*`` dir is a live writer's stage or dead weight
-    its batch's next append drops — never dropped here."""
-    require_local(root)
-    for staged in glob.glob(os.path.join(glob.escape(root), "__batch_*", "_STAGED")):
-        _commit_append(root, os.path.basename(os.path.dirname(staged))[len("__batch_"):])
+def _merge(spark: SparkSession, c: Commit, name: str, new: DataFrame, n_buckets: int) -> None:
+    """stage ``new``'s MERGE by url into table ``name`` on ``c``: the
+    batch's buckets only, new row wins whole; a first merge creates it."""
+    new = new.withColumn("_bucket", bucket_expr(n_buckets=n_buckets))
+    if c.base.table(name) is None:
+        c.create(name, new, "_bucket", {"n_buckets": n_buckets})
+        return
+    c.rewrite(
+        spark, name, buckets_of(new),
+        lambda old: old.join(new.select("url"), "url", "left_anti").unionByName(
+            new, allowMissingColumns=True
+        ),
+    )
 
 
 def merge_by_url(
     spark: SparkSession, new: DataFrame, path: str, n_buckets: int | None = None
 ) -> None:
-    """MERGE new INTO path ON url (new row wins, whole row).
+    """MERGE new INTO path ON url (new row wins, whole row), one commit.
 
-    Bucket-pruned: rewrite_buckets reads and rewrites ONLY the url-hash
-    buckets the batch touches (partition filter on ``_bucket``); every
-    other bucket file is untouched on disk. Iceberg equivalent:
-    copy-on-write ``MERGE INTO t USING batch ON t.url = batch.url`` with
-    the table bucket(url, N)-partitioned. Idempotent under replay
-    (crash between bucket swaps re-merges by url to the same result).
+    Bucket-pruned: only the url-hash buckets the batch touches are read
+    and rewritten; every other bucket file is untouched on disk. Iceberg
+    equivalent: copy-on-write ``MERGE INTO t USING batch ON t.url =
+    batch.url`` with the table bucket(url, N)-partitioned. Idempotent
+    under replay (a rerun re-merges by url to the same result).
 
     The first write creates the table with ``n_buckets`` (default
     ``N_BUCKETS``) and records its layout; a later merge uses the
-    recorded count (see ``table_buckets``); a table with data but no
-    layout record raises.  A recorded column the batch lacks survives
-    the merge, NULL on the batch's rows.
+    recorded count (see ``table_buckets``); a table with data under a
+    root without a log raises.  A recorded column the batch lacks
+    survives the merge, NULL on the batch's rows.
     """
-    # recover BEFORE the existence check: a table whose every bucket a
-    # crashed swap parked would otherwise read as absent and be
-    # replaced by the batch
-    recover_table(path)
+    root, name = _split(path)
     n_buckets = table_buckets(path, n_buckets)
-    new = new.withColumn("_bucket", bucket_expr(n_buckets=n_buckets))
-    if not has_data(path):
-        create_table(new, path, "_bucket", {"n_buckets": n_buckets})
-        return
-    if _layout(path) is None:
-        raise ValueError(f"table {path} holds data but records no layout "
-                         "(_common_metadata): rebuild it (drop_table, re-run its job)")
-    rewrite_buckets(
-        spark, path, buckets_of(new),
-        lambda old: old.join(new.select("url"), "url", "left_anti").unionByName(
-            new, allowMissingColumns=True
-        ),
-    )
+    c = Commit(root, "merge")
+    _merge(spark, c, name, new, n_buckets)
+    c.commit()
 
 
 def pending_rows(
@@ -413,28 +460,34 @@ def pending_rows(
     tables: Tables,
     stages: tuple[str, ...] = STAGES,
 ) -> DataFrame:
-    """filter_file_not_modified semantics: keep rows that are new, whose
-    content changed, whose pipeline version changed, or that miss any of
-    the requested stages (filter_file_not_modified.py:111-159)."""
-    recover_table(tables.checkpoint)
-    if not has_data(tables.checkpoint):
-        return pages
-    cp = spark.read.parquet(tables.checkpoint)
-    done = cp.filter(
-        (F.col("pipeline_version") == PIPELINE_VERSION)
-        & (F.size(F.array_except(F.array(*[F.lit(s) for s in stages]), F.col("stages_done"))) == 0)
-    ).select("url", "content_hash")
+    """filter_file_not_modified semantics: one row per url — its latest
+    ``warc_ts``, the larger content hash on a tie — kept when it is new,
+    its content changed, its pipeline version changed, or it misses any
+    of the requested stages (filter_file_not_modified.py:111-159)."""
     # two-step join so html NEVER rides a shuffle:
-    #  1. anti-join on the KEY PROJECTION only (url + 8-byte hash) — the
-    #     wide html column is not in this plan at all;
-    #  2. semi-join pages against the (usually tiny) todo key set — in
-    #     the steady incremental state AQE broadcasts it, so the full
+    #  1. pick each url's row and anti-join it on the KEY PROJECTION
+    #     only (url + 8-byte hash + row id) — the wide html column is not
+    #     shuffled in this plan at all;
+    #  2. semi-join pages against the (usually tiny) todo row ids — in
+    #     the steady incremental state AQE broadcasts them, so the full
     #     pages scan is never exchanged. At 10^12 rows with both tables
     #     bucketed by url (Iceberg storage-partitioned join) step 2 is
     #     shuffle-free even for large deltas.
-    keys = pages.select("url", content_hash().alias("content_hash"))
-    todo_keys = keys.join(done, ["url", "content_hash"], "left_anti").select("url")
-    return pages.join(todo_keys, "url", "left_semi")
+    # The row id tells apart rows equal in every key (a page landed
+    # twice); both scans of ``pages`` assign it alike.
+    rows = pages.withColumn("_row", F.monotonically_increasing_id())
+    todo = (
+        rows.groupBy("url")
+        .agg(F.max(F.struct("warc_ts", content_hash().alias("content_hash"), "_row")).alias("k"))
+        .select("url", "k.content_hash", "k._row")
+    )
+    if table_record(tables.checkpoint) is not None:
+        done = read_table(spark, tables.checkpoint).filter(
+            (F.col("pipeline_version") == PIPELINE_VERSION)
+            & (F.size(F.array_except(F.array(*[F.lit(s) for s in stages]), F.col("stages_done"))) == 0)
+        ).select("url", "content_hash")
+        todo = todo.join(done, ["url", "content_hash"], "left_anti")
+    return rows.join(todo.select("_row"), "_row", "left_semi").drop("_row")
 
 
 def _with_partition_metrics(df: DataFrame, run_id: str) -> DataFrame:
@@ -483,7 +536,7 @@ def run_incremental(
     run_id: str | None = None,
     n_buckets: int | None = None,
 ) -> dict:
-    """One resumable enrichment run; returns run stats.
+    """One resumable enrichment run — one commit — returns run stats.
 
     ``n_buckets`` sizes the tables this run creates; on existing tables
     it must match their recorded count (ValueError before any write).
@@ -492,7 +545,6 @@ def run_incremental(
     run_id = run_id or uuid.uuid4().hex[:12]
     tables = Tables(root)
     n_buckets = tables.buckets(n_buckets)
-    os.makedirs(root, exist_ok=True)
 
     todo = pending_rows(spark, pages, tables, stages)
     enriched = enrich_pages(todo, gazetteer=gazetteer, repartition=repartition)
@@ -504,23 +556,20 @@ def run_incremental(
     out = enriched.persist()
     n_done = out.count()
     if n_done:  # an empty batch commits nothing and appends no metrics
-        # 1. output commit (MERGE by url — idempotent under replay,
-        #    bucket-pruned so write volume ∝ batch)
-        merge_by_url(spark, out, tables.enriched, n_buckets=n_buckets)
-
-        # 2. lineage/metrics commit — per-partition rollup from the batch
+        # one commit: the output MERGE by url (bucket-pruned, write
+        # volume ∝ batch), the per-partition metrics rollup from the
+        # batch, and the checkpoint rows (the same url-keyed merge)
+        c = Commit(root, "run", run_id)
+        _merge(spark, c, "enriched", out, n_buckets)
         elapsed_ms = int((time.time() - t0) * 1000)
-        metrics = batch_metrics(out, run_id, elapsed_ms)
-        metrics.write.mode("append").parquet(tables.metrics)
-
-        # 3. checkpoint commit (AFTER output — crash replays, never
-        #    skips); url-keyed upsert → same bucket-pruned merge
+        c.append("metrics", batch_metrics(out, run_id, elapsed_ms), None, {})
         ckpt = (
             out.select("url", "content_hash")
             .withColumn("stages_done", F.array(*[F.lit(s) for s in stages]))
             .withColumn("pipeline_version", F.lit(PIPELINE_VERSION))
         )
-        merge_by_url(spark, ckpt, tables.checkpoint, n_buckets=n_buckets)
+        _merge(spark, c, "checkpoint", ckpt, n_buckets)
+        c.commit()
 
     out.unpersist()
     return {

@@ -3,11 +3,11 @@
 Small utilities completing the reference's operator surface:
 
 - ``delete_by_url`` / ``delete_where``: etl_delete.py:52-67 (`Delete`
-  by id / by query) → a ``rewrite_buckets`` commit of the enriched
-  table (Iceberg: ``DELETE FROM enriched WHERE url = ?``).
+  by id / by query) → one commit rewriting the victims' buckets
+  (Iceberg: ``DELETE FROM enriched WHERE url = ?``).
 - ``move_url``: move_indexed_file.py:9-53 — rewrite a document's id and
   its derived path facets after a filesystem move, in the enriched
-  table and the checkpoint.
+  table and the checkpoint, one commit.
 - ``join_annotations``: enhance_annotations.py:21-39 — pull external
   per-url annotations via a LEFT JOIN against an annotations table
   (replaces the per-doc HTTP GET; add-distinct merge = array_union).
@@ -22,12 +22,10 @@ from pyspark.sql import functions as F
 
 from open_semantic_etl_spark.functions.path import with_path_facets
 from open_semantic_etl_spark.plans.checkpoint import (
+    Commit,
     Tables,
     bucket_expr,
     buckets_of,
-    has_data,
-    recover_table,
-    rewrite_buckets,
     table_buckets,
 )
 
@@ -40,9 +38,11 @@ def _url_buckets(spark: SparkSession, path: str, urls: list[str]) -> list[int]:
     return buckets_of(urls_df.select(bucket_expr(n_buckets=n_buckets).alias("_bucket")))
 
 
-def _delete(spark: SparkSession, path: str, buckets: list | None, predicate: Column) -> int:
-    """rewrite ``buckets`` of ``path`` without the rows ``predicate``
-    holds for; returns how many went.  The count is observed ON the
+def _delete(
+    spark: SparkSession, c: Commit, name: str, buckets: list | None, predicate: Column
+) -> int:
+    """stage on ``c`` a rewrite of table ``name``'s ``buckets`` without
+    the rows ``predicate`` holds for; returns how many go.  The count is observed ON the
     rewrite pass itself (Spark ``Observation`` = CollectMetrics in the
     write job), so the only scan is the rewrite's own — no before/after
     counts (plan-audited).  SQL DELETE semantics: a NULL-predicate row
@@ -54,22 +54,22 @@ def _delete(spark: SparkSession, path: str, buckets: list | None, predicate: Col
         observed = df.observe(obs, F.count(F.when(predicate, 1)).alias("deleted"))
         return observed.filter(~F.coalesce(predicate, F.lit(False)))
 
-    rewrite_buckets(spark, path, buckets, drop_counting)
-    return int(obs.get["deleted"])
+    c.rewrite(spark, name, buckets, drop_counting)
+    return int(obs.get["deleted"]) if buckets is None or buckets else 0
 
 
 def delete_by_url(spark: SparkSession, root: str, urls: list[str]) -> int:
-    """remove documents by id (etl_delete) — a rewrite of the victims'
-    buckets only (Iceberg: ``DELETE FROM enriched WHERE url IN (…)``),
-    in the enriched table and then the checkpoint, so a rerun
+    """remove documents by id (etl_delete) — one commit rewriting the
+    victims' buckets only (Iceberg: ``DELETE FROM enriched WHERE url IN
+    (…)``), in the enriched table and the checkpoint, so a rerun
     re-indexes them, in the bucket space the enriched table records."""
     tables = Tables(root)
     buckets = _url_buckets(spark, tables.enriched, urls)
     is_victim = F.col("url").isin(urls)
-    deleted = _delete(spark, tables.enriched, buckets, is_victim)
-    recover_table(tables.checkpoint)
-    if has_data(tables.checkpoint):
-        _delete(spark, tables.checkpoint, buckets, is_victim)
+    c = Commit(root, "delete")
+    deleted = _delete(spark, c, "enriched", buckets, is_victim)
+    _delete(spark, c, "checkpoint", buckets, is_victim)
+    c.commit()
     return deleted
 
 
@@ -78,12 +78,15 @@ def delete_where(spark: SparkSession, root: str, predicate: Column) -> int:
     arbitrary predicate can hit any bucket, so this rewrites every
     bucket dir (Iceberg: DELETE FROM … WHERE <predicate>).  Each row
     keeps its bucket, so the table's bucket count is unchanged."""
-    return _delete(spark, Tables(root).enriched, None, predicate)
+    c = Commit(root, "delete")
+    deleted = _delete(spark, c, "enriched", None, predicate)
+    c.commit()
+    return deleted
 
 
 def move_url(spark: SparkSession, root: str, src: str, dst: str) -> None:
     """rewrite a moved document's id + path facets (move_indexed_file)
-    — one rewrite of exactly the src and dst buckets per table.  In the
+    — one commit rewriting exactly the src and dst buckets per table.  In the
     enriched table and the checkpoint alike, src's row becomes dst's
     and replaces any dst row (a Solr update with an existing id
     overwrites the doc), so a src that comes back is indexed again."""
@@ -104,10 +107,10 @@ def move_url(spark: SparkSession, root: str, src: str, dst: str) -> None:
         )
         return kept.unionByName(moved.select(*df.columns)).select(*df.columns)
 
-    rewrite_buckets(spark, tables.enriched, buckets, transform)
-    recover_table(tables.checkpoint)
-    if has_data(tables.checkpoint):
-        rewrite_buckets(spark, tables.checkpoint, buckets, transform)
+    c = Commit(root, "move", src)
+    c.rewrite(spark, "enriched", buckets, transform)
+    c.rewrite(spark, "checkpoint", buckets, transform)
+    c.commit()
 
 
 def join_annotations(

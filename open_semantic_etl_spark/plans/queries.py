@@ -292,6 +292,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signature,
         probe_lsh_index,
     )
+    from open_semantic_etl_spark.plans.checkpoint import table_record
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # ONE MinHash pass threads through batch pairs, index build and
@@ -303,22 +304,18 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = lsh_candidate_pairs(
         docs, text_col="text", id_col="doc_id", signatures=sigs
     ).withColumn("kind", F.lit("batch"))
-    import os
-
     index_path = _tmp_sidecar(
         sf_dir, _content_fp(sf_dir, "documents"), "lsh_index"
     )
     even = F.col("doc_id") % 2 == 0
     # build once per (content, process): the production incremental
     # shape pays the index build once and probes per batch, so steady
-    # reps measure the probe; the cold rep carries the build
-    marker = os.path.join(index_path, "_complete")
-    if not os.path.exists(marker):
+    # reps measure the probe; the cold rep carries the build.  The
+    # build is one log commit, so a recorded bands table is a whole index
+    if table_record(f"{index_path}/bands") is None:
         build_lsh_index(
             docs.filter(even), index_path, signatures=sigs.filter(even)
         )
-        with open(marker, "w") as fh:
-            fh.write("ok")
     probed = probe_lsh_index(
         docs.filter(~even), index_path, signatures=sigs.filter(~even)
     )

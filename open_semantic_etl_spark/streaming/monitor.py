@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from open_semantic_etl_spark.operators.entity_linking import Gazetteer
-from open_semantic_etl_spark.plans.checkpoint import Tables, run_incremental
+from open_semantic_etl_spark.plans.checkpoint import Commit, Tables, run_incremental
 from open_semantic_etl_spark.schema import PAGES_SCHEMA
 
 
@@ -97,14 +97,14 @@ def stream_dedup_ingest(
     ``dedup_ingest_batch`` call (probe the persisted LSH index, keep
     only docs novel against the whole already-ingested corpus AND
     within the batch, commit the keep-set's bands to the index), and
-    the keep-set lands in ``kept/_batch=<batch id>`` with overwrite.
+    the keep-set lands as table ``kept/_batch=<batch id>``, one commit
+    of the ``kept/`` root's log that replaces any earlier copy.
 
     A retried epoch keeps its ``_batch_id``, so it replays its committed
-    keep-set (the ingest's recovery first rolls a staged
-    ``append_batch`` commit forward) instead of re-ingesting against
-    itself.  A fresh checkpoint is a new query id and therefore a new
-    ingest: it dedups against everything already indexed, whichever
-    session wrote it.
+    keep-set instead of re-ingesting against itself, and re-commits
+    that keep-set whole.  A fresh checkpoint is a new query id and
+    therefore a new ingest: it dedups against everything already
+    indexed, whichever session wrote it.
     Semantics notes: duplicate urls within a batch collapse to one row
     first (re-crawl landing files), and empty-text docs share the
     all-zero signature, so they form ONE dup class — the first
@@ -112,7 +112,7 @@ def stream_dedup_ingest(
     of ingest if empty docs should not dedup together).
     Each landing file is its own micro-batch.  A new index takes
     ``dedup_ingest_batch``'s default LSH family; an existing one keeps
-    the family its tables record (an index whose tables record none
+    the family its tables record (an index with data but no commit log
     raises until ``build_lsh_index`` rebuilds it).  Returns the
     StreamingQuery."""
     import os
@@ -125,7 +125,9 @@ def stream_dedup_ingest(
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         batch_id = _batch_id(batch_df, epoch_id)
         kept = dedup_ingest_batch(spark, batch_df, index_path, batch_id, id_col="url")
-        kept.write.mode("overwrite").parquet(f"{kept_root}/_batch={batch_id}")
+        c = Commit(kept_root, "keep", batch_id)
+        c.create(f"_batch={batch_id}", kept, None, {})
+        c.commit()
 
     return _start_stream(
         spark, landing_dir, checkpoint_dir, process_batch,

@@ -1,14 +1,15 @@
 """The commit protocol lives in plans/checkpoint.py alone.
 
-Every table write goes through one of its commits (``create_table``,
-``rewrite_buckets``, ``append_batch``); the tmp-dir, swap and staged
-append steps behind them, and the writer of each table's layout record
-(``_common_metadata``, written with pyarrow's ``write_metadata``), are
-private to that module. A program file that names one of them — as a
-call, an attribute or an import — brings back per-module commit
-choreography, and fails this test. So does a raw filesystem mutator
-(rename, replace, remove, unlink, rmtree, move) anywhere else, except
-at the listed scratch sites that hold no table. A DataFrame ``.write``
+Every table write is one ``Commit`` of its root's log; the steps behind
+it (the log's entry create and replay, the data-file writes and the
+reaping of replaced files) are private to that module. So are the names
+of the mechanisms the log replaced (the tmp-dir, swap and staged append
+steps, and pyarrow's ``write_metadata`` layout footer): a program file
+that names one of them — as a call, an attribute or an import — brings
+back per-module commit choreography, and fails this test. So does a raw
+filesystem mutator (rename, replace, remove, unlink, link, rmtree,
+move) anywhere else, except at the listed scratch sites that hold no
+table. A DataFrame ``.write``
 or ``.writeStream`` anywhere else must be one of the listed sites,
 each with the reason it writes no table.
 """
@@ -25,9 +26,10 @@ CHECKPOINT = ROOT / "open_semantic_etl_spark" / "plans" / "checkpoint.py"
 PROTOCOL = {
     "swap_buckets", "tmp_path", "swap_table", "atomic_overwrite",
     "record_layout", "write_metadata", "commit_append", "move",
+    "create_entry", "replay", "write_files", "reap",
 }
 MUTATORS = {
-    "os": {"rename", "replace", "remove", "unlink"},
+    "os": {"rename", "replace", "remove", "unlink", "link"},
     "shutil": {"rmtree", "move"},
 }
 # non-table scratch: the driver queries' atexit tmp index dir, the OCR
@@ -46,13 +48,8 @@ SCRATCH_SITES = Counter({
 # - queries.py: the driver queries' ANN encoded sidecar, a per-process
 #   tmp dir rewritten whole until its _SUCCESS marker exists;
 # - monitor.py writeStream: the stream's foreachBatch sink, whose
-#   commits are run_incremental's and dedup_ingest_batch's;
-# - monitor.py write: the keep-set of a stream_dedup_ingest batch,
-#   overwritten whole in its own ``kept/_batch=<id>`` dir and rewritten
-#   by a retried epoch. A crash mid-write leaves a partial dir until the
-#   epoch replays; create_table also drops the dir and then writes in
-#   place, so routing the keep-set through it would be no more atomic.
-#   It becomes atomic with a per-table commit log (ROADMAP);
+#   commits are run_incremental's, dedup_ingest_batch's and the
+#   keep-set's (a Commit of the ``kept/`` root);
 # - bench.py and tools/explain_audit.py: their generated input pages
 #   (and the audit's seeded OCR memo) under /tmp, and bench.py's two
 #   noop-format timing writes, which write no file.
@@ -61,7 +58,6 @@ WRITE_SITES = Counter({
     "open_semantic_etl_spark/operators/ocr.py:write": 1,
     "open_semantic_etl_spark/plans/queries.py:write": 1,
     "open_semantic_etl_spark/streaming/monitor.py:writeStream": 1,
-    "open_semantic_etl_spark/streaming/monitor.py:write": 1,
     "bench.py:write": 3,
     "tools/explain_audit.py:write": 2,
 })
@@ -109,9 +105,7 @@ def test_commit_protocol_stays_in_checkpoint():
     )
     assert not leaks, f"commit protocol used outside plans/checkpoint.py: {leaks}"
     # the guard is live: the steps it looks for exist in checkpoint.py
-    assert {"_swap_buckets", "_record_layout", "write_metadata", "_commit_append"} <= (
-        _protocol_names(CHECKPOINT)
-    )
+    assert {"_create_entry", "_replay", "_write_files", "_reap"} <= _protocol_names(CHECKPOINT)
 
 
 def test_raw_mutators_stay_in_checkpoint():
@@ -125,7 +119,7 @@ def test_raw_mutators_stay_in_checkpoint():
     assert not leaks, f"raw filesystem mutator outside plans/checkpoint.py: {leaks}"
     # the guard is live: it sees checkpoint.py's own mutators and every
     # allowlisted scratch site
-    assert {"os.rename", "os.replace", "shutil.rmtree"} <= set(_mutators(CHECKPOINT))
+    assert {"os.link", "os.rename", "os.remove", "shutil.rmtree"} <= set(_mutators(CHECKPOINT))
     assert sites & SCRATCH_SITES == SCRATCH_SITES
 
 

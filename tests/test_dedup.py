@@ -910,29 +910,24 @@ def test_incremental_lsh_meta_guards_family_params(spark, corpus, tmp_path):
         assert len(bands5) == 8 and all(r._bb < 4 for r in bands5), name
 
 
-def test_crashed_rebuild_reads_as_absent_index(spark, corpus, tmp_path, monkeypatch):
-    """a rebuild that crashes between its sigs and bands writes must not
-    leave the old family's bands live under the new family's record —
-    the probe would hash in the wrong band space and silently miss
-    duplicates.  The rebuild drops the bands dir (the exists-marker)
-    before it recreates sigs, so the crashed index probes all-novel,
-    like a crashed first build."""
-    import os
+def test_crashed_rebuild_keeps_the_old_index(spark, corpus, tmp_path, monkeypatch):
+    """a rebuild in another family is one commit: one that crashes
+    before its log entry leaves the old index whole, probing in the
+    family its tables record — never new-family sigs beside old-family
+    bands, which would hash in the wrong band space and silently miss
+    duplicates."""
+    from test_pipeline_resume import crash_at
 
     path = str(tmp_path / "idx_crashed_rebuild")
     D.build_lsh_index(corpus, path)
-
-    def crash(*args, **kwargs):
-        raise RuntimeError("crash between the sigs and bands writes")
-
-    with monkeypatch.context() as m:
-        m.setattr(D, "_band_table", crash)
-        with pytest.raises(RuntimeError, match="crash between"):
+    for point in ("_write_files", "_create_entry"):
+        with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated crash"):
+            crash_at(m, point)
             D.build_lsh_index(corpus, path, bands=8, n_buckets=4)
-    assert C.table_buckets(f"{path}/sigs") == 4
-    assert not os.path.isdir(f"{path}/bands")
-    probed = D.probe_lsh_index(corpus.filter(F.col("doc_id") == 1), path).collect()
-    assert [(r.probe_id, r.matched) for r in probed] == [(1, False)]
+        for table in ("bands", "sigs"):
+            assert C.table_record(f"{path}/{table}")["bands"] == 16, (point, table)
+        probed = D.probe_lsh_index(corpus.filter(F.col("doc_id") == 1), path).collect()
+        assert 0 in {r.index_id for r in probed if r.matched}, point
 
 
 def test_index_tables_record_their_family(spark, corpus, tmp_path):
@@ -954,17 +949,15 @@ def test_index_tables_record_their_family(spark, corpus, tmp_path):
 
 def test_legacy_json_only_index_must_be_rebuilt(spark, corpus, tmp_path):
     """an index whose family lives only in a ``_lsh_meta.json`` beside
-    tables that record none (the layout of earlier builds) raises on
+    tables with no commit log (the layout of earlier builds) raises on
     probe, ingest, delete and compaction, naming build_lsh_index; the
     rebuild serves it again."""
-    import glob
     import json
-    import os
+    import shutil
 
     path = str(tmp_path / "idx_legacy")
     D.build_lsh_index(corpus, path)
-    for record in glob.glob(f"{path}/*/_common_metadata"):
-        os.remove(record)
+    shutil.rmtree(f"{path}/_log")
     with open(f"{path}/_lsh_meta.json", "w") as f:
         json.dump({"num_hashes": 64, "bands": 16, "shingle_n": 3, "n_buckets": 64}, f)
     probe = corpus.filter(F.col("doc_id") == 1)  # exact dup of 0
@@ -980,38 +973,63 @@ def test_legacy_json_only_index_must_be_rebuilt(spark, corpus, tmp_path):
     assert 0 in {r.index_id for r in D.probe_lsh_index(probe, path).collect() if r.matched}
 
 
-def test_incremental_lsh_partial_first_build_is_empty_index(spark, corpus, tmp_path):
-    """a crash mid-first-build can leave one table without the other;
-    the probe must treat that as an empty index (all novel), not wedge
-    every streaming retry (r4 review).  Writes sigs first so the
-    bands dir doubles as the exists-marker."""
-    import shutil
+def test_incremental_lsh_partial_first_build_is_empty_index(spark, corpus, tmp_path, monkeypatch):
+    """a first build that crashes before its log entry leaves no index,
+    whatever files it wrote (the build is one commit): the probe treats
+    it as empty (all novel), not wedge every streaming retry."""
+    from test_pipeline_resume import crash_at
 
     path = str(tmp_path / "idx_partial")
-    D.build_lsh_index(corpus, path)
-    shutil.rmtree(f"{path}/sigs")  # simulate the crash window
-    probed = D.probe_lsh_index(corpus.limit(2), path).collect()
-    assert all(not r.matched for r in probed)
+    for point in ("_write_files", "_create_entry"):
+        with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated crash"):
+            crash_at(m, point)
+            D.build_lsh_index(corpus, path)
+        probed = D.probe_lsh_index(corpus.limit(2), path).collect()
+        assert len(probed) == 2 and not any(r.matched for r in probed), point
 
 
-def test_compaction_crash_window_recovers(spark, corpus, tmp_path):
-    """simulated crash mid-compaction swap: every bands bucket dir is
-    parked in ``bands__swap`` (the live dir gone, its rewrite staged as
-    ``new__*``) — the next probe must roll the swap forward, not treat
-    a full corpus index as empty (r4 review)."""
-    import os
+@pytest.fixture(scope="module")
+def ingested_index(spark, corpus, tmp_path_factory):
+    """an index grown by three ingests (several files per bucket): doc
+    0 in batch ``b1``, docs 4 and 5 in ``b2``, doc 8 in ``b3``"""
+    path = str(tmp_path_factory.mktemp("lsh") / "idx")
+    kitchen = spark.createDataFrame([(8, _KITCHEN)], "doc_id long, text string")
+    for bid, batch in (
+        ("b1", corpus.filter(F.col("doc_id") == 0)),
+        ("b2", corpus.filter(F.col("doc_id").isin([4, 5]))),
+        ("b3", kitchen),
+    ):
+        D.dedup_ingest_batch(spark, batch, path, bid, id_col="doc_id")
+    return path
 
-    from test_pipeline_resume import crash_mid_swap
 
-    path = str(tmp_path / "idx_crash")
-    D.build_lsh_index(corpus, path)
-    crash_mid_swap(f"{path}/bands", "_bb")
-    assert not C.has_data(f"{path}/bands")
+def test_compaction_crash_window_recovers(spark, corpus, ingested_index, tmp_path, monkeypatch):
+    """a compaction that crashes at any point of its commit leaves every
+    row of every index table readable once, and the probe still finds
+    the collision — a whole corpus index never reads as empty; the
+    rerun converges.  The clean run leaves one file per bucket."""
+    from test_pipeline_resume import CRASH_POINTS, assert_crash_matrix
+
+    assert_crash_matrix(spark, monkeypatch, ingested_index, tmp_path,
+                        lambda root: D.compact_lsh_index(spark, root), changes=False)
     probe = corpus.filter(F.col("doc_id") == 1)  # exact dup of 0
-    got = {r.index_id for r in D.probe_lsh_index(probe, path).collect() if r.matched}
-    assert 0 in got  # index restored, collision found
-    assert C.has_data(f"{path}/bands")
-    assert not os.path.isdir(f"{path}/bands__swap")
+    for name in ("clean", *CRASH_POINTS):
+        root = str(tmp_path / name)
+        assert 0 in {r.index_id for r in D.probe_lsh_index(probe, root).collect() if r.matched}
+        files = C.snapshot(root).tables["bands"]["files"]
+        assert len(files) == len({f.split("/")[0] for f in files}), name
+
+
+def test_crash_matrix_lsh_build_and_expire(spark, ingested_index, tmp_path, monkeypatch):
+    """a rebuild in another family and a batch expiry, each one commit
+    over every index table it touches"""
+    from test_pipeline_resume import assert_crash_matrix
+
+    kitchen = spark.createDataFrame([(8, _KITCHEN)], "doc_id long, text string")
+    assert_crash_matrix(spark, monkeypatch, ingested_index, tmp_path / "build",
+                        lambda root: D.build_lsh_index(kitchen, root, bands=8, n_buckets=4))
+    assert_crash_matrix(spark, monkeypatch, ingested_index, tmp_path / "expire",
+                        lambda root: D.expire_lsh_batches(spark, root, ["b2"], strict=False))
 
 
 def test_dsir_importance_prefers_target_like_docs(spark):
@@ -1128,7 +1146,8 @@ def test_bigram_lm_perplexity_prefers_reference_like_docs(spark):
 def test_lsh_overwrite_reparameterizes_and_meta_self_heals(spark, corpus, tmp_path):
     """a rebuild may change the family (it rewrites everything, the
     tables' records included) and the probe follows the record; a torn
-    record fails the probe loudly and the next rebuild replaces it."""
+    write of the next log entry stays under its hidden temp name, where
+    neither the probe nor the next rebuild reads it."""
     path = str(tmp_path / "idx_meta2")
     probe = corpus.filter(F.col("doc_id") == 1)  # exact dup of 0
 
@@ -1140,38 +1159,44 @@ def test_lsh_overwrite_reparameterizes_and_meta_self_heals(spark, corpus, tmp_pa
     # 8-row bands share no hash with 4-row ones: a probe in the
     # default family would find nothing
     assert {0, 1} <= matched()
-    with open(f"{path}/bands/_common_metadata", "r+b") as f:
-        f.truncate(10)  # truncated write
-    with pytest.raises(ValueError, match="corrupt"):
-        D.probe_lsh_index(probe, path)
+    with open(f"{path}/_log/.3.deadbeef.tmp", "w") as f:
+        f.write('{"op": "bu')  # truncated write
+    assert {0, 1} <= matched()
     D.build_lsh_index(corpus, path, bands=8)
+    assert C.snapshot(path).version == 3
     assert {0, 1} <= matched()
 
 
 def test_lsh_probe_raises_on_conflicting_layout(spark, corpus, tmp_path):
     """a probe over an already-corrupt mixed flat/_epoch layout must
     RAISE, not silently report every doc novel (the exact failure the
-    old blanket AnalysisException catch hid — r5 review)."""
+    old blanket AnalysisException catch hid).  Files no log
+    entry names are invisible, so the corrupt layout is logged here."""
+    import os
+
     path = str(tmp_path / "idx_mixed")
     D.build_lsh_index(corpus.filter(F.col("doc_id") == 0), path)
     # corrupt the layout the way the pre-guard epoch append did
-    bands = spark.read.parquet(f"{path}/bands")
-    bands.write.mode("overwrite").partitionBy("_bb").parquet(
-        f"{path}/bands/_epoch=3"
-    )
+    bands = C.read_table(spark, f"{path}/bands")
+    bands.write.mode("overwrite").partitionBy("_bb").parquet(f"{path}/bands/_epoch=3")
+    added = [
+        os.path.relpath(os.path.join(d, f), f"{path}/bands")
+        for d, _s, fs in os.walk(f"{path}/bands/_epoch=3") for f in fs if f.endswith(".parquet")
+    ]
+    entry = {"op": "corrupt", "id": None, "tables": {"bands": {"add": added, "remove": []}}}
+    assert C._create_entry(path, C.snapshot(path).version + 1, entry)
     with pytest.raises(Exception, match="[Cc]onflicting"):
         D.probe_lsh_index(corpus.filter(F.col("doc_id") == 1), path).collect()
 
 
 def test_lsh_orphan_sig_rows_do_not_duplicate_matches(spark, corpus, tmp_path):
-    """a crash between an append's sigs and bands writes leaves
-    orphan sig rows the retry re-appends; the duplicate (_id, sig) rows
-    must not fan each collision out to multiple matched rows
-    (r5 review)."""
+    """an index holding a doc's (_id, sig) row twice (a build over a
+    frame that repeats the doc) must not fan each collision out to
+    multiple matched rows."""
     path = str(tmp_path / "idx_orphan")
-    D.build_lsh_index(corpus.filter(F.col("doc_id") == 0), path)
-    sigs = spark.read.parquet(f"{path}/sigs")
-    sigs.write.mode("append").partitionBy("_sb").parquet(f"{path}/sigs")
+    doc0 = corpus.filter(F.col("doc_id") == 0)
+    D.build_lsh_index(doc0.unionByName(doc0), path)
+    assert C.read_table(spark, f"{path}/sigs").count() == 2
     probed = D.probe_lsh_index(corpus.filter(F.col("doc_id") == 1), path).collect()
     matched = [(r.index_id, r.probe_id) for r in probed if r.matched]
     assert matched == [(0, 1)]  # one row, not two
@@ -1249,27 +1274,16 @@ def test_delete_from_lsh_index_edge_cases(spark, corpus, tmp_path):
     }
 
 
-def test_delete_crash_window_recovers(spark, corpus, tmp_path):
-    """simulated crash mid bucket swap (live dir gone, staged new copy
-    parked in __swap): the next probe rolls the swap forward and the
-    delete holds."""
-    import os
+def test_delete_crash_window_recovers(spark, ingested_index, tmp_path, monkeypatch):
+    """a delete is one commit over both tables: a crash at any point of
+    it leaves the index before or after it, and the rerun holds."""
+    from test_pipeline_resume import assert_crash_matrix
 
-    path = str(tmp_path / "idx_del3")
-    D.build_lsh_index(corpus, path)
-    # stage a real delete, then recreate the crash window by hand:
-    D.delete_from_lsh_index(spark, path, [0])
-    bb = [
-        d for d in os.listdir(f"{path}/bands") if d.startswith("_bb=")
-    ][0]
-    sw = f"{path}/bands__swap"
-    os.makedirs(sw, exist_ok=True)
-    os.rename(f"{path}/bands/{bb}", f"{sw}/new__{bb.split('=')[1]}__feed")
-    probe = corpus.filter(F.col("doc_id") == 1)
-    got = D.probe_lsh_index(probe, path)
-    assert got.count() > 0  # plan built fine post-recovery
-    assert os.path.isdir(f"{path}/bands/{bb}")
-    assert not os.path.isdir(sw)
+    assert_crash_matrix(spark, monkeypatch, ingested_index, tmp_path,
+                        lambda root: D.delete_from_lsh_index(spark, root, [0, 5]))
+    for table in ("bands", "sigs"):
+        ids = {r._id for r in C.read_table(spark, f"{tmp_path}/clean/{table}").collect()}
+        assert ids == {4, 8}, table
 
 
 def test_dedup_ingest_batch_flow_and_committed_replay(spark, corpus, tmp_path):
@@ -1346,9 +1360,7 @@ def test_dedup_ingest_batch_all_dup_batch_replays_empty(spark, corpus, tmp_path)
 def test_expire_lsh_batches_ttl_sweep(spark, corpus, tmp_path):
     """retention: expiring a committed batch removes exactly its docs
     from the index (probe stops matching them, other batches survive),
-    drops its marker, and an unknown batch_id raises."""
-    import os
-
+    drops its keep-set, and an unknown batch_id raises."""
     path = str(tmp_path / "ttl")
     D.dedup_ingest_batch(
         spark, corpus.filter(F.col("doc_id") == 0), path,
@@ -1366,8 +1378,7 @@ def test_expire_lsh_batches_ttl_sweep(spark, corpus, tmp_path):
     assert not any(
         r.matched for r in D.probe_lsh_index(probe, path, id_col="doc_id").collect()
     )
-    assert not os.path.isdir(f"{path}/_batches/old")
-    assert os.path.isdir(f"{path}/_batches/new")
+    assert D.list_lsh_batches(path) == ["new"]
     sig_ids = [r[0] for r in spark.read.parquet(f"{path}/sigs").select("_id").collect()]
     assert sig_ids == [4]  # the other batch survives
     with pytest.raises(FileNotFoundError, match="never committed"):
@@ -1410,136 +1421,175 @@ def test_lsh_paths_and_batch_ids_validated(spark, corpus, tmp_path):
         )
 
 
-def _crash_before_commit(*_args):
-    raise RuntimeError("simulated crash after staging, before commit")
-
-
 def test_dedup_ingest_batch_crash_resume(spark, corpus, tmp_path, monkeypatch):
-    """crash after staging, before commit: the retry rolls the staged
-    append forward and returns the RECORDED keep-set; the index holds
-    the batch exactly once.  A PARTIAL staging (the crash window
-    between the staged sigs and bands writes) is discarded and
-    recomputed — the live index was never touched."""
-    import os
+    """an ingest that crashed before its log entry left the index as it
+    was, and the retry recomputes the batch; one that crashed after its
+    entry (before deleting nothing: an append replaces no file) is
+    committed, and the retry replays its recorded keep-set.  Either
+    way the index holds the batch exactly once."""
+    from test_pipeline_resume import crash_at
 
     path = str(tmp_path / "ing3")
     b1 = corpus.filter(F.col("doc_id").isin([0, 4]))
     D.dedup_ingest_batch(spark, b1, path, batch_id="b1", id_col="doc_id")
-    bands_before = spark.read.parquet(f"{path}/bands").count()
+    bands_before = C.read_table(spark, f"{path}/bands").count()
     b2 = corpus.filter(F.col("doc_id").isin([1, 5]))
     with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated"):
-        m.setattr(C, "_commit_append", _crash_before_commit)
+        crash_at(m, "_create_entry")
         D.dedup_ingest_batch(spark, b2, path, batch_id="b2", id_col="doc_id")
-    # staged but not committed: live index untouched
-    assert spark.read.parquet(f"{path}/bands").count() == bands_before
+    assert C.read_table(spark, f"{path}/bands").count() == bands_before
+    assert D.list_lsh_batches(path) == ["b1"]
     k2 = D.dedup_ingest_batch(spark, b2, path, batch_id="b2", id_col="doc_id")
     assert {r.doc_id for r in k2.collect()} == {5}
-    assert not os.path.isdir(f"{path}/__batch_b2")
-    sig_ids = [r[0] for r in spark.read.parquet(f"{path}/sigs").select("_id").collect()]
-    assert sorted(sig_ids) == [0, 4, 5]  # exactly once each
-    # partial staging (no _STAGED) is discarded and recomputed
-    os.makedirs(f"{path}/__batch_b3/sigs", exist_ok=True)
-    b3 = corpus.filter(F.col("doc_id").isin([7]))  # near dup of 0
-    k3 = D.dedup_ingest_batch(spark, b3, path, batch_id="b3", id_col="doc_id")
-    assert k3.count() == 0  # 7 collides with indexed 0
-    assert not os.path.isdir(f"{path}/__batch_b3")
 
-
-def test_dedup_ingest_batch_staged_commit_rolled_forward_by_probe(
-    spark, corpus, tmp_path, monkeypatch
-):
-    """a staged-complete batch left by a crash is committed by the NEXT
-    index operation (probe/build run _recover_index), so the
-    keep-set becomes visible without the original caller retrying."""
-    path = str(tmp_path / "ing4")
-    b1 = corpus.filter(F.col("doc_id").isin([0]))
+    b3 = spark.createDataFrame([(8, _KITCHEN)], "doc_id long, text string")
     with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated"):
-        m.setattr(C, "_commit_append", _crash_before_commit)
-        D.dedup_ingest_batch(spark, b1, path, batch_id="b1", id_col="doc_id")
-    probe = corpus.filter(F.col("doc_id") == 1)  # exact dup of 0
-    got = {r.index_id for r in D.probe_lsh_index(probe, path, id_col="doc_id").collect() if r.matched}
-    assert got == {0}  # the staged batch was committed before probing
-    import os
+        crash_at(m, "_reap")
+        D.dedup_ingest_batch(spark, b3, path, batch_id="b3", id_col="doc_id")
+    assert D.list_lsh_batches(path) == ["b1", "b2", "b3"]
+    k3 = D.dedup_ingest_batch(spark, b3, path, batch_id="b3", id_col="doc_id")
+    assert {r.doc_id for r in k3.collect()} == {8}
+    sig_ids = [r[0] for r in C.read_table(spark, f"{path}/sigs").select("_id").collect()]
+    assert sorted(sig_ids) == [0, 4, 5, 8]  # exactly once each
 
-    assert os.path.isdir(f"{path}/_batches/b1")
+
+def test_crash_matrix_lsh_ingest(spark, corpus, ingested_index, tmp_path, monkeypatch):
+    """an ingest: its sigs and bands appends and its keep-set, one commit"""
+    from test_pipeline_resume import assert_crash_matrix
+
+    batch = corpus.filter(F.col("doc_id").isin([1, 2, 6]))
+    assert_crash_matrix(spark, monkeypatch, ingested_index, tmp_path,
+                        lambda root: D.dedup_ingest_batch(spark, batch, root, "b4", id_col="doc_id"))
 
 
-def test_build_after_crashed_compaction_recovers_first(spark, corpus, tmp_path):
-    """an ingest arriving after a crashed compaction swap must roll the
-    parked bucket dirs forward BEFORE writing — otherwise its append
-    recreates live bucket dirs, and the next recovery drops the staged
-    copies of those buckets, silently unindexing their rows (r4
-    review)."""
-    from test_pipeline_resume import crash_mid_swap
+def test_build_after_crashed_compaction_recovers_first(spark, corpus, tmp_path, monkeypatch):
+    """an ingest arriving after a compaction that crashed with its
+    rewritten files in the bucket dirs, before its log entry, appends to
+    the logged index: doc 0's band rows are there once, neither lost nor
+    doubled by the crashed compaction's files."""
+    from test_pipeline_resume import crash_at
 
     path = str(tmp_path / "idx_crash2")
     D.dedup_ingest_batch(
         spark, corpus.filter(F.col("doc_id") == 0), path, "b1", id_col="doc_id"
     )
-    n_bands = spark.read.parquet(f"{path}/bands").count()
-    crash_mid_swap(f"{path}/bands", "_bb")
+    n_bands = C.read_table(spark, f"{path}/bands").count()
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated"):
+        crash_at(m, "_create_entry")
+        D.compact_lsh_index(spark, path)
     D.dedup_ingest_batch(  # append
         spark, corpus.filter(F.col("doc_id") == 4), path, "b2", id_col="doc_id"
     )
     probe = corpus.filter(F.col("doc_id") == 1)  # exact dup of 0
     got = {r.index_id for r in D.probe_lsh_index(probe, path).collect() if r.matched}
     assert 0 in got  # doc 0's bands survived the crash + append
-    bands = spark.read.parquet(f"{path}/bands")
+    bands = C.read_table(spark, f"{path}/bands")
     assert bands.filter(F.col("_id") == 0).count() == n_bands
 
 
-def test_compaction_crash_recovers_on_glob_special_path(spark, corpus, tmp_path):
-    """recovery must treat the index path literally: on a path holding
-    glob metacharacters it still reaps a stale ``__tmp_*`` sibling and
-    rolls a crashed compaction swap forward."""
-    import os
-    import shutil
-
-    from test_pipeline_resume import _bucket_file_state, crash_mid_swap
+def test_compaction_crash_recovers_on_glob_special_path(spark, corpus, tmp_path, monkeypatch):
+    """the log treats the index path literally: on a path holding glob
+    metacharacters, a compaction that crashed before its log entry
+    leaves the logged rows readable, and its rerun keeps them all."""
+    from test_pipeline_resume import crash_at
 
     path = str(tmp_path / "idx[ab]")
     D.build_lsh_index(corpus, path)
-    before = _bucket_file_state(f"{path}/bands")
-    shutil.copytree(f"{path}/bands", f"{path}/bands__tmp_cafe")
-    crash_mid_swap(f"{path}/bands", "_bb")
-    D._recover_index(path)
-    assert {k: v[2] for k, v in _bucket_file_state(f"{path}/bands").items()} == {
-        k: v[2] for k, v in before.items()
-    }
-    assert not os.path.isdir(f"{path}/bands__swap")
-    assert not os.path.isdir(f"{path}/bands__tmp_cafe")
+
+    def rows():
+        return sorted(map(repr, C.read_table(spark, f"{path}/bands").collect()))
+
+    before = rows()
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated"):
+        crash_at(m, "_create_entry")
+        D.compact_lsh_index(spark, path)
+    assert rows() == before
+    D.compact_lsh_index(spark, path)
+    assert rows() == before
+    probe = corpus.filter(F.col("doc_id") == 1)  # exact dup of 0
+    assert 0 in {r.index_id for r in D.probe_lsh_index(probe, path).collect() if r.matched}
 
 
 def test_commit_batch_staging_tolerates_concurrent_committer(
     spark, corpus, tmp_path, monkeypatch
 ):
-    """the writer and another process's probe can roll the same staged
-    batch forward at once; whichever loses a rename race must carry
-    on, not crash on the part file or kept-ids dir the winner moved."""
-    import os
-
+    """two ingests that started from the same log version race for the
+    next entry: the loser re-reads the log and commits on top of the
+    winner instead of failing or dropping either batch."""
     path = str(tmp_path / "ing_race")
-    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated"):
-        m.setattr(C, "_commit_append", _crash_before_commit)
-        D.dedup_ingest_batch(
-            spark, corpus.filter(F.col("doc_id").isin([0, 4])), path,
-            batch_id="b1", id_col="doc_id",
-        )
-    real_rename = os.rename
+    D.dedup_ingest_batch(spark, corpus.filter(F.col("doc_id") == 0), path, "b0", id_col="doc_id")
+    create_entry, raced = C._create_entry, []
 
-    def racing_rename(src, dst):
-        if "__batch_" in str(src):
-            real_rename(src, dst)  # the concurrent committer moves it first
-        return real_rename(src, dst)
+    def racing(root, version, entry):
+        if entry["id"] == "b1" and not raced:
+            raced.append(version)  # the other writer commits this version first
+            D.dedup_ingest_batch(
+                spark, corpus.filter(F.col("doc_id") == 5), path, "b2", id_col="doc_id"
+            )
+        return create_entry(root, version, entry)
 
-    staging, marker = f"{path}/__batch_b1", f"{C.batch_manifests(path)}/b1"
-    monkeypatch.setattr(os, "rename", racing_rename)
-    C._commit_append(path, "b1")
+    monkeypatch.setattr(C, "_create_entry", racing)
+    D.dedup_ingest_batch(spark, corpus.filter(F.col("doc_id") == 4), path, "b1", id_col="doc_id")
     monkeypatch.undo()
-    assert os.path.isdir(marker)
-    assert not os.path.isdir(staging)
-    sig_ids = [r[0] for r in spark.read.parquet(f"{path}/sigs").select("_id").collect()]
-    assert sorted(sig_ids) == [0, 4]
+    assert raced == [2] and C.snapshot(path).version == 3
+    assert D.list_lsh_batches(path) == ["b0", "b1", "b2"]
+    sig_ids = [r[0] for r in C.read_table(spark, f"{path}/sigs").select("_id").collect()]
+    assert sorted(sig_ids) == [0, 4, 5]
+
+
+def test_ingest_racing_a_rebuild_is_refused(spark, corpus, tmp_path, monkeypatch):
+    """an ingest that loses the race to a rebuild in another family must
+    not land its old-family band rows on the rebuilt tables: it raises,
+    and its retry appends in the recorded family."""
+    from test_pipeline_resume import assert_dirs_hold_live_files
+
+    path = str(tmp_path / "ing_rebuild")
+    D.dedup_ingest_batch(spark, corpus.filter(F.col("doc_id") == 0), path, "b0", id_col="doc_id")
+    create_entry = C._create_entry
+
+    def rebuild_first(root, version, entry):
+        if entry["op"] == "ingest" and C.snapshot(path).version == 1:
+            D.build_lsh_index(corpus.filter(F.col("doc_id") == 0), path, bands=8, n_buckets=4)
+        return create_entry(root, version, entry)
+
+    batch = corpus.filter(F.col("doc_id") == 4)
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="conflicts"):
+        m.setattr(C, "_create_entry", rebuild_first)
+        D.dedup_ingest_batch(spark, batch, path, "b1", id_col="doc_id")
+    assert C.snapshot(path).version == 2 and D.list_lsh_batches(path) == []
+    assert_dirs_hold_live_files(path)  # the refused ingest deleted its files
+    D.dedup_ingest_batch(spark, batch, path, "b1", id_col="doc_id")
+    bands = C.read_table(spark, f"{path}/bands").collect()
+    assert {r._id for r in bands} == {0, 4} and all(r._bb < 4 for r in bands)
+    assert len([r for r in bands if r._id == 4]) == 8
+
+
+def test_ingest_during_compaction_keeps_its_rows(spark, corpus, tmp_path, monkeypatch):
+    """an ingest that commits while compact_lsh_index runs (after the
+    compaction read the index, before its entry) keeps all its band and
+    sig rows: the compaction replaces only the files it read, so it
+    commits on top of the ingest."""
+    path = str(tmp_path / "ing_compact")
+    D.dedup_ingest_batch(spark, corpus.filter(F.col("doc_id") == 0), path, "b0", id_col="doc_id")
+    D.dedup_ingest_batch(spark, corpus.filter(F.col("doc_id") == 4), path, "b1", id_col="doc_id")
+    create_entry = C._create_entry
+
+    def ingest_first(root, version, entry):
+        if entry["op"] == "compact" and not D.list_lsh_batches(path)[2:]:
+            D.dedup_ingest_batch(
+                spark, corpus.filter(F.col("doc_id") == 5), path, "b2", id_col="doc_id"
+            )
+        return create_entry(root, version, entry)
+
+    monkeypatch.setattr(C, "_create_entry", ingest_first)
+    D.compact_lsh_index(spark, path)
+    monkeypatch.undo()
+    assert D.list_lsh_batches(path) == ["b0", "b1", "b2"]
+    for table in ("sigs", "bands"):
+        ids = [r._id for r in C.read_table(spark, f"{path}/{table}").collect()]
+        assert set(ids) == {0, 4, 5}, table
+        assert ids.count(5) == (1 if table == "sigs" else 16), table
+    assert C.snapshot(path).version == 4  # the compaction landed on top
 
 
 def test_lsh_probe_keeps_max_estimate_for_reingested_id(spark, corpus, tmp_path):
@@ -1571,20 +1621,3 @@ def test_lsh_probe_keeps_max_estimate_for_reingested_id(spark, corpus, tmp_path)
     for src in (0, 7):  # same id, new text: novel, so it appends
         D.dedup_ingest_batch(spark, doc99(texts[src]), path, f"b{src}", id_col="doc_id")
     assert estimates(path) == [(99, max(single.values()))]
-
-
-def test_delete_sweeps_a_table_whose_twin_is_missing(spark, corpus, tmp_path):
-    """a crash between a build's sigs and bands writes leaves sig rows
-    and no bands table; a takedown must still remove the doc's sig row
-    instead of returning early — and likewise its band rows when only
-    the bands table holds data."""
-    import shutil
-
-    for gone, kept in (("bands", "sigs"), ("sigs", "bands")):
-        path = str(tmp_path / f"idx_no_{gone}")
-        D.build_lsh_index(corpus, path)
-        shutil.rmtree(f"{path}/{gone}")
-        D.delete_from_lsh_index(spark, path, [0])
-        ids = {r[0] for r in spark.read.parquet(f"{path}/{kept}").select("_id").collect()}
-        assert 0 not in ids, kept
-        assert 4 in ids, kept

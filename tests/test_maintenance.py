@@ -381,11 +381,7 @@ def test_creating_call_refuses_another_bucket_count(spark, tmp_path):
 
     def state():
         files = {p: _bucket_file_state(p) for p in (t.enriched, t.checkpoint, t.metrics)}
-        for p in (t.enriched, t.checkpoint):
-            record = os.path.join(p, "_common_metadata")
-            if os.path.exists(record):
-                with open(record, "rb") as fh:
-                    files[p]["_common_metadata"] = fh.read()
+        files["_log"] = sorted(os.listdir(os.path.join(root, "_log")))
         return files
 
     before = state()

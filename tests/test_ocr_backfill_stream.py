@@ -12,7 +12,7 @@ from open_semantic_etl_spark.functions.filters import blacklist_predicate, gated
 from open_semantic_etl_spark.operators import multimodal as MM
 from open_semantic_etl_spark.operators.ocr import fake_ocr, run_ocr_phase
 from open_semantic_etl_spark.plans.backfill import run_backfill
-from open_semantic_etl_spark.plans.checkpoint import Tables, run_incremental
+from open_semantic_etl_spark.plans.checkpoint import Tables, read_table, run_incremental
 from open_semantic_etl_spark.sources.pages import pages_df
 
 
@@ -68,7 +68,7 @@ def _add_shout(_spark, pruned):  # upper-cases titles as the "new stage"
 
 def _rows(spark, path):
     """url -> every column of the url's row, partition column included."""
-    return {r["url"]: r.asDict(recursive=True) for r in spark.read.parquet(path).collect()}
+    return {r["url"]: r.asDict(recursive=True) for r in read_table(spark, path).collect()}
 
 
 def test_backfill_runs_only_missing(spark, tmp_path):
@@ -107,79 +107,78 @@ def test_backfill_keeps_every_other_column(spark, tmp_path):
 
 
 def test_backfill_on_root_without_checkpoint(spark, tmp_path, monkeypatch):
-    """a first run that crashed between its enriched and checkpoint
-    commits leaves an enriched table and no checkpoint table: the
-    backfill must keep every column, write the checkpoint rows it
-    needs, and converge (it used to NULL content_txt on every row and
-    then fail reading the missing checkpoint)."""
-    from test_pipeline_resume import crash_before_checkpoint
+    """a first run that crashed before its log entry leaves no table at
+    all (its enriched MERGE and checkpoint MERGE are one commit): the
+    backfill raises and writes nothing, and after the rerun it keeps
+    every column and marks every url on top of the run's stages."""
+    from test_pipeline_resume import crash_at
+
+    from open_semantic_etl_spark.plans.checkpoint import snapshot
+    from open_semantic_etl_spark.plans.pipeline import STAGES
 
     root = str(tmp_path / "out")
     with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated crash"):
-        crash_before_checkpoint(m, root)
+        crash_at(m, "_create_entry")
         run_incremental(spark, pages_df(spark, 20, partitions=2), root)
-    t = Tables(root)
-    assert not os.path.isdir(t.checkpoint)
-    before = _rows(spark, t.enriched)
+    assert snapshot(root).tables == {}
+    with pytest.raises(FileNotFoundError, match="checkpoint"):
+        run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",))
+    assert snapshot(root).version == 0
 
+    assert run_incremental(spark, pages_df(spark, 20, partitions=2), root)["processed"] == 20
+    t = Tables(root)
+    before = _rows(spark, t.enriched)
     assert run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",)) == 20
     after = _rows(spark, t.enriched)
     for url, row in after.items():
         assert row.pop("title_shout") == before[url]["title_txt"].upper()
         assert row == before[url], url
-    ckpt = {r["url"]: r for r in spark.read.parquet(t.checkpoint).collect()}
+    ckpt = _rows(spark, t.checkpoint)
     assert ckpt.keys() == before.keys()
     for url, r in ckpt.items():
-        assert r["stages_done"] == ["shout"]
+        assert r["stages_done"] == [*STAGES, "shout"]
         assert r["content_hash"] == before[url]["content_hash"]
     assert run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",)) == 0
 
 
 def test_backfill_converges_after_checkpoint_crash(spark, tmp_path, monkeypatch):
-    """urls a crashed run left in enriched but not in the checkpoint
-    get their stage marked too, so the next backfill has nothing to do
-    (they used to be re-run on every call)."""
-    from test_pipeline_resume import crash_before_checkpoint
+    """a run that crashed before its commit left its 5 new urls in
+    neither table: the backfill marks the 20 committed urls and then
+    has nothing to do, the rerun processes the 5, and the next
+    backfill marks just those."""
+    from test_pipeline_resume import crash_at
 
     root = str(tmp_path / "ds")
     run_incremental(spark, pages_df(spark, 20, partitions=2), root)
     with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated crash"):
-        crash_before_checkpoint(m, root)
+        crash_at(m, "_create_entry")
         run_incremental(spark, pages_df(spark, 25, partitions=2), root)
-    assert run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",)) == 25
+    assert run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",)) == 20
     assert run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",)) == 0
-    # the base stages of the 5 crashed urls are still unrecorded
     assert run_incremental(spark, pages_df(spark, 25, partitions=2), root)["processed"] == 5
+    assert run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",)) == 5
+    assert run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",)) == 0
 
 
 def test_backfill_crash_between_commits_replays(spark, tmp_path, monkeypatch):
-    """a crash after the enriched commit and before the checkpoint
-    commit leaves the stage unmarked: the rerun re-applies it to the
-    same enriched table, and the call after that is a no-op."""
-    from open_semantic_etl_spark.plans import backfill as B
+    """a backfill's 'set' and its stage mark are one commit: a crash
+    after its files land and before its log entry leaves the enriched
+    rows as they were and the stage unmarked, the rerun applies it, and
+    the call after that is a no-op."""
+    from test_pipeline_resume import crash_at
 
     root = str(tmp_path / "ds")
     run_incremental(spark, pages_df(spark, 30, partitions=2), root)
     t = Tables(root)
-    commits = []
-
-    def crash_on_second(spark_, path, *args, **kwargs):
-        commits.append(path)
-        if len(commits) == 2:
-            raise RuntimeError("simulated crash between backfill commits")
-        return rewrite(spark_, path, *args, **kwargs)
-
-    rewrite = B.rewrite_buckets
-    monkeypatch.setattr(B, "rewrite_buckets", crash_on_second)
-    with pytest.raises(RuntimeError, match="simulated crash"):
+    before = _rows(spark, t.enriched)
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated crash"):
+        crash_at(m, "_create_entry")
         run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",))
-    monkeypatch.undo()
-    assert commits == [t.enriched, t.checkpoint]
-    crashed = _rows(spark, t.enriched)
-    assert all(r["title_shout"] == r["title_txt"].upper() for r in crashed.values())
+    assert _rows(spark, t.enriched) == before
 
     assert run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",)) == 30
-    assert _rows(spark, t.enriched) == crashed
+    after = _rows(spark, t.enriched)
+    assert all(r["title_shout"] == r["title_txt"].upper() for r in after.values())
     assert run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",)) == 0
 
 
@@ -291,6 +290,26 @@ def test_stream_enrich(spark, tmp_path):
     with pytest.raises(ValueError, match="records n_buckets=64"):
         stream_enrich(spark, landing, out_root, str(tmp_path / "ckpt2"), n_buckets=8)
     assert not os.path.exists(tmp_path / "ckpt2")
+
+
+def test_stream_epoch_with_repeated_urls_commits_one_row_per_url(spark, tmp_path):
+    """an epoch over two landing files of the same 40 pages writes one
+    enriched row, one checkpoint row and one metrics doc per url."""
+    from open_semantic_etl_spark.streaming.monitor import stream_enrich
+
+    landing = str(tmp_path / "landing")
+    out_root = str(tmp_path / "out")
+    pages = pages_df(spark, 40, partitions=2)
+    pages.write.mode("overwrite").parquet(landing)
+    pages.write.mode("append").parquet(landing)
+    q = stream_enrich(spark, landing, out_root, str(tmp_path / "ckpt"), trigger_once=True)
+    assert q.awaitTermination(120)
+    assert [p["batchId"] for p in q.recentProgress if p["numInputRows"]] == [0]  # one epoch
+    t = Tables(out_root)
+    for path in (t.enriched, t.checkpoint):
+        df = read_table(spark, path)
+        assert df.count() == df.select("url").distinct().count() == 40, path
+    assert read_table(spark, t.metrics).agg(F.sum("docs")).first()[0] == 40
 
 
 def test_pdf_ocr_per_page(spark, tmp_path):

@@ -1,8 +1,9 @@
 """Checkpoint/resume correctness (FIXTURES.md §4 two-run + kill-rerun).
 
 Proves the filter_file_not_modified semantics (only new/changed rows
-reprocess) and the acks_late replay analogue (crash between output
-MERGE and checkpoint commit → rerun converges idempotently).
+reprocess) and the acks_late replay analogue: a run is one commit of
+its root's log, so a crash at any point of it leaves readers the old
+or the new snapshot, and the rerun converges idempotently.
 """
 
 from __future__ import annotations
@@ -13,7 +14,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from open_semantic_etl_spark.plans.checkpoint import Tables, run_incremental
+from open_semantic_etl_spark.plans.checkpoint import Tables, read_table, run_incremental
 from open_semantic_etl_spark.schema import PAGES_SCHEMA
 from open_semantic_etl_spark.sources.pages import page_record
 
@@ -82,33 +83,35 @@ def test_incremental_and_replay(spark, root):
     assert metrics.select("partition_id").distinct().count() >= 1
 
 
-def crash_before_checkpoint(monkeypatch, root: str) -> None:
-    """make run_incremental's checkpoint MERGE raise: a crash after the
-    output commit and before the checkpoint commit"""
+#: where a commit can die: before its data write, after its data files
+#: land but before its log entry, after the entry but before it deletes
+#: the files it replaced
+CRASH_POINTS = ("_write_files", "_create_entry", "_reap")
+
+
+def crash_at(monkeypatch, point: str) -> None:
+    """make every commit raise at ``point`` (one of ``CRASH_POINTS``)"""
     from open_semantic_etl_spark.plans import checkpoint as C
 
-    merge = C.merge_by_url
+    def crash(*_args, **_kwargs):
+        raise RuntimeError(f"simulated crash at {point}")
 
-    def merge_or_crash(spark_, new, path, *args, **kwargs):
-        if path == Tables(root).checkpoint:
-            raise RuntimeError("simulated crash between merge and checkpoint commit")
-        return merge(spark_, new, path, *args, **kwargs)
-
-    monkeypatch.setattr(C, "merge_by_url", merge_or_crash)
+    monkeypatch.setattr(C, point, crash)
 
 
 def test_kill_and_rerun_converges(spark, root, monkeypatch):
     pages = _pages(spark, 100)
     run_incremental(spark, pages, root)
 
-    # modify 20 rows, then crash between MERGE and checkpoint commit
+    # modify 20 rows, then crash after the run's data files land and
+    # before its log entry
     pages_mod = _pages(spark, 100, reseed_from=80, reseed_to=100)
     with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated crash"):
-        crash_before_checkpoint(m, root)
+        crash_at(m, "_create_entry")
         run_incremental(spark, pages_mod, root)
 
-    # rerun after the crash: the changed rows REPLAY (checkpoint never
-    # committed), and the url-keyed merge keeps the table consistent
+    # rerun after the crash: the changed rows REPLAY (nothing committed),
+    # and the url-keyed merge keeps the table consistent
     n_changed = sum(
         1 for i in range(80, 100) if page_record(i, 42)["html"] != page_record(i, 7)["html"]
     )
@@ -116,7 +119,7 @@ def test_kill_and_rerun_converges(spark, root, monkeypatch):
     assert s["processed"] == n_changed
 
     t = Tables(root)
-    enriched = spark.read.parquet(t.enriched)
+    enriched = read_table(spark, t.enriched)
     assert enriched.count() == 100
     assert enriched.select("url").distinct().count() == 100  # no dup urls
     assert enriched.filter(F.col("content_txt") != F.col("text")).count() == 0
@@ -125,12 +128,75 @@ def test_kill_and_rerun_converges(spark, root, monkeypatch):
     assert run_incremental(spark, pages_mod, root)["processed"] == 0
 
 
+def test_replayed_run_appends_its_metrics_once(spark, root, monkeypatch):
+    """a run that crashed after its data files landed and before its log
+    entry is rerun under its run id: the metrics table then holds that
+    run's per-partition rows once (the metrics append and both MERGEs
+    are one commit, so the crashed attempt left none)."""
+    run_incremental(spark, _pages(spark, 40), root, run_id="base")
+    pages = _pages(spark, 50, reseed_from=30, reseed_to=40)
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated crash"):
+        crash_at(m, "_create_entry")
+        run_incremental(spark, pages, root, run_id="r1")
+    s = run_incremental(spark, pages, root, run_id="r1")
+    rows = read_table(spark, Tables(root).metrics).filter(F.col("run_id") == "r1").collect()
+    parts = [r.partition_id for r in rows]
+    assert sorted(parts) == sorted(set(parts))
+    assert sum(r.docs for r in rows) == s["processed"] > 0
+
+
+def _ts(seconds: int):
+    import datetime
+
+    return datetime.datetime(2024, 1, 1) + datetime.timedelta(seconds=seconds)
+
+
+def test_batch_with_repeated_urls_commits_one_row_per_url(spark, root):
+    """a batch holding a url more than once (a page landed twice, a
+    recrawl within one trigger) writes one enriched row, one checkpoint
+    row and one metrics doc per url: the latest ``warc_ts`` wins, and
+    on a ``warc_ts`` tie the larger content hash."""
+    from open_semantic_etl_spark.plans.pipeline import content_hash
+
+    pages = _pages(spark, 40)
+    s = run_incremental(spark, pages.unionByName(pages), root)
+    assert s["processed"] == 40
+    t = Tables(root)
+    for path in (t.enriched, t.checkpoint):
+        df = read_table(spark, path)
+        assert df.count() == df.select("url").distinct().count() == 40, path
+    docs = read_table(spark, t.metrics).agg(F.sum("docs")).first()[0]
+    assert docs == 40
+
+    # the winner: latest warc_ts; on a tie, the larger content hash
+    base = page_record(0, 42)
+    html = [page_record(i, 42)["html"] for i in (1, 2, 3)]
+    rows = [
+        (base["url"], _ts(10), html[0], "old"),
+        (base["url"], _ts(20), html[1], "tie_a"),
+        (base["url"], _ts(20), html[2], "tie_b"),
+    ]
+    batch = spark.createDataFrame(
+        [(u, ts, h, txt, "en") for u, ts, h, txt in rows], PAGES_SCHEMA
+    )
+    hashes = {r.text: r.h for r in batch.select("text", content_hash().alias("h")).collect()}
+    want = max(("tie_a", "tie_b"), key=hashes.get)
+    other = str(root) + "_winner"
+    for order in (batch, batch.orderBy(F.col("text").desc())):
+        s = run_incremental(spark, order.repartition(3), other)
+        got = read_table(spark, Tables(other).enriched).collect()
+        assert [r.text for r in got] == [want]
+        assert s["processed"] in (0, 1)
+
+
 def test_noop_run_commits_nothing(spark, root):
     """A rerun with nothing pending stops after counting its empty batch:
-    no file under the root is written (no table commit, no empty
-    metrics file) and it runs at most 6 Spark jobs (the pending-row
-    probe plus that count; the three commits ran 15)."""
+    no file under the root is written (no log entry, no table commit,
+    no empty metrics file) and it runs at most 6 Spark jobs (the
+    pending-row probe plus that count; the commit ran 15)."""
     import os
+
+    from open_semantic_etl_spark.plans.checkpoint import snapshot
 
     def tree_state() -> dict[str, tuple[int, int]]:
         state = {}
@@ -143,6 +209,8 @@ def test_noop_run_commits_nothing(spark, root):
     pages = _pages(spark, 60)
     run_incremental(spark, pages, root)
     before = tree_state()
+    version = snapshot(root).version
+    assert version == 1
     sc = spark.sparkContext
     sc.setJobGroup("noop_rerun", "run_incremental with nothing pending")
     try:
@@ -151,7 +219,18 @@ def test_noop_run_commits_nothing(spark, root):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert tree_state() == before
+    assert snapshot(root).version == version
     assert n_jobs <= 6, n_jobs
+
+
+def _last_entry(root: str) -> dict:
+    """the newest entry of ``root``'s log"""
+    import json
+    import os
+
+    log = os.path.join(root, "_log")
+    with open(os.path.join(log, max(n for n in os.listdir(log) if n.endswith(".json")))) as fh:
+        return json.load(fh)
 
 
 def _bucket_file_state(path: str) -> dict[str, tuple[int, float, str]]:
@@ -177,16 +256,12 @@ def test_merge_rewrites_only_touched_buckets(spark, root):
     bucket file the batch did NOT touch must be byte-identical on disk
     (same file, same bytes — not rewritten), and only the batch's url-
     hash buckets may change (VERDICT r01 item 1 done-criterion)."""
-    import os
-
     from open_semantic_etl_spark.plans.checkpoint import bucket_expr
 
     run_incremental(spark, _pages(spark, N1), root)
     t = Tables(root)
     before = _bucket_file_state(t.enriched)
     assert any("_bucket=" in k for k in before), "enriched table is not bucketed"
-    records = [os.path.join(p, "_common_metadata") for p in (t.enriched, t.checkpoint)]
-    stamps = [os.stat(r).st_mtime_ns for r in records]
 
     # small delta: 5 modified + 5 new urls
     pages2 = _pages(spark, N1 + 5, reseed_from=N1 - 5, reseed_to=N1, alt_seed=3)
@@ -214,8 +289,8 @@ def test_merge_rewrites_only_touched_buckets(spark, root):
     untouched_before = {k: v for k, v in before.items() if k.split("/")[0] not in changed_buckets}
     for name, sig in untouched_before.items():
         assert after.get(name) == sig, f"untouched file {name} changed"
-    # an unchanged layout is never rewritten
-    assert [os.stat(r).st_mtime_ns for r in records] == stamps
+    # an unchanged layout is never re-recorded: the run's entry carries none
+    assert not any("layout" in change for change in _last_entry(root)["tables"].values())
 
     # correctness preserved across the pruned merge
     enriched = spark.read.parquet(t.enriched)
@@ -294,10 +369,10 @@ def test_backfill_rewrites_only_touched_buckets(spark, root):
         changed = {n.split("/")[0] for n in set(state) | set(after) if state.get(n) != after.get(n)}
         assert changed == touched, path
     # the picked rows carry the new column
-    enriched = spark.read.parquet(t.enriched)
+    enriched = read_table(spark, t.enriched)
     shouted = enriched.filter(F.col("title_shout").isNotNull())
     assert sorted(r.url for r in shouted.collect()) == sorted(picked)
-    marked = spark.read.parquet(t.checkpoint).filter(
+    marked = read_table(spark, t.checkpoint).filter(
         F.array_contains("stages_done", "shout")
     )
     assert sorted(r.url for r in marked.collect()) == sorted(picked)
@@ -305,7 +380,7 @@ def test_backfill_rewrites_only_touched_buckets(spark, root):
 
 def test_backfilled_column_survives_every_rewrite(spark, root):
     """a column a backfill wrote into only some bucket dirs is in the
-    table's layout record: a plain read shows it, and its values
+    table's logged layout: a read shows it, and its values
     survive a rewrite of every bucket, a recrawl merge into one of its
     buckets and a whole-row merge of a batch narrower than the table."""
     from open_semantic_etl_spark.plans.backfill import run_backfill
@@ -329,7 +404,7 @@ def test_backfilled_column_survives_every_rewrite(spark, root):
     assert run_backfill(spark, root, "shout", _shout_only(urls), fields=("title_txt",)) == 3
 
     def shouted():
-        enriched = spark.read.parquet(t.enriched)
+        enriched = read_table(spark, t.enriched)
         assert "title_shout" in enriched.columns
         return {r.url: r.title_shout
                 for r in enriched.filter(F.col("title_shout").isNotNull()).collect()}
@@ -348,213 +423,246 @@ def test_backfilled_column_survives_every_rewrite(spark, root):
     assert shouted() == want
 
 
-def _assert_record_covers_files(path: str) -> None:
-    """the layout record names every column any part file holds"""
-    import glob
+def _assert_layout_covers_files(path: str) -> None:
+    """the logged layout names every column any live file holds"""
+    import os
 
     import pyarrow.parquet as pq
 
-    recorded = set(pq.read_schema(f"{path}/_common_metadata").names)
-    for part in glob.glob(f"{path}/*/*.parquet"):
-        assert set(pq.read_schema(part).names) <= recorded, part
+    from open_semantic_etl_spark.plans.checkpoint import snapshot
+
+    root, name = os.path.split(path)
+    table = snapshot(root).tables[name]
+    recorded = {f["name"] for f in table["layout"]["schema"]["fields"]}
+    assert table["files"]
+    for part in table["files"]:
+        assert set(pq.read_schema(os.path.join(path, part)).names) <= recorded, part
 
 
-def test_layout_record_covers_files_through_swap_crash(spark, tmp_path, monkeypatch):
-    """the commit that adds a column records it BEFORE its bucket swap:
-    a backfill that crashes in the swap leaves a table whose plain read
-    still shows every column, and whose rerun converges to the table a
-    clean run leaves."""
-    from open_semantic_etl_spark.plans import checkpoint as C
+def _root_state(spark, root: str) -> dict:
+    """every live row of every table under ``root`` (less the run's
+    wall-clock metric), read through the log"""
+    from open_semantic_etl_spark.plans.checkpoint import snapshot
+
+    state = {}
+    for name in snapshot(root).tables:
+        df = read_table(spark, f"{root}/{name}").drop("elapsed_ms")
+        state[name] = sorted(
+            (tuple(sorted(r.asDict(recursive=True).items())) for r in df.collect()), key=repr
+        )
+    return state
+
+
+def assert_dirs_hold_live_files(root: str) -> None:
+    """each table dir under ``root`` holds exactly the data files its
+    log names, so a reader that walks the dirs instead of the log (the
+    benchmark's pyarrow check) sees the live rows"""
+    import os
+
+    from open_semantic_etl_spark.plans.checkpoint import LOG, snapshot
+
+    tables = snapshot(root).tables
+    for name in set(os.listdir(root)) - {LOG}:
+        path = os.path.join(root, name)
+        on_disk = {
+            os.path.relpath(os.path.join(d, f), path)
+            for d, _s, files in os.walk(path) for f in files if f.endswith(".parquet")
+        }
+        assert on_disk == set(tables[name]["files"] if name in tables else ()), name
+
+
+def assert_crash_matrix(spark, monkeypatch, base: str, scratch, op, changes=True) -> None:
+    """run ``op(root)`` on copies of the root ``base``: once clean, and
+    once per crash point.  The clean run leaves each table dir holding
+    exactly its live files.  After each crash a reader sees the old
+    snapshot, or the new one once the entry exists; the rerun converges
+    to the clean result.  ``changes``: whether ``op`` changes any row
+    (a compaction only moves them)."""
+    import shutil
+
+    roots = {name: str(scratch / name) for name in ("clean", *CRASH_POINTS)}
+    for r in roots.values():
+        shutil.copytree(base, r)
+    old = _root_state(spark, base)
+    op(roots["clean"])
+    assert_dirs_hold_live_files(roots["clean"])
+    new = _root_state(spark, roots["clean"])
+    assert (new != old) == changes
+    for point in CRASH_POINTS:
+        with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated crash"):
+            crash_at(m, point)
+            op(roots[point])
+        assert _root_state(spark, roots[point]) == (new if point == "_reap" else old), point
+        op(roots[point])
+        assert _root_state(spark, roots[point]) == new, point
+
+
+@pytest.fixture(scope="module")
+def base_root(spark, tmp_path_factory):
+    """a root one run of 40 pages left, run id ``base``"""
+    root = str(tmp_path_factory.mktemp("base") / "root")
+    run_incremental(spark, _pages(spark, 40), root, run_id="base")
+    return root
+
+
+def test_layout_record_covers_files_through_swap_crash(spark, base_root, tmp_path, monkeypatch):
+    """the column a backfill adds is recorded in the same log entry as
+    the files that hold it (the commit that replaced the bucket swap):
+    at every crash point the logged layout covers every live file, a
+    read shows the column once the entry exists, and the rerun
+    converges to the table a clean run leaves."""
     from open_semantic_etl_spark.plans.backfill import run_backfill
 
     urls = [page_record(i, 42)["url"] for i in (3, 17, 29)]
-    roots = {name: str(tmp_path / name) for name in ("clean", "crashed")}
-    for r in roots.values():
-        run_incremental(spark, _pages(spark, 40), r, run_id="base")
-    tables = {name: Tables(r) for name, r in roots.items()}
 
-    def check_cover(name: str) -> None:
-        for path in (tables[name].enriched, tables[name].checkpoint):
-            _assert_record_covers_files(path)
+    def backfill(root: str) -> None:
+        run_backfill(spark, root, "shout", _shout_only(urls), ("title_txt",))
+        t = Tables(root)
+        for path in (t.enriched, t.checkpoint):
+            _assert_layout_covers_files(path)
+        assert "title_shout" in read_table(spark, t.enriched).columns
 
-    check_cover("crashed")
-    assert run_backfill(spark, roots["clean"], "shout", _shout_only(urls), ("title_txt",)) == 3
-    check_cover("clean")
+    assert_crash_matrix(spark, monkeypatch, base_root, tmp_path, backfill)
+    for point in CRASH_POINTS:
+        for table in ("enriched", "checkpoint"):
+            _assert_layout_covers_files(str(tmp_path / point / table))
 
-    def crash(*_args):
-        raise RuntimeError("simulated crash in the bucket swap")
 
-    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated"):
-        m.setattr(C, "_swap_buckets", crash)
-        run_backfill(spark, roots["crashed"], "shout", _shout_only(urls), ("title_txt",))
-    check_cover("crashed")
-    assert "title_shout" in spark.read.parquet(tables["crashed"].enriched).columns
+def test_crash_matrix_merge(spark, base_root, tmp_path, monkeypatch):
+    """merge_by_url of a batch with a changed and a new url"""
+    from open_semantic_etl_spark.plans.checkpoint import merge_by_url
 
-    assert run_backfill(spark, roots["crashed"], "shout", _shout_only(urls), ("title_txt",)) == 3
-    check_cover("crashed")
-    for table in ("enriched", "checkpoint"):
-        got, want = (
-            spark.read.parquet(getattr(tables[name], table)).orderBy("url").collect()
-            for name in ("crashed", "clean")
-        )
-        assert got == want, table
+    batch = spark.createDataFrame(
+        [(page_record(3, 42)["url"], "changed"), ("new://1", "new")],
+        "url string, title_txt string",
+    )
+    assert_crash_matrix(spark, monkeypatch, base_root, tmp_path,
+                        lambda root: merge_by_url(spark, batch, f"{root}/enriched"))
+
+
+def test_crash_matrix_run_incremental(spark, base_root, tmp_path, monkeypatch):
+    """a run with 10 reseeded and 5 new pages"""
+    pages = _pages(spark, 45, reseed_from=30, reseed_to=40)
+    assert_crash_matrix(spark, monkeypatch, base_root, tmp_path,
+                        lambda root: run_incremental(spark, pages, root, run_id="r1"))
+
+
+def test_crash_matrix_delete_and_move(spark, base_root, tmp_path, monkeypatch):
+    """delete_by_url and move_url, each one commit over both tables"""
+    from open_semantic_etl_spark.plans.maintenance import delete_by_url, move_url
+
+    urls = [page_record(i, 42)["url"] for i in (5, 6, 7)]
+    assert_crash_matrix(spark, monkeypatch, base_root, tmp_path / "delete",
+                        lambda root: delete_by_url(spark, root, urls))
+    assert_crash_matrix(spark, monkeypatch, base_root, tmp_path / "move",
+                        lambda root: move_url(spark, root, urls[0], "file:///moved/0.html"))
 
 
 def test_table_without_layout_record_is_refused_at_merge(spark, root):
-    """a table that holds data but records no layout (written before
-    layout records) raises at the next merge, naming the rebuild, and
-    the merge changes nothing on disk."""
+    """a table that holds data under a root with no commit log, so with
+    no layout record (written before the log), raises at the next merge,
+    naming the rebuild, and the merge changes nothing on disk."""
     import os
+    import shutil
 
     from open_semantic_etl_spark.plans.checkpoint import merge_by_url
 
     path = os.path.join(root, "t")
     rows = spark.createDataFrame([(f"u{i}", i) for i in range(20)], "url string, v long")
     merge_by_url(spark, rows, path, n_buckets=4)
-    os.remove(os.path.join(path, "_common_metadata"))  # the layout of an older build
+    shutil.rmtree(os.path.join(root, "_log"))  # the layout of an older build
     before = _bucket_file_state(path)
 
     batch = spark.createDataFrame([("new", 99)], "url string, v long")
-    with pytest.raises(ValueError, match="records no layout.*rebuild"):
+    with pytest.raises(ValueError, match="no commit log.*rebuild"):
         merge_by_url(spark, batch, path, n_buckets=4)
     assert _bucket_file_state(path) == before
-    assert not os.path.exists(os.path.join(path, "_common_metadata"))
     assert sorted(os.listdir(root)) == ["t"]
 
 
-def test_swap_crash_rolls_forward(spark, root):
-    """a crash mid-swap_buckets (bucket dir renamed away, staged new
-    copy parked in __swap) must be recoverable: the next merge rolls the
-    staged data forward and no rows are lost (ADVICE r2: the old layout
-    orphaned the bucket's untouched rows)."""
-    import os
-    import shutil
-
-    from open_semantic_etl_spark.plans.checkpoint import (
-        merge_by_url,
-        recover_table,
-    )
-
-    path = os.path.join(root, "enriched")
-    os.makedirs(root, exist_ok=True)
-    df = spark.createDataFrame(
-        [(f"u{i}", f"v{i}") for i in range(50)], "url string, val string"
-    )
-    merge_by_url(spark, df, path)
-
-    # simulate the crash window: one bucket's live dir has been moved to
-    # the swap area as old__*, its post-merge replacement staged as new__*
-    buckets = [d for d in os.listdir(path) if d.startswith("_bucket=")]
-    victim = buckets[0]
-    b = victim.split("=")[1]
-    sw = f"{path}__swap"
-    os.makedirs(sw, exist_ok=True)
-    shutil.copytree(os.path.join(path, victim), os.path.join(sw, f"new__{b}__deadbeef"))
-    os.rename(os.path.join(path, victim), os.path.join(sw, f"old__{b}__deadbeef"))
-    assert not os.path.isdir(os.path.join(path, victim))
-
-    recover_table(path)
-    assert os.path.isdir(os.path.join(path, victim))
-    assert not os.path.isdir(sw)
-    recovered = spark.read.parquet(path)
-    assert recovered.count() == 50
-    assert recovered.select("url").distinct().count() == 50
-
-
-def test_staged_append_crash_rolls_forward(spark, root, monkeypatch):
-    """an append that crashes after some of its part files moved into the
-    live bucket dirs, but before its manifest is published, is rolled
-    forward by the next recover_appends: every row lands exactly once,
-    the manifest is published, and no file the append did not add
-    changes — an append only adds files."""
+def test_append_crash_leaves_files_invisible(spark, root, monkeypatch):
+    """an append that crashed after its files landed in the live bucket
+    dirs, before its log entry, is invisible to readers; the retry lands
+    every row once, and no file the append did not add changes — an
+    append only adds files."""
     import os
 
     from open_semantic_etl_spark.plans import checkpoint as C
 
-    path = os.path.join(root, "t")
     rows = spark.createDataFrame([(f"u{i}", i) for i in range(40)], "url string, v long")
-    C.create_table(
-        rows.withColumn("_bucket", C.bucket_expr(n_buckets=8)), path, "_bucket", {"n_buckets": 8}
-    )
+    C.merge_by_url(spark, rows, os.path.join(root, "t"), n_buckets=8)
+    path = os.path.join(root, "t")
     before = _bucket_file_state(path)
     batch = spark.createDataFrame(
         [(f"n{i}", 100 + i) for i in range(6)], "url string, v long"
     ).withColumn("_bucket", C.bucket_expr(n_buckets=8))
     touched = {f"_bucket={b}" for b in C.buckets_of(batch)}
 
-    real_move, moved = C._move, []
+    def append() -> None:
+        c = C.Commit(root, "append", "b1")
+        c.append("t", batch, "_bucket", {"n_buckets": 8})
+        c.commit()
 
-    def crash_after_first_move(src, dst):
-        if moved:
-            raise RuntimeError("simulated crash mid-commit")
-        real_move(src, dst)
-        moved.append(dst)
-
-    staging = os.path.join(root, "__batch_b1")
-    manifest = os.path.join(C.batch_manifests(root), "b1")
     with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated"):
-        m.setattr(C, "_move", crash_after_first_move)
-        C.append_batch(root, "b1", [("t", batch, "_bucket")], {"n_buckets": 8}, batch.select("url"))
-    # the crash window: one part file live, others still staged, no manifest
-    assert len(moved) == 1 and moved[0].endswith(".parquet")
-    assert any(f.endswith(".parquet") for _d, _s, fs in os.walk(staging) for f in fs)
-    assert not os.path.isdir(manifest)
+        crash_at(m, "_create_entry")
+        append()
+    strays = set(_bucket_file_state(path)) - set(before)
+    assert strays and {k.split("/")[0] for k in strays} <= touched  # the files landed
+    assert read_table(spark, path).count() == 40  # and no reader sees them
 
-    C.recover_appends(root)
-    assert not os.path.isdir(staging)
-    assert sorted(r.url for r in spark.read.parquet(manifest).collect()) == [f"n{i}" for i in range(6)]
-    table = spark.read.parquet(path)
+    append()
+    table = read_table(spark, path)
     assert table.count() == 46
     assert table.select("url").distinct().count() == 46
     assert {r.v for r in table.filter(F.col("url").startswith("n")).collect()} == set(range(100, 106))
     after = _bucket_file_state(path)
     assert {k: after[k] for k in before} == before  # no file rewritten
     assert {k.split("/")[0] for k in set(after) - set(before)} <= touched
-    C.recover_appends(root)  # idempotent: nothing left to roll forward
-    assert _bucket_file_state(path) == after
 
 
-def crash_mid_swap(path: str, part_col: str = "_bucket") -> None:
-    """leave ``path`` as a bucket swap that crashed with every bucket
-    dir parked: each live dir moved to ``<path>__swap/old__<b>__<token>``
-    beside its rewrite (here a copy) staged as ``new__<b>__<token>``, so
-    the table dir holds no data file until recover_table rolls the swap
-    forward."""
-    import os
-    import shutil
-
-    sw = f"{path}__swap"
-    os.makedirs(sw, exist_ok=True)
-    for d in sorted(os.listdir(path)):
-        if d.startswith(f"{part_col}="):
-            b = d.split("=", 1)[1]
-            shutil.copytree(os.path.join(path, d), os.path.join(sw, f"new__{b}__deadbeef"))
-            os.rename(os.path.join(path, d), os.path.join(sw, f"old__{b}__deadbeef"))
-
-
-def test_crashed_table_swap_is_restored_before_merge(spark, root):
-    """a merge that crashed mid-swap with every bucket dir parked in
-    ``<table>__swap`` leaves a table dir with no data file; the next
-    merge must roll the swap forward before its existence check instead
-    of replacing the table with the batch."""
+def test_swap_crash_rolls_forward(spark, root, monkeypatch):
+    """a merge that died after its log entry and before it deleted the
+    files it replaced is committed: the next merge reads only the live
+    files, so the replaced rows never come back and no row is lost."""
     import os
 
-    from open_semantic_etl_spark.plans.checkpoint import has_data, merge_by_url
+    from open_semantic_etl_spark.plans.checkpoint import merge_by_url
 
     path = os.path.join(root, "enriched")
-    os.makedirs(root, exist_ok=True)
-    df = spark.createDataFrame(
-        [(f"u{i}", f"v{i}") for i in range(50)], "url string, val string"
-    )
+    df = spark.createDataFrame([(f"u{i}", f"v{i}") for i in range(50)], "url string, val string")
     merge_by_url(spark, df, path, n_buckets=4)
-    crash_mid_swap(path)  # the crash window
-    assert not has_data(path)
-    batch = spark.createDataFrame([("u50", "v50")], "url string, val string")
-    merge_by_url(spark, batch, path)
-    merged = spark.read.parquet(path)
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated"):
+        crash_at(m, "_reap")
+        merge_by_url(spark, df.withColumn("val", F.lit("w")), path)
+    merge_by_url(spark, spark.createDataFrame([("u50", "v50")], "url string, val string"), path)
+    merged = read_table(spark, path)
     assert merged.count() == 51
     assert merged.select("url").distinct().count() == 51
-    assert sorted(os.listdir(root)) == ["enriched"]
+    assert merged.filter(F.col("val") == "w").count() == 50
+
+
+def test_crashed_table_swap_is_restored_before_merge(spark, root, monkeypatch):
+    """a merge that crashed after writing every bucket's new files and
+    before its log entry leaves the table as it was; the next merge
+    reads the logged table, not the crashed merge's files, and does not
+    replace the table with its batch."""
+    import os
+
+    from open_semantic_etl_spark.plans.checkpoint import merge_by_url
+
+    path = os.path.join(root, "enriched")
+    df = spark.createDataFrame([(f"u{i}", f"v{i}") for i in range(50)], "url string, val string")
+    merge_by_url(spark, df, path, n_buckets=4)
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated"):
+        crash_at(m, "_create_entry")
+        merge_by_url(spark, df.withColumn("val", F.lit("w")), path)
+    assert read_table(spark, path).filter(F.col("val") == "w").count() == 0
+    merge_by_url(spark, spark.createDataFrame([("u50", "v50")], "url string, val string"), path)
+    merged = read_table(spark, path)
+    assert merged.count() == 51
+    assert merged.select("url").distinct().count() == 51
+    assert merged.filter(F.col("val") == "w").count() == 0
+    assert sorted(os.listdir(root)) == ["_log", "enriched"]
 
 
 def test_remote_root_is_refused(spark, tmp_path, monkeypatch):
@@ -575,12 +683,60 @@ def test_remote_root_is_refused(spark, tmp_path, monkeypatch):
 
 
 def test_merge_plan_prunes_partitions(spark, root):
-    """the merge's read of the existing table must carry a PartitionFilters
-    clause on _bucket — i.e. partition pruning, not a full scan."""
+    """the merge's read of the existing table lists only the touched
+    buckets' files — pruning at the file list, not a full scan."""
+    import os
+
     run_incremental(spark, _pages(spark, 50), root)
     t = Tables(root)
-    old = spark.read.parquet(t.enriched).filter(F.col("_bucket").isin([1, 2, 3]))
-    plan = old._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [_bucket" in plan.replace("#", " #").replace("  ", " ") or (
-        "PartitionFilters" in plan and "_bucket" in plan
-    ), plan[:2000]
+    old = read_table(spark, t.enriched, [1, 2, 3])
+    want = {
+        os.path.join(t.enriched, rel) for rel in _bucket_file_state(t.enriched)
+        if rel.split("/")[0] in ("_bucket=1", "_bucket=2", "_bucket=3")
+    }
+    assert want
+    assert {f.removeprefix("file://") for f in old.inputFiles()} == want
+    assert {r._bucket for r in old.select("_bucket").distinct().collect()} <= {1, 2, 3}
+
+
+def test_racing_commits_lose_no_entry(tmp_path):
+    """8 threads (more than the cores) each commit 25 appends to one
+    table of one root at once: every commit that loses the race for its
+    version rebases, so the log ends with every appended file, each
+    version taken once."""
+    import os
+    import sys
+    import threading
+
+    from open_semantic_etl_spark.plans import checkpoint as C
+
+    root = str(tmp_path / "race")
+    os.makedirs(os.path.join(root, C.LOG))
+    first = C.Commit(root, "create")
+    first.changes = {"t": {"add": [], "remove": [], "layout": {"part_col": None}}}
+    first.commit()
+    errors = []
+
+    def worker(w: int) -> None:
+        try:
+            for i in range(25):
+                c = C.Commit(root, "append", f"{w}-{i}")
+                c.changes = {"t": {"add": [f"w{w}-{i}.parquet"], "remove": []}}
+                c.commit()
+        except Exception as exc:  # surfaced by the assertion below
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(w,)) for w in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and not errors, errors
+    snap = C.snapshot(root)
+    assert snap.version == 1 + 8 * 25
+    assert snap.tables["t"]["files"] == {f"w{w}-{i}.parquet" for w in range(8) for i in range(25)}

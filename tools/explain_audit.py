@@ -52,7 +52,12 @@ def main() -> int:
     import bench
     from open_semantic_etl_spark.operators.html_extract import with_extraction
     from open_semantic_etl_spark.plans import queries as Q
-    from open_semantic_etl_spark.plans.checkpoint import Tables, pending_rows, run_incremental
+    from open_semantic_etl_spark.plans.checkpoint import (
+        Tables,
+        pending_rows,
+        read_table,
+        run_incremental,
+    )
     from open_semantic_etl_spark.plans.pipeline import enrich_pages
     from open_semantic_etl_spark.session import get_spark
     from open_semantic_etl_spark.sources.pages import pages_df
@@ -197,27 +202,27 @@ def main() -> int:
     )
 
     # 9. bucket-pruned incremental merge: the read of the existing
-    # enriched table inside merge_by_url's rewrite_buckets carries a
-    # PartitionFilters clause on _bucket — write volume tracks the
-    # batch, not the table (the byte-identity of untouched bucket files is asserted in
+    # enriched table inside merge_by_url lists only the touched
+    # buckets' files, taken from the root's commit log — write volume
+    # tracks the batch, not the table (the byte-identity of untouched
+    # bucket files is asserted in
     # tests/test_pipeline_resume.py::test_merge_rewrites_only_touched_buckets)
     with tempfile.TemporaryDirectory() as root:
         run_incremental(spark, pages, root)
         t = Tables(root)
-        from pyspark.sql import functions as F
-
-        old_touched = spark.read.parquet(t.enriched).filter(F.col("_bucket").isin([1, 2]))
+        old_touched = read_table(spark, t.enriched, [1, 2])
+        dirs = {f.rsplit("/", 2)[-2] for f in old_touched.inputFiles()}
         section(
-            "bucketed merge — partition pruning on _bucket",
+            "bucketed merge — the scan lists only the touched buckets' files",
             old_touched,
             [
                 (
-                    "PartitionFilters on _bucket in the scan",
-                    lambda p: bool(re.search(r"PartitionFilters: \[[^\]]*_bucket", p)),
+                    "only _bucket=1 and _bucket=2 files in the scan",
+                    lambda p: bool(dirs) and dirs <= {"_bucket=1", "_bucket=2"},
                 ),
                 (
-                    "no pushed data filter needed (pure partition prune)",
-                    lambda p: "Scan parquet" in p,
+                    "one parquet scan",
+                    lambda p: len(re.findall(r"\(\d+\) Scan parquet", p)) == 1,
                 ),
             ],
         )
@@ -350,9 +355,9 @@ def main() -> int:
             ],
         )
 
-    # 12. delete_by_url: the rewrite_buckets frame (the ONLY scan the
+    # 12. delete_by_url: the bucket rewrite's frame (the ONLY scan the
     # delete plans — its count is Observation-collected on this same
-    # pass) prunes to the touched _bucket partitions
+    # pass) lists only the touched buckets' files
     with tempfile.TemporaryDirectory() as root:
         from pyspark.sql import functions as F
 
@@ -360,18 +365,18 @@ def main() -> int:
 
         run_incremental(spark, pages, root)
         t = Tables(root)
-        victims = [r["url"] for r in spark.read.parquet(t.enriched).limit(2).collect()]
+        victims = [r["url"] for r in read_table(spark, t.enriched).limit(2).collect()]
         buckets = _url_buckets(spark, t.enriched, victims)
-        df = spark.read.parquet(t.enriched)
-        part = df.filter(F.col("_bucket").isin(buckets))
+        part = read_table(spark, t.enriched, buckets)
+        dirs = {f.rsplit("/", 2)[-2] for f in part.inputFiles()}
         delete_frame = part.filter(~F.coalesce(F.col("url").isin(victims), F.lit(False)))
         section(
             "delete_by_url — single bucket-pruned scan, count observed on it",
             delete_frame,
             [
                 (
-                    "PartitionFilters on _bucket in the scan",
-                    lambda p: bool(re.search(r"PartitionFilters: \[[^\]]*_bucket", p)),
+                    "only the victims' bucket files in the scan",
+                    lambda p: bool(dirs) and dirs <= {f"_bucket={b}" for b in buckets},
                 ),
                 (
                     "exactly one scan of the enriched table",
