@@ -7,8 +7,7 @@ The cluster submission the north rule targets::
         open_semantic_etl_spark/job.py \\
         --input  s3://…/pages           (parquet/Iceberg pages table) \\
         --root   s3://…/enriched_root   (enriched/ checkpoint/ metrics/) \\
-        --gazetteer gazetteer.tsv \\
-        --stages extract,path,language,entities,regex_extractors,multilingual
+        --gazetteer gazetteer.tsv
 
 Replaces the reference's CLI drivers (etl_file.py:209-273 argument
 parsing + config overlay; tasks.py worker startup): one submitted job
@@ -59,8 +58,6 @@ def load_gazetteer_tsv(path: str):
 
 
 def build_parser() -> argparse.ArgumentParser:
-    from open_semantic_etl_spark.plans.pipeline import STAGES
-
     p = argparse.ArgumentParser(
         prog="open_semantic_etl_spark.job",
         description="resumable extraction/enrichment pass over a pages table",
@@ -68,8 +65,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--input", required=True, help="pages table path (parquet)")
     p.add_argument("--root", required=True,
                    help="output root (enriched/, checkpoint/, metrics/)")
-    p.add_argument("--stages", default=",".join(STAGES),
-                   help="comma list; default: all")
     p.add_argument("--gazetteer", default=None, help="gazetteer TSV path")
     p.add_argument("--repartition", type=int, default=None,
                    help="explicit hash(url) repartition AFTER the checkpoint "
@@ -104,7 +99,6 @@ def main(argv: list[str] | None = None) -> dict:
             pages,
             args.root,
             gazetteer=gz,
-            stages=tuple(s for s in args.stages.split(",") if s),
             repartition=args.repartition,
             run_id=args.run_id,
             n_buckets=args.n_buckets,

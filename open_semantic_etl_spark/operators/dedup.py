@@ -418,6 +418,13 @@ def probe_lsh_index(
     index tables' record; ``signatures`` must be of that family.  A
     missing/empty index (the streaming bootstrap batch) yields
     all-novel."""
+    return _probe(snapshot(index_path), df, text_col, id_col, signatures)
+
+
+def _probe(
+    snap: Snapshot, df: DataFrame, text_col: str, id_col: str, signatures: DataFrame | None
+) -> DataFrame:
+    """``probe_lsh_index`` of ``df`` against the index as of ``snap``."""
     spark = df.sparkSession
     id_type = df.schema[id_col].dataType
     probe_ids = df.select(F.col(id_col).alias("probe_id"))
@@ -431,7 +438,6 @@ def probe_lsh_index(
     # the log says whether an index exists, NOT a caught
     # AnalysisException: a corrupt table raises that class too, and
     # swallowing it would admit every duplicate
-    snap = snapshot(index_path)
     if snap.table("bands") is None:
         return as_novel(probe_ids)
     family = _index_family(snap)
@@ -945,7 +951,9 @@ def dedup_ingest_batch(
     to the index, and return the kept rows.
 
     The LSH family is the one the index's tables record; a fresh index
-    gets ``build_lsh_index``'s default.
+    gets ``build_lsh_index``'s default.  The family, the replay check
+    and the probe all read the commit's base snapshot, the version the
+    ingest commits on top of.
 
     Scale shape: duplicate ids collapse first; ONE MinHash pass per
     batch threads through probe, within-batch dedup and the index
@@ -977,9 +985,7 @@ def dedup_ingest_batch(
     sigs = _signatures(
         batch, text_col, id_col, family["num_hashes"], family["shingle_n"]
     ).toDF(id_col, "sig").localCheckpoint(eager=True)
-    probed = probe_lsh_index(
-        batch, index_path, text_col=text_col, id_col=id_col, signatures=sigs
-    )
+    probed = _probe(c.base, batch, text_col, id_col, sigs)
     # materialized once (at most one batch of ids): every branch below
     # reads it, and each re-derivation would scan the bands table again
     novel_ids = probed.filter(~F.col("matched")).select(

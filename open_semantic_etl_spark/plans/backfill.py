@@ -24,19 +24,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_semantic_etl_spark.plans.checkpoint import (
-    Commit,
-    Tables,
-    bucket_expr,
-    buckets_of,
-    read_table,
-)
-
-
-def missing_stage(spark: SparkSession, tables: Tables, stage: str) -> DataFrame:
-    """urls whose checkpoint lacks ``stage`` in stages_done."""
-    cp = read_table(spark, tables.checkpoint)
-    return cp.filter(~F.array_contains(F.col("stages_done"), stage)).select("url")
+from open_semantic_etl_spark.plans.checkpoint import URL_TABLES, Commit, bucket_expr, buckets_of
 
 
 def run_backfill(
@@ -49,7 +37,7 @@ def run_backfill(
     """run ``stage_fn`` over rows missing ``stage``; set its columns and
     mark the stage done.
 
-    Both updates run in the bucket space the enriched table records.
+    Both updates run in the bucket space the two tables record.
     ``fields`` mirrors the reference's plugin ``fields`` attribute
     (etl_enrich.py:68-86): the backfill scan reads only these columns.
     ``stage_fn(spark, pruned_rows) -> DataFrame[url, ...columns]``; the
@@ -57,11 +45,14 @@ def run_backfill(
 
     Crash-safe by replay: the 'set' and the stage mark are one commit,
     so a crash before it leaves the stage unmarked and the next call
-    re-runs it to the same rows.
+    re-runs it to the same rows.  Every input (the urls whose
+    checkpoint lacks ``stage``, their rows, the bucket count) comes
+    from the commit's base snapshot.
     """
-    tables = Tables(root)
     c = Commit(root, "backfill", stage)
-    todo_urls = missing_stage(spark, tables, stage)
+    todo_urls = c.base.read(spark, "checkpoint").filter(
+        ~F.array_contains(F.col("stages_done"), stage)
+    ).select("url")
     # gate with a limit-1 existence probe, NOT a full count — an
     # all-done table must cost one short-circuiting job, and the
     # processed count is read off the (already materialized)
@@ -76,7 +67,7 @@ def run_backfill(
     # materialize BEFORE the commit: the lazy plan reads the files the
     # commit replaces and then deletes (localCheckpoint pins the rows)
     result = stage_fn(spark, pruned).localCheckpoint(eager=True)
-    n_buckets = tables.buckets()
+    n_buckets = c.base.buckets(URL_TABLES)
     buckets = buckets_of(result.select(bucket_expr(n_buckets=n_buckets).alias("_bucket")))
     cols = [col for col in result.columns if col != "url"]
     hit = F.col("_hit").isNotNull()

@@ -30,12 +30,15 @@ tables (``Tables(root)``, an LSH index, a stream's ``kept/``); its
 ``_log/<v>.json`` entries each name an operation, its run or batch id,
 and per table the data files it added and removed and, when it changes,
 the table's layout (schema, partition column, ``n_buckets`` and any
-other creator record such as the LSH family: ``table_record``).  Data
+other creator record such as the LSH family).  Data
 files are immutable and Spark-uniquely named; a commit writes its new
 files, then creates the next entry (a link that fails when the version
 is taken: the commit point), then deletes the files it replaced.
 Readers take the live file set and schema from the log
-(``read_table``); a file no entry names is invisible.  Every write
+(``read_table``); a file no entry names is invisible.  An operation
+reads one snapshot, its ``Commit``'s ``base``: every input it takes
+from its root (pending rows, bucket counts, the LSH family) and the
+version it commits on top of come from one replay of the log.  Every write
 rewrites ONLY the buckets it touches (partition pruning at the file
 list): untouched bucket files stay byte-identical, so incremental
 write cost tracks the BATCH, not the table.  On a real cluster the
@@ -74,7 +77,7 @@ from open_semantic_etl_spark.plans.pipeline import (
 
 
 #: DEFAULT url-hash bucket count of a NEW table, which then records it
-#: (``table_buckets``) like Iceberg's bucket(url, N) partition spec.
+#: (``Snapshot.buckets``) like Iceberg's bucket(url, N) partition spec.
 #: Sizing rule: ``n_buckets ≈ table_bytes / target_rewrite_unit``, the
 #: bucket-dir size you will rewrite per touched bucket (1-10 GB on
 #: object storage) — O(10^5) at 10^12 rows. A batch of B urls rewrites
@@ -82,6 +85,9 @@ from open_semantic_etl_spark.plans.pipeline import (
 #: recrawl); bulk B ≥ N batches degrade to a full rewrite, where a real
 #: Iceberg/Delta MERGE (file pruning, merge-on-read) takes over.
 N_BUCKETS = 64
+
+#: the url-keyed tables of a ``Tables`` root: one bucket space, both record it
+URL_TABLES = ("enriched", "checkpoint")
 
 LOG = "_log"  # <root>/_log/<version>.json
 
@@ -100,10 +106,6 @@ class Tables:
         self.enriched = os.path.join(root, "enriched")
         self.checkpoint = os.path.join(root, "checkpoint")
         self.metrics = os.path.join(root, "metrics")
-
-    def buckets(self, n_buckets: int | None = None) -> int:
-        """``table_buckets`` of the enriched and checkpoint tables alike."""
-        return table_buckets(self.checkpoint, table_buckets(self.enriched, n_buckets))
 
 
 def require_local(path: str) -> None:
@@ -144,7 +146,8 @@ class Snapshot(NamedTuple):
     """the tables under ``root`` as of log ``version`` (0 = no entry):
     name -> {"files": data files relative to the table dir, "layout":
     {"schema": the table's schema as JSON, "part_col": its partition
-    column or None, "record": ``table_record``}}."""
+    column or None, "record": the ints its creator recorded, such as
+    ``n_buckets`` and an LSH index's family}}."""
 
     root: str
     version: int
@@ -163,6 +166,23 @@ class Snapshot(NamedTuple):
                 "LSH index: build_lsh_index)"
             )
         return table
+
+    def buckets(self, names: tuple[str, ...], n_buckets: int | None = None) -> int:
+        """the bucket count tables ``names`` record, else ``n_buckets``
+        (default ``N_BUCKETS``).  A count that disagrees with a record
+        raises: writing into another bucket space duplicates urls."""
+        for name in names:
+            table = self.table(name)
+            recorded = table["layout"]["record"].get("n_buckets") if table else None
+            if recorded is None:
+                continue
+            if n_buckets is not None and n_buckets != recorded:
+                raise ValueError(
+                    f"table {os.path.join(self.root, name)} records "
+                    f"n_buckets={recorded}, not {n_buckets}"
+                )
+            n_buckets = recorded
+        return N_BUCKETS if n_buckets is None else n_buckets
 
     def read(self, spark: SparkSession, name: str, buckets: list | None = None) -> DataFrame:
         """the rows of table ``name`` (only ``buckets``' when given):
@@ -251,26 +271,6 @@ def read_table(spark: SparkSession, path: str, buckets: list | None = None) -> D
     given); FileNotFoundError when its root's log holds no such table."""
     root, name = _split(path)
     return _replay(root).read(spark, name, buckets)
-
-
-def table_record(path: str) -> dict[str, int] | None:
-    """the ints ``path``'s layout records (``n_buckets`` and any its
-    creator added, such as an LSH index's family), or None."""
-    root, name = _split(path)
-    table = _replay(root).table(name)
-    return None if table is None else table["layout"]["record"]
-
-
-def table_buckets(path: str, n_buckets: int | None = None) -> int:
-    """the bucket count ``path`` records, else ``n_buckets`` (default
-    ``N_BUCKETS``).  A creator's ``n_buckets`` that disagrees with the
-    record raises: writing into another bucket space duplicates urls."""
-    recorded = (table_record(path) or {}).get("n_buckets")
-    if recorded is None:
-        return N_BUCKETS if n_buckets is None else n_buckets
-    if n_buckets is not None and n_buckets != recorded:
-        raise ValueError(f"table {path} records n_buckets={recorded}, not {n_buckets}")
-    return recorded
 
 
 def _layout_of(df: DataFrame, part_col: str | None, record: dict[str, int]) -> dict:
@@ -443,27 +443,27 @@ def merge_by_url(
 
     The first write creates the table with ``n_buckets`` (default
     ``N_BUCKETS``) and records its layout; a later merge uses the
-    recorded count (see ``table_buckets``); a table with data under a
+    recorded count (see ``Snapshot.buckets``); a table with data under a
     root without a log raises.  A recorded column the batch lacks
     survives the merge, NULL on the batch's rows.
     """
     root, name = _split(path)
-    n_buckets = table_buckets(path, n_buckets)
     c = Commit(root, "merge")
-    _merge(spark, c, name, new, n_buckets)
+    _merge(spark, c, name, new, c.base.buckets((name,), n_buckets))
     c.commit()
 
 
-def pending_rows(
-    spark: SparkSession,
-    pages: DataFrame,
-    tables: Tables,
-    stages: tuple[str, ...] = STAGES,
-) -> DataFrame:
+def pending_rows(spark: SparkSession, pages: DataFrame, tables: Tables) -> DataFrame:
+    """``_pending`` of ``pages`` against the live checkpoint of ``tables``."""
+    return _pending(spark, pages, snapshot(tables.root))
+
+
+def _pending(spark: SparkSession, pages: DataFrame, snap: Snapshot) -> DataFrame:
     """filter_file_not_modified semantics: one row per url — its latest
     ``warc_ts``, the larger content hash on a tie — kept when it is new,
-    its content changed, its pipeline version changed, or it misses any
-    of the requested stages (filter_file_not_modified.py:111-159)."""
+    its content changed, its pipeline version changed, or ``snap``'s
+    checkpoint misses any of ``STAGES`` for it
+    (filter_file_not_modified.py:111-159)."""
     # two-step join so html NEVER rides a shuffle:
     #  1. pick each url's row and anti-join it on the KEY PROJECTION
     #     only (url + 8-byte hash + row id) — the wide html column is not
@@ -481,10 +481,10 @@ def pending_rows(
         .agg(F.max(F.struct("warc_ts", content_hash().alias("content_hash"), "_row")).alias("k"))
         .select("url", "k.content_hash", "k._row")
     )
-    if table_record(tables.checkpoint) is not None:
-        done = read_table(spark, tables.checkpoint).filter(
+    if snap.table("checkpoint") is not None:
+        done = snap.read(spark, "checkpoint").filter(
             (F.col("pipeline_version") == PIPELINE_VERSION)
-            & (F.size(F.array_except(F.array(*[F.lit(s) for s in stages]), F.col("stages_done"))) == 0)
+            & (F.size(F.array_except(F.array(*[F.lit(s) for s in STAGES]), F.col("stages_done"))) == 0)
         ).select("url", "content_hash")
         todo = todo.join(done, ["url", "content_hash"], "left_anti")
     return rows.join(todo.select("_row"), "_row", "left_semi").drop("_row")
@@ -531,22 +531,24 @@ def run_incremental(
     pages: DataFrame,
     root: str,
     gazetteer: Gazetteer | None = None,
-    stages: tuple[str, ...] = STAGES,
     repartition: int | None = None,
     run_id: str | None = None,
     n_buckets: int | None = None,
 ) -> dict:
     """One resumable enrichment run — one commit — returns run stats.
 
-    ``n_buckets`` sizes the tables this run creates; on existing tables
-    it must match their recorded count (ValueError before any write).
+    The run reads one snapshot of ``root``, its commit's base: the
+    pending rows and the bucket count come from it, and the commit lands
+    on top of it.  ``n_buckets`` sizes the tables this run creates; on
+    existing tables it must match their recorded count (ValueError
+    before any write).  Every run runs and records all of ``STAGES``.
     """
     t0 = time.time()
     run_id = run_id or uuid.uuid4().hex[:12]
-    tables = Tables(root)
-    n_buckets = tables.buckets(n_buckets)
+    c = Commit(root, "run", run_id)
+    n_buckets = c.base.buckets(URL_TABLES, n_buckets)
 
-    todo = pending_rows(spark, pages, tables, stages)
+    todo = _pending(spark, pages, c.base)
     enriched = enrich_pages(todo, gazetteer=gazetteer, repartition=repartition)
     enriched = _with_partition_metrics(enriched, run_id)
 
@@ -559,13 +561,12 @@ def run_incremental(
         # one commit: the output MERGE by url (bucket-pruned, write
         # volume ∝ batch), the per-partition metrics rollup from the
         # batch, and the checkpoint rows (the same url-keyed merge)
-        c = Commit(root, "run", run_id)
         _merge(spark, c, "enriched", out, n_buckets)
         elapsed_ms = int((time.time() - t0) * 1000)
         c.append("metrics", batch_metrics(out, run_id, elapsed_ms), None, {})
         ckpt = (
             out.select("url", "content_hash")
-            .withColumn("stages_done", F.array(*[F.lit(s) for s in stages]))
+            .withColumn("stages_done", F.array(*[F.lit(s) for s in STAGES]))
             .withColumn("pipeline_version", F.lit(PIPELINE_VERSION))
         )
         _merge(spark, c, "checkpoint", ckpt, n_buckets)

@@ -21,20 +21,13 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from open_semantic_etl_spark.functions.path import with_path_facets
-from open_semantic_etl_spark.plans.checkpoint import (
-    Commit,
-    Tables,
-    bucket_expr,
-    buckets_of,
-    table_buckets,
-)
+from open_semantic_etl_spark.plans.checkpoint import URL_TABLES, Commit, bucket_expr, buckets_of
 
 
-def _url_buckets(spark: SparkSession, path: str, urls: list[str]) -> list[int]:
-    """bucket ids of a driver-side url list in the bucket space ``path``
-    records (a tiny Spark expression: the table's own xxhash64)."""
+def _url_buckets(spark: SparkSession, urls: list[str], n_buckets: int) -> list[int]:
+    """bucket ids of a driver-side url list among ``n_buckets`` (a tiny
+    Spark expression: the tables' own xxhash64)."""
     urls_df = spark.createDataFrame([(u,) for u in urls], "url string")
-    n_buckets = table_buckets(path)
     return buckets_of(urls_df.select(bucket_expr(n_buckets=n_buckets).alias("_bucket")))
 
 
@@ -62,11 +55,10 @@ def delete_by_url(spark: SparkSession, root: str, urls: list[str]) -> int:
     """remove documents by id (etl_delete) — one commit rewriting the
     victims' buckets only (Iceberg: ``DELETE FROM enriched WHERE url IN
     (…)``), in the enriched table and the checkpoint, so a rerun
-    re-indexes them, in the bucket space the enriched table records."""
-    tables = Tables(root)
-    buckets = _url_buckets(spark, tables.enriched, urls)
-    is_victim = F.col("url").isin(urls)
+    re-indexes them, in the bucket space the two tables record."""
     c = Commit(root, "delete")
+    buckets = _url_buckets(spark, urls, c.base.buckets(URL_TABLES))
+    is_victim = F.col("url").isin(urls)
     deleted = _delete(spark, c, "enriched", buckets, is_victim)
     _delete(spark, c, "checkpoint", buckets, is_victim)
     c.commit()
@@ -90,9 +82,9 @@ def move_url(spark: SparkSession, root: str, src: str, dst: str) -> None:
     enriched table and the checkpoint alike, src's row becomes dst's
     and replaces any dst row (a Solr update with an existing id
     overwrites the doc), so a src that comes back is indexed again."""
-    tables = Tables(root)
-    buckets = _url_buckets(spark, tables.enriched, [src, dst])
-    n_buckets = tables.buckets()
+    c = Commit(root, "move", src)
+    n_buckets = c.base.buckets(URL_TABLES)
+    buckets = _url_buckets(spark, [src, dst], n_buckets)
 
     def transform(df):
         path_cols = [
@@ -107,7 +99,6 @@ def move_url(spark: SparkSession, root: str, src: str, dst: str) -> None:
         )
         return kept.unionByName(moved.select(*df.columns)).select(*df.columns)
 
-    c = Commit(root, "move", src)
     c.rewrite(spark, "enriched", buckets, transform)
     c.rewrite(spark, "checkpoint", buckets, transform)
     c.commit()

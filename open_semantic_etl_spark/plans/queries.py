@@ -292,7 +292,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signature,
         probe_lsh_index,
     )
-    from open_semantic_etl_spark.plans.checkpoint import table_record
+    from open_semantic_etl_spark.plans.checkpoint import snapshot
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # ONE MinHash pass threads through batch pairs, index build and
@@ -312,7 +312,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shape pays the index build once and probes per batch, so steady
     # reps measure the probe; the cold rep carries the build.  The
     # build is one log commit, so a recorded bands table is a whole index
-    if table_record(f"{index_path}/bands") is None:
+    if snapshot(index_path).table("bands") is None:
         build_lsh_index(
             docs.filter(even), index_path, signatures=sigs.filter(even)
         )

@@ -1369,14 +1369,19 @@ def _build_scan_pdf(d: int) -> bytes:
     )
 
 
-def q_pdf_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
+def _ocr_memo(sf_dir: str, tag: str) -> str:
+    """the OCR memo of one driver query: a per-(content, process) dir,
+    reaped at exit, so no other process appends to it"""
+    from open_semantic_etl_spark.plans.queries import _content_fp, _tmp_sidecar
 
+    return _tmp_sidecar(sf_dir, _content_fp(sf_dir, "documents"), tag)
+
+
+def q_pdf_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from open_semantic_etl_spark.operators.ocr import run_pdf_ocr_phase
 
     src = _binary_source(spark, sf_dir, 120, _build_scan_pdf, "file:///scan/{d}.pdf")
-    memo = f"/tmp/spark_graft_pdfocr_memo_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    out = run_pdf_ocr_phase(spark, src, memo)
+    out = run_pdf_ocr_phase(spark, src, _ocr_memo(sf_dir, "pdfocr_memo"))
     return out.select(
         F.concat("url", F.lit("#page="), F.col("page_i").cast("string")).alias("url"),
         "page_i",
@@ -2465,8 +2470,6 @@ FROM documents GROUP BY ROLLUP(lang, source)
 
 
 def q_deferred_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from open_semantic_etl_spark.operators.html_extract import with_extraction
     from open_semantic_etl_spark.operators.ocr import run_ocr_phase
 
@@ -2483,8 +2486,7 @@ def q_deferred_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
     url = F.concat(F.lit("https://ocr.example.org/"), did)
     pages = docs.select("doc_id", url.alias("url"), F.encode(html_str, "UTF-8").alias("html"))
     enriched = with_extraction(pages)
-    memo = tempfile.mkdtemp(prefix="ocr_memo_") + "/memo"
-    ocr = run_ocr_phase(spark, enriched, memo_path=memo, engine="fake")
+    ocr = run_ocr_phase(spark, enriched, memo_path=_ocr_memo(sf_dir, "ocr_memo"), engine="fake")
     return (
         enriched.select("doc_id", "url", "needs_ocr")
         .join(ocr, "url", "left")

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from open_semantic_etl_spark.operators.entity_linking import Gazetteer
-from open_semantic_etl_spark.plans.checkpoint import Commit, Tables, run_incremental
+from open_semantic_etl_spark.plans.checkpoint import URL_TABLES, Commit, run_incremental, snapshot
 from open_semantic_etl_spark.schema import PAGES_SCHEMA
 
 
@@ -74,7 +74,7 @@ def stream_enrich(
     stream creates; a table recording another count raises ValueError
     before the query starts.
     """
-    n_buckets = Tables(out_root).buckets(n_buckets)
+    n_buckets = snapshot(out_root).buckets(URL_TABLES, n_buckets)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         run_incremental(batch_df.sparkSession, batch_df, out_root, gazetteer=gazetteer,

@@ -4,9 +4,12 @@ Every table write is one ``Commit`` of its root's log; the steps behind
 it (the log's entry create and replay, the data-file writes and the
 reaping of replaced files) are private to that module. So are the names
 of the mechanisms the log replaced (the tmp-dir, swap and staged append
-steps, and pyarrow's ``write_metadata`` layout footer): a program file
-that names one of them — as a call, an attribute or an import — brings
-back per-module commit choreography, and fails this test. So does a raw
+steps, and pyarrow's ``write_metadata`` layout footer) and of the
+path-keyed layout lookups that each re-read a log (``table_record``,
+``table_buckets``: an operation reads its ``Commit``'s base instead): a
+program file that names one of them — as a call, an attribute or an
+import — brings back per-module commit choreography, and fails this
+test. So does a raw
 filesystem mutator (rename, replace, remove, unlink, link, rmtree,
 move) anywhere else, except at the listed scratch sites that hold no
 table. A DataFrame ``.write``
@@ -27,6 +30,7 @@ PROTOCOL = {
     "swap_buckets", "tmp_path", "swap_table", "atomic_overwrite",
     "record_layout", "write_metadata", "commit_append", "move",
     "create_entry", "replay", "write_files", "reap",
+    "table_record", "table_buckets",
 }
 MUTATORS = {
     "os": {"rename", "replace", "remove", "unlink", "link"},
@@ -106,6 +110,8 @@ def test_commit_protocol_stays_in_checkpoint():
     assert not leaks, f"commit protocol used outside plans/checkpoint.py: {leaks}"
     # the guard is live: the steps it looks for exist in checkpoint.py
     assert {"_create_entry", "_replay", "_write_files", "_reap"} <= _protocol_names(CHECKPOINT)
+    # the path-keyed lookups are gone from checkpoint.py as well
+    assert not {"table_record", "table_buckets"} & _protocol_names(CHECKPOINT)
 
 
 def test_raw_mutators_stay_in_checkpoint():

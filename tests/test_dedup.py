@@ -906,7 +906,7 @@ def test_incremental_lsh_meta_guards_family_params(spark, corpus, tmp_path):
             id_col="doc_id",
         )
         assert [r.doc_id for r in kept.collect()] == [5], name
-        bands5 = spark.read.parquet(f"{path}/bands").filter(F.col("_id") == 5).collect()
+        bands5 = C.read_table(spark, f"{path}/bands").filter(F.col("_id") == 5).collect()
         assert len(bands5) == 8 and all(r._bb < 4 for r in bands5), name
 
 
@@ -924,8 +924,9 @@ def test_crashed_rebuild_keeps_the_old_index(spark, corpus, tmp_path, monkeypatc
         with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated crash"):
             crash_at(m, point)
             D.build_lsh_index(corpus, path, bands=8, n_buckets=4)
+        tables = C.snapshot(path).tables
         for table in ("bands", "sigs"):
-            assert C.table_record(f"{path}/{table}")["bands"] == 16, (point, table)
+            assert tables[table]["layout"]["record"]["bands"] == 16, (point, table)
         probed = D.probe_lsh_index(corpus.filter(F.col("doc_id") == 1), path).collect()
         assert 0 in {r.index_id for r in probed if r.matched}, point
 
@@ -940,9 +941,10 @@ def test_index_tables_record_their_family(spark, corpus, tmp_path):
         spark, corpus.filter(F.col("doc_id") == 0), ingested, "b0", id_col="doc_id"
     )
     for path, n_buckets, bands in ((built, 4, 8), (ingested, 64, 16)):
+        snap = C.snapshot(path)
         for table in ("bands", "sigs"):
-            assert C.table_buckets(f"{path}/{table}") == n_buckets, (path, table)
-            assert C.table_record(f"{path}/{table}") == {
+            assert snap.buckets((table,)) == n_buckets, (path, table)
+            assert snap.tables[table]["layout"]["record"] == {
                 "num_hashes": 64, "bands": bands, "shingle_n": 3, "n_buckets": n_buckets,
             }, (path, table)
 
@@ -1230,12 +1232,12 @@ def test_delete_from_lsh_index_removes_doc_and_prunes_buckets(spark, corpus, tmp
     # independent read-side derivation of the buckets doc 0 occupies
     doc0_bb = {
         r[0]
-        for r in spark.read.parquet(f"{path}/bands")
+        for r in C.read_table(spark, f"{path}/bands")
         .filter(F.col("_id") == 0).select("_bb").distinct().collect()
     }
     doc0_sb = {
         r[0]
-        for r in spark.read.parquet(f"{path}/sigs")
+        for r in C.read_table(spark, f"{path}/sigs")
         .filter(F.col("_id") == 0).select("_sb").distinct().collect()
     }
     snap = _index_file_hashes(path)
@@ -1243,7 +1245,7 @@ def test_delete_from_lsh_index_removes_doc_and_prunes_buckets(spark, corpus, tmp
     after = {r.index_id for r in D.probe_lsh_index(probe, path).collect() if r.matched}
     assert after == before - {0}
     assert 0 not in {
-        r[0] for r in spark.read.parquet(f"{path}/sigs").select("_id").collect()
+        r[0] for r in C.read_table(spark, f"{path}/sigs").select("_id").collect()
     }
     now = _index_file_hashes(path)
     touched = {f"bands/_bb={b}" for b in doc0_bb} | {f"sigs/_sb={b}" for b in doc0_sb}
@@ -1270,7 +1272,7 @@ def test_delete_from_lsh_index_edge_cases(spark, corpus, tmp_path):
     ids_df = spark.createDataFrame([(4,)], "doc_id long")
     D.delete_from_lsh_index(spark, path, ids_df)
     assert 4 not in {
-        r[0] for r in spark.read.parquet(f"{path}/sigs").select("_id").collect()
+        r[0] for r in C.read_table(spark, f"{path}/sigs").select("_id").collect()
     }
 
 
@@ -1298,10 +1300,10 @@ def test_dedup_ingest_batch_flow_and_committed_replay(spark, corpus, tmp_path):
     b2 = corpus.filter(F.col("doc_id").isin([1, 2, 5]))
     k2 = D.dedup_ingest_batch(spark, b2, path, batch_id="b2", id_col="doc_id")
     assert {r.doc_id for r in k2.collect()} == {5}
-    n_bands = spark.read.parquet(f"{path}/bands").count()
+    n_bands = C.read_table(spark, f"{path}/bands").count()
     k2b = D.dedup_ingest_batch(spark, b2, path, batch_id="b2", id_col="doc_id")
     assert {r.doc_id for r in k2b.collect()} == {5}
-    assert spark.read.parquet(f"{path}/bands").count() == n_bands
+    assert C.read_table(spark, f"{path}/bands").count() == n_bands
 
 
 def test_dedup_ingest_batch_scans_bands_once(spark, corpus, tmp_path, monkeypatch):
@@ -1379,7 +1381,7 @@ def test_expire_lsh_batches_ttl_sweep(spark, corpus, tmp_path):
         r.matched for r in D.probe_lsh_index(probe, path, id_col="doc_id").collect()
     )
     assert D.list_lsh_batches(path) == ["new"]
-    sig_ids = [r[0] for r in spark.read.parquet(f"{path}/sigs").select("_id").collect()]
+    sig_ids = [r[0] for r in C.read_table(spark, f"{path}/sigs").select("_id").collect()]
     assert sig_ids == [4]  # the other batch survives
     with pytest.raises(FileNotFoundError, match="never committed"):
         D.expire_lsh_batches(spark, path, ["ghost"])

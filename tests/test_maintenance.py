@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from open_semantic_etl_spark.plans.checkpoint import Tables, run_incremental
+from open_semantic_etl_spark.plans.checkpoint import Tables, read_table, run_incremental
 from open_semantic_etl_spark.plans.maintenance import (
     delete_by_url,
     delete_where,
@@ -25,9 +25,9 @@ def _dataset(spark, tmp_path, n=40):
 def test_delete(spark, tmp_path):
     root = _dataset(spark, tmp_path)
     t = Tables(root)
-    victims = [r["url"] for r in spark.read.parquet(t.enriched).limit(3).collect()]
+    victims = [r["url"] for r in read_table(spark, t.enriched).limit(3).collect()]
     assert delete_by_url(spark, root, victims) == 3
-    left = spark.read.parquet(t.enriched)
+    left = read_table(spark, t.enriched)
     assert left.count() == 37
     assert left.filter(F.col("url").isin(victims)).count() == 0
     # deleted urls also leave the checkpoint → a rerun re-indexes them
@@ -45,18 +45,18 @@ def test_delete_where_null_predicate_rows_kept(spark, tmp_path):
 
     root = _dataset(spark, tmp_path)
     t = Tables(root)
-    base = spark.read.parquet(t.enriched)
+    base = read_table(spark, t.enriched)
     n0 = base.count()
     # hot count BEFORE any rewrite (the frame pins the original files)
     hot = base.filter(F.col("url").contains("big.example.com")).count()
     # a predicate that is NULL on every row (nullif makes the url NULL)
     pred = F.length(F.nullif(F.col("url"), F.col("url"))) > 2
     assert delete_where(spark, root, pred) == 0
-    assert spark.read.parquet(t.enriched).count() == n0  # nothing lost
+    assert read_table(spark, t.enriched).count() == n0  # nothing lost
     # mixed: TRUE on the hot-host rows, NULL everywhere else
     pred2 = F.when(F.col("url").contains("big.example.com"), F.lit(True))
     assert delete_where(spark, root, pred2) == hot
-    assert spark.read.parquet(t.enriched).count() == n0 - hot
+    assert read_table(spark, t.enriched).count() == n0 - hot
 
 
 def test_delete_rewrites_only_touched_buckets(spark, tmp_path):
@@ -83,7 +83,7 @@ def test_delete_rewrites_only_touched_buckets(spark, tmp_path):
                     state[os.path.relpath(fp, path)] = (st.st_size, st.st_mtime_ns, digest)
         return state
 
-    victims = [r["url"] for r in spark.read.parquet(t.enriched).limit(2).collect()]
+    victims = [r["url"] for r in read_table(spark, t.enriched).limit(2).collect()]
     touched = {
         r[0]
         for r in spark.createDataFrame([(u,) for u in victims], "url string")
@@ -98,16 +98,16 @@ def test_delete_rewrites_only_touched_buckets(spark, tmp_path):
         if before.get(name) != after.get(name)
     }
     assert changed <= {f"_bucket={b}" for b in touched}, changed
-    assert spark.read.parquet(t.enriched).count() == 78
+    assert read_table(spark, t.enriched).count() == 78
 
 
 def test_move(spark, tmp_path):
     root = _dataset(spark, tmp_path)
     t = Tables(root)
-    src = spark.read.parquet(t.enriched).first()["url"]
+    src = read_table(spark, t.enriched).first()["url"]
     dst = "https://moved.example.net/new/home.html"
     move_url(spark, root, src, dst)
-    df = spark.read.parquet(t.enriched)
+    df = read_table(spark, t.enriched)
     assert df.filter(F.col("url") == src).count() == 0
     moved = df.filter(F.col("url") == dst).first()
     assert moved["path0_s"] == "moved.example.net"  # facets recomputed
@@ -120,11 +120,11 @@ def test_moved_src_is_indexed_again(spark, tmp_path):
     reference re-indexes it, since Solr no longer holds a src doc)."""
     root = _dataset(spark, tmp_path)
     t = Tables(root)
-    src = sorted(r["url"] for r in spark.read.parquet(t.enriched).select("url").collect())[0]
+    src = sorted(r["url"] for r in read_table(spark, t.enriched).select("url").collect())[0]
     move_url(spark, root, src, "https://moved.example.net/back.html")
     s = run_incremental(spark, pages_df(spark, 40, partitions=2), root)
     assert s["processed"] == 1
-    urls = [r["url"] for r in spark.read.parquet(t.enriched).select("url").collect()]
+    urls = [r["url"] for r in read_table(spark, t.enriched).select("url").collect()]
     assert urls.count(src) == 1 and len(urls) == 41
 
 
@@ -134,13 +134,13 @@ def test_move_onto_an_indexed_url_leaves_one_row(spark, tmp_path):
     table and the checkpoint."""
     root = _dataset(spark, tmp_path)
     t = Tables(root)
-    src, dst = sorted(r["url"] for r in spark.read.parquet(t.enriched).select("url").collect())[:2]
-    src_hash = spark.read.parquet(t.enriched).filter(F.col("url") == src).first()["content_hash"]
+    src, dst = sorted(r["url"] for r in read_table(spark, t.enriched).select("url").collect())[:2]
+    src_hash = read_table(spark, t.enriched).filter(F.col("url") == src).first()["content_hash"]
     move_url(spark, root, src, dst)
     for path in (t.enriched, t.checkpoint):
-        rows = spark.read.parquet(path).filter(F.col("url").isin(src, dst)).collect()
+        rows = read_table(spark, path).filter(F.col("url").isin(src, dst)).collect()
         assert [(r["url"], r["content_hash"]) for r in rows] == [(dst, src_hash)], path
-    assert spark.read.parquet(t.enriched).count() == 39
+    assert read_table(spark, t.enriched).count() == 39
 
 
 def test_join_annotations(spark):
@@ -285,7 +285,7 @@ def test_delete_where_respects_table_bucket_count(spark, tmp_path):
     t = Tables(root)
 
     def snapshot():
-        rows = {r.url: r for r in spark.read.parquet(t.enriched).collect()}
+        rows = {r.url: r for r in read_table(spark, t.enriched).collect()}
         return {d for d in os.listdir(t.enriched) if d.startswith("_bucket=")}, rows
 
     dirs, rows = snapshot()
@@ -309,14 +309,14 @@ def test_backfill_respects_table_bucket_count(spark, tmp_path):
     root = str(tmp_path / "ds8b")
     run_incremental(spark, pages_df(spark, 30, partitions=2), root, n_buckets=8)
     t = Tables(root)
-    before = {r["url"]: r.asDict(recursive=True) for r in spark.read.parquet(t.enriched).collect()}
+    before = {r["url"]: r.asDict(recursive=True) for r in read_table(spark, t.enriched).collect()}
 
     def add_shout(_spark, rows):
         return rows.select("url", F.upper(F.col("title_txt")).alias("title_txt"))
 
     n = run_backfill(spark, root, "shout", add_shout, fields=("title_txt",))
     assert n == 30
-    after = {r["url"]: r.asDict(recursive=True) for r in spark.read.parquet(t.enriched).collect()}
+    after = {r["url"]: r.asDict(recursive=True) for r in read_table(spark, t.enriched).collect()}
     assert after.keys() == before.keys()
     for url, row in after.items():
         assert row["title_txt"] == before[url]["title_txt"].upper()
@@ -332,7 +332,7 @@ def test_backfill_respects_table_bucket_count(spark, tmp_path):
 
 def _urls_by_bucket(spark, path):
     """url -> bucket dir of every row of a bucketed table"""
-    return {r.url: r._bucket for r in spark.read.parquet(path).select("url", "_bucket").collect()}
+    return {r.url: r._bucket for r in read_table(spark, path).select("url", "_bucket").collect()}
 
 
 def test_maintenance_reads_the_table_bucket_count(spark, tmp_path):
@@ -360,9 +360,9 @@ def test_maintenance_reads_the_table_bucket_count(spark, tmp_path):
 
     assert run_backfill(spark, root, "shout", lambda _s, rows: rows.select(
         "url", F.upper("title_txt").alias("title_shout")), fields=("title_txt",)) == 39
-    shouted = spark.read.parquet(t.enriched).filter(F.col("title_shout").isNotNull())
+    shouted = read_table(spark, t.enriched).filter(F.col("title_shout").isNotNull())
     assert sorted(r.url for r in shouted.collect()) == sorted(moved)
-    marked = spark.read.parquet(t.checkpoint).filter(F.array_contains("stages_done", "shout"))
+    marked = read_table(spark, t.checkpoint).filter(F.array_contains("stages_done", "shout"))
     assert sorted(r.url for r in marked.collect()) == sorted(moved)
     for path in (t.enriched, t.checkpoint):
         assert max(_urls_by_bucket(spark, path).values()) < 8, path

@@ -54,6 +54,40 @@ def test_ocr_phase_with_memo(spark, tmp_path):
     assert spark.read.parquet(memo).count() == 2  # no growth
 
 
+def test_deferred_ocr_query_reuses_its_process_memo(spark, tmp_path):
+    """the deferred_ocr driver query keeps its OCR memo in one reaped
+    per-process dir: a second call makes no new memo dir and returns
+    the same rows, each flagged page's text once."""
+    import glob
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from open_semantic_etl_spark.plans.queries_ext import q_deferred_ocr
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(pa.table({"doc_id": pa.array(range(30), pa.int64())}),
+                   str(sf / "documents.parquet"))
+
+    def memo_dirs() -> tuple[set[str], set[str]]:
+        """(mkdtemp-style dirs, per-process sidecar memo dirs)"""
+        return (set(glob.glob(os.path.join(tempfile.gettempdir(), "ocr_memo_*"))),
+                set(glob.glob("/tmp/spark_graft_ocr_memo_*")))
+
+    def rows() -> list:
+        return sorted(tuple(r) for r in q_deferred_ocr(spark, str(sf)).collect())
+
+    fresh, sidecars = memo_dirs()
+    first = rows()
+    after_first = memo_dirs()
+    assert after_first[0] == fresh and len(after_first[1] - sidecars) == 1
+    assert rows() == first
+    assert memo_dirs() == after_first
+    assert [r for r in first if r[1]] == [(d, True, f"OcrText{d}") for d in range(0, 30, 6)]
+
+
 def test_fake_ocr():
     assert fake_ocr(b"FAKEIMG:hello") == "hello"
     assert fake_ocr(b"\x89PNG....") == ""
@@ -78,7 +112,7 @@ def test_backfill_runs_only_missing(spark, tmp_path):
 
     n = run_backfill(spark, root, "shout", _add_shout, fields=("title_txt",))
     assert n == 60
-    enriched = spark.read.parquet(t.enriched)
+    enriched = read_table(spark, t.enriched)
     assert "title_shout" in enriched.columns
     shout, title = F.col("title_shout"), F.col("title_txt")
     assert enriched.filter(~shout.eqNullSafe(F.upper(title))).count() == 0
@@ -258,12 +292,12 @@ def test_stream_enrich(spark, tmp_path):
     t = Tables(out_root)
 
     def docs_per_run() -> dict[str, int]:
-        per_run = spark.read.parquet(t.metrics).groupBy("run_id").agg(F.sum("docs").alias("docs"))
+        per_run = read_table(spark, t.metrics).groupBy("run_id").agg(F.sum("docs").alias("docs"))
         return {r.run_id: r.docs for r in per_run.collect()}
 
     q = stream_enrich(spark, landing, out_root, ckpt, trigger_once=True)
     assert q.awaitTermination(120)
-    enriched = spark.read.parquet(t.enriched)
+    enriched = read_table(spark, t.enriched)
     assert enriched.count() == 40
     assert enriched.filter(F.col("content_txt") != F.col("text")).count() == 0
     assert docs_per_run() == {f"{q.id}-0": 40}
@@ -274,7 +308,7 @@ def test_stream_enrich(spark, tmp_path):
     # restart with no new files → no duplicates (checkpointed source)
     q2 = stream_enrich(spark, landing, out_root, ckpt, trigger_once=True)
     assert q2.awaitTermination(120)
-    assert spark.read.parquet(t.enriched).count() == 40
+    assert read_table(spark, t.enriched).count() == 40
 
     # the same rows re-landed as a new file: epoch 1 skips every page
     before = _bucket_file_state(t.enriched)

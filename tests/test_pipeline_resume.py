@@ -48,14 +48,14 @@ def test_incremental_and_replay(spark, root):
     s1 = run_incremental(spark, pages1, root)
     assert s1["processed"] == N1
     t = Tables(root)
-    enriched = spark.read.parquet(t.enriched)
+    enriched = read_table(spark, t.enriched)
     assert enriched.count() == N1
     assert enriched.filter(F.col("content_txt") != F.col("text")).count() == 0
 
     # run 1b: same input → nothing to do
     s1b = run_incremental(spark, pages1, root)
     assert s1b["processed"] == 0
-    assert spark.read.parquet(t.enriched).count() == N1
+    assert read_table(spark, t.enriched).count() == N1
 
     # run 2: 10% modified html (same urls), 10% new urls. Variant 9
     # (i % 10 == 9) has seed-independent constant html — its hash does
@@ -67,13 +67,13 @@ def test_incremental_and_replay(spark, root):
     pages2 = _pages(spark, N1 + N_NEW, reseed_from=N1 - N_MOD, reseed_to=N1)
     s2 = run_incremental(spark, pages2, root)
     assert s2["processed"] == n_actually_modified + N_NEW
-    enriched2 = spark.read.parquet(t.enriched)
+    enriched2 = read_table(spark, t.enriched)
     assert enriched2.count() == N1 + N_NEW
     # modified rows carry the NEW content (url-keyed merge: new wins)
     assert enriched2.filter(F.col("content_txt") != F.col("text")).count() == 0
 
     # metrics lineage: per-partition docs sum to processed counts
-    metrics = spark.read.parquet(t.metrics)
+    metrics = read_table(spark, t.metrics)
     per_run = {
         r["run_id"]: r["docs"]
         for r in metrics.groupBy("run_id").agg(F.sum("docs").alias("docs")).collect()
@@ -293,7 +293,7 @@ def test_merge_rewrites_only_touched_buckets(spark, root):
     assert not any("layout" in change for change in _last_entry(root)["tables"].values())
 
     # correctness preserved across the pruned merge
-    enriched = spark.read.parquet(t.enriched)
+    enriched = read_table(spark, t.enriched)
     assert enriched.count() == N1 + 5
     assert enriched.filter(F.col("content_txt") != F.col("text")).count() == 0
 
@@ -331,7 +331,7 @@ def test_merge_custom_n_buckets(spark, root):
         if before.get(name) != after.get(name)
     }
     assert changed and changed <= {f"_bucket={b}" for b in touched}
-    enriched = spark.read.parquet(t.enriched)
+    enriched = read_table(spark, t.enriched)
     assert enriched.count() == 103
     assert enriched.select("url").distinct().count() == 103
     assert enriched.filter(F.col("content_txt") != F.col("text")).count() == 0
@@ -740,3 +740,57 @@ def test_racing_commits_lose_no_entry(tmp_path):
     snap = C.snapshot(root)
     assert snap.version == 1 + 8 * 25
     assert snap.tables["t"]["files"] == {f"w{w}-{i}.parquet" for w in range(8) for i in range(25)}
+
+
+def test_each_operation_replays_its_root_log_once(spark, root, tmp_path, monkeypatch):
+    """an operation reads one snapshot of its root, its commit's base:
+    with no racing commit, each replays its root's log exactly once,
+    whatever it reads (pending rows, the bucket count, the urls missing
+    a stage, the LSH family, the probed index)."""
+    from open_semantic_etl_spark.operators import dedup as D
+    from open_semantic_etl_spark.plans import checkpoint as C
+    from open_semantic_etl_spark.plans.backfill import run_backfill
+    from open_semantic_etl_spark.plans.maintenance import delete_by_url, delete_where, move_url
+
+    replays = []
+    replay = C._replay
+
+    def counting(r: str):
+        replays.append(r)
+        return replay(r)
+
+    monkeypatch.setattr(C, "_replay", counting)
+
+    def replayed(op) -> list[str]:
+        replays.clear()
+        op()
+        return list(replays)
+
+    pages = _pages(spark, 40)
+    urls = [page_record(i, 42)["url"] for i in range(4)]
+    ops = {
+        "run_incremental, first run": lambda: run_incremental(spark, pages, root),
+        "run_incremental, no-op rerun": lambda: run_incremental(spark, pages, root),
+        "run_incremental, 4 new pages": lambda: run_incremental(spark, _pages(spark, 44), root),
+        "merge_by_url": lambda: C.merge_by_url(
+            spark, spark.createDataFrame([(urls[0], "t")], "url string, title_txt string"),
+            f"{root}/enriched"),
+        "run_backfill": lambda: run_backfill(
+            spark, root, "shout", _shout_only(urls[:2]), ("title_txt",)),
+        "delete_by_url": lambda: delete_by_url(spark, root, urls[2:3]),
+        "delete_where": lambda: delete_where(spark, root, F.col("url") == urls[3]),
+        "move_url": lambda: move_url(spark, root, urls[0], "file:///moved/0.html"),
+    }
+    for name, op in ops.items():
+        assert replayed(op) == [root], name
+
+    index = str(tmp_path / "lsh")
+    docs = read_table(spark, f"{root}/enriched").select("url", F.col("content_txt").alias("text"))
+    ops = {
+        "dedup_ingest_batch, fresh index": lambda: D.dedup_ingest_batch(
+            spark, docs.limit(10), index, "b1"),
+        "dedup_ingest_batch": lambda: D.dedup_ingest_batch(spark, docs, index, "b2"),
+        "compact_lsh_index": lambda: D.compact_lsh_index(spark, index),
+    }
+    for name, op in ops.items():
+        assert replayed(op) == [index], name

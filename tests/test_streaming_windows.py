@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from datetime import datetime
 
+from open_semantic_etl_spark.plans.checkpoint import read_table
+
 EVENTS = "event_type string, ts timestamp, value double"
 CRAWL = "url string, ts timestamp"
 
@@ -193,7 +195,7 @@ def test_stream_dedup_ingest_incremental(spark, tmp_path):
     assert kept.count() == 3
 
     # the index accumulated exactly the kept docs across micro-batches
-    idx_ids = {r._id for r in spark.read.parquet(f"{out}/lsh_index/sigs").collect()}
+    idx_ids = {r._id for r in read_table(spark, f"{out}/lsh_index/sigs").collect()}
     assert idx_ids == urls
 
     # replay with a fresh checkpoint: a new ingest, every doc a dup of
@@ -304,7 +306,7 @@ def _stream_once(spark, tmp_path, name, out, rows):
 
 def _kept_and_indexed(spark, out):
     kept = sorted(r.url for r in spark.read.parquet(f"{out}/kept").collect())
-    idx = sorted(r._id for r in spark.read.parquet(f"{out}/lsh_index/sigs").collect())
+    idx = sorted(r._id for r in read_table(spark, f"{out}/lsh_index/sigs").collect())
     return kept, idx
 
 

@@ -53,10 +53,12 @@ def main() -> int:
     from open_semantic_etl_spark.operators.html_extract import with_extraction
     from open_semantic_etl_spark.plans import queries as Q
     from open_semantic_etl_spark.plans.checkpoint import (
+        URL_TABLES,
         Tables,
         pending_rows,
         read_table,
         run_incremental,
+        snapshot,
     )
     from open_semantic_etl_spark.plans.pipeline import enrich_pages
     from open_semantic_etl_spark.session import get_spark
@@ -366,7 +368,7 @@ def main() -> int:
         run_incremental(spark, pages, root)
         t = Tables(root)
         victims = [r["url"] for r in read_table(spark, t.enriched).limit(2).collect()]
-        buckets = _url_buckets(spark, t.enriched, victims)
+        buckets = _url_buckets(spark, victims, snapshot(root).buckets(URL_TABLES))
         part = read_table(spark, t.enriched, buckets)
         dirs = {f.rsplit("/", 2)[-2] for f in part.inputFiles()}
         delete_frame = part.filter(~F.coalesce(F.col("url").isin(victims), F.lit(False)))
